@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
   *
@@ -27,23 +25,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // JVM-wide compiled-fragment cache (static conf, Spark default
-      // 100): a 235-query run cycles the default many times over, so
-      // shared fragments (common scans/subtrees) recompile late in the
-      // run — part of the position-in-run fixed cost diagnosed in
-      // round 15. 4000 measured 0.76×/0.85× of the default total in an
-      // order-reversed same-box A/B (see ARCHITECTURE bench notes);
-      // env-overridable for A/Bs.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // JVM-wide compiled-fragment cache (static conf, Spark default
+    // 100): a 235-query run cycles the default many times over, so
+    // shared fragments (common scans/subtrees) recompile late in the
+    // run — part of the position-in-run fixed cost diagnosed in
+    // round 15. 4000 measured 0.76×/0.85× of the default total in an
+    // order-reversed same-box A/B (see ARCHITECTURE bench notes).
+    val spark = Sessions.local(
+      conf = Map("spark.sql.codegen.cache.maxEntries" -> "4000"))
 
     // warmup: JIT + parquet footer caches + codegen paths. q01 runs
     // TWICE — round-15 measurement showed a single warmup leaves the

@@ -136,65 +136,6 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
-
-  /** [[documents]] with the fixture-scale ONE-SPLIT SCAN FLOOR broken
-    * (guide §2.6 idle capacity / §6 input splits): the fixture corpus is
-    * one sub-128 MB single-row-group parquet file, so every scan plans
-    * exactly ONE input split and the per-doc text kernels (shingling,
-    * winnowing, minhash, word stats, BPE) that run BEFORE the first
-    * exchange ran one-wide on a 32-core session. Text must never cross
-    * a shuffle (d09/t28 plan pins; §2.3 "shuffle keys, not payloads"),
-    * so the spread moves NO rows: [[graft.FanOutRDD]] re-exposes the
-    * scan as `fan` narrow partitions, each re-decoding the (page-
-    * cached) file and keeping every fan-th row. A union of per-range
-    * filtered scans was measured first and REJECTED: every branch is
-    * its own codegen fragment, and the per-query driver bill (~28 ms x
-    * branches, serial) exceeded the whole kernel saving (numbers in
-    * OPTIMIZATION_r21.md).
-    *
-    * Gated on OBSERVED scan width: when the scan already plans at
-    * least `defaultParallelism` splits (any production multi-file
-    * dataset — at 100 TB the file count provides the parallelism), the
-    * plain frame returns untouched, so the production plan is by
-    * construction the un-spread one.
-    */
-  def documentsSpread(s: SparkSession, d: String): DataFrame =
-    spreadScan(s, load(s, d, "documents"))
-
-  /** [[embeddings]] under the same gated fan-out as
-    * [[documentsSpread]] — the brute-force scoring / quantization
-    * kernels of the similarity family are pre-exchange map work with
-    * the same one-split floor. */
-  def embeddingsSpread(s: SparkSession, d: String): DataFrame =
-    spreadScan(s, load(s, d, "embeddings"))
-
-  /** The gated fan-out itself (see [[documentsSpread]]). DISABLED BY
-    * DEFAULT (`SPARK_GRAFT_SPREAD_FAN`, 0 = off) on a round-21
-    * measurement: the fan-out wins at the OPERATOR level — the fan
-    * sweep read 0.52 s shingle pass plain vs 0.32 s at fan 4–8 (worse
-    * than plain at fan 32 from the fan-linear duplicated decode), and
-    * the contamination-corpus queries read 0.66–0.85x in isolation
-    * A/Bs — but executing ANY fan-out query measurably degrades the
-    * REST of the session: in knob-isolated same-subset A/Bs, queries
-    * running after a fan-out query (including ones that never touch
-    * it) read 1.2–1.7x, costing ~10 s across the d-subset against
-    * ~2.7 s of direct wins (full numbers in OPTIMIZATION_r21.md). The
-    * damage is JVM-session-mediated (the row-copying fan-out iterator
-    * enters the scan hot path shared by every subsequent pipeline);
-    * until that is understood and fixed, the honest default is off.
-    * The call sites keep their measured per-site flags so a future
-    * round (or the knob) can re-enable the winners only. */
-  private[graft] lazy val spreadFanCap: Int =
-    sys.env.getOrElse("SPARK_GRAFT_SPREAD_FAN", "0").toInt
-
-  private[graft] def spreadScan(s: SparkSession, df: DataFrame): DataFrame = {
-    val width = s.sparkContext.defaultParallelism
-    if (spreadFanCap <= 1 || width <= 1) return df
-    val planned = df.queryExecution.toRdd.getNumPartitions
-    if (planned >= width) df
-    else org.apache.spark.sql.graft.DatasetBridge.fanOutScan(
-      df, math.min(spreadFanCap, (width + planned - 1) / planned))
-  }
 }
 
 object Dets {

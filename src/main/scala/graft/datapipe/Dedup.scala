@@ -64,7 +64,7 @@ object Dedup {
   private[graft] def fuzzyContaminationCorpus(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     import s.implicits._
-    val docs = T.documentsSpread(s, d).select($"doc_id", $"text")
+    val docs = T.documents(s, d).select($"doc_id", $"text")
     val bench = docs.filter($"doc_id" % 50 === 0)
     val para = bench
       .withColumn("ws", split($"text", " "))
@@ -124,7 +124,7 @@ object Dedup {
   private[graft] def contaminationCorpus(s: SparkSession, d: String,
       fix: ContaminationFixture = D12_FIX): (DataFrame, DataFrame) = {
     import s.implicits._
-    val docs = T.documentsSpread(s, d).select($"doc_id", $"text")
+    val docs = T.documents(s, d).select($"doc_id", $"text")
     val bench = docs.filter($"doc_id" % fix.modulus === 0)
     val leaked = bench.select(($"doc_id" + fix.offset).as("doc_id"),
       concat(
@@ -430,9 +430,10 @@ object Dedup {
     * switches to the hub-split formulation once any node's degree (or
     * any tentative component's size — the upper bound on the emergent
     * star's hub degree) exceeds this. 8e6 sits under the measured
-    * ~10⁷-row single-task sort-budget crossover (CCSkewBench, round 12:
-    * window and hub-split par at H=16e6, 660 vs 141 s at H=64e6) with
-    * margin for payload-heavier rows. Overridable for tests via
+    * ~10⁷-row single-task sort-budget crossover (round-12 planted-star
+    * measurement, recorded in ARCHITECTURE.md: window and hub-split par
+    * at H=16e6, 660 vs 141 s at H=64e6) with margin for payload-heavier
+    * rows. Overridable for tests via
     * `spark.graft.cc.autoHubDegree`.
     */
   private[graft] val CC_AUTO_HUB_DEGREE = 8L * 1000 * 1000
@@ -455,14 +456,11 @@ object Dedup {
   private def hS(e: String) = s"graft_phash($e)"
 
   /** The test corpus: originals + perturbed near-copies + exact copies.
-    * graft-visible so dev tooling (graft.tools.Profile) profiles the
-    * exact corpus the queries run on.
+    * graft-visible so the specs check the exact corpus the queries run on.
     */
-  private[graft] def corpus(s: SparkSession, d: String,
-      spread: Boolean = false): DataFrame = {
+  private[graft] def corpus(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val base = if (spread) T.documentsSpread(s, d) else T.documents(s, d)
-    val docs = base.select($"doc_id", $"text", $"lang", $"source")
+    val docs = T.documents(s, d).select($"doc_id", $"text", $"lang", $"source")
     docs
       .unionByName(docs.filter($"doc_id" % 10 === 0)
         .select(($"doc_id" + 1000000L).as("doc_id"),
@@ -488,11 +486,9 @@ object Dedup {
     * are both uninformative; the partials put mass exactly where the
     * curves bend.
     */
-  private def evalCorpus(s: SparkSession, d: String,
-      spread: Boolean = false): DataFrame = {
+  private def evalCorpus(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val base = if (spread) T.documentsSpread(s, d) else T.documents(s, d)
-    val docs = base.select($"doc_id", $"text", $"lang", $"source")
+    val docs = T.documents(s, d).select($"doc_id", $"text", $"lang", $"source")
     val partial = docs.filter($"doc_id" % 13 === 0)
       .withColumn("w", split($"text", " "))
       .filter(size($"w") >= 6)
@@ -501,7 +497,7 @@ object Dedup {
             expr("slice(w, 1, greatest(3, (size(w) * 6) div 10))"), " "),
           lit(" mid sim tail pad")).as("text"),
         $"lang", $"source")
-    corpus(s, d, spread).unionByName(partial)
+    corpus(s, d).unionByName(partial)
   }
 
   /** Exact-Jaccard ground-truth pairs (d1 < d2, J >= 0.5) over the
@@ -614,14 +610,20 @@ object Dedup {
     * Requires (id, key) distinct and a bounded per-key group — exactly
     * what every caller guarantees via its df cap (fan-out ≤ C(cap, 2)
     * per key). One emitted row per shared key per pair, so the grouped
-    * count equals the self-join's COUNT(*) bit for bit.
+    * count equals the self-join's COUNT(*) bit for bit. A duplicate
+    * (id, key) fails the query: the ids are collected as a list and the
+    * same aggregation asserts them distinct (a set would silently drop
+    * the duplicate and under-count `inter`; no extra job either way).
     */
-  private[datapipe] def sharedKeyPairCounts(df: DataFrame, idCol: String,
+  private[graft] def sharedKeyPairCounts(df: DataFrame, idCol: String,
       keyCol: String, out1: String, out2: String): DataFrame = {
     import df.sparkSession.implicits._
     df.groupBy(col(keyCol))
-      .agg(sort_array(collect_set(col(idCol))).as("ids"))
-      .filter(size($"ids") >= 2)
+      .agg(sort_array(collect_list(col(idCol))).as("ids"))
+      .filter(assert_true(size(array_distinct($"ids")) === size($"ids"),
+          lit(s"sharedKeyPairCounts: duplicate ($idCol, $keyCol) rows — " +
+            "the input must be distinct on (id, key)")).isNull &&
+        size($"ids") >= 2)
       .select(explode(expr(
         "flatten(transform(ids, (a, i) -> " +
         "transform(slice(ids, i + 2, size(ids)), " +
@@ -781,9 +783,7 @@ object Dedup {
     // Exact dedup: group by full-content hash, keep canonical min id.
     "d01_exact_dedup" -> { (s, d) =>
       import s.implicits._
-      // spread = false: the kernel is one md5 per doc — the fan-out's
-      // duplicated decode costs more than the hash saves (A/B 1.26x)
-      corpus(s, d, spread = false)
+      corpus(s, d)
         .groupBy(md5($"text").as("content_hash"))
         .agg(min($"doc_id").as("canonical_id"), count(lit(1)).as("n_copies"))
         .filter($"n_copies" > 1)
@@ -1333,8 +1333,7 @@ object Dedup {
       // is read by both the bucket histogram and the clustered count —
       // materialize it once
       val clusters = queries("d06_dedup_clusters")(s, d).localCheckpoint()
-      // spread = false: a bare count has no kernel to parallelize
-      val nDocs = corpus(s, d, spread = false)
+      val nDocs = corpus(s, d)
         .agg(count(lit(1)).as("n_corpus"))
       val nClustered = clusters.agg(count(lit(1)).as("n_clustered"))
       val buckets = clusters.groupBy($"cluster_id")
@@ -1376,8 +1375,6 @@ object Dedup {
     "d38_cascade_report" -> { (s, d) =>
       import s.implicits._
       graft.GraftExtensions.register(s)
-      // spread = false everywhere in the cascade: it re-reads the corpus
-      // per stage, so the fan-out's duplicated decode compounds (A/B 1.10x)
       val docs0 = T.documents(s, d)
         .select($"doc_id", $"text", $"lang", $"source")
       val quotes = docs0.filter($"doc_id" % 11 === 0)
@@ -1387,7 +1384,7 @@ object Dedup {
           array_join(expr("slice(w, 1, greatest(5, (size(w) * 3) div 10))"),
             " ").as("text"),
           $"lang", $"source")
-      val cascade = evalCorpus(s, d, spread = false)
+      val cascade = evalCorpus(s, d)
         .unionByName(quotes).localCheckpoint()
       // stage 1: exact
       val keep1 = cascade.select($"doc_id", md5($"text").as("h"))
@@ -1466,9 +1463,7 @@ object Dedup {
       import s.implicits._
       import graft.functions.WordShinglePHashes.word_shingle_phashes
       graft.GraftExtensions.register(s)
-      // spread kept: the shingle kernel dominates and the fan-out
-      // measured 0.55x/0.88x across the round's isolation A/Bs
-      val hs = T.documentsSpread(s, d)
+      val hs = T.documents(s, d)
         .withColumn("hset", word_shingle_phashes($"text", 3))
         .filter(size($"hset") >= 1)
         .select($"source", explode($"hset").as("h"))
@@ -1484,9 +1479,8 @@ object Dedup {
         .groupBy($"p.a".as("sa"), $"p.b".as("sb"))
         .agg(count(lit(1)).as("inter"))
       val nsrc = hs.groupBy($"source").agg(count(lit(1)).as("n"))
-      // k-row marginal: broadcast EXPLICITLY — behind the fan-out the
-      // plan roots at a LogicalRDD with no size stats, so the planner
-      // would otherwise fall back to CartesianProductExec here
+      // k-row marginal: broadcast EXPLICITLY, so the non-equi k×k pair
+      // join plans as a broadcast nested loop, never a CartesianProduct
       val allPairs = nsrc.as("x").join(broadcast(nsrc.as("y")),
           col("x.source") < col("y.source")) // k×k, broadcast nested loop
         .select(col("x.source").as("source_a"), col("y.source").as("source_b"),
@@ -1641,8 +1635,7 @@ object Dedup {
     // text is never touched twice.
     "d39_token_budget" -> { (s, d) =>
       import s.implicits._
-      // spread = false: measured neutral (1.01x) — skip the extra decodes
-      val tk = corpus(s, d, spread = false).select($"source", $"doc_id",
+      val tk = corpus(s, d).select($"source", $"doc_id",
         size(expr("filter(split(text, ' '), x -> x <> '')"))
           .cast("long").as("ntok"))
       val removed = queries("d30_dedup_manifest")(s, d)
@@ -1794,8 +1787,7 @@ object Dedup {
       val hexShard = (c: org.apache.spark.sql.Column) =>
         conv(substring(md5(c.cast("string")), 1, 1), 16, 10)
           .cast("long") % 8
-      // spread = false: md5-only kernel, same reasoning as d01
-      val h = corpus(s, d, spread = false)
+      val h = corpus(s, d)
         .select($"doc_id", md5($"text").as("h"))
         .localCheckpoint()
       val tot = h.agg(count(lit(1)).as("n_docs"),
@@ -2056,8 +2048,7 @@ object Dedup {
     "d13_chunk_dedup" -> { (s, d) =>
       import s.implicits._
       graft.GraftExtensions.register(s)
-      // spread = false: chunk hashing is cheap per doc (A/B 1.15x with)
-      val chunks = corpus(s, d, spread = false)
+      val chunks = corpus(s, d)
         .withColumn("ws", split($"text", " "))
         .filter(size($"ws") >= 10)
         .select($"doc_id", explode(expr(
@@ -3777,9 +3768,7 @@ object Dedup {
     * the pairs to connected components).
     */
   private def d03Pairs(s: SparkSession, d: String): DataFrame = {
-    // spread = false: d03/d16 measured 1.05x/1.13x WITH the fan-out —
-    // the simhash kernel is one fused pass and the band join dominates
-    val base = corpus(s, d, spread = false)
+    val base = corpus(s, d)
     val bwRow = base.agg(count(lit(1)).as("n"))
       .select(expr(bwExpr("n")).as("bw"))
     // materialized once: the x/y sides of the band self-join do NOT
@@ -3832,9 +3821,7 @@ object Dedup {
   private def d07Pairs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.functions.BandedLevenshtein.banded_levenshtein
-    // spread = false: the Levenshtein cost sits in the PAIR join, not
-    // the per-doc prep — d07/d11 measured 1.03x/1.13x with the fan-out
-    val docs = corpus(s, d, spread = false)
+    val docs = corpus(s, d)
       .withColumn("n_chars", length($"text").cast("long"))
       .withColumn("lenb", ($"n_chars" / 64L).cast("long"))
       .select($"doc_id", $"lang", $"source", $"lenb", $"n_chars", $"text")

@@ -1282,8 +1282,9 @@ object Multimodal {
         // SAMPLES its child at runtime (RangePartitioner runs a full
         // extra pass over the subtree — invisible in plan dumps), so
         // the decode kernel executed 2x per run; the checkpoint pays
-        // one narrow materialization instead (M19Probe: full query
-        // 2.4 s vs 0.6 s kernel-only at 32 cores)
+        // one narrow materialization instead (m19 measured 2.4 s full
+        // query vs 0.6 s kernel-only at 32 cores; OPTIMIZATION_r21.md
+        // change 4)
         .localCheckpoint()
         .orderBy($"asset_id")
     },
@@ -1311,8 +1312,9 @@ object Multimodal {
         // SAMPLES its child at runtime (RangePartitioner runs a full
         // extra pass over the subtree — invisible in plan dumps), so
         // the decode kernel executed 2x per run; the checkpoint pays
-        // one narrow materialization instead (M19Probe: full query
-        // 2.4 s vs 0.6 s kernel-only at 32 cores)
+        // one narrow materialization instead (m19 measured 2.4 s full
+        // query vs 0.6 s kernel-only at 32 cores; OPTIMIZATION_r21.md
+        // change 4)
         .localCheckpoint()
         .orderBy($"asset_id")
     },
@@ -1570,8 +1572,9 @@ object Multimodal {
         // SAMPLES its child at runtime (RangePartitioner runs a full
         // extra pass over the subtree — invisible in plan dumps), so
         // the decode kernel executed 2x per run; the checkpoint pays
-        // one narrow materialization instead (M19Probe: full query
-        // 2.4 s vs 0.6 s kernel-only at 32 cores)
+        // one narrow materialization instead (m19 measured 2.4 s full
+        // query vs 0.6 s kernel-only at 32 cores; OPTIMIZATION_r21.md
+        // change 4)
         .localCheckpoint()
         .orderBy($"asset_id")
     },

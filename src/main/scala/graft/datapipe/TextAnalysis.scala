@@ -1090,7 +1090,7 @@ object TextAnalysis {
       // the r20 shape checkpointed the full corpus text twice, which a
       // 100 TB run cannot afford (r20 verdict item 3); every stage
       // decision and stat below only ever read derived numbers anyway.
-      val docs = Dedup.corpus(s, d, spread = false)
+      val docs = Dedup.corpus(s, d)
         .select($"doc_id", $"source", md5($"text").as("h"),
           length($"text").cast("long").as("n_chars"),
           graft.functions.WordStats.word_stats($"text").as("ws"))
@@ -1282,7 +1282,7 @@ object TextAnalysis {
       val byH = Window.partitionBy($"h")
       // the dedup family's corpus view (planted exact copies) — the
       // operator's reason to exist is those groups
-      Dedup.corpus(s, d, spread = false)
+      Dedup.corpus(s, d)
         .select($"doc_id", graft.Dets.phash($"text").as("h"))
         .withColumn("rep", min($"doc_id").over(byH))
         .withColumn("cnt", count(lit(1)).over(byH))
@@ -1554,7 +1554,7 @@ object TextAnalysis {
     // doc repeating its own shingle never inflates its score.
     "t28_crossdoc_grams" -> { (s, d) =>
       import s.implicits._
-      val grams = Dedup.corpus(s, d, spread = false)
+      val grams = Dedup.corpus(s, d)
         .select($"doc_id",
           expr("filter(split(text, ' '), x -> x <> '')").as("toks"))
         .filter(size($"toks") >= 5)

@@ -14,11 +14,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * per DP cell — an O(position) scan for variable-width encodings — so
   * comparing two SIMILAR 300-char strings (the actual near-duplicates,
   * i.e. every output row) measured ~400µs/pair while far pairs early-exit
-  * in ~2µs (tools/LevBench); the verify stage's cost was dominated by its
-  * own hits. This expression decodes each operand ONCE to a codepoint
-  * array (zero-copy byte walk for ASCII) and runs the classic
-  * (2k+1)-band two-row DP with the row-minimum early exit — O(k·n) cells
-  * at array-index cost, ~3µs for the same near pair (~130x).
+  * in ~2µs (round-7 measurement, recorded in ARCHITECTURE.md); the
+  * verify stage's cost was dominated by its own hits. This expression
+  * decodes each operand ONCE to a codepoint array (zero-copy byte walk
+  * for ASCII) and runs the classic (2k+1)-band two-row DP with the
+  * row-minimum early exit — O(k·n) cells at array-index cost, ~3µs for
+  * the same near pair (~130x).
   *
   * Distance is over Unicode codepoints, matching both Spark's builtin and
   * DuckDB's `levenshtein` (the oracle side stays the unthresholded

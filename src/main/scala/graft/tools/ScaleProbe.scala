@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.datapipe.{Dedup, IncrementalDedup, TextAnalysis, VectorIndex}
 import graft.operators.DistributedRank
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Targeted scale probes for the designs whose 100 TB behavior is a
@@ -61,13 +61,7 @@ object ScaleProbe {
       .getOrElse("store,vindex,rank,simhash,winnow,semdedup,skew,cumsum")
       .split(",").map(_.trim).toSet
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     import spark.implicits._
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -1,7 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{Sessions, SparkEntry}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-curve harness: materializes K×-scaled copies of the fact
@@ -466,14 +466,8 @@ object StressBench {
       "q113_cdc_dml_feed,q114_merge_clauses"
     val qs = args.lift(2).getOrElse(defaultQs).split(",").map(_.trim)
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(
+      conf = Map("spark.sql.legacy.parquet.nanosAsLong" -> "true"))
 
     def scaled(k: Int): String = {
       // cache key includes an injective digest of the base dataset path —

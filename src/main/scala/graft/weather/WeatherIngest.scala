@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   *
   * Reference mapping (lambda_function.py):
   *  - guard (:55-72):   sink path must exist — fail fast, never create
-  *  - cursor (:75-86):  agg(max(ts)) on the sink — metadata-only on
-  *                      Parquet (footer stats), the pushed-down MAX
+  *  - cursor (:75-86):  agg(max(ts)) on the sink — a full scan of the
+  *                      ts column, O(history) per run
   *  - extract (:89-124): WeatherGridSource scan with ts-range pushdown
   *                      bounded by past_days/forecast_days
   *  - transform (:127-145): future filter + strictly-after-cursor filter
@@ -89,9 +89,10 @@ object WeatherIngest {
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
-  /** O5: cursor = MAX(ts) over the sink; Parquet footer stats make this
-    * metadata-only (no data scan) — the Spark analog of running MAX in
-    * the database.
+  /** O5: cursor = MAX(ts) over the sink — the Spark analog of running
+    * MAX in the database. Spark does not answer MAX from Parquet footer
+    * stats: the plan is a full scan of the ts column (`ReadSchema:
+    * struct<ts>`), so the cursor costs O(history) per run.
     */
   def latestCursor(spark: SparkSession, path: String): Option[java.sql.Timestamp] =
     Option(spark.read.parquet(path).agg(max("ts")).first().getTimestamp(0))

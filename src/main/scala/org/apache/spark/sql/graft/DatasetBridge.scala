@@ -12,17 +12,4 @@ object DatasetBridge {
 
   def analyzed(df: org.apache.spark.sql.DataFrame): LogicalPlan =
     df.queryExecution.analyzed
-
-  /** `df` re-rooted on a [[graft.FanOutRDD]] of its physical rows: the
-    * same row multiset exposed as `fan`x as many narrow partitions (each
-    * child recomputes its parent scan split and keeps every fan-th
-    * row). Built on the private[sql] LogicalRDD/ofRows pair — the same
-    * construction localCheckpoint uses, minus the materialization. */
-  def fanOutScan(df: org.apache.spark.sql.DataFrame, fan: Int): DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[SparkSession]
-    val qe = df.queryExecution
-    val rdd = new graft.FanOutRDD(qe.toRdd, fan)
-    Dataset.ofRows(spark,
-      org.apache.spark.sql.execution.LogicalRDD(qe.analyzed.output, rdd)(spark))
-  }
 }

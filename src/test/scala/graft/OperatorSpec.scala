@@ -539,6 +539,25 @@ class OperatorSpec extends SparkSpec {
     assert(p1 === Set((1L, 2L)), "p=1 must recover the cross-bucket pair")
   }
 
+  test("sharedKeyPairCounts counts shared keys and fails loudly on a duplicate (id, key)") {
+    val distinct = Seq((1L, 10L), (2L, 10L), (1L, 11L), (2L, 11L), (3L, 11L))
+      .toDF("doc_id", "h")
+    val counts = datapipe.Dedup.sharedKeyPairCounts(distinct, "doc_id", "h",
+        "d1", "d2")
+      .as[(Long, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
+    assert(counts === Map((1L, 2L) -> 2L, (1L, 3L) -> 1L, (2L, 3L) -> 1L))
+    // (1, 10) twice: a set-based collect would silently report
+    // inter(1, 2) = 2 for a frame whose self-join counts 3
+    val dup = distinct.unionByName(Seq((1L, 10L)).toDF("doc_id", "h"))
+    val e = intercept[Exception] {
+      datapipe.Dedup.sharedKeyPairCounts(dup, "doc_id", "h", "d1", "d2")
+        .collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toList
+    assert(msgs.exists(_.contains("duplicate (doc_id, h) rows")), msgs.mkString("\n"))
+  }
+
   test("connected components converge on a diameter-4 chain (a short fixed budget would under-merge)") {
     // path graph 1-2-3-4-5: min-label propagation would need 4 pulls
     // to move label 1 to node 5; large-star/small-star roughly doubles

@@ -1,21 +1,19 @@
 package graft
 
 /** Executed-plan parquet-scan-count pins — the r20/r21 duplicated-
-  * subtree regression guard. The r20 census (`FinalPlan COUNTS`) found
-  * frames consumed by >= 2 branches re-executing their whole upstream
-  * pipeline per branch (zero runtime exchange reuse across
-  * differently-aliased branches; lazy `.cache()` races inside a job),
-  * and the fix was eager localCheckpoints on the shared frames. A
+  * subtree regression guard. The r20 census (final-plan scan counts
+  * over every query, recorded in OPTIMIZATION_r20.md) found frames
+  * consumed by >= 2 branches re-executing their whole upstream pipeline
+  * per branch (zero runtime exchange reuse across differently-aliased
+  * branches; lazy `.cache()` races inside a job), and the fix was eager
+  * localCheckpoints on the shared frames. A
   * future edit that drops one of those checkpoints would silently
   * reintroduce 2-5x kernel re-execution — these pins make that loud.
   *
   * The caps are measured counts at the TEST config (local[4],
   * sf0.001) plus slack; a breach means a shared frame lost its
   * materialization barrier (or a scan-wrapping helper was bypassed),
-  * not ordinary plan drift. (If the r21 fan-out spread is re-enabled
-  * via SPARK_GRAFT_SPREAD_FAN, wrapped scans root at a LogicalRDD and
-  * count 0 — the pins still catch a lost checkpoint, because the
-  * re-executed branch re-plans its upstream read.)
+  * not ordinary plan drift.
   */
 class ScanCountSpec extends SparkSpec {
 

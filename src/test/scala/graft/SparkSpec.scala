@@ -4,20 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide session, UTC, small
-  * shuffle partitioning for test speed).
+  * shuffle partitioning for test speed). Pinned at 4 cores whatever
+  * SPARK_GRAFT_CPUS says: the plan and scan-count pins are measured at
+  * local[4].
   */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local(cpus = 4)
   val SF = "/root/testdata/sf0.001"
 }
 
