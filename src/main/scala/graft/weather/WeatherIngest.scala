@@ -9,17 +9,20 @@ import org.apache.spark.sql.functions._
   * over the WeatherGridSource "API" and a Parquet sink.
   *
   * Reference mapping (lambda_function.py):
-  *  - guard (:55-72):   sink path must exist — fail fast, never create
-  *  - cursor (:75-86):  agg(max(ts)) on the sink — a full scan of the
-  *                      ts column, O(history) per run
+  *  - guard (:55-72):   bad arguments and a missing sink path fail
+  *                      fast, before any Spark job — never create
+  *  - cursor (:75-86):  agg(max(ts)) on the sink — one full scan of the
+  *                      ts column per run, O(history)
   *  - extract (:89-124): WeatherGridSource scan with ts-range pushdown
   *                      bounded by past_days/forecast_days
   *  - transform (:127-145): future filter + strictly-after-cursor filter
   *  - NaN->NULL (:167-173): measure encoding at the sink boundary
   *  - load (:176-186):  within-batch dedup + left-anti vs sink + append
   *                      (ON CONFLICT (date) DO NOTHING)
-  *  - report (:228-238): IngestResult envelope; errors -> IngestError
-  *                      (:240-248)
+  *  - report (:228-238): IngestResult envelope; the reported cursor is
+  *                      max(ts) of the run's own inserted rows (or the
+  *                      cursor it read, when nothing was inserted) — no
+  *                      second sink scan; errors -> IngestError (:240-248)
   */
 object WeatherIngest {
   import graft.sources.WeatherGridSource.MEASURES
@@ -92,10 +95,22 @@ object WeatherIngest {
   /** O5: cursor = MAX(ts) over the sink — the Spark analog of running
     * MAX in the database. Spark does not answer MAX from Parquet footer
     * stats: the plan is a full scan of the ts column (`ReadSchema:
-    * struct<ts>`), so the cursor costs O(history) per run.
+    * struct<ts>`), so the cursor costs O(history). `run` pays it once per
+    * run, before the extract; the cursor it reports afterwards comes from
+    * the rows it inserted, not from a second scan.
     */
   def latestCursor(spark: SparkSession, path: String): Option[java.sql.Timestamp] =
-    Option(spark.read.parquet(path).agg(max("ts")).first().getTimestamp(0))
+    maxTs(spark.read.parquet(path))
+
+  private def maxTs(sink: DataFrame): Option[java.sql.Timestamp] =
+    Option(sink.agg(max("ts")).first().getTimestamp(0))
+
+  /** The first bad argument of a run, as its error message. */
+  private def badArgument(pastDays: Int, forecastDays: Int, locations: Int): Option[String] =
+    Seq(("pastDays", pastDays, 0), ("forecastDays", forecastDays, 0),
+        ("locations", locations, 1)).collectFirst {
+      case (name, v, min) if v < min => s"$name must be >= $min, got $v"
+    }
 
   /** Extract: read the source bounded to [now - pastDays, now + forecastDays). */
   def fetch(spark: SparkSession, now: String, pastDays: Int, forecastDays: Int,
@@ -115,10 +130,14 @@ object WeatherIngest {
           pastDays: Int = 1, forecastDays: Int = 1,
           locations: Int = 1): IngestResult = {
     try {
+      val bad = badArgument(pastDays, forecastDays, locations)
+      if (bad.nonEmpty) return IngestResult(500, 0, 0, None, bad)
       if (!sinkExists(spark, sinkPath))
         return IngestResult(500, 0, 0, None,
           Some(s"sink $sinkPath does not exist — create it first"))
-      val cursor = latestCursor(spark, sinkPath)
+      // the one schema inference and the one full-history scan of the run
+      val sinkAll = spark.read.parquet(sinkPath)
+      val cursor = maxTs(sinkAll)
       // cache the extract: the fetched-count action below is the ONE
       // source scan per run (the reference fetches once, too) — the
       // downstream dedup/append pipeline reads the cached blocks
@@ -132,23 +151,29 @@ object WeatherIngest {
       // upsert key, so sink rows before the window can never match — the
       // filter pushes to the parquet scan (and prunes partitions on a
       // date-partitioned sink), keeping the per-run join cost bounded by
-      // the window instead of the sink's full history
+      // the window instead of the sink's full history. It re-lists the
+      // sink instead of reusing `sinkAll`, whose file listing froze at the
+      // cursor read: a run committed since then must still be seen here.
+      // Only the schema is reused, which skips a second footer inference.
       val windowLo = java.time.LocalDateTime.parse(now.replace(' ', 'T'))
         .minusDays(pastDays).toString.replace('T', ' ')
-      val sink = spark.read.parquet(sinkPath)
+      val sink = spark.read.schema(sinkAll.schema).parquet(sinkPath)
         .filter(col("ts") >= lit(windowLo).cast("timestamp"))
       val toInsert = WeatherPipeline.upsertNew(
         encoded, sink, Seq("location_id", "ts")).cache()
-      val inserted = toInsert.count()
+      // one action counts the rows and yields the new cursor: every
+      // inserted row is strictly after `cursor`, so their max is the
+      // sink's max after the commit (for a single writer)
+      val stats = toInsert.agg(count(lit(1)), max("ts")).first()
+      val inserted = stats.getLong(0)
       if (inserted > 0)
         // retry covers the load boundary as well as the extract: toInsert
         // is cached (frozen), so a retried append rewrites identical rows
         // after the all-or-nothing job commit aborted
         withRetry()(toInsert.write.mode(SaveMode.Append).parquet(sinkPath))
-      val newCursor = latestCursor(spark, sinkPath)
       toInsert.unpersist()
       raw.unpersist()
-      IngestResult(200, fetched, inserted, newCursor)
+      IngestResult(200, fetched, inserted, Option(stats.getTimestamp(1)).orElse(cursor))
     } catch {
       case e: Throwable => IngestResult(500, 0, 0, None, Some(e.getMessage))
     }

@@ -17,6 +17,47 @@ class IngestSpec extends SparkSpec {
       .option("locations", locs)
       .load()
 
+  private def emptySink(prefix: String, locs: Int): String = {
+    val sink = java.nio.file.Files.createTempDirectory(prefix).toString
+    readGrid(locs).limit(0).write.mode("overwrite").parquet(sink)
+    sink
+  }
+
+  /** Spark jobs started, and records read by parquet file scans, while
+    * `f` runs. Listener events arrive asynchronously: a marker job is run
+    * afterwards, and its end event means every earlier event has been
+    * delivered. */
+  private def usage[T](f: => T): (T, Int, Long) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val marker = "graft.test.drain"
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    var jobs = 0
+    var records = 0L // parquet file-scan records
+    val listener = new SparkListener {
+      private var markerJob = -1
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(marker) != null)
+          markerJob = e.jobId
+        else jobs += 1
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          records += e.stageInfo.taskMetrics.inputMetrics.recordsRead
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(marker, null)
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener events did not drain")
+      (r, jobs, records)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("source: half-open grid, one partition per location") {
     val df = readGrid(4)
     assert(df.count() === 4L * 192) // 2 days x 96 slots x 4 locations
@@ -189,9 +230,8 @@ class IngestSpec extends SparkSpec {
   }
 
   test("pipeline: first run inserts history, re-run inserts zero (idempotent)") {
-    val sink = java.nio.file.Files.createTempDirectory("graft_sink").toString
     // seed an empty sink with the right schema (table must pre-exist)
-    readGrid(2).limit(0).write.mode("overwrite").parquet(sink)
+    val sink = emptySink("graft_sink", 2)
 
     val r1 = WeatherIngest.run(spark, sink, "2024-01-02 00:00:00", locations = 2)
     assert(r1.statusCode === 200)
@@ -213,8 +253,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("pipeline: one ingest run scans the source exactly once") {
-    val sink = java.nio.file.Files.createTempDirectory("graft_sink1s").toString
-    readGrid(2).limit(0).write.mode("overwrite").parquet(sink)
+    val sink = emptySink("graft_sink1s", 2)
     sources.WeatherGridSource.readerOpens.set(0)
     val r = WeatherIngest.run(spark, sink, "2024-01-02 00:00:00", locations = 2)
     assert(r.statusCode === 200)
@@ -224,9 +263,78 @@ class IngestSpec extends SparkSpec {
       "ingest must extract once: fetched-count + dedup share the cached scan")
   }
 
+  test("pipeline: the reported cursor equals a fresh cursor read after every run") {
+    val sink = emptySink("graft_sink_cursor", 2)
+    def ts(s: String) = Some(java.sql.Timestamp.valueOf(s))
+    def runAndCheck(now: String, pastDays: Int = 1, forecastDays: Int = 1) = {
+      val r = WeatherIngest.run(spark, sink, now, pastDays, forecastDays, locations = 2)
+      assert(r.statusCode === 200, r.error)
+      assert(r.latestCursor === WeatherIngest.latestCursor(spark, sink), s"run at $now")
+      r
+    }
+    // first run into an empty sink: no cursor -> filled
+    assert(WeatherIngest.latestCursor(spark, sink) === None)
+    val first = runAndCheck("2024-01-02 00:00:00")
+    assert(first.recordsInserted === 2L * 97)
+    assert(first.latestCursor === ts("2024-01-02 00:00:00"))
+    // zero-insert re-run
+    assert(runAndCheck("2024-01-02 00:00:00").recordsInserted === 0)
+    // inserting run: one new slot per location
+    val next = runAndCheck("2024-01-02 00:15:00")
+    assert(next.recordsInserted === 2)
+    assert(next.latestCursor === ts("2024-01-02 00:15:00"))
+    // empty extract window: nothing fetched, the old cursor is echoed
+    val empty = runAndCheck("2024-01-02 00:30:00", pastDays = 0, forecastDays = 0)
+    assert(empty.recordsFetched === 0 && empty.recordsInserted === 0)
+    assert(empty.latestCursor === ts("2024-01-02 00:15:00"))
+    // three days after the sink's last row: the cursor is older than the
+    // window start, so the whole past day of the window lands
+    val late = runAndCheck("2024-01-05 00:15:00")
+    assert(late.recordsInserted === 2L * 97)
+    assert(late.latestCursor === ts("2024-01-05 00:15:00"))
+  }
+
+  // Job and sink-read budget of one ingest run on a seeded sink (2
+  // locations, 3 days of history, 578 rows), measured at local[4]. With
+  // the post-commit cursor rescan and a second schema inference the runs
+  // took 15 (zero-insert) and 16 (inserting) jobs and read the sink 3x
+  // (cursor, anti-join, rescan); the single-scan run takes 11 and 12
+  // jobs. Caps are those counts plus 1; the sink is read at most twice
+  // (cursor + anti-join).
+  test("pipeline: one ingest run stays within its job and sink-read budget") {
+    val sink = emptySink("graft_sink_budget", 2)
+    val seeded = WeatherIngest.run(spark, sink, "2024-01-04 00:00:00", pastDays = 3,
+      locations = 2)
+    assert(seeded.recordsInserted === 2L * (3 * 96 + 1))
+    val fetched = 2L * 2 * 96 // one past day + one forecast day per location
+    for ((now, inserted, cap) <- Seq(("2024-01-04 00:05:00", 0L, 12),
+                                     ("2024-01-04 00:15:00", 2L, 13))) {
+      val rowsBefore = spark.read.parquet(sink).count()
+      val (r, jobs, records) = usage(
+        WeatherIngest.run(spark, sink, now, locations = 2))
+      assert(r.statusCode === 200 && r.recordsFetched === fetched &&
+        r.recordsInserted === inserted, r)
+      assert(jobs <= cap, s"run at $now took $jobs Spark jobs (cap $cap)")
+      assert(records <= 2 * rowsBefore,
+        s"run at $now read $records sink records, more than 2x $rowsBefore")
+    }
+  }
+
+  for ((arg, pastDays, forecastDays, locations, value) <- Seq(
+      ("pastDays", -1, 1, 1, -1),
+      ("forecastDays", 1, -2, 1, -2),
+      ("locations", 1, 1, 0, 0)))
+    test(s"pipeline: $arg out of range fails up front, before the guard and any Spark job") {
+      // the sink is missing too: the argument check must answer first
+      val (r, jobs, _) = usage(WeatherIngest.run(spark, "/tmp/definitely_missing_sink_xyz",
+        "2024-01-02 00:00:00", pastDays, forecastDays, locations))
+      assert(r.statusCode === 500)
+      assert(r.error.exists(e => e.contains(arg) && e.endsWith(s"got $value")), r.error)
+      assert(jobs === 0, s"$jobs Spark jobs ran before the argument check")
+    }
+
   test("pipeline: NaN measures land as NULL in the sink") {
-    val sink = java.nio.file.Files.createTempDirectory("graft_sink2").toString
-    readGrid(1).limit(0).write.mode("overwrite").parquet(sink)
+    val sink = emptySink("graft_sink2", 1)
     WeatherIngest.run(spark, sink, "2024-01-02 00:00:00")
     val stored = spark.read.parquet(sink)
     assert(stored.filter(isnan($"temperature_2m")).count() === 0)
