@@ -425,16 +425,14 @@ object Dedup {
     */
   private[graft] val CC_STAR_BUDGET = 12
 
-  /** Auto hub-split threshold (degree): when `spark.graft.cc.hubDegree`
-    * is UNSET, [[connectedComponents]] probes the graph itself and
-    * switches to the hub-split formulation once any node's degree (or
-    * any tentative component's size — the upper bound on the emergent
-    * star's hub degree) exceeds this. 8e6 sits under the measured
-    * ~10⁷-row single-task sort-budget crossover (round-12 planted-star
-    * measurement, recorded in ARCHITECTURE.md: window and hub-split par
-    * at H=16e6, 660 vs 141 s at H=64e6) with margin for payload-heavier
-    * rows. Overridable for tests via
-    * `spark.graft.cc.autoHubDegree`.
+  /** Hub-split threshold (degree): [[connectedComponents]] probes the
+    * graph itself and switches to the hub-split formulation once any
+    * node's degree (or any tentative component's size — the upper bound
+    * on the emergent star's hub degree) exceeds this. 8e6 sits under
+    * the measured ~10⁷-row single-task sort-budget crossover (round-12
+    * planted-star measurement, recorded in ARCHITECTURE.md: window and
+    * hub-split par at H=16e6, 660 vs 141 s at H=64e6) with margin for
+    * payload-heavier rows.
     */
   private[graft] val CC_AUTO_HUB_DEGREE = 8L * 1000 * 1000
 
@@ -872,23 +870,11 @@ object Dedup {
     // log-round star algorithm exists for.
     "d16_simhash_clusters" -> { (s, d) =>
       import s.implicits._
+      // eager: CC reads the pairs twice (edge frame and node roster)
       val pairs = d03Pairs(s, d).select($"d1", $"d2").distinct()
         .localCheckpoint()
-      val edges = pairs.select($"d1".as("a"), $"d2".as("b"))
-      // seed only the edge endpoints: an isolated node keeps its own
-      // unique label forever and the >1-member filter drops it, so the
-      // propagation frames shrink from corpus-size to component-size
-      val seed = pairs.select($"d1".as("doc_id"))
-        .unionByName(pairs.select($"d2".as("doc_id"))).distinct()
-        .select($"doc_id", $"doc_id".as("lbl"))
-      val converged = connectedComponents(seed, edges, CC_STAR_BUDGET)
-      val clustered = converged.groupBy($"lbl")
-        .agg(count(lit(1)).as("n")).filter($"n" > 1).select($"lbl")
-      // semi join, NOT an explicit broadcast: >1-member clusters grow
-      // linearly with the corpus, so a forced broadcast of the id set
-      // would OOM at exactly the scale this linear consumable targets -
-      // AQE still broadcasts it when it measures small
-      converged.join(clustered, Seq("lbl"), "left_semi")
+      // no >1-member filter: see d06
+      connectedComponents(pairs)
         .select($"doc_id", $"lbl".as("canonical_id"))
         .orderBy($"doc_id")
     },
@@ -1517,24 +1503,11 @@ object Dedup {
     // intermediate that never leaves the shuffle.
     "d11_editdist_clusters" -> { (s, d) =>
       import s.implicits._
-      // eager: the seed job unions two branches of pairs, and a lazy
-      // cache races inside it — the banded-DP pair pass ran twice
+      // eager: CC reads the pairs twice (edge frame and node roster) —
+      // unmaterialized, the banded-DP pair pass would run twice
       val pairs = d07Pairs(s, d).select($"d1", $"d2").localCheckpoint()
-      val edges = pairs.select($"d1".as("a"), $"d2".as("b"))
-      // seed only the edge endpoints: an isolated node keeps its own
-      // unique label forever and the >1-member filter drops it, so the
-      // propagation frames shrink from corpus-size to component-size
-      val seed = pairs.select($"d1".as("doc_id"))
-        .unionByName(pairs.select($"d2".as("doc_id"))).distinct()
-        .select($"doc_id", $"doc_id".as("lbl"))
-      val converged = connectedComponents(seed, edges, CC_STAR_BUDGET)
-      val clustered = converged.groupBy($"lbl")
-        .agg(count(lit(1)).as("n")).filter($"n" > 1).select($"lbl")
-      // semi join, NOT an explicit broadcast: >1-member clusters grow
-      // linearly with the corpus, so a forced broadcast of the id set
-      // would OOM at exactly the scale this linear consumable targets -
-      // AQE still broadcasts it when it measures small
-      converged.join(clustered, Seq("lbl"), "left_semi")
+      // no >1-member filter: see d06
+      connectedComponents(pairs)
         .select($"doc_id", $"lbl".as("canonical_id"))
         .orderBy($"doc_id")
     },
@@ -1556,25 +1529,15 @@ object Dedup {
     "d06_dedup_clusters" -> { (s, d) =>
       import s.implicits._
       // pre-orderBy pairs: materializing d04's sorted output would pay
-      // a global sort the propagation immediately destroys. Eager, not
-      // .cache(): the seed job unions two branches of pairs and a lazy
-      // cache races inside it — the gram kernel + DP verify ran twice
+      // a global sort the propagation immediately destroys. Eager: CC
+      // reads the pairs twice (edge frame and node roster) —
+      // unmaterialized, the gram kernel + DP verify would run twice
       val pairs = d04Pairs(s, d).select($"d1", $"d2").localCheckpoint()
-      val edges = pairs.select($"d1".as("a"), $"d2".as("b"))
-      // seed only the edge endpoints: an isolated node keeps its own
-      // unique label forever and the >1-member filter drops it, so the
-      // propagation frames shrink from corpus-size to component-size
-      val seed = pairs.select($"d1".as("doc_id"))
-        .unionByName(pairs.select($"d2".as("doc_id"))).distinct()
-        .select($"doc_id", $"doc_id".as("lbl"))
-      val converged = connectedComponents(seed, edges, CC_STAR_BUDGET)
-      val clustered = converged.groupBy($"lbl")
-        .agg(count(lit(1)).as("n")).filter($"n" > 1).select($"lbl")
-      // semi join, NOT an explicit broadcast: >1-member clusters grow
-      // linearly with the corpus, so a forced broadcast of the id set
-      // would OOM at exactly the scale this linear consumable targets -
-      // AQE still broadcasts it when it measures small
-      converged.join(clustered, Seq("lbl"), "left_semi")
+      // CC labels only edge endpoints, and every pair generator joins on
+      // x.doc_id < y.doc_id (no self-loops), so each labelled doc has an
+      // edge to another and every cluster has >= 2 members: d06, d11 and
+      // d16 need no >1-member filter (OperatorSpec pins the invariant)
+      connectedComponents(pairs)
         .select($"doc_id", $"lbl".as("cluster_id"))
         .orderBy($"doc_id")
     },
@@ -1897,12 +1860,8 @@ object Dedup {
     "d20_cluster_representatives" -> { (s, d) =>
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      val pairs = d04Pairs(s, d).select($"d1", $"d2").localCheckpoint()
-      val edges = pairs.select($"d1".as("a"), $"d2".as("b"))
-      val seed = pairs.select($"d1".as("doc_id"))
-        .unionByName(pairs.select($"d2".as("doc_id"))).distinct()
-        .select($"doc_id", $"doc_id".as("lbl"))
-      val labels = connectedComponents(seed, edges, CC_STAR_BUDGET)
+      val labels = connectedComponents(
+        d04Pairs(s, d).select($"d1", $"d2").localCheckpoint())
       val q = corpus(s, d)
         .withColumn("ws", graft.functions.WordStats.word_stats($"text"))
         .withColumn("n_words", graft.functions.WordStats.nWords($"ws"))
@@ -2254,11 +2213,7 @@ object Dedup {
     "d28_cluster_split" -> { (s, d) =>
       import s.implicits._
       val pairs = d04Pairs(s, d).select($"d1", $"d2").localCheckpoint()
-      val edges = pairs.select($"d1".as("a"), $"d2".as("b"))
-      val seed = pairs.select($"d1".as("doc_id"))
-        .unionByName(pairs.select($"d2".as("doc_id"))).distinct()
-        .select($"doc_id", $"doc_id".as("lbl"))
-      val converged = connectedComponents(seed, edges, CC_STAR_BUDGET)
+      val converged = connectedComponents(pairs)
       val assigned = corpus(s, d).select($"doc_id")
         .join(converged, Seq("doc_id"), "left")
         .select($"doc_id", coalesce($"lbl", $"doc_id").as("grp"))
@@ -2297,15 +2252,10 @@ object Dedup {
     // aggregate; weights never materialize per-pair.
     "d29_soft_dedup" -> { (s, d) =>
       import s.implicits._
-      // eager: the seed job unions two branches of pairs (and round 1
-      // of the CC loop reads it a third time) — unmaterialized, the
-      // gram kernel + DP verify ran ~3x
-      val pairs = d04Pairs(s, d).select($"d1", $"d2").localCheckpoint()
-      val edges = pairs.select($"d1".as("a"), $"d2".as("b"))
-      val seed = pairs.select($"d1".as("doc_id"))
-        .unionByName(pairs.select($"d2".as("doc_id"))).distinct()
-        .select($"doc_id", $"doc_id".as("lbl"))
-      val converged = connectedComponents(seed, edges, CC_STAR_BUDGET)
+      // eager: CC reads the pairs twice (edge frame and node roster) —
+      // unmaterialized, the gram kernel + DP verify would run twice
+      val converged = connectedComponents(
+        d04Pairs(s, d).select($"d1", $"d2").localCheckpoint())
       val assigned = corpus(s, d)
         .select($"doc_id", $"source", length($"text").cast("long").as("n_chars"))
         .join(converged, Seq("doc_id"), "left")
@@ -3530,25 +3480,45 @@ object Dedup {
     * O(E) join per cycle buys back a whole ~4-shuffle cycle at a
     * ~log2(diameter) cycle count.
     *
-    * Throws if not converged within `maxCycles` (see
-    * [[CC_STAR_BUDGET]]) — a pathological graph fails loudly rather
-    * than looping. localCheckpoint per cycle truncates the otherwise
-    * geometric lineage and materializes the frame the convergence
-    * check reads anyway. The returned frame is checkpointed, so
-    * callers may drop upstream caches before consuming it.
+    * `pairs` is the caller's (d1, d2) frame, in either orientation and
+    * with duplicates allowed; the result is (doc_id, lbl) for every
+    * endpoint, lbl = the minimum id of its component. Throws if not
+    * converged within `maxCycles` (see [[CC_STAR_BUDGET]]) — a
+    * pathological graph fails loudly rather than looping. `hubDegree`
+    * is the degree above which the loop switches to the hub-split
+    * formulation (see [[CC_AUTO_HUB_DEGREE]]; 0 switches whenever the
+    * graph has an edge). localCheckpoint per cycle truncates the
+    * otherwise geometric lineage and materializes the frame the
+    * convergence check reads anyway. The returned frame is
+    * checkpointed, so callers may drop upstream caches before
+    * consuming it.
     */
-  private[graft] def connectedComponents(seed: DataFrame, edges: DataFrame,
-                                         maxCycles: Int): DataFrame = {
-    val spark = edges.sparkSession
+  private[graft] def connectedComponents(pairs: DataFrame,
+                                         maxCycles: Int = CC_STAR_BUDGET,
+                                         hubDegree: Long = CC_AUTO_HUB_DEGREE)
+      : DataFrame = {
+    require(maxCycles >= 1, s"maxCycles must be >= 1, got $maxCycles")
+    require(hubDegree >= 0, s"hubDegree must be >= 0, got $hubDegree")
+    val spark = pairs.sparkSession
     import spark.implicits._
     // canonical parent-pointer orientation: u points at smaller v.
     // Symmetric/dup inputs collapse here (greatest/least + the v>u
     // filter in largeStar keep duplicate orientations harmless), and
     // the frame is materialized once — it is also the ground-truth
     // edge set the convergence check verifies against.
-    val e0 = edges
-      .select(greatest($"a", $"b").as("u"), least($"a", $"b").as("v"))
+    val e0 = pairs
+      .select(greatest($"d1", $"d2").as("u"), least($"d1", $"d2").as("v"))
       .filter($"u" =!= $"v")
+      .localCheckpoint()
+    // the node roster — every endpoint, a self-loop-only one included —
+    // with its degree in e0 (self-loops add none), from ONE aggregate.
+    // Every convergence check and the final label extraction re-read
+    // it, so it is materialized once: its lineage is an O(E) shuffle
+    // that must not replay per cycle.
+    val roster = pairs
+      .select(explode(array($"d1", $"d2")).as("doc_id"),
+              ($"d1" =!= $"d2").as("edge"))
+      .groupBy($"doc_id").agg(count(when($"edge", 1)).as("deg"))
       .localCheckpoint()
     // Both stars need exactly one thing per node: min over its
     // neighborhood. A groupBy+join formulation pays two passes over the
@@ -3568,33 +3538,29 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     val byU = Window.partitionBy("u")
     val byUOrdV = byU.orderBy("v")
-    // Hub-skew knob: spark.graft.cc.hubDegree = T (numeric) FORCES both
-    // stars from the single-window formulation to a hub-split two-level
-    // min; "window" forces the window formulation; UNSET means AUTO —
-    // the loop probes the graph and switches itself (below).
-    // The window min's one honest scale caveat is that a node whose
-    // degree exceeds one task's sort budget pays a single-task window
-    // sort; on this path per-u mins come instead from groupBy(u) (the
-    // map-side partial agg compresses the hub key to one partial per map
-    // task) and join back to the edge rows split by hub-ness: the few
-    // nodes with degree > T — at most |E|/T of them, so a tiny frame at
-    // any scale — BROADCAST their (u, m) row and meet their edge rows
-    // map-only (no shuffle can skew), while the rest shuffle-join with
-    // every key's degree <= T by construction. (A salted join-back —
+    // Hub skew: the window min's one honest scale caveat is that a node
+    // whose degree exceeds one task's sort budget pays a single-task
+    // window sort. The hub-split formulation takes per-u mins from
+    // groupBy(u) instead (the map-side partial agg compresses the hub
+    // key to one partial per map task) and joins them back to the edge
+    // rows split by hub-ness: the few nodes with degree > hubDegree —
+    // at most |E|/hubDegree of them, so a tiny frame at any scale —
+    // BROADCAST their (u, m) row and meet their edge rows map-only (no
+    // shuffle can skew), while the rest shuffle-join with every key's
+    // degree <= hubDegree by construction. (A salted join-back —
     // fanning EVERY u's min × S salts — was measured and rejected:
     // O(V·S) fan rows cost 276 s where this path and the window read
-    // 26 s, planted star H=16e6.) Default (conf unset) keeps the window
-    // plan: two shuffle stages per cycle, the floor, and measured faster
-    // on fixture-shaped graphs — see ARCHITECTURE bench notes for the
-    // planted-star crossover. Both paths share the emission algebra, the
-    // convergence check, and every CC oracle.
+    // 26 s, planted star H=16e6.) The window plan stays the default:
+    // two shuffle stages per cycle, the floor, and measured faster on
+    // fixture-shaped graphs — see ARCHITECTURE bench notes for the
+    // planted-star crossover. Both paths share the emission algebra,
+    // the convergence check, and every CC oracle.
     //
-    // AUTO mode (conf unset): nobody should have to know their graph is
-    // skewed before running CC on it. Two probes pick the path at run
-    // time, both O(V) map-side-combined aggregates returning ONE long:
-    //  1. before cycle 1, the max symmetric degree of e0 — catches a
-    //     pre-existing hub (the planted-star shape) before any window
-    //     sort ever runs;
+    // Nobody should have to know their graph is skewed before running
+    // CC on it. Two probes pick the path at run time, each ONE long:
+    //  1. before cycle 1, the max degree, read from the roster
+    //     checkpoint by one narrow job — catches a pre-existing hub
+    //     (the planted-star shape) before any window sort ever runs;
     //  2. per cycle, the max TENTATIVE component size, read from the
     //     labels frame the convergence check just cached (so the probe
     //     is a narrow job over cached O(V) rows, not a recompute) — at
@@ -3605,29 +3571,15 @@ object Dedup {
     //     one cycle (a cycle can square a degree), bounded by one
     //     below-threshold-squared sort; real graphs grow tentative
     //     components far faster than degrees.
-    // Fixture-shaped graphs never trip either probe, so the default
-    // plan stays the measured-faster window formulation; once a probe
-    // fires the switch is sticky (stars only contract toward the hub).
-    val hubConf = spark.conf.getOption("spark.graft.cc.hubDegree")
-    val auto = hubConf.isEmpty
-    val autoT = spark.conf.getOption("spark.graft.cc.autoHubDegree")
-      .map(_.toLong).getOrElse(CC_AUTO_HUB_DEGREE)
-    var hubT = hubConf.filter(_ != "window")
-      .map(_.toLong).getOrElse(Long.MaxValue)
-    if (auto) {
-      // probe 1: max symmetric degree of the (checkpointed) input frame
-      val maxDeg = e0.select(explode(array($"u", $"v")).as("x"))
-        .groupBy($"x").agg(count(lit(1)).as("deg"))
-        .agg(max($"deg").as("m")).first().getAs[Any]("m") match {
-          case null    => 0L
-          case l: Long => l
-        }
-      if (maxDeg > autoT) {
-        hubT = autoT
-        System.err.println(s"[graft.cc] auto hub-split ON: input max " +
-          s"degree $maxDeg > $autoT")
-      }
+    // Fixture-shaped graphs never trip either probe; once one fires the
+    // switch is sticky (stars only contract toward the hub).
+    var hubT = Long.MaxValue // window formulation until a probe fires
+    def probe(seen: Long, what: String): Unit = if (seen > hubDegree) {
+      hubT = hubDegree
+      System.err.println(s"[graft.cc] hub-split ON: $what $seen > $hubDegree")
     }
+    probe(roster.select($"deg").as[Long].rdd.fold(0L)(math.max),
+      "input max degree")
     def hubSplitMinJoin(rows: DataFrame): DataFrame = {
       // rows: (u, v) -> (u, v, m) with m = min(v) over u's rows
       val mins = rows.groupBy($"u")
@@ -3679,11 +3631,6 @@ object Dedup {
             when($"rn" === 1, struct($"u".as("u"), $"m".as("v")))))).as("e"))
           .select($"e.u", $"e.v")
     }
-    // the node roster is re-read by every convergence check and by the
-    // final label extraction: materialize it ONCE (it is O(V), and its
-    // lineage — a distinct over the caller's pair frame — is an O(E)
-    // shuffle that must not replay per cycle)
-    val roster = seed.select($"doc_id").localCheckpoint()
     // tentative per-node labels implied by a parent-pointer frame
     def labelsOf(ed: DataFrame): DataFrame = roster
       .join(ed.groupBy($"u").agg(min($"v").as("p")),
@@ -3714,21 +3661,11 @@ object Dedup {
       ed = smallStar(largeStar(ed)).localCheckpoint()
       val l = labelsOf(ed).cache()
       converged = groundTruthConverged(l)
-      if (auto && !converged && hubT == Long.MaxValue) {
-        // probe 2: the cache the check just populated makes this a
-        // narrow O(V) job; tentative component size upper-bounds the
-        // emerging representative's degree in the remaining cycles
-        val maxComp = l.groupBy($"lbl").agg(count(lit(1)).as("n"))
-          .agg(max($"n").as("m")).first().getAs[Any]("m") match {
-            case null    => 0L
-            case x: Long => x
-          }
-        if (maxComp > autoT) {
-          hubT = autoT
-          System.err.println(s"[graft.cc] auto hub-split ON at cycle " +
-            s"${cycle + 1}: max tentative component $maxComp > $autoT")
-        }
-      }
+      // probe 2: the cache the check just populated makes this a narrow
+      // O(V) job (an unconverged l has rows, so the max is never null)
+      if (!converged && hubT == Long.MaxValue)
+        probe(l.groupBy($"lbl").count().agg(max($"count")).as[Long].first(),
+          s"max tentative component at cycle ${cycle + 1}")
       if (converged) labels = l else l.unpersist(blocking = false)
       cycle += 1
     }

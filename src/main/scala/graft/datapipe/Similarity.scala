@@ -2326,6 +2326,14 @@ object Similarity {
         .filter($"rn" <= nEntries).drop("rn")
   }
 
+  /** One copy of `scored`'s (q_id, vec_id, cosine) rows per beam width
+    * (2, 4, 8), tagged `beam` — the seeding every beam report walks or
+    * ranks from. */
+  private def perBeam(scored: DataFrame): DataFrame =
+    Seq(2, 4, 8).map(b => scored.withColumn("beam", lit(b)))
+      .reduce(_ unionByName _)
+      .select("beam", "q_id", "vec_id", "cosine")
+
   /** s35: the PQ-scored beam traversal + exact re-rank (see the
     * registry comment). Shares [[beamFixture]] and the s34 seeding;
     * the PQ store is s11/s12's machinery (codebook trained once,
@@ -2353,13 +2361,9 @@ object Similarity {
         .join(broadcast(dt), Seq("q_id", "j", "code"))
         .groupBy($"beam", $"q_id", $"vec_id")
         .agg(sum($"dq").as("adc"))
-      val entry = beamEntries(scoredAll, 4).select($"q_id", $"vec_id")
-      val beams = Seq(2, 4, 8)
       val wb = Window.partitionBy($"beam", $"q_id")
         .orderBy($"adc".asc, $"vec_id")
-      var visited = beams.map(b => entry.withColumn("beam", lit(b)))
-        .reduce(_ unionByName _)
-        .select($"beam", $"q_id", $"vec_id")
+      var visited = perBeam(beamEntries(scoredAll, 4)).drop("cosine")
         .localCheckpoint()
       var frontier = visited
       for (_ <- 1 to 6) {
@@ -2399,10 +2403,7 @@ object Similarity {
                               nEntries: Int): DataFrame = {
       import s.implicits._
       val fx = beamFixture(s, d)
-      val entry = beamEntries(fx.scoredAll, nEntries)
-      val visited0 = Seq(2, 4, 8).map(b => entry.withColumn("beam", lit(b)))
-        .reduce(_ unionByName _)
-        .select($"beam", $"q_id", $"vec_id", $"cosine")
+      val visited0 = perBeam(beamEntries(fx.scoredAll, nEntries))
         .localCheckpoint()
       beamLoopReport(s, fx, visited0,
         visited0.select($"beam", $"q_id", $"vec_id"))
@@ -2422,10 +2423,7 @@ object Similarity {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       val fx = beamFixture(s, d)
-      val routed = fx.scoredAll.filter($"vec_id" % 4 === 0)
-      val visited0 = Seq(2, 4, 8).map(b => routed.withColumn("beam", lit(b)))
-        .reduce(_ unionByName _)
-        .select($"beam", $"q_id", $"vec_id", $"cosine")
+      val visited0 = perBeam(fx.scoredAll.filter($"vec_id" % 4 === 0))
         .localCheckpoint()
       val wb = Window.partitionBy($"beam", $"q_id")
         .orderBy($"cosine".desc, $"vec_id")
@@ -2450,13 +2448,7 @@ object Similarity {
       val wt = Window.partitionBy($"q_id").orderBy($"cosine".desc, $"vec_id")
       val truthLive = scoredLive.withColumn("rn", row_number().over(wt))
         .filter($"rn" <= 10).select($"q_id", $"vec_id").localCheckpoint()
-      val we = Window.partitionBy($"q_id").orderBy($"vec_id".asc)
-      val entry = scoredLive.withColumn("rn", row_number().over(we))
-        .filter($"rn" === 1).drop("rn")
-      val visited0 = Seq(2, 4, 8).map(b => entry.withColumn("beam", lit(b)))
-        .reduce(_ unionByName _)
-        .select($"beam", $"q_id", $"vec_id", $"cosine")
-        .localCheckpoint()
+      val visited0 = perBeam(beamEntries(scoredLive, 1)).localCheckpoint()
       val frontier0 = visited0.select($"beam", $"q_id", $"vec_id")
       val skip = beamLoopReport(s,
         fx.copy(scoredAll = scoredLive, truth = truthLive),
@@ -2479,33 +2471,19 @@ object Similarity {
     * #2 — the walk used to run twice on identical inputs). */
   private def freshnessBeamRecall(s: SparkSession, d: String): DataFrame = {
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
       val indexed = beamIndexedOnly
       val fxOld = beamFixture(s, d, oldGraph = true)
       val fxFull = beamFixture(s, d)
-      val beams = Seq(2, 4, 8)
-      def seed(scored: DataFrame,
-               where: Option[org.apache.spark.sql.Column])
-          : (DataFrame, DataFrame) = {
-        val we = Window.partitionBy($"q_id").orderBy($"vec_id".asc)
-        val entry = where.foldLeft(scored)(_ filter _)
-          .withColumn("rn", row_number().over(we))
-          .filter($"rn" === 1).drop("rn")
-        val v0 = beams.map(b => entry.withColumn("beam", lit(b)))
-          .reduce(_ unionByName _)
-          .select($"beam", $"q_id", $"vec_id", $"cosine")
-          .localCheckpoint()
+      def seed(scored: DataFrame): (DataFrame, DataFrame) = {
+        val v0 = perBeam(beamEntries(scored, 1)).localCheckpoint()
         (v0, v0.select($"beam", $"q_id", $"vec_id"))
       }
-      val (v0o, f0o) = seed(fxOld.scoredAll, Some(indexed))
-      val tail = fxOld.scoredAll.filter(!indexed)
-      val tailRanked = beams.map(b => tail.withColumn("beam", lit(b)))
-        .reduce(_ unionByName _)
-        .select($"beam", $"q_id", $"vec_id", $"cosine")
+      val (v0o, f0o) = seed(fxOld.scoredAll.filter(indexed))
+      val tailRanked = perBeam(fxOld.scoredAll.filter(!indexed))
       val walked = beamWalk(s, fxOld, v0o, f0o)
       val stale = beamRank(fxOld, walked)
       val hybrid = beamRank(fxOld, walked, extraRanked = Some(tailRanked))
-      val (v0f, f0f) = seed(fxFull.scoredAll, None)
+      val (v0f, f0f) = seed(fxFull.scoredAll)
       val rebuilt = beamLoopReport(s, fxFull, v0f, f0f)
       stale.select(lit("stale").as("policy"), col("*"))
         .unionByName(hybrid.select(lit("hybrid").as("policy"), col("*")))

@@ -16,7 +16,10 @@ import org.apache.spark.sql.functions._
   *  - extract (:89-124): WeatherGridSource scan with ts-range pushdown
   *                      bounded by past_days/forecast_days
   *  - transform (:127-145): future filter + strictly-after-cursor filter
+  *                      (`WeatherPipeline.filterNewRecords`, checked by
+  *                      w02/w03)
   *  - NaN->NULL (:167-173): measure encoding at the sink boundary
+  *                      (`WeatherPipeline.nanToNull`, w04)
   *  - load (:176-186):  within-batch dedup + left-anti vs sink + append
   *                      (ON CONFLICT (date) DO NOTHING)
   *  - report (:228-238): IngestResult envelope; the reported cursor is
@@ -143,10 +146,10 @@ object WeatherIngest {
       // downstream dedup/append pipeline reads the cached blocks
       val raw = fetch(spark, now, pastDays, forecastDays, locations).cache()
       val fetched = withRetry()(raw.count())
-      val noFuture = raw.filter(col("ts") <= lit(now).cast("timestamp"))
-      val fresh = cursor.fold(noFuture)(c => noFuture.filter(col("ts") > lit(c)))
-      val encoded = MEASURES.foldLeft(fresh)((df, m) =>
-        df.withColumn(m, when(isnan(col(m)), lit(null)).otherwise(col(m))))
+      val encoded = WeatherPipeline.nanToNull(
+        WeatherPipeline.filterNewRecords(raw, "ts", lit(now).cast("timestamp"),
+          cursor.map(lit)),
+        MEASURES)
       // anti-join side pruned to the extract window: ts is part of the
       // upsert key, so sink rows before the window can never match — the
       // filter pushes to the parquet scan (and prunes partitions on a

@@ -21,8 +21,9 @@ import Dets._
   *                        NOTHING == left-anti join + append, first write wins)
   *  - O11 result envelope: lambda_function.py:228-238
   *
-  * Scale notes: the cursor read is metadata-only on Parquet (footer
-  * min/max stats answer agg(max) without scanning data). The anti-join
+  * Scale notes: the cursor read is a full scan of the ts column —
+  * Spark does not answer agg(max) from Parquet footer stats — so it
+  * costs O(history) (see WeatherIngest.latestCursor). The anti-join
   * upsert broadcasts whichever side is small — in steady state the
   * incoming batch is tiny vs the sink, so it's a broadcast-anti against
   * the batch with the sink streamed, never a full shuffle of the sink.
@@ -183,8 +184,7 @@ object WeatherPipeline {
     // O6 — future filter at a fixed NOW over the events stream.
     "w02_future_filter" -> { (s, d) =>
       import s.implicits._
-      T.events(s, d)
-        .filter($"ts" <= lit(NOW).cast("timestamp"))
+      filterNewRecords(T.events(s, d), "ts", lit(NOW).cast("timestamp"), None)
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n"), max(date_trunc("second", $"ts")).as("max_ts"))
         .orderBy($"event_type")

@@ -23,41 +23,6 @@ class IngestSpec extends SparkSpec {
     sink
   }
 
-  /** Spark jobs started, and records read by parquet file scans, while
-    * `f` runs. Listener events arrive asynchronously: a marker job is run
-    * afterwards, and its end event means every earlier event has been
-    * delivered. */
-  private def usage[T](f: => T): (T, Int, Long) = {
-    import org.apache.spark.scheduler._
-    val sc = spark.sparkContext
-    val marker = "graft.test.drain"
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    var jobs = 0
-    var records = 0L // parquet file-scan records
-    val listener = new SparkListener {
-      private var markerJob = -1
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(marker) != null)
-          markerJob = e.jobId
-        else jobs += 1
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
-          records += e.stageInfo.taskMetrics.inputMetrics.recordsRead
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == markerJob) drained.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val r = f
-      sc.setLocalProperty(marker, "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(marker, null)
-      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "listener events did not drain")
-      (r, jobs, records)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("source: half-open grid, one partition per location") {
     val df = readGrid(4)
     assert(df.count() === 4L * 192) // 2 days x 96 slots x 4 locations

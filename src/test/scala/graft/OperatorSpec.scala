@@ -568,32 +568,34 @@ class OperatorSpec extends SparkSpec {
     // phantom second cluster. Accepting symmetric (both-direction)
     // edges here also pins the canonicalization: the engine callers
     // pass one orientation, this test passes both.
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
-      .toDF("a", "b")
-    val sym = edges.unionByName(edges.select($"b".as("a"), $"a".as("b")))
-    val seed = (1L to 5L).toDF("doc_id").withColumn("lbl", $"doc_id")
-    val labels = datapipe.Dedup.connectedComponents(seed, sym, 2)
-      .as[(Long, Long)].collect().toMap
-    assert(labels === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("d1", "d2")
+    val sym = edges.unionByName(edges.select($"d2".as("d1"), $"d1".as("d2")))
+    val (labels, jobs, _) = usage(datapipe.Dedup.connectedComponents(sym, 2))
+    assert(labels.as[(Long, Long)].collect().toMap ===
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
+    // With a caller-built roster and a separate shuffled degree probe the
+    // call took 28 Spark jobs at local[4]; deriving roster and degrees
+    // from one aggregate, read back by a narrow probe, takes 27 (cap: +1).
+    assert(jobs <= 28, s"connectedComponents ran $jobs Spark jobs (cap 28)")
     // an insufficient budget fails loudly instead of under-merging
     intercept[IllegalArgumentException] {
-      datapipe.Dedup.connectedComponents(seed, sym, 1)
+      datapipe.Dedup.connectedComponents(sym, 1)
     }
     // two components + a long chain: star rounds keep components
     // separate (no over-merge) while compressing the 8-chain in
     // O(log) cycles — 3 cycles suffice where propagation needs 7 pulls
     val twoCC = (Seq((10L, 11L)) ++ (1L to 7L).map(i => (i, i + 1)))
-      .toDF("a", "b")
-    val seed2 = twoCC.select($"a".as("doc_id"))
-      .unionByName(twoCC.select($"b".as("doc_id"))).distinct()
-      .withColumn("lbl", $"doc_id")
-    val l2 = datapipe.Dedup.connectedComponents(seed2, twoCC, 3)
+      .toDF("d1", "d2")
+    val l2 = datapipe.Dedup.connectedComponents(twoCC, 3)
       .as[(Long, Long)].collect().toMap
     assert(l2 === ((1L to 8L).map(_ -> 1L) ++ Seq(10L -> 10L, 11L -> 10L)).toMap)
     // an edge-free graph converges immediately to an empty assignment
-    assert(datapipe.Dedup.connectedComponents(
-      sym.limit(0).select($"a".as("doc_id"), $"a".as("lbl")),
-      sym.limit(0), 4).count() === 0L)
+    assert(datapipe.Dedup.connectedComponents(sym.limit(0), 4).count() === 0L)
+    // out-of-range parameters fail up front
+    for ((cycles, hub) <- Seq((0, 1L), (1, -1L)))
+      intercept[IllegalArgumentException] {
+        datapipe.Dedup.connectedComponents(sym, cycles, hub)
+      }
   }
 
   test("hub-split CC (hubDegree set) matches the window path: labels, cycle budget, loud failure") {
@@ -603,66 +605,59 @@ class OperatorSpec extends SparkSpec {
     // only the min computation differs. Covers: the diameter-4 chain
     // (2 cycles), the two-component 8-chain (3 cycles), a planted STAR
     // (the shape the split exists for — hub 0 with 50 leaves, 1 cycle:
-    // already a star), the loud budget failure, and thresholds that
-    // route most nodes down the broadcast path (T=1) vs only the true
-    // hub (T=10) — both split ratios must agree.
-    for (hubT <- Seq(1, 10)) {
-      spark.conf.set("spark.graft.cc.hubDegree", hubT.toString)
-      try {
-        val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("a", "b")
-        val sym = edges.unionByName(edges.select($"b".as("a"), $"a".as("b")))
-        val seed = (1L to 5L).toDF("doc_id").withColumn("lbl", $"doc_id")
-        assert(datapipe.Dedup.connectedComponents(seed, sym, 2)
-          .as[(Long, Long)].collect().toMap ===
-          (1L to 5L).map(_ -> 1L).toMap)
-        intercept[IllegalArgumentException] {
-          datapipe.Dedup.connectedComponents(seed, sym, 1)
-        }
-        val twoCC = (Seq((10L, 11L)) ++ (1L to 7L).map(i => (i, i + 1)))
-          .toDF("a", "b")
-        val seed2 = twoCC.select($"a".as("doc_id"))
-          .unionByName(twoCC.select($"b".as("a")).select($"a".as("doc_id")))
-          .distinct().withColumn("lbl", $"doc_id")
-        assert(datapipe.Dedup.connectedComponents(seed2, twoCC, 3)
-          .as[(Long, Long)].collect().toMap ===
-          ((1L to 8L).map(_ -> 1L) ++ Seq(10L -> 10L, 11L -> 10L)).toMap)
-        val star = (1L to 50L).map(i => (0L, i)).toDF("a", "b")
-        val seedS = (0L to 50L).toDF("doc_id").withColumn("lbl", $"doc_id")
-        assert(datapipe.Dedup.connectedComponents(seedS, star, 2)
-          .as[(Long, Long)].collect().toMap ===
-          (0L to 50L).map(_ -> 0L).toMap)
-      } finally spark.conf.unset("spark.graft.cc.hubDegree")
+    // already a star), and the loud budget failure. hubDegree = 1 trips
+    // the degree probe on every graph here and routes most nodes down
+    // the broadcast path; hubDegree = 10 trips it on the star only,
+    // where only the true hub is broadcast.
+    for (hubT <- Seq(1L, 10L)) {
+      val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("d1", "d2")
+      val sym = edges.unionByName(edges.select($"d2".as("d1"), $"d1".as("d2")))
+      assert(datapipe.Dedup.connectedComponents(sym, 2, hubT)
+        .as[(Long, Long)].collect().toMap ===
+        (1L to 5L).map(_ -> 1L).toMap)
+      intercept[IllegalArgumentException] {
+        datapipe.Dedup.connectedComponents(sym, 1, hubT)
+      }
+      val twoCC = (Seq((10L, 11L)) ++ (1L to 7L).map(i => (i, i + 1)))
+        .toDF("d1", "d2")
+      assert(datapipe.Dedup.connectedComponents(twoCC, 3, hubT)
+        .as[(Long, Long)].collect().toMap ===
+        ((1L to 8L).map(_ -> 1L) ++ Seq(10L -> 10L, 11L -> 10L)).toMap)
+      val star = (1L to 50L).map(i => (0L, i)).toDF("d1", "d2")
+      assert(datapipe.Dedup.connectedComponents(star, 2, hubT)
+        .as[(Long, Long)].collect().toMap ===
+        (0L to 50L).map(_ -> 0L).toMap)
     }
   }
 
-  test("auto hub-split CC: probes fire on hubs and emergent components, 'window' forces") {
-    // AUTO mode (hubDegree unset) must need NO operator knowledge from
-    // the caller: with the test-scaled auto threshold (autoHubDegree=2),
-    // (a) a planted star trips the INITIAL degree probe before cycle 1,
-    // (b) a degree-2 chain trips the PER-CYCLE tentative-component
-    // probe mid-run (no node ever exceeds degree 2 — only the growing
-    // component can reveal the emerging star), and both finish label-
-    // identical to the window path within the SAME cycle budgets; the
-    // explicit "window" value forces the window formulation end-to-end.
-    spark.conf.set("spark.graft.cc.autoHubDegree", "2")
-    try {
-      val star = (1L to 50L).map(i => (0L, i)).toDF("a", "b")
-      val seedS = (0L to 50L).toDF("doc_id").withColumn("lbl", $"doc_id")
-      assert(datapipe.Dedup.connectedComponents(seedS, star, 2)
-        .as[(Long, Long)].collect().toMap ===
-        (0L to 50L).map(_ -> 0L).toMap)
-      val chain = (1L to 7L).map(i => (i, i + 1)).toDF("a", "b")
-      val seedC = (1L to 8L).toDF("doc_id").withColumn("lbl", $"doc_id")
-      assert(datapipe.Dedup.connectedComponents(seedC, chain, 3)
-        .as[(Long, Long)].collect().toMap ===
-        (1L to 8L).map(_ -> 1L).toMap)
-      spark.conf.set("spark.graft.cc.hubDegree", "window")
-      assert(datapipe.Dedup.connectedComponents(seedS, star, 2)
-        .as[(Long, Long)].collect().toMap ===
-        (0L to 50L).map(_ -> 0L).toMap)
-    } finally {
-      spark.conf.unset("spark.graft.cc.autoHubDegree")
-      spark.conf.unset("spark.graft.cc.hubDegree")
+  test("auto hub-split CC: probes fire on hubs and emergent components") {
+    // the caller needs NO knowledge of its graph: with a test-scaled
+    // threshold (hubDegree = 2), (a) a planted star trips the INITIAL
+    // degree probe before cycle 1, (b) a degree-2 chain trips the
+    // PER-CYCLE tentative-component probe mid-run (no node ever exceeds
+    // degree 2 — only the growing component can reveal the emerging
+    // star), and both finish label-identical to the window path within
+    // the SAME cycle budgets.
+    val star = (1L to 50L).map(i => (0L, i)).toDF("d1", "d2")
+    assert(datapipe.Dedup.connectedComponents(star, 2, 2L)
+      .as[(Long, Long)].collect().toMap ===
+      (0L to 50L).map(_ -> 0L).toMap)
+    val chain = (1L to 7L).map(i => (i, i + 1)).toDF("d1", "d2")
+    assert(datapipe.Dedup.connectedComponents(chain, 3, 2L)
+      .as[(Long, Long)].collect().toMap ===
+      (1L to 8L).map(_ -> 1L).toMap)
+  }
+
+  test("d06/d11/d16 never output a one-member cluster") {
+    // the invariant their deleted >1-member filter used to enforce: CC
+    // labels only pair endpoints, and every pair has d1 < d2
+    for ((q, idCol) <- Seq("d06_dedup_clusters" -> "cluster_id",
+                         "d11_editdist_clusters" -> "canonical_id",
+                         "d16_simhash_clusters" -> "canonical_id")) {
+      val out = SparkEntry.queries.toMap.apply(q)(spark, sf).localCheckpoint()
+      assert(out.count() > 0, s"$q is empty at $sf")
+      val singletons = out.groupBy(idCol).count().filter($"count" < 2).count()
+      assert(singletons === 0L, s"$q output $singletons one-member clusters")
     }
   }
 

@@ -308,37 +308,31 @@ class PropertySpec extends SparkSpec {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       case _ => ()
       }
-      // min-label per component, restricted to edge endpoints (the
-      // engine's seed contract) — find() path-compresses to the root,
-      // and unions always hang the larger root under the smaller, so
-      // the root IS the component minimum
+      // min-label per component, restricted to non-self-loop endpoints —
+      // find() path-compresses to the root, and unions always hang the
+      // larger root under the smaller, so the root IS the component
+      // minimum
       edges.iterator.filter(e => e._1 != e._2)
         .flatMap(e => Iterator(e._1, e._2))
         .map(x => x -> find(x)).toMap
     }
     samples(graphGen, 6).zipWithIndex.foreach { case (edges, i) =>
       val want = unionFind(edges)
-      val df = edges.toDF("a", "b")
-      val seed = df.select($"a".as("doc_id"))
-        .unionByName(df.select($"b".as("doc_id")))
-        .filter($"doc_id".isNotNull).distinct()
-        .withColumn("lbl", $"doc_id")
-      // seed includes self-loop-only nodes the oracle map omits — they
-      // are singleton components labeled by themselves
-      val got = datapipe.Dedup.connectedComponents(seed, df, 12)
+      val df = edges.toDF("d1", "d2")
+      // the roster includes self-loop-only nodes the oracle map omits —
+      // they are singleton components labeled by themselves
+      val got = datapipe.Dedup.connectedComponents(df, 12)
         .as[(Long, Long)].collect().toMap
-      val wantFull = got.keys.map(k => k -> want.getOrElse(k, k)).toMap
+      val wantFull = edges.flatMap(e => Seq(e._1, e._2))
+        .map(k => k -> want.getOrElse(k, k)).toMap
       assert(got === wantFull, s"sample $i diverged (${edges.size} edges)")
       // the hub-split skew path must be label-identical on the SAME
-      // random graph (threshold 2 routes every multi-edge node through
-      // the broadcast branch — maximal divergence from the window path)
-      spark.conf.set("spark.graft.cc.hubDegree", "2")
-      try {
-        val gotSplit = datapipe.Dedup.connectedComponents(seed, df, 12)
-          .as[(Long, Long)].collect().toMap
-        assert(gotSplit === wantFull,
-          s"sample $i: hub-split labels diverge from union-find")
-      } finally spark.conf.unset("spark.graft.cc.hubDegree")
+      // random graph (hubDegree 1 switches on any node of degree >= 2
+      // and splits degree-1 nodes from the broadcast hubs)
+      val gotSplit = datapipe.Dedup.connectedComponents(df, 12, 1L)
+        .as[(Long, Long)].collect().toMap
+      assert(gotSplit === wantFull,
+        s"sample $i: hub-split labels diverge from union-find")
     }
   }
 
