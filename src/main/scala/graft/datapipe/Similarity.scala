@@ -1897,28 +1897,30 @@ object Similarity {
     // multi-probe, same exact-cosine top-K=4 per src, then SYMMETRIZED
     // (reverse links, the HNSW/NSG practice — without them a min-id
     // entry often cannot reach high-id neighborhoods at all). Search
-    // is restated as BOUNDED-FRONTIER ITERATIVE JOINS (the q85/d31
-    // discipline — never a per-query driver loop): all beam widths run
-    // in ONE loop, beam-tagged; each of the 6 fixed rounds expands the
-    // frontier's graph neighbors, anti-joins the per-(beam, query)
-    // visited set, scores the fresh nodes by exact cosine, and keeps
-    // the top-`beam` fresh nodes (cosine DESC, vec_id — fully
-    // deterministic) as the next frontier. Entry point: the min-id
-    // same-label vector — known without any auxiliary structure.
+    // is ONE KEYED PASS (REPOSE's partition-local top-k shape, no
+    // loop of Spark jobs): each query's scored rows, their out-edges
+    // and its seeds are grouped by q_id, and one flatMapGroups walks
+    // all beam widths in memory; each of the 6 fixed rounds expands the
+    // frontier's graph neighbors, drops the per-(beam, query) visited
+    // ones, and keeps the top-`beam` fresh nodes (cosine DESC, vec_id
+    // under Spark's double order — fully deterministic) as the next
+    // frontier. The fresh rows are checkpointed once. Entry point: the
+    // min-id same-label vector — known without any auxiliary structure.
     // Ground truth is the exact SAME-LABEL top-10 (the graph is
     // label-partitioned, so recall isolates graph+search loss, not the
     // label restriction); the truth pass doubles as the score oracle
     // for visited nodes, so the corpus is brute-forced ONCE (s14's
-    // checkpoint discipline) and the per-round joins stay narrow
-    // (beam, q_id, vec_id, cosine). Report per beam: visited count
-    // (the serving cost a production search would pay) and recall@10 —
-    // the recall-vs-cost frontier as data. Scale shape: the graph
-    // build is s30's linear bill at a 8× coarser cell target (cells
-    // held ~256 → O(n·256) candidate pairs); the search frontier is
-    // ≤ beam rows per query, rounds are fixed, edges are O(n·K) longs
-    // localCheckpointed once; per-round cost is O(NQ · beam · degree)
-    // control-frame joins — nothing grows with the corpus except the
-    // one truth scan every eval in this family already pays.
+    // checkpoint discipline). Report per beam: visited count (the
+    // serving cost a production search would pay) and recall@10 — the
+    // recall-vs-cost frontier as data. Scale shape: the graph build is
+    // s30's linear bill at a 8× coarser cell target (cells held ~256 →
+    // O(n·256) candidate pairs); edges are O(n·K) longs
+    // localCheckpointed once; rounds are fixed. One query's group holds
+    // its same-label scored rows and their symmetrized out-edges
+    // (average degree ≤ 8) in one task's memory — O(label population),
+    // the rows the truth scan every eval in this family pays already
+    // materializes. One call (build + exec) runs 15 Spark jobs at
+    // local[4]; a checkpointed join per round ran 54.
     "s32_graph_beam_recall" -> { (s, d) =>
       graphBeamRecall(s, d, nEntries = 1)
     },
@@ -1932,8 +1934,8 @@ object Similarity {
     // coarser top layer); this is the multi-seed form: 4 deterministic
     // entries per query (same-label vectors ranked by phash(vec_id) —
     // id-hash spread, known without any auxiliary structure, exactly
-    // as deterministic as s32's min-id), riding the SAME beam-tagged
-    // bounded-frontier loop, rounds, and scoring as s32 — the only
+    // as deterministic as s32's min-id), riding the SAME keyed walk,
+    // rounds, and scoring as s32 — the only
     // diff is the entry CTE, so the recall-vs-scored delta against
     // s32 at equal beam isolates what diversity buys (the comparison
     // table lives in ScaleOpsSpec + the bench notes). Scale shape
@@ -1951,7 +1953,7 @@ object Similarity {
     // the s32/s34 seeding discipline) is exact-scored per query, every
     // routing score joins the ranked set (it was paid for — and a real
     // system ranks what it scored), and the single best routed node
-    // seeds the SAME beam-tagged 6-round loop over the SAME graph as
+    // seeds the SAME 6-round keyed walk over the SAME graph as
     // s32/s34 — so the equal-beam recall/cost deltas isolate what
     // ROUTING buys over a blind min-id entry (s32) and over unrouted
     // diversity (s34). At 100 TB the routing scan is the sample
@@ -2010,7 +2012,7 @@ object Similarity {
     // (s11/s12) prices each step at M integer table lookups instead of
     // a D-float dot product, and full-precision vectors are touched
     // ONLY for the final re-rank of the visited set. Traversal: s34's
-    // 4-seed beam loop, but fresh nodes are scored by ADC — the node's
+    // 4-seed walk, but fresh nodes are scored by ADC — the node's
     // M codes against the query's broadcast (q_id, j, code) -> distance
     // table (NQ*M*K rows) — and the frontier keeps the ADC-smallest.
     // The exact-cosine pass (already paid for ground truth) re-ranks
@@ -2018,9 +2020,10 @@ object Similarity {
     // fetch. The s34 comparison at equal beam isolates what the
     // approximation costs in recall while the per-step bill drops from
     // O(D) floats to O(M) lookups. Scale shape: codes are an O(n*M)
-    // long table (the in-RAM PQ store), checkpointed once; per-round
-    // scoring joins only the bounded candidate set against it;
-    // everything else is s34's bill.
+    // long table (the in-RAM PQ store), checkpointed once; every
+    // same-label candidate is ADC-priced once, up front, and the walk
+    // is s32's keyed pass ordered (adc ASC, vec_id); everything else
+    // is s34's bill.
     "s35_pq_beam_rerank" -> { (s, d) =>
       pqBeamRerank(s, d)
     },
@@ -2110,13 +2113,6 @@ object Similarity {
     }
   )
 
-  /** The shared graph-build + beam-search recall harness behind
-    * s32/s34: coarse-blocked symmetrized kNN graph, NQ sampled
-    * queries, one brute-force same-label truth/score pass, 6
-    * bounded-frontier beam-tagged rounds, per-beam recall@10 +
-    * visited-count report. `nEntries` picks the seeding: 1 = s32's
-    * min-id entry; k > 1 = k phash-spread same-label seeds (all k
-    * enter round 0's frontier; later frontiers keep top-beam). */
   /** The shared graph + eval fixture behind s32/s34/s35: the coarse-
     * blocked symmetrized search graph, the NQ query sample, the one
     * brute-force same-label pass (truth AND exact-score oracle), and
@@ -2197,14 +2193,15 @@ object Similarity {
     }
   }
 
-  /** Artifact frames re-checkpointed per session: the walk references
-    * `edges`/`scoredAll` once per round (6×), and a raw parquet read
-    * would re-scan the file each time where the pre-artifact code had
-    * an in-memory checkpointed leaf. One localCheckpoint per (session,
-    * artifact generation, frame) restores that — six queries share ONE
-    * materialized copy instead of each paying the build. Keyed on the
-    * source fingerprint so a regenerated fixture drops through to
-    * [[beamArtifact]]'s rebuild AND a fresh checkpoint. */
+  /** Artifact frames re-checkpointed per session: a beam query reads
+    * `scoredAll` several times (the walk's scores and adjacency, the
+    * rank), and a raw parquet read would re-scan the file each time
+    * where the pre-artifact code had an in-memory checkpointed leaf.
+    * One localCheckpoint per (session, artifact generation, frame)
+    * restores that — six queries share ONE materialized copy instead
+    * of each paying the build. Keyed on the source fingerprint so a
+    * regenerated fixture drops through to [[beamArtifact]]'s rebuild
+    * AND a fresh checkpoint. */
   private def beamFrame(s: SparkSession, d: String, name: String): DataFrame = {
       val dir = beamArtifact(s, d)
       val fp = graft.operators.Extras.sourceFingerprint(
@@ -2340,14 +2337,13 @@ object Similarity {
     * fixed-point integer L2 throughout — fully deterministic). */
   private def pqBeamRerank(s: SparkSession, d: String): DataFrame = {
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val BeamFixture(edges, qs, scoredAll, truth) = beamFixture(s, d)
+      val fx = beamFixture(s, d)
       // codebook + serving-time PQ store ((vec_id, j, code) longs,
       // O(n*M)) off the persisted artifact, shared with s11/s12/s16
       val cb = pqFrame(s, d, "codebook")
       val codes = pqFrame(s, d, "codes").select($"vec_id", $"j", $"code")
       // per-query codeword distance tables: NQ*M*K rows, broadcast
-      val dt = pqSubs(qs.select($"q_id".as("vec_id"),
+      val dt = pqSubs(fx.qs.select($"q_id".as("vec_id"),
           $"q_emb".as("embedding")))
         .withColumn("lsv", roundFx("sv"))
         .join(broadcast(cb.withColumn("lcentroid", roundFx("centroid"))),
@@ -2355,50 +2351,28 @@ object Similarity {
         .withColumn("dq", graft.functions.IntL2.int_l2($"lsv", $"lcentroid"))
         .select($"vec_id".as("q_id"), $"j", $"code", $"dq")
         .localCheckpoint()
-      val sameLabel = scoredAll.select($"q_id", $"vec_id")
-      def adcScore(df: DataFrame): DataFrame = df
+      // every same-label candidate priced by ADC once, up front; the
+      // walk keeps the ADC-smallest (adc, vec_id) as its frontier
+      val adc = fx.scoredAll.select($"q_id", $"vec_id")
         .join(codes, Seq("vec_id"))
         .join(broadcast(dt), Seq("q_id", "j", "code"))
-        .groupBy($"beam", $"q_id", $"vec_id")
+        .groupBy($"q_id", $"vec_id")
         .agg(sum($"dq").as("adc"))
-      val wb = Window.partitionBy($"beam", $"q_id")
-        .orderBy($"adc".asc, $"vec_id")
-      var visited = perBeam(beamEntries(scoredAll, 4)).drop("cosine")
-        .localCheckpoint()
-      var frontier = visited
-      for (_ <- 1 to 6) {
-        val fresh = adcScore(
-            frontier.join(edges, frontier("vec_id") === edges("src"))
-              .select($"beam", $"q_id", edges("dst").as("vec_id")).distinct()
-              .join(visited, Seq("beam", "q_id", "vec_id"), "left_anti")
-              .join(sameLabel, Seq("q_id", "vec_id")))
-          .localCheckpoint()
-        visited = visited.unionByName(
-          fresh.select($"beam", $"q_id", $"vec_id"))
-        frontier = fresh.withColumn("rn", row_number().over(wb))
-          .filter($"rn" <= $"beam").select($"beam", $"q_id", $"vec_id")
-      }
+      val visited0 = perBeam(beamEntries(fx.scoredAll, 4)).localCheckpoint()
+      val fresh = beamWalkBy(adc, "adc", ascending = true, fx.edges,
+        visited0, visited0)
       // the DiskANN full-precision pass: exact scores ONLY for visited
-      val wr = Window.partitionBy($"beam", $"q_id")
-        .orderBy($"cosine".desc, $"vec_id")
-      val nq = qs.agg(count(lit(1)).as("n_q"))
-      val nTruth = truth.agg(count(lit(1)).as("n_truth"))
-      visited.join(scoredAll, Seq("q_id", "vec_id"))
-        .withColumn("rn", row_number().over(wr))
-        .join(truth.withColumn("is_true", lit(1L)),
-          Seq("q_id", "vec_id"), "left")
-        .groupBy($"beam")
-        .agg(count(lit(1)).as("n_scored"),
-             sum(when($"rn" <= 10 && $"is_true" === 1L, 1L).otherwise(0L))
-               .as("hits"))
-        .crossJoin(broadcast(nq))
-        .crossJoin(broadcast(nTruth))
-        .select($"beam", $"n_q", $"n_truth", $"hits", $"n_scored",
-          ($"hits" / $"n_truth".cast("double")).as("recall_at_10"),
-          ($"n_scored" / $"n_q".cast("double")).as("avg_scored"))
-        .orderBy($"beam")
+      beamRank(fx, visited0.unionByName(fresh.drop("adc")
+        .join(fx.scoredAll, Seq("q_id", "vec_id"))))
   }
 
+  /** The shared graph-build + beam-search recall harness behind
+    * s32/s34: coarse-blocked symmetrized kNN graph, NQ sampled
+    * queries, one brute-force same-label truth/score pass, the 6-round
+    * keyed walk, per-beam recall@10 + visited-count report. `nEntries`
+    * picks the seeding: 1 = s32's min-id entry; k > 1 = k phash-spread
+    * same-label seeds (all k enter round 0's frontier; later frontiers
+    * keep top-beam). */
   private def graphBeamRecall(s: SparkSession, d: String,
                               nEntries: Int): DataFrame = {
       import s.implicits._
@@ -2491,8 +2465,8 @@ object Similarity {
         .orderBy($"policy", $"beam")
   }
 
-  /** The shared 6-round bounded-frontier beam loop + report (see the
-    * s32 registry comment for the discipline); only the SEEDING
+  /** The shared 6-round beam walk + report (see the s32 registry
+    * comment for the discipline); only the SEEDING
     * (initial visited set + initial frontier) differs across
     * s32/s34/s36. */
   private def beamLoopReport(s: SparkSession, fx: BeamFixture,
@@ -2505,36 +2479,104 @@ object Similarity {
       beamRank(fx, beamWalk(s, fx, visited0, frontier0),
         rankFilter, extraRanked)
 
-  /** The 6-round walk alone, returning the visited set — a flat union
-    * over per-round checkpointed frames, so a caller can rank it more
-    * than once (s38's stale/hybrid) without re-running a round. */
+  /** The cosine walk alone, returning the visited set — `visited0` plus
+    * one checkpointed frame of fresh rows, so a caller can rank it more
+    * than once (s38's stale/hybrid) without re-running the walk. */
   private def beamWalk(s: SparkSession, fx: BeamFixture,
                        visited0: DataFrame,
-                       frontier0: DataFrame): DataFrame = {
-      import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val edges = fx.edges
-      val scoredAll = fx.scoredAll
-      val wb = Window.partitionBy($"beam", $"q_id")
-        .orderBy($"cosine".desc, $"vec_id")
-      // ONE checkpoint per round (the fresh frame); `visited` stays a
-      // flat union OVER checkpointed frames — materialized leaves, so
-      // neither the anti-join nor the final ranking recomputes a round
-      var visited = visited0
-      var frontier = frontier0
-      for (_ <- 1 to 6) {
-        val fresh = frontier.join(edges, frontier("vec_id") === edges("src"))
-          .select($"beam", $"q_id", edges("dst").as("vec_id")).distinct()
-          .join(visited.select($"beam", $"q_id", $"vec_id"),
-            Seq("beam", "q_id", "vec_id"), "left_anti")
-          .join(scoredAll, Seq("q_id", "vec_id"))
-          .select($"beam", $"q_id", $"vec_id", $"cosine")
-          .localCheckpoint()
-        visited = visited.unionByName(fresh)
-        frontier = fresh.withColumn("rn", row_number().over(wb))
-          .filter($"rn" <= $"beam").select($"beam", $"q_id", $"vec_id")
+                       frontier0: DataFrame): DataFrame =
+      visited0.unionByName(beamWalkBy(fx.scoredAll, "cosine",
+        ascending = false, fx.edges, visited0, frontier0))
+
+  /** The 6-round bounded-frontier walk in ONE keyed pass: every query's
+    * scores, adjacency, `visited0` and `frontier0` rows are tagged into
+    * one frame keyed by `q_id`, and one `flatMapGroups` runs all rounds
+    * for all of that query's beams in memory. Each round expands the
+    * frontier's graph neighbours, keeps those that are not yet visited
+    * and do have a score, and takes the top `beam` of them by
+    * (`score` in `ascending` order, vec_id) as the next frontier.
+    *
+    * `scores` holds (q_id, vec_id, `score`); `visited0` and `frontier0`
+    * hold (beam, q_id, vec_id). Scores compare with Spark's own ordering
+    * for their type (`SQLOrderingUtil.compareDoubles` for doubles, so
+    * -0.0 ties 0.0), the order a `row_number` window over the same
+    * column uses. Every frontier node must have a score: the adjacency
+    * is joined from the scored nodes only, so a query's group holds its
+    * scored rows and at most their out-edges. Returns the FRESH rows
+    * (beam, q_id, vec_id, `score`), checkpointed once. */
+  private[graft] def beamWalkBy(scores: DataFrame, score: String,
+                                ascending: Boolean, edges: DataFrame,
+                                visited0: DataFrame,
+                                frontier0: DataFrame): DataFrame = {
+      import scores.sparkSession.implicits._
+      import org.apache.spark.sql.{Encoders, Row}
+      import org.apache.spark.sql.types._
+      val scoreType = scores.schema(score).dataType
+      val noScore = lit(null).cast(scoreType).as("score")
+      def seeds(df: DataFrame, tag: Int): DataFrame = df.select($"q_id",
+        lit(tag).as("tag"), $"beam".cast("long").as("a"), $"vec_id".as("b"),
+        noScore)
+      val tagged = scores.select($"q_id", lit(0).as("tag"), $"vec_id".as("a"),
+          lit(0L).as("b"), col(score).as("score"))
+        .unionByName(scores.select($"q_id", $"vec_id")
+          .join(edges, $"vec_id" === $"src")
+          .select($"q_id", lit(1).as("tag"), $"src".as("a"), $"dst".as("b"),
+            noScore))
+        .unionByName(seeds(visited0, 2))
+        .unionByName(seeds(frontier0, 3))
+      val out = StructType(Seq(StructField("beam", IntegerType, false),
+        StructField("q_id", LongType, false),
+        StructField("vec_id", LongType, false),
+        StructField(score, scoreType)))
+      tagged.groupByKey(_.getLong(0))
+        .flatMapGroups { (q: Long, rows: Iterator[Row]) =>
+          val order = org.apache.spark.sql.catalyst.util.TypeUtils
+            .getInterpretedOrdering(scoreType)
+          walkQuery(q, rows, if (ascending) order else order.reverse)
+        }(Encoders.row(out))
+        .localCheckpoint()
+  }
+
+  /** One query's group of [[beamWalkBy]]'s tagged rows (tag, a, b):
+    * 0 = score of a, 1 = edge a -> b, 2/3 = b in beam a's visited0/
+    * frontier0. `better` orders scores best first; vec_id breaks ties. */
+  private def walkQuery(q: Long, rows: Iterator[org.apache.spark.sql.Row],
+                        better: Ordering[Any])
+      : Iterator[org.apache.spark.sql.Row] = {
+      import scala.collection.mutable
+      import org.apache.spark.sql.Row
+      val score = mutable.HashMap[Long, Any]()
+      val bs = mutable.HashMap[(Int, Long), mutable.ArrayBuffer[Long]]()
+      rows.foreach { r =>
+        if (r.getInt(1) == 0) score(r.getLong(2)) = r.get(4)
+        else bs.getOrElseUpdate((r.getInt(1), r.getLong(2)),
+          mutable.ArrayBuffer()) += r.getLong(3)
       }
-      visited
+      def list(tag: Int, a: Long): collection.Seq[Long] =
+        bs.getOrElse((tag, a), Nil)
+      val rank: Ordering[Long] = (x, y) => {
+        val c = better.compare(score(x), score(y))
+        if (c != 0) c else java.lang.Long.compare(x, y)
+      }
+      val beams = bs.keySet.collect { case (tag, b) if tag >= 2 => b }
+      beams.iterator.flatMap { b =>
+        val beam = b.toInt
+        val visited = mutable.HashSet.from(list(2, b))
+        var frontier = list(3, b)
+        frontier.find(v => !score.contains(v)).foreach { v =>
+          throw new IllegalArgumentException(
+            s"beam walk: frontier node $v of query $q has no score")
+        }
+        val fresh = mutable.ArrayBuffer[Row]()
+        for (_ <- 1 to 6) {
+          val round = mutable.ArrayBuffer[Long]()
+          for (v <- frontier; n <- list(1, v))
+            if (score.contains(n) && visited.add(n)) round += n
+          round.foreach(n => fresh += Row(beam, q, n, score(n)))
+          frontier = round.sorted(rank).take(beam)
+        }
+        fresh
+      }
   }
 
   /** Rank a walked visited set against the fixture's truth. */
@@ -2547,8 +2589,16 @@ object Similarity {
       import org.apache.spark.sql.expressions.Window
       val qs = fx.qs
       val truth = fx.truth
+      // rankFilter (s37's traverse-through-tombstones policy) drops
+      // rows from the RANKED result only — n_scored keeps counting the
+      // full visited set, because traversal work was genuinely paid.
+      // Dropped rows sort after every kept row of their (beam, q_id),
+      // so a kept row's rn is its rank among the kept rows and one
+      // aggregate yields both counts.
       val wb = Window.partitionBy($"beam", $"q_id")
-        .orderBy($"cosine".desc, $"vec_id")
+        .orderBy(rankFilter.map(_.desc).toSeq ++
+          Seq($"cosine".desc, $"vec_id"): _*)
+      val kept = rankFilter.getOrElse(lit(true))
       val nq = qs.agg(count(lit(1)).as("n_q"))
       val nTruth = truth.agg(count(lit(1)).as("n_truth"))
       // extraRanked (s38's hybrid freshness buffer) adds scored rows
@@ -2556,18 +2606,13 @@ object Similarity {
       // real, so it counts toward n_scored too
       val visitedAll = extraRanked
         .map(visited.unionByName(_)).getOrElse(visited)
-      // rankFilter (s37's traverse-through-tombstones policy) drops
-      // rows from the RANKED result only — n_scored keeps counting the
-      // full visited set, because traversal work was genuinely paid
-      val hits = rankFilter.map(visitedAll.filter).getOrElse(visitedAll)
-        .withColumn("rn", row_number().over(wb))
+      visitedAll.withColumn("rn", row_number().over(wb))
         .join(truth.withColumn("is_true", lit(1L)),
           Seq("q_id", "vec_id"), "left")
         .groupBy($"beam")
-        .agg(sum(when($"rn" <= 10 && $"is_true" === 1L, 1L).otherwise(0L))
-               .as("hits"))
-      visitedAll.groupBy($"beam").agg(count(lit(1)).as("n_scored"))
-        .join(hits, Seq("beam"))
+        .agg(count(lit(1)).as("n_scored"),
+             sum(when(kept && $"rn" <= 10 && $"is_true" === 1L, 1L)
+               .otherwise(0L)).as("hits"))
         .crossJoin(broadcast(nq))
         .crossJoin(broadcast(nTruth))
         .select($"beam", $"n_q", $"n_truth", $"hits", $"n_scored",

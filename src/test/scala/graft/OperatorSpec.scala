@@ -2193,6 +2193,79 @@ class OperatorSpec extends SparkSpec {
     assert(pq.values.forall(_._5 > 4 * pq(2)._2))
   }
 
+  test("beam walk: ties at the beam cut, -0.0 vs 0.0 and unscored neighbours follow the relational order") {
+    // q 1: round 1 reaches 20/21/22 at an equal 0.5 across the beam-2
+    // cut (20 wins on vec_id, so 52 behind 21/22 stays unreached), and
+    // 24, which has no score, is neither visited nor expanded (70
+    // stays unreached); round 2 ties 33 (-0.0) with 34 (0.0) — equal
+    // under Spark's double order, so vec_id picks 33 and 50, not 51.
+    // q 2 scores 24, so the same graph walks on through it to 70.
+    val scores = (Seq(10L -> 0.1, 20L -> 0.5, 21L -> 0.5, 22L -> 0.5,
+        23L -> 0.9, 33L -> -0.0, 34L -> 0.0, 40L -> 0.7, 50L -> 0.2,
+        51L -> 0.2, 52L -> 0.6, 70L -> 0.95).map(p => (1L, p._1, p._2)) ++
+      Seq(10L -> 0.1, 20L -> 0.2, 24L -> 0.8, 70L -> 0.95)
+        .map(p => (2L, p._1, p._2)))
+      .toDF("q_id", "vec_id", "cosine")
+    val edges = Seq(10L -> 20L, 10L -> 21L, 10L -> 22L, 10L -> 23L,
+        10L -> 24L, 23L -> 33L, 23L -> 34L, 20L -> 40L, 21L -> 52L,
+        22L -> 52L, 24L -> 70L, 33L -> 50L, 34L -> 51L, 40L -> 10L)
+      .toDF("src", "dst")
+    val visited0 = (for (b <- Seq(1, 2, 4); q <- Seq(1L, 2L))
+        yield (b, q, 10L, 0.1))
+      .toDF("beam", "q_id", "vec_id", "cosine")
+    val frontier0 = visited0.drop("cosine")
+    val walked = visited0.unionByName(datapipe.Similarity.beamWalkBy(
+        scores, "cosine", ascending = false, edges, visited0, frontier0))
+    // one round at a time, relationally, frontier by a window order
+    val wb = org.apache.spark.sql.expressions.Window
+      .partitionBy($"beam", $"q_id").orderBy($"cosine".desc, $"vec_id")
+    var visited = visited0
+    var frontier = frontier0
+    for (_ <- 1 to 6) {
+      val fresh = frontier.join(edges, $"vec_id" === $"src")
+        .select($"beam", $"q_id", $"dst".as("vec_id")).distinct()
+        .join(visited, Seq("beam", "q_id", "vec_id"), "left_anti")
+        .join(scores, Seq("q_id", "vec_id"))
+        .select($"beam", $"q_id", $"vec_id", $"cosine")
+        .localCheckpoint()
+      visited = visited.unionByName(fresh)
+      frontier = fresh.withColumn("rn", row_number().over(wb))
+        .filter($"rn" <= $"beam").select($"beam", $"q_id", $"vec_id")
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Int, Long, Long, Double)].collect().toSet
+    val got = rows(walked)
+    assert(got.size === walked.count(), "the walk emitted a row twice")
+    assert(got === rows(visited))
+    // the cases above are really exercised
+    val ids = got.groupBy(r => (r._1, r._2)).view
+      .mapValues(_.map(_._3)).toMap
+    assert(ids((2, 1L)) === Set(10L, 20L, 21L, 22L, 23L, 33L, 34L, 40L, 50L))
+    assert(ids((1, 1L)) === Set(10L, 20L, 21L, 22L, 23L, 33L, 34L, 50L))
+    assert(ids((2, 2L)) === Set(10L, 20L, 24L, 70L))
+    // a frontier node without a score is a caller error, not a dead end
+    val e = intercept[Exception] {
+      datapipe.Similarity.beamWalkBy(scores, "cosine", ascending = false,
+        edges, visited0, Seq((2, 1L, 24L)).toDF("beam", "q_id", "vec_id"))
+        .count()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains("frontier node 24 of query 1 has no score")))
+  }
+
+  test("s32: one call stays within its Spark job budget") {
+    val s32 = datapipe.Similarity.queries("s32_graph_beam_recall")
+    // warm: the fixture artifact and its session checkpoints are built
+    // once per session, outside the budget
+    s32(spark, sf).collect()
+    val (_, jobs, _) = usage(
+      s32(spark, sf).write.format("noop").mode("overwrite").save())
+    // Six checkpointed join rounds took 54 jobs per call at local[4];
+    // the one keyed walk pass takes 15 (cap: +1).
+    assert(jobs <= 16, s"s32 ran $jobs Spark jobs (cap 16)")
+  }
+
   test("s33: build-knob table replays per config; the pair bill falls as bits rise") {
     val out = datapipe.Similarity.queries("s33_build_knob_plan")(spark, sf)
       .as[(Int, Long, Long, Long, Long, Long, Double, Double)].collect()
