@@ -2379,7 +2379,7 @@ object Similarity {
       val fx = beamFixture(s, d)
       val visited0 = perBeam(beamEntries(fx.scoredAll, nEntries))
         .localCheckpoint()
-      beamLoopReport(s, fx, visited0,
+      beamLoopReport(fx, visited0,
         visited0.select($"beam", $"q_id", $"vec_id"))
   }
 
@@ -2403,7 +2403,7 @@ object Similarity {
         .orderBy($"cosine".desc, $"vec_id")
       val frontier0 = visited0.withColumn("rn", row_number().over(wb))
         .filter($"rn" === 1).select($"beam", $"q_id", $"vec_id")
-      beamLoopReport(s, fx, visited0, frontier0)
+      beamLoopReport(fx, visited0, frontier0)
   }
 
   /** s37: the two tombstone policies over the SAME graph. `skip` never
@@ -2424,10 +2424,9 @@ object Similarity {
         .filter($"rn" <= 10).select($"q_id", $"vec_id").localCheckpoint()
       val visited0 = perBeam(beamEntries(scoredLive, 1)).localCheckpoint()
       val frontier0 = visited0.select($"beam", $"q_id", $"vec_id")
-      val skip = beamLoopReport(s,
-        fx.copy(scoredAll = scoredLive, truth = truthLive),
+      val skip = beamLoopReport(fx.copy(scoredAll = scoredLive, truth = truthLive),
         visited0, frontier0)
-      val through = beamLoopReport(s, fx.copy(truth = truthLive),
+      val through = beamLoopReport(fx.copy(truth = truthLive),
         visited0, frontier0, rankFilter = Some(live))
       skip.select(lit("skip").as("policy"), col("*"))
         .unionByName(through.select(lit("through").as("policy"), col("*")))
@@ -2454,11 +2453,11 @@ object Similarity {
       }
       val (v0o, f0o) = seed(fxOld.scoredAll.filter(indexed))
       val tailRanked = perBeam(fxOld.scoredAll.filter(!indexed))
-      val walked = beamWalk(s, fxOld, v0o, f0o)
+      val walked = beamWalk(fxOld, v0o, f0o)
       val stale = beamRank(fxOld, walked)
       val hybrid = beamRank(fxOld, walked, extraRanked = Some(tailRanked))
       val (v0f, f0f) = seed(fxFull.scoredAll)
-      val rebuilt = beamLoopReport(s, fxFull, v0f, f0f)
+      val rebuilt = beamLoopReport(fxFull, v0f, f0f)
       stale.select(lit("stale").as("policy"), col("*"))
         .unionByName(hybrid.select(lit("hybrid").as("policy"), col("*")))
         .unionByName(rebuilt.select(lit("rebuilt").as("policy"), col("*")))
@@ -2469,20 +2468,20 @@ object Similarity {
     * comment for the discipline); only the SEEDING
     * (initial visited set + initial frontier) differs across
     * s32/s34/s36. */
-  private def beamLoopReport(s: SparkSession, fx: BeamFixture,
+  private def beamLoopReport(fx: BeamFixture,
                              visited0: DataFrame,
                              frontier0: DataFrame,
                              rankFilter: Option[org.apache.spark.sql.Column]
                                = None,
                              extraRanked: Option[DataFrame]
                                = None): DataFrame =
-      beamRank(fx, beamWalk(s, fx, visited0, frontier0),
+      beamRank(fx, beamWalk(fx, visited0, frontier0),
         rankFilter, extraRanked)
 
   /** The cosine walk alone, returning the visited set — `visited0` plus
     * one checkpointed frame of fresh rows, so a caller can rank it more
     * than once (s38's stale/hybrid) without re-running the walk. */
-  private def beamWalk(s: SparkSession, fx: BeamFixture,
+  private def beamWalk(fx: BeamFixture,
                        visited0: DataFrame,
                        frontier0: DataFrame): DataFrame =
       visited0.unionByName(beamWalkBy(fx.scoredAll, "cosine",

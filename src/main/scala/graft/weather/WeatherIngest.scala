@@ -20,8 +20,10 @@ import org.apache.spark.sql.functions._
   *                      w02/w03)
   *  - NaN->NULL (:167-173): measure encoding at the sink boundary
   *                      (`WeatherPipeline.nanToNull`, w04)
-  *  - load (:176-186):  within-batch dedup + left-anti vs sink + append
-  *                      (ON CONFLICT (date) DO NOTHING)
+  *  - load (:150-152, :176-186): an empty batch (no row passes O6+O7)
+  *                      returns 0 inserts before the sink is read again;
+  *                      otherwise within-batch dedup + left-anti vs sink
+  *                      + append (ON CONFLICT (date) DO NOTHING)
   *  - report (:228-238): IngestResult envelope; the reported cursor is
   *                      max(ts) of the run's own inserted rows (or the
   *                      cursor it read, when nothing was inserted) — no
@@ -141,15 +143,26 @@ object WeatherIngest {
       // the one schema inference and the one full-history scan of the run
       val sinkAll = spark.read.parquet(sinkPath)
       val cursor = maxTs(sinkAll)
-      // cache the extract: the fetched-count action below is the ONE
-      // source scan per run (the reference fetches once, too) — the
-      // downstream dedup/append pipeline reads the cached blocks
+      // cache the extract: the count action below is the ONE source scan
+      // per run (the reference fetches once, too) — the downstream
+      // dedup/append pipeline reads the cached blocks
       val raw = fetch(spark, now, pastDays, forecastDays, locations).cache()
-      val fetched = withRetry()(raw.count())
+      val nowTs = lit(now).cast("timestamp")
+      val cursorTs = cursor.map(lit)
+      // one aggregate yields the fetched count and how many rows pass
+      // the O6+O7 predicate that filterNewRecords applies below
+      val counts = withRetry()(raw.agg(count(lit(1)),
+        count(when(WeatherPipeline.isNewRecord(col("ts"), nowTs, cursorTs), 1))).first())
+      val fetched = counts.getLong(0)
+      if (counts.getLong(1) == 0) {
+        // empty batch: no row is after the cursor and at or before `now`,
+        // so nothing can be inserted whatever the sink holds (concurrent
+        // writers included) — skip the anti-join side
+        raw.unpersist()
+        return IngestResult(200, fetched, 0, cursor)
+      }
       val encoded = WeatherPipeline.nanToNull(
-        WeatherPipeline.filterNewRecords(raw, "ts", lit(now).cast("timestamp"),
-          cursor.map(lit)),
-        MEASURES)
+        WeatherPipeline.filterNewRecords(raw, "ts", nowTs, cursorTs), MEASURES)
       // anti-join side pruned to the extract window: ts is part of the
       // upsert key, so sink rows before the window can never match — the
       // filter pushes to the parquet scan (and prunes partitions on a

@@ -52,14 +52,17 @@ object WeatherPipeline {
       .filter(col("ts") < lit(end).cast("timestamp"))
   }
 
-  /** O6+O7: future filter then strictly-after-cursor filter; None cursor
-    * passes through (reference: lambda_function.py:134-136).
+  /** O6+O7 as one predicate: not in the future, and strictly after the
+    * cursor when there is one; a None cursor passes everything up to
+    * `now` (reference: lambda_function.py:134-136).
     */
+  def isNewRecord(ts: Column, now: Column, cursor: Option[Column]): Column =
+    cursor.fold(ts <= now)(c => ts <= now && ts > c)
+
+  /** O6+O7: keep the rows `isNewRecord` passes. */
   def filterNewRecords(df: DataFrame, tsCol: String, now: Column,
-                       cursor: Option[Column]): DataFrame = {
-    val noFuture = df.filter(col(tsCol) <= now)
-    cursor.fold(noFuture)(c => noFuture.filter(col(tsCol) > c))
-  }
+                       cursor: Option[Column]): DataFrame =
+    df.filter(isNewRecord(col(tsCol), now, cursor))
 
   /** O8: collapse NaN into NULL per measure column (the reference's sink
     * encoding; Spark distinguishes NaN from NULL, the reference doesn't).

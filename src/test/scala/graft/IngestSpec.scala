@@ -263,26 +263,37 @@ class IngestSpec extends SparkSpec {
   // locations, 3 days of history, 578 rows), measured at local[4]. With
   // the post-commit cursor rescan and a second schema inference the runs
   // took 15 (zero-insert) and 16 (inserting) jobs and read the sink 3x
-  // (cursor, anti-join, rescan); the single-scan run takes 11 and 12
-  // jobs. Caps are those counts plus 1; the sink is read at most twice
-  // (cursor + anti-join).
+  // (cursor, anti-join, rescan); the single-scan run took 11 and 12 jobs.
+  // With the empty-batch guard, which returns before the anti-join, the
+  // zero-insert run takes 6 jobs and reads the sink once, for its
+  // cursor; the inserting run still takes 12 and reads it at most twice
+  // (cursor + anti-join). Caps are those counts plus 1. The last case is
+  // an empty batch with no cursor (6 jobs; 11 without the guard).
   test("pipeline: one ingest run stays within its job and sink-read budget") {
     val sink = emptySink("graft_sink_budget", 2)
     val seeded = WeatherIngest.run(spark, sink, "2024-01-04 00:00:00", pastDays = 3,
       locations = 2)
     assert(seeded.recordsInserted === 2L * (3 * 96 + 1))
     val fetched = 2L * 2 * 96 // one past day + one forecast day per location
-    for ((now, inserted, cap) <- Seq(("2024-01-04 00:05:00", 0L, 12),
-                                     ("2024-01-04 00:15:00", 2L, 13))) {
+    for ((now, inserted, cap, reads) <- Seq(("2024-01-04 00:05:00", 0L, 7, 1),
+                                            ("2024-01-04 00:15:00", 2L, 13, 2))) {
       val rowsBefore = spark.read.parquet(sink).count()
       val (r, jobs, records) = usage(
         WeatherIngest.run(spark, sink, now, locations = 2))
       assert(r.statusCode === 200 && r.recordsFetched === fetched &&
         r.recordsInserted === inserted, r)
       assert(jobs <= cap, s"run at $now took $jobs Spark jobs (cap $cap)")
-      assert(records <= 2 * rowsBefore,
-        s"run at $now read $records sink records, more than 2x $rowsBefore")
+      assert(records <= reads * rowsBefore,
+        s"run at $now read $records sink records, more than ${reads}x $rowsBefore")
     }
+    // no cursor: an empty sink, pastDays = 0 and a `now` off the
+    // 15-minute grid, so every fetched slot is after `now`
+    val empty = emptySink("graft_sink_future", 2)
+    val (r, jobs, _) = usage(WeatherIngest.run(spark, empty, "2024-01-04 00:05:00",
+      pastDays = 0, locations = 2))
+    assert(r === WeatherIngest.IngestResult(200, 2L * 96, 0, None), r)
+    assert(spark.read.parquet(empty).count() === 0)
+    assert(jobs <= 7, s"empty-batch run without a cursor took $jobs Spark jobs (cap 7)")
   }
 
   for ((arg, pastDays, forecastDays, locations, value) <- Seq(

@@ -63,7 +63,7 @@ class WeatherSemanticsSpec extends SparkSpec {
     assert(out.count() === batch.count())
   }
 
-  test("O9/O11: empty batch short-circuits to 0 inserts") {
+  test("O9: upsertNew of an empty batch returns no rows") {
     val out = WeatherPipeline.upsertNew(batch.limit(0), batch, "ts")
     assert(out.count() === 0)
   }
