@@ -118,11 +118,10 @@ object Dedup {
 
   /** The (bench, train) document frames of a contamination fixture —
     * bench = every modulus-th doc; train = the rest plus one planted
-    * leak per bench doc. graft-visible so StreamingSpec can drive the
-    * streamed gate over EXACTLY the corpus d12's batch oracle checks.
+    * leak per bench doc.
     */
-  private[graft] def contaminationCorpus(s: SparkSession, d: String,
-      fix: ContaminationFixture = D12_FIX): (DataFrame, DataFrame) = {
+  private def contaminationCorpus(s: SparkSession, d: String,
+      fix: ContaminationFixture): (DataFrame, DataFrame) = {
     import s.implicits._
     val docs = T.documents(s, d).select($"doc_id", $"text")
     val bench = docs.filter($"doc_id" % fix.modulus === 0)
@@ -138,8 +137,8 @@ object Dedup {
   }
 
   /** Distinct (doc_id, fp) 8-word-gram hashes of a (doc_id, text)
-    * frame — the one gram definition shared by d12/d17/d19 and the
-    * streamed gate. Only (doc_id, fp) longs ever leave the scan. */
+    * frame — the one gram definition shared by d12/d17/d19. Only
+    * (doc_id, fp) longs ever leave the scan. */
   private[datapipe] def gramFps(df: DataFrame): DataFrame = gramFpsN(df, 8)
 
   /** [[gramFps]] at an arbitrary gram size — d37's knob sweep varies n
@@ -167,153 +166,6 @@ object Dedup {
           "graft_phash(concat_ws('_', slice(ws, i, 8))) AS fp))")).as("g"))
       .select(col("doc_id"), col("n_words"),
               col("g.i").cast("long").as("i"), col("g.fp").as("fp"))
-  }
-
-  /** Streaming twin of d12 — the decontamination GATE as a consumer of
-    * a micro-batched training-document stream: docs arrive
-    * continuously, each micro-batch is checked against the FIXED
-    * held-out benchmark gram set, contaminated docs are quarantined
-    * (decision rows only) and clean docs land in the training sink.
-    * The production shape of eval hygiene: the gate sits between crawl
-    * ingest and the training lake, so contamination never reaches a
-    * shuffle or a tokenizer.
-    *
-    * foreachBatch like d08/t23/w09: inside the trigger the micro-batch
-    * is a plain DataFrame running LITERALLY d12's plan — bench gram fps
-    * (computed ONCE, before the stream starts, and localCheckpointed so
-    * no trigger ever re-derives them) broadcast against the batch's
-    * map-side gram scan; the only shuffle is the per-doc hit count over
-    * (doc_id, fp) longs. Eval suites stay ~1e5 grams at any training
-    * scale, so the broadcast holds; a multi-suite union that outgrows
-    * it switches the probe to d17's in-plan Bloom — same gate, same
-    * decisions.
-    *
-    * Decisions (doc_id, n_hits, status) land in `decisionsPath`
-    * partitioned by batch_id with dynamic overwrite — a retried trigger
-    * REPLACES its own snapshot. Clean-doc appends are idempotent via
-    * the pre-append anti-join on doc_id against the sink itself (the O9
-    * upsert pattern; existence via Hadoop's FileSystem so lake paths
-    * answer truthfully) — a replayed or overlapping batch inserts zero
-    * duplicate rows. Batch-equivalence is pinned in StreamingSpec: the
-    * streamed decisions equal d12's batch output bit-for-bit.
-    */
-  def decontaminationStream(stream: DataFrame, benchDocs: DataFrame,
-                            cleanPath: String, decisionsPath: String,
-                            checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val benchFps = gramFps(benchDocs.select(col("doc_id"), col("text")))
-      .select(col("fp")).distinct().localCheckpoint()
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        // the batch is read twice (decision + clean append): pin it so
-        // a source re-read can never let the two disagree; within-batch
-        // duplicate doc_ids collapse to one verdict/one clean row first
-        // (the O9 within-batch dedup precedent — the sink-level
-        // anti-join cannot see two copies arriving together)
-        val docs = batch.dropDuplicates("doc_id").localCheckpoint()
-        val hits = gramFps(docs.select(col("doc_id"), col("text")))
-          .join(broadcast(benchFps), Seq("fp"))
-          .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
-        val dec = docs.select(col("doc_id"))
-          .join(hits, Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("n_hits"), lit(0L)).as("n_hits"))
-          .withColumn("status",
-            when(col("n_hits") > 0, lit("contaminated")).otherwise(lit("clean")))
-          .localCheckpoint()
-        dec.withColumn("batch_id", lit(batchId))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(decisionsPath)
-        val sink0 =
-          if (graft.weather.WeatherIngest.sinkExists(s, cleanPath))
-            s.read.parquet(cleanPath).select(col("doc_id"))
-          else docs.select(col("doc_id")).limit(0)
-        docs.join(dec.filter(col("status") === "clean"),
-            Seq("doc_id"), "left_semi")
-          .join(sink0, Seq("doc_id"), "left_anti")
-          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(cleanPath)
-        ()
-      }
-      .start()
-  }
-
-  /** Streaming twin of d40 — the FUZZY gate as a consumer of the same
-    * micro-batched training-document stream [[decontaminationStream]]
-    * guards with exact grams: bench signatures + 16×1 band keys are
-    * built ONCE before the stream starts (localCheckpointed — no
-    * trigger re-derives them; they are the "published eval suite"
-    * artifact), each micro-batch runs LITERALLY d40's plan against the
-    * broadcast bench side, paraphrase-flagged docs are quarantined as
-    * decision rows and clean docs land in the training sink. Decision
-    * snapshots are batch_id-partitioned with dynamic overwrite (a
-    * retried trigger replaces its own snapshot); clean appends ride
-    * the O9 anti-join, so replay and overlap insert zero. StreamingSpec
-    * pins the streamed contaminated set equal to batch d40 and the
-    * replay-inserts-zero contract.
-    */
-  def fuzzyDecontaminationStream(stream: DataFrame, benchDocs: DataFrame,
-                                 cleanPath: String, decisionsPath: String,
-                                 checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.expressions.Window
-    val bsig = signaturesOf(benchDocs.select(col("doc_id"), col("text")))
-      .select(col("doc_id").as("bench_id"), col("sig"),
-        col("hset").as("bhs"))
-      .localCheckpoint()
-    val bbands = bsig
-      .select(col("bench_id"), explode(wideBandKeyArray).as("band_key"))
-      .localCheckpoint()
-    val bkeep = bsig.select(col("bench_id"), col("bhs")).localCheckpoint()
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val docs = batch.dropDuplicates("doc_id").localCheckpoint()
-        val tsig = signaturesOf(docs.select(col("doc_id"), col("text")))
-          .localCheckpoint()
-        val cand = tsig
-          .select(col("doc_id"), explode(wideBandKeyArray).as("band_key"))
-          .join(broadcast(bbands), Seq("band_key"))
-          .select(col("doc_id"), col("bench_id")).distinct()
-        val w = Window.partitionBy(col("doc_id"))
-          .orderBy(col("jaccard").desc, col("bench_id"))
-        val flagged = cand
-          .join(tsig.select(col("doc_id"), col("hset")), Seq("doc_id"))
-          .join(broadcast(bkeep), Seq("bench_id"))
-          .withColumn("inter",
-            graft.functions.SortedIntersectCount
-              .sorted_intersect_count(col("hset"), col("bhs")))
-          .withColumn("jaccard",
-            expr("inter / (size(hset) + size(bhs) - inter)"))
-          .filter(col("jaccard") >= 0.35)
-          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-          .select(col("doc_id"), col("bench_id"), col("jaccard"))
-        val dec = docs.select(col("doc_id"))
-          .join(flagged, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("bench_id"),
-            coalesce(col("jaccard"), lit(0.0)).as("jaccard"))
-          .withColumn("status",
-            when(col("bench_id").isNotNull, lit("contaminated"))
-              .otherwise(lit("clean")))
-          .localCheckpoint()
-        dec.withColumn("batch_id", lit(batchId))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(decisionsPath)
-        val sink0 =
-          if (graft.weather.WeatherIngest.sinkExists(s, cleanPath))
-            s.read.parquet(cleanPath).select(col("doc_id"))
-          else docs.select(col("doc_id")).limit(0)
-        docs.join(dec.filter(col("status") === "clean"),
-            Seq("doc_id"), "left_semi")
-          .join(sink0, Seq("doc_id"), "left_anti")
-          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(cleanPath)
-        ()
-      }
-      .start()
   }
 
   /** The exact-join contamination oracle for a fixture — shared by d12

@@ -1130,69 +1130,6 @@ object Multimodal {
     })
   }
 
-  /** Streaming twin of m05 — perceptual asset dedup as it actually
-    * ships: assets arrive in micro-batches (binary payloads streamed
-    * from the lake), each batch decodes ONCE, and duplicates are decided
-    * against a persisted (width, height, ahash) → canonical_id store
-    * with FIRST-SEEN-WINS semantics (the streaming analog of m05's
-    * min-id canonical: under id-ordered arrival — StreamingSpec's
-    * replay — first seen IS the min id; unordered arrival keeps the
-    * earlier-ingested asset, which is the semantics a live pipeline
-    * wants anyway). Within-batch duplicates resolve to the batch-min id
-    * first. Decisions land partitioned by batch_id with dynamic
-    * overwrite (a retried trigger REPLACES its own snapshot); new store
-    * rows append idempotently via the pre-append anti-join on the hash
-    * key (the O9 pattern), so a replayed batch inserts zero duplicate
-    * store rows. Payloads never persist past their trigger — only
-    * ~28 B/asset of hash state crosses batches, so the store stays
-    * control-sized while 100 TB of payloads stream through map-only.
-    */
-  def assetDedupStream(stream: DataFrame, storePath: String,
-                       decisionsPath: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        import s.implicits._
-        val hashed = imagePHash(
-            batch.dropDuplicates("asset_id")
-              .select(col("asset_id"), col("payload"))
-              .as[(Long, Array[Byte])])
-          .toDF("asset_id", "width", "height", "ahash")
-          .localCheckpoint() // decode ONCE; read for decisions + store
-        val key = Seq("width", "height", "ahash")
-        val store0 =
-          if (graft.weather.WeatherIngest.sinkExists(s, storePath))
-            s.read.parquet(storePath)
-          else hashed.select(col("width"), col("height"), col("ahash"),
-            col("asset_id").as("canonical_id")).limit(0)
-        val batchMin = hashed.groupBy(key.map(col): _*)
-          .agg(min(col("asset_id")).as("batch_min"))
-        val dec = hashed
-          .join(batchMin, key)
-          .join(store0.withColumnRenamed("canonical_id", "stored_id"),
-                key, "left")
-          .withColumn("canonical_id", coalesce(col("stored_id"), col("batch_min")))
-          .withColumn("status",
-            when(col("asset_id") === col("canonical_id"), lit("unique"))
-              .otherwise(lit("duplicate")))
-          .select(col("asset_id"), col("width"), col("height"), col("ahash"),
-                  col("canonical_id"), col("status"))
-          .localCheckpoint() // pin before the store mutates beneath it
-        dec.withColumn("batch_id", lit(batchId))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(decisionsPath)
-        dec.filter(col("status") === "unique")
-          .select(col("width"), col("height"), col("ahash"), col("canonical_id"))
-          .join(store0.select(key.map(col): _*), key, "left_anti")
-          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(storePath)
-        ()
-      }
-      .start()
-  }
-
   /** Energy-envelope fingerprint over REAL decoded PCM — m05's audio
     * sibling: split the waveform into 8 equal windows, bit w set iff
     * window w's absolute-amplitude sum exceeds the track average

@@ -2002,21 +2002,12 @@ object TextAnalysis {
         round($"nll_sum".cast("double") / $"n_bigrams" / 1e6, 6).as("avg_nll"))
   }
 
-  /** t23's scoring transform over any (doc_id, text) frame — factored
-    * out so the SAME function runs under `readStream` (classifier
-    * inference is the curation stage most often deployed as a stream:
-    * score documents as they arrive, no corpus-wide state). Map-only
-    * gram hashing + a broadcast O(D) model + one keyed partial-agg
-    * reduce — nothing here is batch-bound; StreamingSpec pins the
-    * micro-batched run bit-equal to the batch registry entry.
+  /** t16's selection rule: rank docs per source by the deterministic
+    * hash (phash("cap:" + doc_id), doc_id) and keep the first `cap` —
+    * selection is a pure function of the doc SET, never of arrival
+    * order.
     */
-  /** t16's selection rule, shared with the streaming twin: rank docs
-    * per source by the deterministic hash (phash("cap:" + doc_id),
-    * doc_id) and keep the first `cap` — selection is a pure function of
-    * the doc SET, never of arrival order, which is what makes the cap
-    * streamable with exact batch equality.
-    */
-  private[graft] def domainCapKeep(docs: DataFrame, cap: Int): DataFrame = {
+  private def domainCapKeep(docs: DataFrame, cap: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     docs
       .withColumn("rk", graft.Dets.phash(
@@ -2026,70 +2017,15 @@ object TextAnalysis {
       .filter(col("rn") <= cap)
   }
 
-  /** Streaming twin of t16 — the per-source cap as a quota actually
-    * ships: docs arrive in micro-batches and the provisional
-    * top-`cap`-by-hash set per source persists across triggers in a
-    * parquet state store. Each batch reduces its docs to (doc_id,
-    * source, chars, rk) — text never persists — unions the store,
-    * re-ranks per source, keeps `cap`, and swaps the store durably
-    * (sibling write + two renames, the compact() pattern: a full copy
-    * exists at every instant). A later lower-hash doc EVICTS an
-    * earlier admission — the revisable-cap semantics a first-come
-    * quota cannot have without over-admitting — so the final state
-    * equals the batch t16 selection for ANY batch split, which
-    * StreamingSpec pins (with a required eviction). State is
-    * O(sources × cap) control-sized rows at any corpus scale; the
-    * replay-safety is the dropDuplicates on doc_id (a retried trigger
-    * re-unions the same rows into the same state).
-    */
-  def domainCapStream(stream: DataFrame, storePath: String,
-                      checkpointDir: String, cap: Int)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val incoming = batch
-          .select(col("doc_id"), col("source"),
-            length(col("text")).cast("long").as("chars"))
-          .withColumn("rk", graft.Dets.phash(
-            concat(lit("cap:"), col("doc_id").cast("string"))))
-        import org.apache.hadoop.fs.Path
-        val state = new Path(s"$storePath/state")
-        val tmp = new Path(s"$storePath/state.next")
-        val old = new Path(s"$storePath/state.old")
-        val fs = state.getFileSystem(s.sessionState.newHadoopConf())
-        val store0 =
-          if (fs.exists(state)) s.read.parquet(state.toString)
-          else incoming.limit(0)
-        val next = store0.unionByName(incoming)
-          .dropDuplicates("doc_id") // trigger replay inserts nothing
-          .withColumn("rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("source")).orderBy(col("rk"), col("doc_id"))))
-          .filter(col("rn") <= cap)
-          .select(col("doc_id"), col("source"), col("chars"), col("rk"))
-        fs.delete(tmp, true); fs.delete(old, true)
-        next.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(tmp.toString)
-        if (fs.exists(state)) fs.rename(state, old)
-        fs.rename(tmp, state)
-        fs.delete(old, true)
-        ()
-      }
-      .start()
-  }
-
   /** t40's DF_MIN: a line repeated across this many docs is boilerplate. */
-  private[graft] val LineDfMin = 4
+  private val LineDfMin = 4
 
   /** t40's line inventory over any (doc_id, source, text) frame: 8-word
     * segments plus the planted per-source footer on every third doc,
     * reduced to (doc_id, li, fp, nw) longs — text never leaves this
-    * function. Shared by the batch query and the streaming twin so both
-    * gates see byte-identical lines.
+    * function.
     */
-  private[graft] def lineInventory(docs: DataFrame): DataFrame = {
+  private def lineInventory(docs: DataFrame): DataFrame = {
     val base = docs
       .select(col("doc_id"), col("source"),
         expr("filter(split(text, ' '), x -> x <> '')").as("ws"))
@@ -2115,17 +2051,14 @@ object TextAnalysis {
   /** Corpus line-document-frequency over an inventory: df(fp) =
     * distinct docs containing the line.
     */
-  private[graft] def lineDf(lines: DataFrame): DataFrame =
+  private def lineDf(lines: DataFrame): DataFrame =
     lines.select(col("fp"), col("doc_id")).distinct()
       .groupBy(col("fp")).agg(count(lit(1)).as("df"))
 
   /** t40's per-doc verdict over an inventory and its df table — kept-
     * token count and position-weighted checksum over surviving lines.
-    * A VIEW over (lines ⋈ df): the verdict is never frozen at
-    * admission time, which is what makes the gate streamable with
-    * exact batch equality (see [[lineDedupStream]]).
     */
-  private[graft] def lineVerdict(lines: DataFrame, df: DataFrame): DataFrame =
+  private def lineVerdict(lines: DataFrame, df: DataFrame): DataFrame =
     lines.join(df, Seq("fp"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_lines"),
@@ -2136,351 +2069,6 @@ object TextAnalysis {
           (col("li") + 1L) * (col("fp") % 1000000000L)).otherwise(0L))
           .as("chk_kept"))
       .orderBy(col("doc_id"))
-
-  /** t40's streaming twin — the corpus-frequency boilerplate gate as
-    * feeds actually land: each micro-batch appends its docs' line
-    * inventories ((doc_id, li, fp, nw) longs — never text) behind the
-    * O9-pattern anti-join at (doc_id, li) granularity (trigger replay
-    * and within-batch duplicates insert zero). Line granularity — not
-    * doc granularity — matters for crash recovery: if a failed trigger
-    * commits only SOME of a doc's inventory rows, a doc_id-level
-    * anti-join would skip the whole doc on retry and permanently lose
-    * its remaining lines; the (doc_id, li) key completes the partial
-    * doc instead. The inventory is the ONLY state: df is a
-    * VIEW recomputed from it (see [[lineDedupReport]]), because a line
-    * that crosses DF_MIN in batch 7 retroactively strikes docs admitted
-    * in batch 2 — freezing verdicts (or a second df-counter store) at
-    * admission time would either miss those revisions or open a
-    * two-store crash window where lines and counters disagree (the
-    * round-13 compact() lesson applied preemptively: one writer, one
-    * store, idempotent appends). Final report therefore equals batch
-    * t40 for ANY batch split, which StreamingSpec pins together with a
-    * required cross-batch df crossing and an inserted-zero replay.
-    * State is O(corpus lines) × ~32 B — the same rows the batch gate
-    * shuffles, persisted once.
-    */
-  def lineDedupStream(stream: DataFrame, storePath: String,
-                      checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        import org.apache.hadoop.fs.Path
-        val linesDir = new Path(s"$storePath/lines")
-        val fs = linesDir.getFileSystem(s.sessionState.newHadoopConf())
-        val inv0 = lineInventory(batch.dropDuplicates("doc_id"))
-        val inv =
-          if (fs.exists(linesDir)) {
-            val seen = s.read.parquet(linesDir.toString)
-              .select(col("doc_id"), col("li")).distinct()
-            inv0.join(seen, Seq("doc_id", "li"), "left_anti")
-          } else inv0
-        inv.write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(linesDir.toString)
-        ()
-      }
-      .start()
-  }
-
-  /** The boilerplate-gate report over the persisted stream state:
-    * recompute df from the stored inventory and apply the shared
-    * verdict — exactly batch t40 over everything that has arrived.
-    */
-  def lineDedupReport(s: SparkSession, storePath: String): DataFrame = {
-    val lines = s.read.parquet(s"$storePath/lines")
-    lineVerdict(lines, lineDf(lines))
-  }
-
-  /** Misra–Gries MERGE as a relational computation — the mergeable-
-    * summaries rule (sum counters over the union, subtract the
-    * (k+1)-th largest, drop non-positives) expressed as one union +
-    * one keyed aggregate + one per-lang window. The persisted STATE is
-    * O(k) per lang; the maintenance path never hands this merge a raw
-    * vocabulary — [[mgLocalReduce]] pre-reduces each batch to B
-    * disjoint MG(k) slice summaries first, so the per-lang window here
-    * sorts O(B·k + k) = O(k) rows for ANY batch size.
-    * Fully deterministic: ties rank by (cnt DESC, item), so
-    * a replayed merge rebuilds byte-identical state. Items ranked past
-    * k carry cnt ≤ the subtrahend and could never survive the
-    * subtraction, so the rank filter loses nothing.
-    */
-  private[graft] def mgMerge(a: DataFrame, b: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val summed = a.unionByName(b).groupBy(col("lang"), col("item"))
-      .agg(sum(col("cnt")).as("cnt"))
-    val w = Window.partitionBy(col("lang"))
-      .orderBy(col("cnt").desc, col("item"))
-    val ranked = summed.withColumn("rn", row_number().over(w))
-    val sub = ranked.filter(col("rn") === k + 1)
-      .select(col("lang"), col("cnt").as("sub"))
-    ranked.filter(col("rn") <= k)
-      .join(sub, Seq("lang"), "left")
-      .select(col("lang"), col("item"),
-        (col("cnt") - coalesce(col("sub"), lit(0L))).as("cnt"))
-      .filter(col("cnt") > 0)
-  }
-
-  /** How the level-1 reduce splits a lang's vocabulary. Fixed so the
-    * MG chain stays deterministic across sessions and replays. */
-  private[graft] val MgBuckets = 32
-
-  /** Level-1 Misra–Gries reduce of a batch's exact (lang, item, cnt)
-    * table: each (lang, hash-bucket) slice is reduced to its own MG(k)
-    * summary of that slice's sub-stream. Buckets partition items
-    * DISJOINTLY (crc32 — codegen'd in Spark and reproducible in plain
-    * Scala for the spec's chain replay), so the union of the B slice
-    * summaries is itself a mergeable MG summary of the whole batch,
-    * and [[mgMerge]]ing it into the persisted state carries the same
-    * N/(k+1) coverage guarantee as merging the exact counts (mergeable-
-    * summaries theorem: errors add to ≤ total-weight/(k+1) over ANY
-    * merge tree). What this buys at scale: no single task ever windows
-    * a lang's full batch vocabulary — the widest window anywhere in
-    * the maintenance is O(vocab/B) here and O(B·k + k) = O(k) in the
-    * state merge, for ANY batch size (round-15 advice #6). */
-  private[graft] def mgLocalReduce(delta: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bucketed = delta.withColumn("bkt",
-      pmod(crc32(encode(col("item"), "UTF-8")), lit(MgBuckets)))
-    val w = Window.partitionBy(col("lang"), col("bkt"))
-      .orderBy(col("cnt").desc, col("item"))
-    val ranked = bucketed.withColumn("rn", row_number().over(w))
-    val sub = ranked.filter(col("rn") === k + 1)
-      .select(col("lang"), col("bkt"), col("cnt").as("sub"))
-    ranked.filter(col("rn") <= k)
-      .join(sub, Seq("lang", "bkt"), "left")
-      .select(col("lang"), col("item"),
-        (col("cnt") - coalesce(col("sub"), lit(0L))).as("cnt"))
-      .filter(col("cnt") > 0)
-  }
-
-  /** t07's streaming twin — heavy-hitter MAINTENANCE over an arriving
-    * corpus (the deployment shape: the hot-vocabulary monitor must
-    * update per feed, not rescan history, and its state must stay
-    * O(langs · k) — persisting exact word counts would grow with the
-    * vocabulary): each micro-batch reduces to its exact (lang, word)
-    * counts (one shuffle — the same bill t07 pays once), pre-reduces
-    * them to B disjoint MG(k) slice summaries ([[mgLocalReduce]] — no
-    * task ever windows a lang's full batch vocabulary), and
-    * [[mgMerge]]s those into the persisted k-counter sketch; per-lang
-    * token totals merge alongside (a trivially mergeable sum, taken
-    * from the EXACT counts before the lossy reduce). State
-    * versions are batch-keyed snapshots (the rollupMaintenanceStream
-    * discipline — a merge is not an append, so replay idempotence
-    * comes from versioned overwrite, not an anti-join; version N
-    * deterministically rewrites from N−1 + the same delta). What
-    * survives is merge-ORDER-dependent, so the pinned contract is the
-    * mergeable-summaries GUARANTEE — any item with true count >
-    * N/(k+1) is in the sketch — which StreamingSpec checks against
-    * the raw corpus, alongside an exact Scala replay of every state
-    * version (the merge is deterministic even though the guarantee is
-    * the only portable claim).
-    */
-  def heavyHittersStream(stream: DataFrame, storePath: String,
-                         checkpointDir: String, k: Int = 8)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        heavyHittersMaintainBatch(batch, batchId, storePath, k)
-      }
-      .start()
-  }
-
-  /** One heavy-hitter maintenance trigger, factored out so
-    * StreamingSpec can drive the at-least-once replay path directly.
-    * Replay semantics match [[graft.operators.Extras.rollupMaintainBatch]]:
-    * a crash after the state writes but before the checkpoint commit
-    * re-runs the SAME batchId, which finds its own uncommitted version
-    * in the store — the predecessor is the newest version STRICTLY
-    * BELOW batchId, so the replay deterministically rewrites its own
-    * version; only versions STRICTLY ABOVE batchId are a stale
-    * generation (fresh checkpoint over an old store) and fail loud. */
-  private[graft] def heavyHittersMaintainBatch(batch: DataFrame,
-      batchId: Long, storePath: String, k: Int): Unit = {
-    val s = batch.sparkSession
-    import org.apache.hadoop.fs.Path
-    val delta = batch.filter(col("lang").isNotNull)
-      .select(col("lang"), explode(split(col("text"), " ")).as("item"))
-      .groupBy(col("lang"), col("item"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val nwDelta = delta.groupBy(col("lang"))
-      .agg(sum(col("cnt")).as("n_words"))
-    def versions(dir: String): Seq[Long] = {
-      val p = new Path(dir)
-      val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("batch="))
-        .map(_.stripPrefix("batch=").toLong)
-    }
-    val vs = versions(s"$storePath/sketch")
-    // generation guard: versions STRICTLY PAST this batchId mean the
-    // stream was restarted with a fresh checkpoint over an old store —
-    // silently resetting the sketch while the report reads the stale
-    // max version would serve divergent state; fail loud. A version ==
-    // batchId is this batch's own uncommitted write (crash before the
-    // checkpoint commit) and the versioned overwrite below replays it
-    // idempotently (round-15 advice).
-    require(!vs.exists(_ > batchId),
-      s"heavy-hitter store at $storePath already holds batch > " +
-      s"$batchId — stale generation; clear the store or keep the " +
-      "original checkpoint")
-    val prev = vs.filter(_ < batchId).sorted.lastOption
-    // level-1 reduce: the state merge's window never sees the batch's
-    // raw vocabulary — only B disjoint MG(k) slice summaries of it
-    val deltaMg = mgLocalReduce(delta, k)
-    val sketch = prev match {
-      case Some(p) =>
-        mgMerge(s.read.parquet(s"$storePath/sketch/batch=$p"), deltaMg, k)
-      case None => mgMerge(deltaMg.limit(0), deltaMg, k)
-    }
-    val nwords = (prev match {
-      case Some(p) =>
-        s.read.parquet(s"$storePath/nwords/batch=$p")
-          .unionByName(nwDelta)
-      case None => nwDelta
-    }).groupBy(col("lang")).agg(sum(col("n_words")).as("n_words"))
-    // nwords lands FIRST, sketch LAST: the report keys BOTH reads
-    // off the sketch's latest version, so a crash between the two
-    // writes leaves the previous consistent pair current rather
-    // than a torn (sketch@N, nwords@N−1) pairing
-    nwords.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storePath/nwords/batch=$batchId")
-    sketch.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storePath/sketch/batch=$batchId")
-  }
-
-  /** The maintained heavy-hitter view at its latest version: per lang,
-    * the surviving items (sorted), the sketch size, and the token
-    * total the N/(k+1) guarantee divides.
-    */
-  def heavyHittersReport(s: SparkSession, storePath: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val conf = s.sessionState.newHadoopConf()
-    def complete(dir: String): Set[Long] = {
-      val p = new Path(dir)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Set.empty
-      else fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("batch="))
-        .map(_.stripPrefix("batch=").toLong)
-        // only COMMITTED versions count: a crash mid-parquet-write
-        // leaves a dir without _SUCCESS, which must never be served
-        .filter(v => fs.exists(new Path(s"$dir/batch=$v/_SUCCESS")))
-        .toSet
-    }
-    // the served version is the newest COMPLETE PAIR — the stream
-    // writes nwords before sketch, so any version with a committed
-    // sketch has a committed nwords, and a crash between the two
-    // leaves the previous pair current rather than a torn read
-    val pairs = complete(s"$storePath/sketch")
-      .intersect(complete(s"$storePath/nwords"))
-    require(pairs.nonEmpty,
-      s"no committed heavy-hitter state at $storePath — the stream " +
-      "has not committed its first batch (or crashed during batch 0); " +
-      "nothing to report yet")
-    val v = pairs.max
-    val sk = s.read.parquet(s"$storePath/sketch/batch=$v")
-      .groupBy(col("lang"))
-      .agg(sort_array(collect_list(col("item"))).as("items"),
-           count(lit(1)).as("n_items"))
-    s.read.parquet(s"$storePath/nwords/batch=$v")
-      .join(sk, Seq("lang"), "left")
-      .orderBy(col("lang"))
-  }
-
-  /** t37's streaming twin — vocabulary growth over an arriving corpus
-    * (the deployment shape: feeds land in micro-batches and the
-    * "is this source still minting new types" monitor must update
-    * incrementally, not rescan history). State is the first-seen word
-    * store: (source, wh, first_batch) appended behind the O9-pattern
-    * anti-join (trigger replay inserts zero; within-batch duplicates
-    * collapse BEFORE the anti-join — the round-13 addBatch lesson),
-    * plus per-batch token counts written to an idempotent
-    * batch-keyed partition (replay rewrites the same bytes). Nothing
-    * text-shaped persists — the store rows are (source, 60-bit hash,
-    * long) and (source, long, long). A type's first_batch is exactly
-    * the batch analog of t37's first-occurrence quartile, so the final
-    * per-source totals must equal t37's quartile-4 row for ANY batch
-    * split (StreamingSpec pins it, plus the per-batch new-type
-    * attribution against a raw-text recompute).
-    */
-  def vocabGrowthStream(stream: DataFrame, storePath: String,
-                        checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val toks = batch.select(col("source"), col("doc_id"),
-          expr("filter(split(text, ' '), x -> x <> '')").as("ws"))
-        val words = toks
-          .select(col("source"), explode(col("ws")).as("w"))
-          .select(col("source"), graft.Dets.phash(col("w")).as("wh"))
-          .distinct()
-        val btok = toks
-          .groupBy(col("source"))
-          .agg(sum(size(col("ws")).cast("long")).as("btok"))
-        import org.apache.hadoop.fs.Path
-        val wordsDir = new Path(s"$storePath/words")
-        val fs = wordsDir.getFileSystem(s.sessionState.newHadoopConf())
-        val fresh =
-          if (fs.exists(wordsDir)) {
-            val seen = s.read.parquet(wordsDir.toString)
-              .select(col("source"), col("wh"))
-            words.join(seen, Seq("source", "wh"), "left_anti")
-          } else words
-        fresh.withColumn("first_batch", lit(batchId))
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(wordsDir.toString)
-        btok.withColumn("first_batch", lit(batchId))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$storePath/toks/batch=$batchId")
-        ()
-      }
-      .start()
-  }
-
-  /** The per-source growth report over the persisted stream state:
-    * cumulative tokens and types plus the LAST batch's new-type count
-    * (the live saturation signal — t37's new_types for the most recent
-    * quartile, continuously maintained).
-    */
-  def vocabGrowthReport(s: SparkSession, storePath: String): DataFrame = {
-    val words = s.read.parquet(s"$storePath/words")
-    val toks = s.read.parquet(s"$storePath/toks")
-    val last = words.agg(max(col("first_batch"))).head.getLong(0)
-    val types = words.groupBy(col("source"))
-      .agg(count(lit(1)).as("cum_types"),
-           sum(when(col("first_batch") === last, 1L).otherwise(0L))
-             .as("last_new_types"))
-    val tokens = toks.groupBy(col("source"))
-      .agg(sum(col("btok")).as("cum_tokens"))
-    tokens.join(types, Seq("source"))
-      .select(col("source"), col("cum_tokens"), col("cum_types"),
-              col("last_new_types"))
-      .orderBy(col("source"))
-  }
-
-  /** t16's report shape over the persisted cap state. Ranks recompute
-    * on the control-sized state: the survivors per source are exactly
-    * the corpus-wide first `cap` in hash order, so their relative
-    * ranks — and therefore n_kept/sum_chars/max_rank — match the batch
-    * query's.
-    */
-  def domainCapReport(s: SparkSession, storePath: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    s.read.parquet(s"$storePath/state")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("source")).orderBy(col("rk"), col("doc_id"))))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_kept"),
-           sum(col("chars")).as("sum_chars"),
-           max(col("rn")).cast("long").as("max_rank"))
-      .orderBy(col("source"))
-  }
 
   /** The raw (doc_id, n_feats, logit_milli) frame behind t23 — exposed
     * so t45's threshold sweep prices the SAME model's knob. */
@@ -2506,6 +2094,14 @@ object TextAnalysis {
            sum($"w_milli").as("logit_milli"))
   }
 
+  /** t23's scoring transform over any (doc_id, text) frame — factored
+    * out so the SAME function runs under `readStream` (classifier
+    * inference is the curation stage most often deployed as a stream:
+    * score documents as they arrive, no corpus-wide state). Map-only
+    * gram hashing + a broadcast O(D) model + one keyed partial-agg
+    * reduce — nothing here is batch-bound; StreamingSpec pins the
+    * micro-batched run bit-equal to the batch registry entry.
+    */
   private[graft] def classifierScore(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     classifierLogits(docs)

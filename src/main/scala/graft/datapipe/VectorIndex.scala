@@ -141,69 +141,6 @@ object VectorIndex {
     fs.delete(tombs, true)
   }
 
-  /** Streaming twin of [[addBatch]] — ANN ingestion as it actually
-    * deploys: vectors arrive continuously, every micro-batch is
-    * assigned map-only against the frozen broadcast centroids and
-    * appended idempotently. foreachBatch like d08/w09/the d12 gate:
-    * the index lives in the lake (posting lists at corpus scale), not
-    * in state-store RAM. Per-batch decisions land in `decisionsPath`
-    * partitioned by batch_id with dynamic overwrite — a retried
-    * trigger replaces its own snapshot; store appends stay idempotent
-    * via [[addBatch]]'s anti-join. */
-  def indexStream(stream: DataFrame, path: String, decisionsPath: String,
-                  checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        addBatch(batch, path)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(decisionsPath)
-        ()
-      }
-      .start()
-
-  /** Streaming twin of the FULL index lifecycle — the shape a deployed
-    * ANN index actually runs: one operation feed carrying both ingests
-    * and takedowns (op ∈ {add, delete}), applied per micro-batch
-    * through the SAME store primitives the batch API exposes —
-    * [[addBatch]]'s within-batch-dedup + anti-join append and
-    * [[removeBatch]]'s idempotent tombstones — so trigger replay and
-    * duplicate feeds insert zero on BOTH frames, and a batch carrying
-    * an add and a delete of the same id lands deterministically dead
-    * (the tombstone wins at read time regardless of intra-batch
-    * order). [[compact]] stays an OPERATOR action between triggers
-    * (the deployment schedules it off-peak; it is not a per-batch
-    * step), after which a re-arriving id genuinely revives — the
-    * deliberate two-step the erasure semantics require. StreamingSpec
-    * pins a three-batch add→delete→compact→re-add replay equal to the
-    * batch API's report on an independently maintained store.
-    */
-  def lifecycleStream(stream: DataFrame, path: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // ONE control job decides which paths run this trigger: a
-        // delete-only batch must not pay addBatch's centroid read +
-        // store-wide anti-join + empty append, and an all-adds feed
-        // must not materialize an (empty) tombstone frame the readers
-        // then anti-join against
-        val b = batch.localCheckpoint()
-        val present = b.groupBy(col("op")).count()
-          .select(col("op")).collect().map(_.getString(0)).toSet
-        if (present.contains("add"))
-          addBatch(b.filter(col("op") === "add")
-            .select(col("vec_id"), col("embedding")), path)
-        if (present.contains("delete"))
-          removeBatch(b.filter(col("op") === "delete")
-            .select(col("vec_id")), path)
-        ()
-      }
-      .start()
-
   // ===== oracle-checked query =====
 
   /** Deterministic two-phase split of `embeddings`: the index is built

@@ -1677,25 +1677,9 @@ object Extras {
         greatest(col("lo_b"), col("lo_d")).as("last_order"))
   }
 
-  /** q86's streaming twin — materialized-view maintenance over an
-    * arriving order stream (the deployment shape: the rollup is the
-    * lake-resident view, deltas land in micro-batches, and the view
-    * must advance by STATE MERGE, never by rescanning history). Each
-    * trigger aggregates its batch to O(keys) delta state and full-outer-
-    * merges it with the previous persisted state into a new batch-keyed
-    * state version: replaying batch N deterministically rewrites
-    * state/batch=N from state/batch=N-1 + the same delta — idempotent
-    * under trigger replay, the O9 discipline in versioned-snapshot form
-    * (a merge is not an append, so idempotence comes from versioning,
-    * not an anti-join). Facts never persist; the state is O(keys).
-    * The mergeable-state law (merge(state(A), state(B)) == state(A∪B))
-    * makes the final version equal q86's one-shot rollup for ANY batch
-    * split — StreamingSpec pins it.
-    */
-  /** q114's five-clause ladder, stated ONCE for the registry entry,
-    * the streamed general apply, and the specs (see the q114 entry's
-    * comment for the clause semantics). */
-  private[graft] def q114Ladder
+  /** q114's five-clause ladder (see the q114 entry's comment for the
+    * clause semantics). */
+  private def q114Ladder
       : (Seq[Merge.MergeClause], Seq[Merge.MergeClause]) = (
     Seq(
       Merge.delete("hard_delete",
@@ -1880,7 +1864,7 @@ object Extras {
     * foreachBatch-merge deployment: a change feed lands in
     * micro-batches and each trigger merges it into the persisted
     * current table with the same three-clause arbitration). State is
-    * the rollup stream's versioned store: `state/batch=N` written by
+    * a versioned store: `state/batch=N` written by
     * deterministic overwrite, seeded at `batch=-1` by [[mergeSeed]],
     * replay of a crashed trigger rewrites its own version from N−1 +
     * the same delta, versions ABOVE batchId are a stale generation
@@ -1915,7 +1899,13 @@ object Extras {
     * accumulating onto the pre-delete state), as 'delete' when nothing
     * followed the last delete, and as a plain summed 'upsert' when no
     * delete occurred. A delete-then-reinsert micro-batch therefore
-    * keeps the reinsert. */
+    * keeps the reinsert.
+    *
+    * Versioning: the seed is required, stale generations fail loud,
+    * the predecessor is the newest version STRICTLY below batchId (a
+    * replayed trigger deterministically rewrites its own version —
+    * never merges onto itself), and the write is an idempotent
+    * overwrite of `state/batch=N`. */
   private[graft] def mergeApplyBatch(batch: DataFrame, batchId: Long,
                                      storePath: String): Unit = {
     val s = batch.sparkSession
@@ -1939,19 +1929,6 @@ object Extras {
     } else batch.groupBy(col("key")).agg(
       sum(col("amt").cast("decimal(18,4)")).cast("double").as("amt"),
       min(col("action")).as("action")) // 'delete' < 'upsert': delete wins
-    applyVersioned(s, storePath, batchId)(prev =>
-      mergeArbitrate(prev, delta).select(col("key"), col("bal")))
-  }
-
-  /** The versioned-overwrite trigger machinery SHARED by the q100
-    * apply and the general clause-ladder apply: seed required, stale
-    * generations fail loud, the predecessor is the newest version
-    * STRICTLY below batchId (a replayed trigger deterministically
-    * rewrites its own version — never merges onto itself), and the
-    * write is an idempotent overwrite of `state/batch=N`. */
-  private def applyVersioned(s: SparkSession, storePath: String,
-                             batchId: Long)
-                            (step: DataFrame => DataFrame): Unit = {
     import org.apache.hadoop.fs.Path
     val stateDir = new Path(s"$storePath/state")
     val fs = stateDir.getFileSystem(s.sessionState.newHadoopConf())
@@ -1965,75 +1942,10 @@ object Extras {
       s"merge store at $storePath already holds batch > $batchId " +
       "— stale generation; clear the store or keep the original checkpoint")
     val p = vs.filter(_ < batchId).max // at least the −1 seed
-    val prev = s.read.parquet(s"$storePath/state/batch=$p")
-    step(prev)
+    mergeArbitrate(s.read.parquet(s"$storePath/state/batch=$p"), delta)
+      .select(col("key"), col("bal"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$storePath/state/batch=$batchId")
-  }
-
-  /** GENERAL STREAMED CDC APPLY — the foreachBatch-merge deployment
-    * for an ARBITRARY clause ladder (round-19 verdict #2:
-    * [[mergeApplyBatch]] hard-codes q100's (key, bal, amt, action)
-    * arbitration while batch q114 and the persisted
-    * `SnapshotLog.mergeIntoClauses` take any [[Merge.MergeClause]]
-    * ladder — a streaming consumer of those ladders had no path).
-    * Per trigger: the batch optionally collapses to its LAST event
-    * per key (`seqCol` — the general CDC convention for feeds whose
-    * events carry the full new state or a delete marker, so a
-    * delete-then-reinsert micro-batch keeps the reinsert; q100's
-    * DELTA-summing sequential collapse stays with its specialized
-    * entry point, the two feed conventions are not interchangeable),
-    * then the ladder applies against the persisted state through the
-    * same versioned-overwrite machinery: replay-idempotent, stale
-    * generations fail loud. Scale shape: one window + one full-outer
-    * shuffle per trigger, state O(keys) parquet. */
-  def mergeApplyStreamClauses(stream: DataFrame, storePath: String,
-                              checkpointDir: String,
-                              matched: Seq[Merge.MergeClause],
-                              notMatched: Seq[Merge.MergeClause],
-                              seqCol: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeApplyBatchClauses(batch, batchId, storePath,
-          matched, notMatched, seqCol)
-      }
-      .start()
-
-  /** One general-ladder trigger (factored for the replay spec). */
-  private[graft] def mergeApplyBatchClauses(batch: DataFrame,
-                                            batchId: Long,
-                                            storePath: String,
-                                            matched: Seq[Merge.MergeClause],
-                                            notMatched: Seq[Merge.MergeClause],
-                                            seqCol: Option[String] = None)
-      : Unit = {
-    val s = batch.sparkSession
-    val delta = seqCol match {
-      case Some(sc) =>
-        import org.apache.spark.sql.expressions.Window
-        // last event per key: hashes by key, the same exchange the
-        // ladder's full-outer join needs
-        val w = Window.partitionBy(col("key")).orderBy(col(sc).desc)
-        batch.withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1).drop("_rn", sc)
-      case None => batch
-    }
-    applyVersioned(s, storePath, batchId)(prev =>
-      Merge.mergeClauses(prev, delta, "key", matched, notMatched))
-  }
-
-  /** The general-ladder store's state at its latest version — ALL
-    * target columns, keyed order (the (key, bal)-shaped [[mergeState]]
-    * stays with the q100 pipeline). */
-  def mergeStateClauses(s: SparkSession, storePath: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val stateDir = new Path(s"$storePath/state")
-    val fs = stateDir.getFileSystem(s.sessionState.newHadoopConf())
-    val last = fs.listStatus(stateDir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong).max
-    s.read.parquet(s"$storePath/state/batch=$last").orderBy(col("key"))
   }
 
   /** The merged table at its latest version. */
@@ -2045,71 +1957,6 @@ object Extras {
       .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong).max
     s.read.parquet(s"$storePath/state/batch=$last")
       .select(col("key"), col("bal")).orderBy(col("key"))
-  }
-
-  def rollupMaintenanceStream(stream: DataFrame, storePath: String,
-                              checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        rollupMaintainBatch(batch, batchId, storePath)
-      }
-      .start()
-  }
-
-  /** One maintenance trigger, factored out so StreamingSpec can drive
-    * the at-least-once replay path directly (a crash after the state
-    * write but before the checkpoint commit re-runs the SAME batchId).
-    * A replayed batch finds `batch=batchId` already in the store; the
-    * predecessor is selected as the newest version STRICTLY BELOW
-    * batchId, so the replay deterministically rewrites its own version
-    * from N−1 + the same delta — never merges onto itself. Only a
-    * version STRICTLY ABOVE batchId is a true stale generation (fresh
-    * checkpoint over an old store) and fails loud. */
-  private[graft] def rollupMaintainBatch(batch: DataFrame, batchId: Long,
-                                         storePath: String): Unit = {
-    val s = batch.sparkSession
-    val delta = rollupState(batch)
-    import org.apache.hadoop.fs.Path
-    val stateDir = new Path(s"$storePath/state")
-    val fs = stateDir.getFileSystem(s.sessionState.newHadoopConf())
-    val vs =
-      if (!fs.exists(stateDir)) Seq.empty[Long]
-      else fs.listStatus(stateDir).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong)
-    // generation guard: a restart with a fresh checkpoint over an old
-    // store resets batchId to 0 — silently merging onto nothing while
-    // stale HIGHER versions linger would fork the state chain; fail
-    // loud. A version == batchId is NOT stale — it is this very batch's
-    // own uncommitted write from a crash before the checkpoint commit,
-    // and the versioned overwrite below is exactly what makes that
-    // replay idempotent (round-15 advice).
-    require(!vs.exists(_ > batchId),
-      s"rollup store at $storePath already holds batch > $batchId " +
-      "— stale generation; clear the store or keep the original " +
-      "checkpoint")
-    val merged = vs.filter(_ < batchId).sorted.lastOption match {
-      case Some(p) =>
-        rollupMerge(s.read.parquet(s"$storePath/state/batch=$p"), delta)
-      case None => delta
-    }
-    merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storePath/state/batch=$batchId")
-  }
-
-  /** The maintained view at its latest version, in q86's report shape. */
-  def rollupReport(s: SparkSession, storePath: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val stateDir = new Path(s"$storePath/state")
-    val fs = stateDir.getFileSystem(s.sessionState.newHadoopConf())
-    val last = fs.listStatus(stateDir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong).max
-    s.read.parquet(s"$storePath/state/batch=$last")
-      .select(col("o_custkey"), col("n_orders"),
-        col("sum_price_dec").cast("double").as("sum_price"),
-        col("min_price"), col("max_price"), col("last_order"))
-      .orderBy(col("o_custkey"))
   }
 
   def oracleSql: Map[String, String] = Map(

@@ -366,51 +366,4 @@ class PropertySpec extends SparkSpec {
       assert(sizes.keySet.forall(b => b >= 1 && b <= k))
     }
   }
-
-  test("∀ corpus, ∀ batch split: the two-level MG sketch keeps the N/(k+1) guarantee") {
-    // the mergeable-summaries claim the streamed heavy hitters rest on,
-    // under RANDOM corpora and RANDOM splits: mgLocalReduce (per-bucket
-    // level-1 MG) + mgMerge (level-2 state merge) over any batch
-    // sequence must retain every item whose true count > N/(k+1).
-    // Zipf-ish generator: small vocab with heavy skew so heavy hitters
-    // genuinely exist and subtraction genuinely fires.
-    val K = 4
-    val wordGen = Gen.frequency(
-      (8, Gen.const("hot")), (5, Gen.const("warm")),
-      (3, Gen.oneOf("w1", "w2", "w3")),
-      (2, Gen.oneOf((1 to 30).map(i => s"cold$i"))))
-    val corpusGen = for {
-      n <- Gen.choose(60, 200)
-      ws <- Gen.listOfN(n, wordGen)
-      nb <- Gen.choose(2, 4)
-    } yield (ws, nb)
-    samples(corpusGen, 5).zipWithIndex.foreach { case ((words, nBatches), ci) =>
-      val batches = words.grouped(
-        (words.size + nBatches - 1) / nBatches).toSeq
-      var stateDf = Seq.empty[(String, String, Long)]
-        .toDF("lang", "item", "cnt")
-      batches.foreach { b =>
-        val delta = b.map(w => ("xx", w)).toDF("lang", "item")
-          .groupBy($"lang", $"item").agg(count(lit(1)).as("cnt"))
-        val local = datapipe.TextAnalysis.mgLocalReduce(delta, K)
-        stateDf = datapipe.TextAnalysis.mgMerge(stateDf, local, K)
-          .localCheckpoint()
-      }
-      val sketch = stateDf.as[(String, String, Long)].collect()
-        .map(r => r._2 -> r._3).toMap
-      assert(sketch.size <= K, s"case $ci: sketch exceeded k")
-      val exact = words.groupBy(identity).view.mapValues(_.size.toLong)
-      val n = words.size.toLong
-      exact.foreach { case (w, c) =>
-        if (c * (K + 1) > n)
-          assert(sketch.contains(w),
-            s"case $ci: guaranteed item '$w' (count $c of $n) missing " +
-              s"from ${sketch.keySet}")
-      }
-      // residual counts never exceed true counts (MG under-counts only)
-      sketch.foreach { case (w, c) =>
-        assert(c <= exact.getOrElse(w, 0L), s"case $ci: '$w' over-counted")
-      }
-    }
-  }
 }

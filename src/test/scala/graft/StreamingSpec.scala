@@ -375,127 +375,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streamed domain cap: revisable quota equals batch selection; evictions occur") {
-    // the per-source cap as a streaming quota: hash-rank selection is a
-    // pure function of the doc SET, so the persisted top-cap state must
-    // converge to the batch answer for any batch split — and a later
-    // lower-hash arrival must EVICT an earlier admission, the semantics
-    // a first-come quota cannot have without over-admitting
-    val root = java.nio.file.Files.createTempDirectory("graft_cap")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectories(inDir)
-    val docs = Tables.documents(spark, sf)
-    val rows = docs.orderBy($"doc_id").collect()
-    val third = (rows.length + 2) / 3
-    rows.grouped(third).zipWithIndex.foreach { case (chunk, i) =>
-      val tmp = root.resolve(s"tmp$i")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(chunk.toSeq, 1), docs.schema)
-        .write.parquet(tmp.toString)
-      val part = {
-        val st = java.nio.file.Files.list(tmp)
-        try st.filter(_.toString.endsWith(".parquet")).findFirst.get
-        finally st.close()
-      }
-      val dst = inDir.resolve(f"chunk$i%03d.parquet")
-      java.nio.file.Files.move(part, dst)
-      dst.toFile.setLastModified(60000L * (i + 1))
-    }
-    val cap = 10 // < docs per source at this sf, so the quota BINDS
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-    val q = datapipe.TextAnalysis.domainCapStream(
-      stream, s"$root/store", s"$root/ckpt", cap)
-    try q.processAllAvailable() finally q.stop()
-    val streamed = datapipe.TextAnalysis.domainCapReport(spark, s"$root/store")
-      .as[(String, Long, Long, Long)].collect().toSet
-    val keep = datapipe.TextAnalysis.domainCapKeep(
-      docs.select($"doc_id", $"source"), cap).select($"doc_id", $"rn")
-    val batch = docs.join(keep, Seq("doc_id"))
-      .groupBy($"source")
-      .agg(count(lit(1)).as("n_kept"), sum(length($"text")).as("sum_chars"),
-           max($"rn").cast("long").as("max_rank"))
-      .as[(String, Long, Long, Long)].collect().toSet
-    assert(streamed === batch && streamed.nonEmpty)
-    assert(streamed.forall(_._2 === cap.toLong), "cap never bound")
-    val firstChunk = rows.take(third).map(_.getLong(0)).toSet
-    val provisional = datapipe.TextAnalysis.domainCapKeep(
-        docs.filter($"doc_id".isin(firstChunk.toSeq: _*))
-          .select($"doc_id", $"source"), cap)
-      .select($"doc_id").as[Long].collect().toSet
-    val finalIds = spark.read.parquet(s"$root/store/state")
-      .select($"doc_id").as[Long].collect().toSet
-    assert((provisional -- finalIds).nonEmpty,
-      "no eviction across triggers — revisable-cap semantics untested")
-  }
-
-  test("streamed rollup maintenance: every state version equals the prefix rollup; final equals q86") {
-    // the mergeable-state law makes the maintained view a pure function
-    // of the fact SET, not the batch split — so each persisted version
-    // must equal the one-shot rollup of its prefix, and the final
-    // version must equal q86's batch answer exactly
-    val root = java.nio.file.Files.createTempDirectory("graft_rollup")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectories(inDir)
-    val orders = Tables.orders(spark, sf)
-    // arrival ordered by CUSTKEY: low keys arrive only early (the
-    // carry branch), high keys only late (insert), boundary keys span
-    // chunks (combine) — all three merge branches provably exercised
-    val rows = orders.orderBy($"o_custkey", $"o_orderkey").collect()
-    val third = (rows.length + 2) / 3
-    rows.grouped(third).zipWithIndex.foreach { case (chunk, i) =>
-      val tmp = root.resolve(s"tmp$i")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(chunk.toSeq, 1), orders.schema)
-        .write.parquet(tmp.toString)
-      val part = {
-        val st = java.nio.file.Files.list(tmp)
-        try st.filter(_.toString.endsWith(".parquet")).findFirst.get
-        finally st.close()
-      }
-      val dst = inDir.resolve(f"chunk$i%03d.parquet")
-      java.nio.file.Files.move(part, dst)
-      dst.toFile.setLastModified(60000L * (i + 1))
-    }
-    val stream = spark.readStream.schema(orders.schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-    val q = operators.Extras.rollupMaintenanceStream(
-      stream, s"$root/store", s"$root/ckpt")
-    try q.processAllAvailable() finally q.stop()
-    def canon(df: org.apache.spark.sql.DataFrame)
-        : Seq[(Long, Long, Double, Double, Double, java.sql.Timestamp)] =
-      df.select($"o_custkey", $"n_orders", $"sum_price", $"min_price",
-          $"max_price", $"last_order")
-        .as[(Long, Long, Double, Double, Double, java.sql.Timestamp)]
-        .collect().toSeq.sortBy(_._1)
-    // final version == q86's one-shot batch rollup
-    val streamed = canon(operators.Extras.rollupReport(spark, s"$root/store"))
-    val batch = canon(operators.Extras.queries("q86_incremental_rollup")(spark, sf))
-    assert(streamed === batch && streamed.nonEmpty)
-    // EVERY intermediate version is the exact rollup of its prefix —
-    // the invariant that makes replay (recompute version N from N-1)
-    // idempotent
-    (0 until 3).foreach { v =>
-      val prefixKeys = rows.take(third * (v + 1)).map(_.getLong(0)).toSet
-      val expect = operators.Extras.rollupState(
-          orders.filter($"o_orderkey".isin(prefixKeys.toSeq: _*)))
-        .select($"o_custkey", $"n_orders",
-          $"sum_price_dec".cast("double").as("sum_price"),
-          $"min_price", $"max_price", $"last_order")
-      val got = spark.read.parquet(s"$root/store/state/batch=$v")
-        .select($"o_custkey", $"n_orders",
-          $"sum_price_dec".cast("double").as("sum_price"),
-          $"min_price", $"max_price", $"last_order")
-      assert(canon(got) === canon(expect), s"version $v != prefix rollup")
-    }
-    // all three merge branches exercised by the split: keys confined to
-    // the first chunk (carry), keys new in a later chunk (insert), and
-    // keys spanning chunks (combine)
-    val c0 = rows.take(third).map(_.getLong(1)).toSet
-    val later = rows.drop(third).map(_.getLong(1)).toSet
-    assert((c0 -- later).nonEmpty, "no carry-only key")
-    assert((later -- c0).nonEmpty, "no insert-only key")
-    assert((c0 & later).nonEmpty, "no combined key")
-  }
-
   test("streamed CDC merge: final state equals the batch three-clause merge; replay is idempotent") {
     val root = java.nio.file.Files.createTempDirectory("graft_merge")
     val inDir = root.resolve("in"); java.nio.file.Files.createDirectories(inDir)
@@ -580,652 +459,6 @@ class StreamingSpec extends SparkSpec {
     val st2 = operators.Extras.mergeState(spark, s"$root2/store")
       .as[(Long, Double)].collect().toMap
     assert(st2 === Map(4L -> 5.0), s"got $st2")
-  }
-
-  test("general streamed clause ladder: final state equals batch q114; replay idempotent; seq collapse keeps a delete-then-reinsert") {
-    // round-19 verdict #2: batch (q114) and persisted merges take
-    // arbitrary Merge.MergeClause ladders, but the streamed apply
-    // hard-coded q100's arbitration — a streaming consumer of a
-    // q114-style ladder had no path. mergeApplyStreamClauses threads
-    // the caller's ladder (and an optional last-event-per-key seq
-    // collapse) through the same versioned-overwrite trigger loop.
-    import graft.operators.Merge
-    val root = java.nio.file.Files.createTempDirectory("graft_merge_gen")
-    val inDir = root.resolve("in")
-    java.nio.file.Files.createDirectories(inDir)
-    operators.Extras.mergeSeed(
-      operators.Extras.mergeTarget(spark, sf), s"$root/store")
-    // q114's exact feed, arrival-split into 2 micro-batches by key
-    // parity — each key's whole event history lands in ONE trigger,
-    // so the split must not change the ladder's outcome
-    val feed = operators.Extras.mergeFeed(spark, sf)
-    (0 until 2).foreach { i =>
-      val tmp = root.resolve(s"tmp$i")
-      feed.filter($"key" % 2 === i).coalesce(1).write.parquet(tmp.toString)
-      val part = {
-        val st = java.nio.file.Files.list(tmp)
-        try st.filter(_.toString.endsWith(".parquet")).findFirst.get
-        finally st.close()
-      }
-      val dst = inDir.resolve(f"chunk$i%03d.parquet")
-      java.nio.file.Files.move(part, dst)
-      dst.toFile.setLastModified(60000L * (i + 1))
-    }
-    val stream = spark.readStream.schema(feed.schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-    val (m114, nm114) = operators.Extras.q114Ladder
-    val q = operators.Extras.mergeApplyStreamClauses(
-      stream, s"$root/store", s"$root/ckpt", m114, nm114)
-    try q.processAllAvailable() finally q.stop()
-    val streamed = operators.Extras.mergeStateClauses(spark, s"$root/store")
-      .select($"key", $"bal").as[(Long, Double)].collect().toSeq
-    val batch = operators.Extras.queries("q114_merge_clauses")(spark, sf)
-      .select($"key", $"bal").as[(Long, Double)].collect().toSeq
-    assert(streamed === batch && streamed.nonEmpty,
-      "streamed general ladder diverged from batch q114")
-    // at-least-once replay: the LAST trigger's batchId re-applies to
-    // the same state
-    val lastChunk = spark.read.parquet(
-      inDir.resolve("chunk001.parquet").toString)
-    operators.Extras.mergeApplyBatchClauses(lastChunk, 1L, s"$root/store",
-      m114, nm114)
-    val replayed = operators.Extras.mergeStateClauses(spark, s"$root/store")
-      .select($"key", $"bal").as[(Long, Double)].collect().toSeq
-    assert(replayed === streamed, "replayed trigger changed the state")
-    val e = intercept[IllegalArgumentException] {
-      operators.Extras.mergeApplyBatchClauses(lastChunk, 0L,
-        s"$root/store", m114, nm114)
-    }
-    assert(e.getMessage.contains("stale generation"))
-    // seqCol: the general STATE-CARRYING convention — last event per
-    // key wins, so a delete-then-reinsert micro-batch keeps the
-    // reinsert (q100's delta-summing collapse is the other, summing
-    // convention and stays with its specialized entry point)
-    val root2 = java.nio.file.Files.createTempDirectory("graft_merge_gen2")
-    operators.Extras.mergeSeed(
-      Seq((1L, 10.0), (3L, 10.0)).toDF("key", "bal"), s"$root2/store")
-    val upsertM = Seq(
-      Merge.delete("del", $"action" === "delete"),
-      Merge.update("set", lit(true), "bal" -> $"amt"))
-    val upsertNm = Seq(
-      Merge.insert("ins", $"action" =!= "delete", "bal" -> $"amt"))
-    val events = Seq(
-      // key 1 (exists): upsert 5, delete, reinsert 7 -> 7
-      (1L, 5.0, "upsert", 1L), (1L, 0.0, "delete", 2L),
-      (1L, 7.0, "upsert", 3L),
-      // key 2 (new): upsert then delete -> absent
-      (2L, 5.0, "upsert", 1L), (2L, 0.0, "delete", 2L),
-      // key 3 (exists): delete then reinsert 4 -> 4
-      (3L, 0.0, "delete", 1L), (3L, 4.0, "upsert", 2L),
-      // key 4 (new): two upserts, last state wins -> 3
-      (4L, 2.0, "upsert", 1L), (4L, 3.0, "upsert", 2L)
-    ).toDF("key", "amt", "action", "seq")
-    operators.Extras.mergeApplyBatchClauses(events, 0L, s"$root2/store",
-      upsertM, upsertNm, seqCol = Some("seq"))
-    val st = operators.Extras.mergeStateClauses(spark, s"$root2/store")
-      .select($"key", $"bal").as[(Long, Double)].collect().toMap
-    assert(st === Map(1L -> 7.0, 3L -> 4.0, 4L -> 3.0), s"got $st")
-  }
-
-  test("streamed vocabulary growth: totals equal t37's quartile-4 row; per-batch attribution exact") {
-    // first-seen is a pure function of arrival ORDER, so the streamed
-    // store must reproduce the batch totals for any split AND charge
-    // each type to exactly the batch where it first arrived
-    val root = java.nio.file.Files.createTempDirectory("graft_vocab")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectories(inDir)
-    val docs = Tables.documents(spark, sf)
-    val rows = docs.orderBy($"doc_id").collect()
-    val third = (rows.length + 2) / 3
-    rows.grouped(third).zipWithIndex.foreach { case (chunk, i) =>
-      val tmp = root.resolve(s"tmp$i")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(chunk.toSeq, 1), docs.schema)
-        .write.parquet(tmp.toString)
-      val part = {
-        val st = java.nio.file.Files.list(tmp)
-        try st.filter(_.toString.endsWith(".parquet")).findFirst.get
-        finally st.close()
-      }
-      val dst = inDir.resolve(f"chunk$i%03d.parquet")
-      java.nio.file.Files.move(part, dst)
-      dst.toFile.setLastModified(60000L * (i + 1))
-    }
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-    val q = datapipe.TextAnalysis.vocabGrowthStream(
-      stream, s"$root/store", s"$root/ckpt")
-    try q.processAllAvailable() finally q.stop()
-    val streamed = datapipe.TextAnalysis
-      .vocabGrowthReport(spark, s"$root/store")
-      .as[(String, Long, Long, Long)].collect().toSet
-    // batch truth: t37's quartile-4 row IS the whole-source total
-    val batch = datapipe.TextAnalysis.queries("t37_vocab_growth")(spark, sf)
-      .filter($"quartile" === 4)
-      .select($"source", $"cum_tokens", $"cum_types")
-      .as[(String, Long, Long)].collect().map(r => r._1 -> r).toMap
-    assert(streamed.nonEmpty && streamed.size === batch.size)
-    streamed.foreach { case (src, tok, typ, _) =>
-      assert((tok, typ) === ((batch(src)._2, batch(src)._3)), s"src=$src")
-    }
-    // per-batch attribution: every word's first_batch equals the index
-    // of the arrival chunk that first contained it (raw-text recompute)
-    val firstOf = scala.collection.mutable.Map.empty[(String, String), Long]
-    rows.grouped(third).zipWithIndex.foreach { case (chunk, i) =>
-      chunk.foreach { r =>
-        val src = r.getString(r.fieldIndex("source"))
-        r.getString(r.fieldIndex("text")).split(" ").filter(_.nonEmpty)
-          .foreach { w =>
-            if (!firstOf.contains((src, w))) firstOf((src, w)) = i.toLong
-          }
-      }
-    }
-    def ph(x: String): Long = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      java.lang.Long.parseLong(
-        md.digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(15), 16)
-    }
-    val expect = firstOf.map { case ((src, w), b) => (src, ph(w)) -> b }
-    val store = spark.read.parquet(s"$root/store/words")
-      .select($"source", $"wh", $"first_batch")
-      .as[(String, Long, Long)].collect()
-    assert(store.length === expect.size, "store row count != distinct types")
-    store.foreach { case (src, wh, fb) =>
-      assert(expect((src, wh)) === fb, s"src=$src wh=$wh")
-    }
-    // the split must actually exercise later-batch novelty somewhere,
-    // or the anti-join is untested
-    assert(store.exists(_._3 > 0), "all types arrived in batch 0 — vacuous")
-  }
-
-  test("streamed decontamination gate: decisions equal d12 batch, clean appends idempotent") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_d12s").toString
-    // EXACTLY the corpus d12's batch oracle checks: bench + train with
-    // the planted leaks, streamed in two micro-batches, the second
-    // replaying part of the first (a retry/overlap) — the gate must
-    // decide identically and never append a clean doc twice
-    val (bench, train) = datapipe.Dedup.contaminationCorpus(spark, sf)
-    val rows = train.as[(Long, String)].collect().sortBy(_._1)
-    val (b1, b2) = rows.splitAt(rows.length / 2)
-    val input = MemoryStream[(Long, String)]
-    val q = datapipe.Dedup.decontaminationStream(
-      input.toDS().toDF("doc_id", "text"), bench,
-      s"$dir/clean", s"$dir/dec", s"$dir/ckpt")
-    try {
-      input.addData(b1.toSeq: _*); q.processAllAvailable()
-      input.addData((b2 ++ b1.take(20)).toSeq: _*); q.processAllAvailable()
-    } finally q.stop()
-    val dec = spark.read.parquet(s"$dir/dec")
-    // batch ids 0 and 1; the replayed 20 docs decided twice, identically
-    assert(dec.select($"batch_id").distinct().as[Long].collect().toSet
-      === Set(0L, 1L))
-    assert(dec.groupBy($"doc_id")
-      .agg(countDistinct(struct($"n_hits", $"status")).as("variants"))
-      .filter($"variants" > 1).isEmpty)
-    // streamed contaminated decisions == the d12 batch registry output
-    val streamed = dec.filter($"status" === "contaminated")
-      .select($"doc_id", $"n_hits").distinct()
-      .as[(Long, Long)].collect().toSet
-    val batch = datapipe.Dedup.queries("d12_decontaminate")(spark, sf)
-      .as[(Long, Long)].collect().toSet
-    assert(streamed === batch)
-    assert(streamed.nonEmpty)
-    // clean sink: every train doc not contaminated, each EXACTLY once
-    // despite the replayed rows
-    val clean = spark.read.parquet(s"$dir/clean")
-    assert(clean.count() === clean.select($"doc_id").distinct().count())
-    val cleanIds = clean.select($"doc_id").as[Long].collect().toSet
-    val trainIds = rows.map(_._1).toSet
-    assert(cleanIds === trainIds -- batch.map(_._1))
-    // decisions cover every streamed doc exactly (clean + contaminated)
-    assert(dec.select($"doc_id").distinct().count() === trainIds.size)
-  }
-
-  test("streamed fuzzy decontamination: decisions equal d40 batch, clean appends idempotent") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_d40s").toString
-    // EXACTLY d40's corpus (bench + paraphrase plants), streamed in two
-    // micro-batches with the second replaying part of the first — the
-    // fuzzy gate must decide identically and never append a clean doc
-    // twice
-    val (bench, train) = datapipe.Dedup.fuzzyContaminationCorpus(spark, sf)
-    val rows = train.as[(Long, String)].collect().sortBy(_._1)
-    val (b1, b2) = rows.splitAt(rows.length / 2)
-    val input = MemoryStream[(Long, String)]
-    val q = datapipe.Dedup.fuzzyDecontaminationStream(
-      input.toDS().toDF("doc_id", "text"), bench,
-      s"$dir/clean", s"$dir/dec", s"$dir/ckpt")
-    try {
-      input.addData(b1.toSeq: _*); q.processAllAvailable()
-      input.addData((b2 ++ b1.take(20)).toSeq: _*); q.processAllAvailable()
-    } finally q.stop()
-    val dec = spark.read.parquet(s"$dir/dec")
-    assert(dec.select($"batch_id").distinct().as[Long].collect().toSet
-      === Set(0L, 1L))
-    // the replayed docs decided twice, identically (same best match,
-    // same jaccard bits — the gate is a pure function of the doc)
-    assert(dec.groupBy($"doc_id")
-      .agg(countDistinct(struct($"bench_id", $"jaccard", $"status"))
-        .as("variants"))
-      .filter($"variants" > 1).isEmpty)
-    // streamed contaminated decisions == the d40 batch registry output
-    val streamed = dec.filter($"status" === "contaminated")
-      .select($"doc_id", $"bench_id", $"jaccard").distinct()
-      .as[(Long, Long, Double)].collect().toSet
-    val batch = datapipe.Dedup.queries("d40_fuzzy_decontaminate")(spark, sf)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(streamed === batch)
-    assert(streamed.nonEmpty)
-    // every plant was quarantined before reaching the clean sink
-    val plantIds = rows.map(_._1).filter(_ >= datapipe.Dedup.D40_OFFSET)
-    assert(plantIds.nonEmpty)
-    val cleanIds = spark.read.parquet(s"$dir/clean")
-      .select($"doc_id").as[Long].collect().toSet
-    plantIds.foreach(id =>
-      assert(!cleanIds(id), s"plant $id reached the clean sink"))
-    // clean sink: every unflagged train doc exactly once despite replay
-    val clean = spark.read.parquet(s"$dir/clean")
-    assert(clean.count() === clean.select($"doc_id").distinct().count())
-    assert(cleanIds === rows.map(_._1).toSet -- batch.map(_._1))
-    assert(dec.select($"doc_id").distinct().count() === rows.length)
-  }
-
-  test("streamed index ingestion: frozen-centroid adds match the store, replays insert zero") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_vidxs").toString
-    val emb = Tables.embeddings(spark, sf).select($"vec_id", $"embedding")
-    val seed = emb.filter($"vec_id" % 3 =!= 0)
-    datapipe.VectorIndex.buildIndex(seed, dir)
-    val nSeed = spark.read.parquet(s"$dir/assign").count()
-    val rows = emb.filter($"vec_id" % 3 === 0)
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val (b1, b2) = rows.splitAt(rows.length / 2)
-    val input = MemoryStream[(Long, Array[Float])]
-    val q = datapipe.VectorIndex.indexStream(
-      input.toDS().toDF("vec_id", "embedding"),
-      dir, s"$dir/dec", s"$dir/ckpt")
-    try {
-      input.addData(b1.toSeq: _*); q.processAllAvailable()
-      // second trigger replays 10 of the first batch's vectors —
-      // an overlap/retry; the anti-join must insert zero for them
-      input.addData((b2 ++ b1.take(10)).toSeq: _*); q.processAllAvailable()
-    } finally q.stop()
-    val assign = spark.read.parquet(s"$dir/assign")
-    assert(assign.count() === nSeed + rows.length,
-      "replayed vectors were re-inserted")
-    assert(assign.select($"vec_id").distinct().count() === nSeed + rows.length)
-    // every per-batch decision equals what the store recorded — the
-    // stream IS addBatch, batch by batch
-    val dec = spark.read.parquet(s"$dir/dec")
-    assert(dec.select($"batch_id").distinct().as[Long].collect().toSet
-      === Set(0L, 1L))
-    val diverged = dec.select($"vec_id", $"cell")
-      .join(assign.select($"vec_id", $"cell".as("stored")), Seq("vec_id"))
-      .filter($"cell" =!= $"stored")
-    assert(diverged.isEmpty)
-    assert(dec.select($"vec_id").distinct().count() === rows.length)
-  }
-
-  test("streamed perceptual asset dedup (persistent hash store) equals m05's batch report") {
-    val root = java.nio.file.Files.createTempDirectory("graft_m05s")
-    val inDir = root.resolve("in")
-    java.nio.file.Files.createDirectories(inDir)
-    // m05's corpus (base + %11 byte-identical copies at +10000), staged
-    // as three ascending-id files so arrival order = id order (first-
-    // seen-wins = min-id canonical) and the planted copies land in a
-    // LATER batch than their sources — cross-batch store state is the
-    // thing under test
-    val base = datapipe.Multimodal.imageAssets(spark, sf)
-    val corpus = base.union(
-      base.filter(_._1 % 11 == 0).map { case (id, p) => (id + 10000L, p) })
-      .toDF("asset_id", "payload")
-    val rows = corpus.orderBy($"asset_id").collect()
-    val third = (rows.length + 2) / 3
-    rows.grouped(third).zipWithIndex.foreach { case (chunk, i) =>
-      val tmp = root.resolve(s"tmp$i")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(chunk.toSeq, 1), corpus.schema)
-        .write.parquet(tmp.toString)
-      val part = {
-        val st = java.nio.file.Files.list(tmp)
-        try st.filter(_.toString.endsWith(".parquet")).findFirst.get
-        finally st.close()
-      }
-      val dst = inDir.resolve(f"chunk$i%03d.parquet")
-      java.nio.file.Files.move(part, dst)
-      dst.toFile.setLastModified(60000L * (i + 1))
-    }
-    val stream = spark.readStream.schema(corpus.schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-    val q = datapipe.Multimodal.assetDedupStream(stream,
-      s"$root/store", s"$root/decisions", s"$root/ckpt")
-    try q.processAllAvailable() finally q.stop()
-    val decisions = spark.read.parquet(s"$root/decisions")
-    assert(decisions.select($"batch_id").distinct().count() === 3)
-    // at least one duplicate must be decided in a LATER batch than its
-    // canonical's unique decision — otherwise the store never carried
-    // state across a trigger and the test is vacuous
-    val later = decisions.as("d").filter($"d.status" === "duplicate")
-      .join(decisions.as("u").filter($"u.status" === "unique"),
-        $"d.canonical_id" === $"u.asset_id" && $"d.batch_id" > $"u.batch_id")
-    assert(later.count() > 0, "no cross-batch duplicate — state not exercised")
-    val streamed = decisions
-      .groupBy($"canonical_id", $"width", $"height", $"ahash")
-      .agg(count(lit(1)).as("n_copies"))
-      .filter($"n_copies" > 1)
-      .select($"canonical_id", $"width", $"height", $"ahash", $"n_copies")
-      .as[(Long, Int, Int, Long, Long)].collect().toSet
-    val batch = datapipe.Multimodal.queries("m05_image_phash_dedup")(spark, sf)
-      .as[(Long, Int, Int, Long, Long)].collect().toSet
-    assert(streamed === batch)
-  }
-
-  test("streamed line dedup: report equals batch t40; df revises across batches; replay inserts zero") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_t40s").toString
-    val docs = Tables.documents(spark, sf)
-      .select($"doc_id", $"source", $"text")
-      .as[(Long, String, String)].collect().sortBy(_._1)
-    val third = (docs.length + 2) / 3
-    val chunks = docs.grouped(third).toSeq
-    val input = MemoryStream[(Long, String, String)]
-    val q = datapipe.TextAnalysis.lineDedupStream(
-      input.toDS().toDF("doc_id", "source", "text"),
-      s"$root/store", s"$root/ckpt")
-    try {
-      chunks.take(2).foreach { c =>
-        input.addData(c.toSeq); q.processAllAvailable() }
-      // simulate a failed trigger that PARTIALLY committed one doc of
-      // chunk 2 — only its first inventory row landed. The retry must
-      // complete the doc: a doc_id-granular anti-join would skip it
-      // and permanently lose its remaining lines (round-14 advice);
-      // the (doc_id, li) key admits exactly the missing rows.
-      val c2df = spark.createDataFrame(
-          spark.sparkContext.parallelize(chunks(2).toSeq, 1))
-        .toDF("doc_id", "source", "text")
-      val inv2 = datapipe.TextAnalysis.lineInventory(c2df)
-      val victim = inv2.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-        .filter($"n" >= 2).orderBy($"doc_id").as[(Long, Long)].head()._1
-      inv2.filter($"doc_id" === victim && $"li" === 0)
-        .write.mode("append").parquet(s"$root/store/lines")
-      input.addData(chunks(2).toSeq)
-      q.processAllAvailable()
-      val victimRows = spark.read.parquet(s"$root/store/lines")
-        .filter($"doc_id" === victim)
-      assert(victimRows.count() ===
-        inv2.filter($"doc_id" === victim).count(),
-        "partial commit not completed — doc-granular skip lost lines")
-      assert(victimRows.groupBy($"li").count()
-        .filter($"count" > 1).count() === 0,
-        "retry double-inserted the partially committed row")
-      // replay a whole chunk (retried trigger / duplicate feed): the
-      // anti-join must admit zero new rows
-      val before = spark.read.parquet(s"$root/store/lines").count()
-      input.addData(chunks(1).toSeq)
-      q.processAllAvailable()
-      val after = spark.read.parquet(s"$root/store/lines").count()
-      assert(before === after, "replay inserted rows")
-    } finally q.stop()
-    val streamed = datapipe.TextAnalysis.lineDedupReport(spark, s"$root/store")
-      .as[(Long, Long, Long, Long, Long)].collect().toSeq
-    val batch = datapipe.TextAnalysis.queries("t40_line_dedup")(spark, sf)
-      .as[(Long, Long, Long, Long, Long)].collect().toSeq
-    assert(streamed === batch)
-    // the split must actually REVISE a verdict: some line present in
-    // chunk 0 sits under DF_MIN on chunk-0 docs alone but is
-    // boilerplate on the full corpus — the case frozen-at-admission
-    // verdicts would get wrong
-    val c0 = spark.createDataFrame(
-      spark.sparkContext.parallelize(chunks(0).toSeq, 1))
-      .toDF("doc_id", "source", "text")
-    val inv0 = datapipe.TextAnalysis.lineInventory(c0)
-    val df0 = datapipe.TextAnalysis.lineDf(inv0)
-      .as[(Long, Long)].collect().toMap
-    val invAll = datapipe.TextAnalysis.lineInventory(
-      Tables.documents(spark, sf).select($"doc_id", $"source", $"text"))
-    val dfAll = datapipe.TextAnalysis.lineDf(invAll)
-      .as[(Long, Long)].collect().toMap
-    assert(df0.exists { case (fp, d0) =>
-      d0 < datapipe.TextAnalysis.LineDfMin &&
-      dfAll(fp) >= datapipe.TextAnalysis.LineDfMin },
-      "no cross-batch df crossing — the revision path is untested")
-  }
-
-  test("streamed heavy hitters: every state version replays the MG chain; the guarantee holds") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_t07s").toString
-    val K = 8
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-      .select($"doc_id", $"lang", $"text")
-      .as[(Long, String, String)].collect().sortBy(_._1)
-    val third = (docs.length + 2) / 3
-    val chunks = docs.grouped(third).toSeq
-    val input = MemoryStream[(Long, String, String)]
-    val q = datapipe.TextAnalysis.heavyHittersStream(
-      input.toDS().toDF("doc_id", "lang", "text"),
-      s"$root/store", s"$root/ckpt", K)
-    // plain-Scala replay of the deterministic TWO-LEVEL MG chain:
-    // level 1 reduces each (lang, crc32-bucket) slice of the batch to
-    // its own MG(K) summary; level 2 merges the slice summaries into
-    // the persisted state (mirrors mgLocalReduce + mgMerge exactly)
-    var state = Map.empty[String, Map[String, Long]]
-    var subFired = false
-    def mgReduce(rows: Seq[(String, Long)]): Seq[(String, Long)] = {
-      val summed = rows.groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq
-      val ranked = summed.sortBy { case (w, c) => (-c, w) }
-      val sub = ranked.drop(K).headOption.map(_._2).getOrElse(0L)
-      if (sub > 0) subFired = true
-      ranked.take(K).map { case (w, c) => w -> (c - sub) }
-        .filter(_._2 > 0)
-    }
-    def bucket(w: String): Int = {
-      val c = new java.util.zip.CRC32
-      c.update(w.getBytes("UTF-8"))
-      (c.getValue % datapipe.TextAnalysis.MgBuckets).toInt
-    }
-    def mgStep(chunk: Seq[(Long, String, String)]): Unit = {
-      val delta = chunk.filter(_._2 != null)
-        .flatMap { case (_, l, t) => t.split(" ", -1).map(w => (l, w)) }
-        .groupBy(identity).view.mapValues(_.length.toLong).toMap
-      val langs = state.keySet ++ delta.keys.map(_._1)
-      state = langs.map { l =>
-        val exact = delta.collect { case ((`l`, w), c) => w -> c }.toSeq
-        val level1 = exact.groupBy { case (w, _) => bucket(w) }
-          .toSeq.flatMap { case (_, slice) => mgReduce(slice) }
-        l -> mgReduce(state.getOrElse(l, Map.empty).toSeq ++ level1).toMap
-      }.toMap
-    }
-    try {
-      chunks.zipWithIndex.foreach { case (c, i) =>
-        input.addData(c.toSeq); q.processAllAvailable()
-        mgStep(c.toSeq)
-        val stored = spark.read.parquet(s"$root/store/sketch/batch=$i")
-          .as[(String, String, Long)].collect()
-          .groupBy(_._1).view
-          .mapValues(_.map(r => r._2 -> r._3).toMap).toMap
-        assert(stored === state, s"state version $i diverged from the MG chain")
-      }
-    } finally q.stop()
-    // the maintenance was genuinely lossy (k < vocab) — otherwise the
-    // sketch is an exact count table and the test proves nothing
-    assert(subFired, "no merge ever subtracted — k exceeds the vocabulary")
-    // the mergeable-summaries guarantee against the raw corpus: every
-    // item with true count > N/(k+1) is in the final sketch
-    val exact = docs.filter(_._2 != null)
-      .flatMap { case (_, l, t) => t.split(" ", -1).map(w => (l, w)) }
-      .groupBy(identity).view.mapValues(_.length.toLong).toMap
-    val totals = exact.groupBy(_._1._1).view
-      .mapValues(_.values.sum).toMap
-    val report = datapipe.TextAnalysis
-      .heavyHittersReport(spark, s"$root/store")
-      .as[(String, Long, Seq[String], Long)].collect()
-      .map(r => r._1 -> r).toMap
-    totals.foreach { case (l, n) =>
-      assert(report(l)._2 === n, s"$l token total")
-      val heavy = exact.collect {
-        case ((`l`, w), c) if c * (K + 1) > n => w }
-      val items = report(l)._3.toSet
-      heavy.foreach(w => assert(items(w), s"guaranteed item '$w' missing in $l"))
-      assert(report(l)._4 <= K, s"$l sketch exceeded k")
-    }
-    // at least one language has more vocabulary than k, so survival is
-    // a real selection
-    assert(exact.keys.groupBy(_._1).exists(_._2.size > K))
-  }
-
-  test("streamed index lifecycle: add/delete/compact replay equals the batch report; revival and permanence hold") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_idxlc").toString
-    val (sPath, bPath) = (s"$root/stream_idx", s"$root/batch_idx")
-    val seed = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select($"vec_id", $"embedding").filter($"vec_id" % 3 =!= 0)
-    datapipe.VectorIndex.buildIndex(seed, sPath)
-    datapipe.VectorIndex.buildIndex(seed, bPath)
-    val arrivals = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select($"vec_id", $"embedding").filter($"vec_id" % 3 === 0)
-      .as[(Long, Seq[Float])].collect().sortBy(_._1)
-    val third = (arrivals.length + 2) / 3
-    val Seq(c1, c2, c3) = arrivals.grouped(third).toSeq
-    // deletes in batch 2: half of batch-1's ids plus one SEED id (the
-    // takedown of an original corpus member); a subset revives in
-    // batch 3 AFTER the compact, the rest must stay dead through it
-    val delStream = c1.map(_._1).filter(_ % 2 == 0)
-    val seedDel = seed.orderBy($"vec_id").limit(1)
-      .as[(Long, Seq[Float])].head()._1
-    val dels = delStream :+ seedDel
-    val reviveIds = delStream.take(2).toSet
-    val revive = c1.filter(r => reviveIds(r._1))
-    assert(revive.nonEmpty, "fixture too small to exercise revival")
-    def adds(rows: Seq[(Long, Seq[Float])]) =
-      rows.map { case (id, e) => ("add", id, e) }
-    val input = MemoryStream[(String, Long, Seq[Float])]
-    val q = datapipe.VectorIndex.lifecycleStream(
-      input.toDS().toDF("op", "vec_id", "embedding"),
-      sPath, s"$root/ckpt")
-    try {
-      input.addData(adds(c1.toSeq)); q.processAllAvailable()
-      input.addData(adds(c2.toSeq) ++
-        dels.map(id => ("delete", id, Seq.empty[Float])))
-      q.processAllAvailable()
-      // duplicate feed (retried trigger): both frames admit zero rows
-      val na0 = spark.read.parquet(s"$sPath/assign").count()
-      val nt0 = spark.read.parquet(s"$sPath/tombstones").count()
-      input.addData(adds(c2.toSeq) ++
-        dels.map(id => ("delete", id, Seq.empty[Float])))
-      q.processAllAvailable()
-      assert(spark.read.parquet(s"$sPath/assign").count() === na0,
-        "replay inserted assign rows")
-      assert(spark.read.parquet(s"$sPath/tombstones").count() === nt0,
-        "replay inserted tombstones")
-      // compact between triggers — the operator action that folds
-      // tombstones and re-opens the door for revival
-      datapipe.VectorIndex.compact(spark, sPath)
-      assert(!graft.weather.WeatherIngest.sinkExists(spark,
-        s"$sPath/tombstones"), "compact left the tombstone frame")
-      input.addData(adds(c3.toSeq ++ revive.toSeq))
-      q.processAllAvailable()
-    } finally q.stop()
-    // the batch reference: same operation sequence through the batch API
-    def df(rows: Seq[(Long, Seq[Float])]) =
-      spark.createDataset(rows).toDF("vec_id", "embedding")
-    datapipe.VectorIndex.addBatch(df(c1.toSeq), bPath)
-    datapipe.VectorIndex.addBatch(df(c2.toSeq), bPath)
-    datapipe.VectorIndex.removeBatch(
-      spark.createDataset(dels.toSeq).toDF("vec_id"), bPath)
-    datapipe.VectorIndex.compact(spark, bPath)
-    datapipe.VectorIndex.addBatch(df(c3.toSeq ++ revive.toSeq), bPath)
-    val streamed = datapipe.VectorIndex.liveAssign(spark, sPath)
-      .as[(Long, Long)].collect().toSet
-    val batch = datapipe.VectorIndex.liveAssign(spark, bPath)
-      .as[(Long, Long)].collect().toSet
-    assert(streamed === batch)
-    val liveIds = streamed.map(_._1)
-    reviveIds.foreach(id =>
-      assert(liveIds(id), s"revived id $id missing from live view"))
-    (dels.toSet -- reviveIds).foreach(id =>
-      assert(!liveIds(id), s"deleted id $id leaked back into live view"))
-  }
-
-  test("maintenance replay: re-running the last batchId rewrites its own version; true stale generation fails loud") {
-    // the at-least-once contract (round-15 advice): a crash after the
-    // state parquet write but before the checkpoint commit re-runs the
-    // SAME batchId — the trigger must deterministically overwrite its
-    // own version from N-1 + the same delta, never fail, never fork.
-    // Only a version STRICTLY ABOVE batchId (fresh checkpoint over an
-    // old store) is a stale generation and must fail loud.
-    val root = java.nio.file.Files.createTempDirectory("graft_replay").toString
-    val orders = Tables.orders(spark, sf)
-    val rows = orders.orderBy($"o_orderkey").collect()
-    val half = (rows.length + 1) / 2
-    def chunkDf(chunk: Seq[org.apache.spark.sql.Row]) =
-      spark.createDataFrame(spark.sparkContext.parallelize(chunk, 1), orders.schema)
-    def canonState(path: String) =
-      spark.read.parquet(path)
-        .select($"o_custkey", $"n_orders",
-          $"sum_price_dec".cast("double"), $"min_price", $"max_price", $"last_order")
-        .as[(Long, Long, Double, Double, Double, java.sql.Timestamp)]
-        .collect().toSeq.sortBy(_._1)
-    val store = s"$root/rollup"
-    operators.Extras.rollupMaintainBatch(chunkDf(rows.take(half).toSeq), 0, store)
-    operators.Extras.rollupMaintainBatch(chunkDf(rows.drop(half).toSeq), 1, store)
-    val committed = canonState(s"$store/state/batch=1")
-    // replay of the latest batch: finds batch=1 already present, must
-    // rewrite it from batch=0 + the same delta — identical state
-    operators.Extras.rollupMaintainBatch(chunkDf(rows.drop(half).toSeq), 1, store)
-    assert(canonState(s"$store/state/batch=1") === committed,
-      "replayed batch diverged from its first run")
-    // and the replayed chain still equals the one-shot batch rollup
-    val batchQ = operators.Extras.queries("q86_incremental_rollup")(spark, sf)
-      .select($"o_custkey", $"n_orders", $"sum_price", $"min_price",
-        $"max_price", $"last_order")
-      .as[(Long, Long, Double, Double, Double, java.sql.Timestamp)]
-      .collect().toSeq.sortBy(_._1)
-    val reported = operators.Extras.rollupReport(spark, store)
-      .as[(Long, Long, Double, Double, Double, java.sql.Timestamp)]
-      .collect().toSeq.sortBy(_._1)
-    assert(reported === batchQ)
-    // fresh checkpoint over the old store: batchId resets to 0 while
-    // version 1 lingers — a forked chain, must fail loud
-    val ex = intercept[IllegalArgumentException] {
-      operators.Extras.rollupMaintainBatch(chunkDf(rows.take(half).toSeq), 0, store)
-    }
-    assert(ex.getMessage.contains("stale generation"))
-
-    // same contract on the heavy-hitter maintenance
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-      .select($"doc_id", $"lang", $"text")
-      .as[(Long, String, String)].collect().sortBy(_._1)
-    val dHalf = (docs.length + 1) / 2
-    def docDf(chunk: Seq[(Long, String, String)]) =
-      spark.createDataset(chunk).toDF("doc_id", "lang", "text")
-    val hhStore = s"$root/hh"
-    val K = 8
-    datapipe.TextAnalysis.heavyHittersMaintainBatch(docDf(docs.take(dHalf).toSeq), 0, hhStore, K)
-    datapipe.TextAnalysis.heavyHittersMaintainBatch(docDf(docs.drop(dHalf).toSeq), 1, hhStore, K)
-    def canonHh(v: Long) = (
-      spark.read.parquet(s"$hhStore/sketch/batch=$v")
-        .as[(String, String, Long)].collect().toSet,
-      spark.read.parquet(s"$hhStore/nwords/batch=$v")
-        .as[(String, Long)].collect().toSet)
-    val hhCommitted = canonHh(1)
-    datapipe.TextAnalysis.heavyHittersMaintainBatch(docDf(docs.drop(dHalf).toSeq), 1, hhStore, K)
-    assert(canonHh(1) === hhCommitted,
-      "replayed heavy-hitter batch diverged from its first run")
-    val hhEx = intercept[IllegalArgumentException] {
-      datapipe.TextAnalysis.heavyHittersMaintainBatch(docDf(docs.take(dHalf).toSeq), 0, hhStore, K)
-    }
-    assert(hhEx.getMessage.contains("stale generation"))
-    // report before any commit: clear refusal, not an opaque empty.max
-    val emptyEx = intercept[IllegalArgumentException] {
-      datapipe.TextAnalysis.heavyHittersReport(spark, s"$root/nothing_here")
-    }
-    assert(emptyEx.getMessage.contains("no committed heavy-hitter state"))
   }
 
   test("change feed source: streamed tail equals batch read, one version per batch, O(delta) planning, resume") {
