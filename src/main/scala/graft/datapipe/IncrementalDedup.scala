@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * 100 TB notes: the band join shuffles only (band_key, doc_id) control
   * rows — hsets stay out of the exploded join and are fetched by doc_id
   * for the candidate set only. On a real lake the store sits clustered by
-  * band prefix (Maintenance.compact(clusterBy)), so the scan side of the
+  * band prefix (SnapshotLog.compactVersion(clusterBy)), so the scan side of the
   * candidate join prunes row groups by the batch's band keys; the
   * decision output is linear in |batch|.
   */

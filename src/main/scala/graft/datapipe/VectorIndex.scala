@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * overlapping batch inserts zero rows. At 100 TB the assign frame is
   * the only thing that grows, it carries 16 B/vector, and a posting-list
   * consumer reads it partitioned/clustered by cell
-  * (Maintenance.compact's clusterBy) so cell probes prune row groups.
+  * (SnapshotLog.compactVersion's clusterBy) so cell probes prune row groups.
   *
   * Centroid training uses Similarity.lloydCentroids — s05's
   * exact-decimal convention — from the deterministic vec_id % 8

@@ -119,9 +119,8 @@ object Extras {
         .orderBy($"key")
     },
 
-    // SNAPSHOT (time-travel) reads over the ParquetBatchSink +
-    // SnapshotLog manifest layer — the lakehouse read primitive the
-    // sink's two-phase commit was missing: three appends build
+    // SNAPSHOT (time-travel) reads over the SnapshotLog manifest
+    // layer — the lakehouse read primitive: three appends build
     // versions 1..3 (orders sliced o_orderkey % 3 = 0 / 1 / 2,
     // cumulative), version 4 is a snapshot COMPACTION of v3 (fewer
     // files, same rows — replaced originals stay on disk, which is
@@ -1107,14 +1106,14 @@ object Extras {
     (tl, to)
   }
 
-  /** q102's versioned store: three ParquetBatchSink appends (the
+  /** q102's versioned store: three snapshot appends (the
     * o_orderkey % 3 slices of orders, so each version's row set is
     * stateable in SQL) then one snapshot compaction — built ONCE per
     * fixture generation under the warehouse, fingerprint marker
     * written LAST (a crashed build rebuilds), so the timed query is
     * just four manifest-scoped reads. */
   private[graft] def timeTravelStore(s: SparkSession, d: String): String =
-    // SnapshotLog + the sink drive java.nio directly — local path form
+    // SnapshotLog drives java.nio directly — local path form
     memoizedArtifact(s, "graft_tt", d, Seq("orders.parquet"),
         localPath = true) { dir =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
@@ -1623,7 +1622,7 @@ object Extras {
 
   /** The marker is written LAST (after a complete layout write), so a
     * crashed write leaves no marker and the next caller rewrites — the
-    * two-phase-commit discipline of ParquetBatchSink in miniature. */
+    * commit-last discipline of SnapshotLog's manifest claim. */
   private[graft] def writeMarker(s: SparkSession, dir: String, fp: String): Unit = {
     val p = markerPath(dir)
     val fs = p.getFileSystem(s.sessionState.newHadoopConf())
@@ -2144,7 +2143,7 @@ object Extras {
 
     // q102: each version's cumulative slice stated straight off orders
     // (v1 = keys ≡ 0 mod 3, v2 adds ≡ 1, v3 adds ≡ 2, v4 = the
-    // compacted twin of v3) — the hash match pins that the sink
+    // compacted twin of v3) — the hash match pins that the snapshot
     // appends, the manifest layer, and the compaction rewrite all
     // preserve exactly these row sets.
     "q102_time_travel" ->

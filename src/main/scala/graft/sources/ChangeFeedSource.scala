@@ -45,8 +45,7 @@ import scala.jdk.CollectionConverters._
   * UNIONED across the tailed range — O(range) log text, zero footer
   * opens, and correct on schema-evolved stores where the old
   * first-file-of-head inference was file-order-dependent (round-18
-  * review #1); stores written before the header fall back to a footer
-  * union of the range's contributed files. Per-file readers decode
+  * review #1). Per-file readers decode
   * parquet straight off the footer schema with column projection
   * pushed into the parquet read schema; a column a file predates reads
   * as NULL (the mergeSchema convention). Spark's file-source machinery
@@ -122,12 +121,6 @@ object ChangeFeed {
     s.read.format("graft.sources.ChangeFeedSource")
       .option("path", dir).option("fromTimestamp", tsMillis).load()
 
-  /** Streaming tail starting strictly after the wall-clock instant. */
-  def readStreamSince(s: SparkSession, dir: String,
-                      tsMillis: Long): DataFrame =
-    s.readStream.format("graft.sources.ChangeFeedSource")
-      .option("path", dir).option("fromTimestamp", tsMillis).load()
-
   /** The exclusive starting version: an explicit `fromVersion` wins;
     * else `fromTimestamp` (epoch millis) resolves to the largest
     * version committed at or before it — versions committed strictly
@@ -176,45 +169,6 @@ object ChangeFeed {
     else addedDataFiles(dir, v).map((_, false))
   }
 
-  private[graft] def footerSchema(path: String,
-                                  conf: org.apache.hadoop.conf.Configuration)
-      : org.apache.parquet.schema.MessageType = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path), conf))
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
-  }
-
-  /** Spark type of a parquet primitive field — the supported feed
-    * column surface; anything else (nested groups, timestamps,
-    * decimals) fails loud at schema time, not mid-read. */
-  private[graft] def sparkTypeOf(f: org.apache.parquet.schema.Type)
-      : DataType = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    require(f.isPrimitive,
-      s"change feed supports primitive columns only; '${f.getName}' is nested")
-    val p = f.asPrimitiveType()
-    val ann = p.getLogicalTypeAnnotation
-    p.getPrimitiveTypeName match {
-      case INT64 if ann == null ||
-        ann.isInstanceOf[LogicalTypeAnnotation.IntLogicalTypeAnnotation] =>
-        LongType
-      case INT32 if ann == null ||
-        ann.isInstanceOf[LogicalTypeAnnotation.IntLogicalTypeAnnotation] =>
-        IntegerType
-      case DOUBLE  => DoubleType
-      case FLOAT   => FloatType
-      case BOOLEAN => BooleanType
-      case BINARY if
-        ann.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
-        StringType
-      case other => throw new IllegalArgumentException(
-        s"change feed: unsupported column '${f.getName}' ($other, $ann)")
-    }
-  }
-
   /** First-seen-order field union, keyed by PHYSICAL name (column
     * mapping: a rename changes only the logical name, so the same
     * physical column must union to ONE field — surfaced under its
@@ -237,40 +191,22 @@ object ChangeFeed {
 
   /** Feed schema over the TAILED RANGE (fromVersion, latest]: the
     * union of each range version's table schema from its manifest's
-    * `#schema=` header (O(range) log text), falling back per version
-    * to a footer union of the files it contributes (legacy stores),
-    * plus the `_change_type` / `_change_version` tags. Union — not
+    * `#schema=` header (O(range) log text), plus the `_change_type` /
+    * `_change_version` / `_change_timestamp` tags. Union — not
     * head-version — because a pre-evolution batch must still NULL-fill
     * the evolved column and a post-evolution batch must carry it,
-    * independent of file order (round-18 review #1). */
-  private[graft] def feedSchema(dir: String, fromVersion: Int): StructType =
-    feedSchemaAt(dir, fromVersion)._1
-
-  /** [[feedSchema]] plus the END VERSION the union covered — captured
-    * so a batch scan plans exactly this range (round-19 advice #3). */
+    * independent of file order (round-18 review #1). Returned with
+    * the END VERSION the union covered — captured so a batch scan
+    * plans exactly this range (round-19 advice #3). */
   private[graft] def feedSchemaAt(dir: String, fromVersion: Int)
       : (StructType, Int) = {
     require(dir != null, "change feed requires a 'path' option")
-    val conf = driverHadoopConf()
     val to = SnapshotLog.latestVersion(dir)
-    def fromFooters(files: Seq[String]): Seq[StructType] = files.map { f =>
-      val mt = footerSchema(s"$dir/$f", conf)
-      StructType(mt.getFields.asScala.toSeq.map(g =>
-        StructField(g.getName, sparkTypeOf(g), nullable = true)))
-    }
-    val perVersion = ((fromVersion + 1) to to).flatMap { v =>
-      SnapshotLog.tableSchema(dir, v).map(Seq(_)).getOrElse(
-        fromFooters(feedEntries(dir, v).map(_._1)))
-    }
     // an empty tailed range (stream started at head) still needs a
-    // schema: the head version's, by header or legacy head-file footer
-    val schemas =
-      if (perVersion.nonEmpty) perVersion
-      else SnapshotLog.tableSchema(dir, to).map(Seq(_)).getOrElse {
-        val files = SnapshotLog.dataEntries(SnapshotLog.manifest(dir, to))
-        require(files.nonEmpty, s"store at $dir has no data files")
-        fromFooters(files.take(1))
-      }
+    // schema: the head version's
+    val range = (fromVersion + 1) to to
+    val schemas = (if (range.isEmpty) Seq(to) else range)
+      .map(SnapshotLog.tableSchema(dir, _))
     // ALL THREE tag names shadow same-named user columns uniformly
     // (review: _change_timestamp was missing here, so a user column of
     // that name duplicated the field and the reader overwrote it)
@@ -488,7 +424,12 @@ class ChangeFeedReader(path: String, version: Int, isChange: Boolean,
   // per-reader copy: Configuration is mutable and the factory's base
   // is shared across an executor's readers
   private val conf = new org.apache.hadoop.conf.Configuration(baseConf)
-  private val fileSchema = ChangeFeed.footerSchema(path, conf)
+  private val fileSchema = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), conf))
+    try r.getFooter.getFileMetaData.getSchema finally r.close()
+  }
   // `_change_type` is a REAL column of a change file; for a plain
   // appended data file it's synthesized as 'insert'
   private def phys(n: String): String = physMap.getOrElse(n, n)

@@ -2,9 +2,9 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Snapshot (time-travel) reads over a [[ParquetBatchSink]] directory —
-  * the lakehouse read primitive the sink's two-phase commit was missing:
-  * "read the table as of version N", surviving compaction.
+/** The snapshot (time-travel) store: a parquet directory plus a
+  * manifest log, so the table reads "as of version N", surviving
+  * compaction.
   *
   * Design (the Delta/Iceberg metadata layer in miniature, file-list
   * manifests instead of JSON actions):
@@ -18,13 +18,12 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *    checkpoints the log itself would grow O(versions × files), the
   *    scale bottleneck of a naive file-list log (Delta's checkpoint /
   *    Iceberg's manifest-list idea, in miniature);
-  *  - an APPEND commit's delta is `+` lines for the files the sink's
-  *    job commit added;
+  *  - an APPEND commit's delta is `+` lines for the files the append
+  *    staged in;
   *  - a COMPACTION commit rewrites the live set into fewer files and
   *    commits a full manifest of the compacted files ONLY — the
   *    replaced originals stay on disk untouched, which is precisely
-  *    what keeps versions 1..N readable after the rewrite (contrast
-  *    `Maintenance.compact`, which swaps in place and keeps no history);
+  *    what keeps versions 1..N readable after the rewrite;
   *  - the version commit is a tmp write + atomic hard-link CLAIM of the
   *    bare `vNNNNN.manifest` name (create-if-absent — the putIfAbsent
   *    protocol Delta requires of its log store), and always LAST: of
@@ -55,8 +54,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * O(edits) between; no data is ever copied at commit time; a snapshot
   * read plans a plain multi-file parquet scan (pushdown/pruning
   * intact). Local-FS atomic link/rename stands in for the object-store
-  * putIfAbsent a cluster deployment routes through its committer, as
-  * with ParquetBatchSink itself.
+  * putIfAbsent a cluster deployment routes through its committer.
   */
 object SnapshotLog {
   import scala.jdk.CollectionConverters._
@@ -67,12 +65,11 @@ object SnapshotLog {
 
   private def logDir(dir: String) = java.nio.file.Paths.get(dir, "_graft_log")
 
-  /** Manifest name: `v00001.manifest`. The legacy `-b000000` batchId
-    * suffix is still READ (stores written before the header format),
-    * but never written: the batchId now rides the `#batch=` body
-    * header so racing commits of one version collide on the bare
-    * name's atomic claim regardless of their batch tags. */
-  private val ManifestName = """v(\d+)(?:-b(\d+))?\.manifest""".r
+  /** Manifest name: `v00001.manifest`. A streamed append's batchId
+    * rides the `#batch=` body header, never the name, so racing
+    * commits of one version collide on the name's atomic claim
+    * regardless of their batch tags. */
+  private val ManifestName = """v(\d+)\.manifest""".r
 
   private def manifestNames(dir: String): Seq[String] = {
     val ld = logDir(dir)
@@ -87,24 +84,13 @@ object SnapshotLog {
     }
   }
 
-  private def manifestPath(dir: String, v: Int): java.nio.file.Path = {
-    // fast path: every post-header-format commit claims the bare name —
-    // one stat instead of a directory listing (the listing fallback
-    // covers legacy batch-suffixed names only)
-    val bare = logDir(dir).resolve(f"v$v%05d.manifest")
-    if (java.nio.file.Files.exists(bare)) bare
-    else {
-      val name = manifestNames(dir).collectFirst {
-        case n @ ManifestName(vv, _) if vv.toInt == v => n
-      }.getOrElse(f"v$v%05d.manifest")
-      logDir(dir).resolve(name)
-    }
-  }
+  private def manifestPath(dir: String, v: Int): java.nio.file.Path =
+    logDir(dir).resolve(f"v$v%05d.manifest")
 
   /** All committed versions, ascending (empty if none). */
   def versions(dir: String): Seq[Int] =
     manifestNames(dir)
-      .collect { case ManifestName(v, _) => v.toInt }.sorted
+      .collect { case ManifestName(v) => v.toInt }.sorted
 
   /** A TYPED per-file column statistic — the stats-in-log currency for
     * the column types a plain long range can't carry (round-19 verdict
@@ -155,10 +141,9 @@ object SnapshotLog {
 
   /** One parsed manifest: batch tag, delta flag, body lines, stats
     * ranges (long + typed), this version's CDC change files, and the
-    * table schema as of this version (JSON; every post-r19 commit
-    * carries it, so schema resolution is O(1) log text — the Delta
-    * schema-in-log idea; legacy manifests resolve None and readers
-    * fall back to parquet footers). */
+    * table schema as of this version (JSON; every commit carries it,
+    * so schema resolution is O(1) log text — the Delta schema-in-log
+    * idea). */
   private[graft] final case class Manifest(
       batch: Option[Long], isDelta: Boolean, body: Seq[String],
       ranges: Map[(String, String), (Long, Long)],
@@ -202,13 +187,8 @@ object SnapshotLog {
     val raw = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
       .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
     val (headers, body) = raw.partition(_.startsWith("#"))
-    val headerBatch = headers.collectFirst {
+    val batch = headers.collectFirst {
       case h if h.startsWith("#batch=") => h.stripPrefix("#batch=").toLong
-    }
-    // legacy stores carried the batchId in the file NAME
-    val nameBatch = p.getFileName.toString match {
-      case ManifestName(_, b) if b != null => Some(b.toLong)
-      case _                               => None
     }
     val ranges = headers.collect {
       case h if h.startsWith("#range:") =>
@@ -242,7 +222,7 @@ object SnapshotLog {
     val schemaJson = headers.collectFirst {
       case h if h.startsWith("#schema=") => h.stripPrefix("#schema=")
     }
-    val m = Manifest(headerBatch.orElse(nameBatch),
+    val m = Manifest(batch,
       headers.contains("#delta"), body, ranges, tranges, cdc, schemaJson)
     manifestCache.synchronized {
       manifestCache.put((dir, v), (mtime, size, m))
@@ -329,13 +309,12 @@ object SnapshotLog {
   /** Per-(file, column) [min, max] ranges as of version `v`, resolved
     * like [[manifest]] (a checkpoint carries the full live map, a
     * delta adds its new files' entries) — the LOG-EMBEDDED statistics
-    * every stats-planned operation here consults BEFORE falling back
-    * to a parquet footer: at 100 TB the difference between the driver
-    * planning a delete/merge/skipping read from O(files) log TEXT and
-    * opening O(files) remote footers per operation (the Delta
-    * stats-in-log idea). Entries for files no longer live are simply
-    * never consulted. Legacy stores (no `#range:` headers) resolve to
-    * an empty map and every probe falls back to the footer. */
+    * every stats-planned operation here plans from: at 100 TB the
+    * difference between the driver planning a delete/merge/skipping
+    * read from O(files) log TEXT and opening O(files) remote footers
+    * per operation (the Delta stats-in-log idea). Entries for files no
+    * longer live are simply never consulted; a file with no entry has
+    * no stat and is kept (read, rewritten) conservatively. */
   private[graft] def fileRanges(dir: String, v: Int)
       : Map[(String, String), (Long, Long)] = {
     val m = readManifestFile(dir, v)
@@ -354,18 +333,20 @@ object SnapshotLog {
   }
 
   /** The table schema as of version `v`, straight off the manifest's
-    * `#schema=` header (O(1) log text — no footer opens); None on
-    * stores written before the header existed (readers fall back to
-    * parquet footers). */
+    * `#schema=` header (O(1) log text — no footer opens). Every commit
+    * writes the header, so a manifest without one fails loud. */
   private[graft] def tableSchema(dir: String, v: Int)
-      : Option[org.apache.spark.sql.types.StructType] =
-    readManifestFile(dir, v).schemaJson.map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      : org.apache.spark.sql.types.StructType = {
+    val j = readManifestFile(dir, v).schemaJson.getOrElse(
+      throw new IllegalStateException(
+        s"store at $dir carries no #schema= header at version $v"))
+    org.apache.spark.sql.types.DataType.fromJson(j)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+  }
 
   /** This version's CDC change files (`#cdc:` headers) — the explicit
     * row-level change record a DML commit writes alongside its
-    * manifest; empty for appends/compactions/legacy versions. */
+    * manifest; empty for appends and compactions. */
   private[graft] def cdcFiles(dir: String, v: Int): Seq[String] =
     readManifestFile(dir, v).cdc
 
@@ -577,22 +558,14 @@ object SnapshotLog {
     org.apache.spark.sql.types.StructType(
       sc.fields.map(f => withPhysical(f, physicalName(f))))
 
-  /** The head schema, REQUIRED (rename/drop need schema-in-log). */
-  private def headSchemaRequired(dir: String, v: Int)
-      : org.apache.spark.sql.types.StructType =
-    tableSchema(dir, v).getOrElse(throw new IllegalStateException(
-      s"store at $dir carries no #schema= header at version $v — " +
-        "column mapping needs schema-in-log (commit one append first)"))
-
   /** Translate a caller's LOGICAL column name to the PHYSICAL one the
     * files (and the stats headers) use — identity on unmapped stores
     * and unknown names. */
-  private def toPhysical(dir: String, v: Int, column: String): String =
-    tableSchema(dir, v) match {
-      case Some(sc) if isMapped(sc) =>
-        sc.fields.find(_.name == column).map(physicalName).getOrElse(column)
-      case _ => column
-    }
+  private def toPhysical(dir: String, v: Int, column: String): String = {
+    val sc = tableSchema(dir, v)
+    if (!isMapped(sc)) column
+    else sc.fields.find(_.name == column).map(physicalName).getOrElse(column)
+  }
 
   /** RENAME a column — a METADATA-ONLY commit (empty delta, same file
     * list): the field keeps its physical name, so every retained
@@ -603,7 +576,7 @@ object SnapshotLog {
   def renameColumn(s: SparkSession, dir: String,
                    oldName: String, newName: String): Int = {
     val cur = latestVersion(dir)
-    val sc = upgradeToMapped(headSchemaRequired(dir, cur))
+    val sc = upgradeToMapped(tableSchema(dir, cur))
     require(sc.fieldNames.contains(oldName),
       s"no column '$oldName' at $dir (have ${sc.fieldNames.mkString(",")})")
     require(!sc.fieldNames.contains(newName),
@@ -624,7 +597,7 @@ object SnapshotLog {
     * can never silently resurrect. Returns the new version. */
   def dropColumn(s: SparkSession, dir: String, name: String): Int = {
     val cur = latestVersion(dir)
-    val sc = upgradeToMapped(headSchemaRequired(dir, cur))
+    val sc = upgradeToMapped(tableSchema(dir, cur))
     require(sc.fieldNames.contains(name),
       s"no column '$name' at $dir (have ${sc.fieldNames.mkString(",")})")
     require(sc.fields.length > 1,
@@ -641,21 +614,22 @@ object SnapshotLog {
     * columns — each logical field reads its physical column (NULL
     * where every kept file predates it), dropped physicals project
     * away. Identity on unmapped stores. */
-  private def projectLogical(dir: String, v: Int, df: DataFrame): DataFrame =
-    tableSchema(dir, v) match {
-      case Some(sc) if isMapped(sc) =>
-        val have = df.columns.toSet
-        df.select(sc.fields.toSeq.map { f =>
-          val p = physicalName(f)
-          if (have.contains(p)) org.apache.spark.sql.functions.col(p).as(f.name)
-          else org.apache.spark.sql.functions.lit(null)
-            .cast(f.dataType).as(f.name)
-        }: _*)
-      case _ => df
+  private def projectLogical(dir: String, v: Int, df: DataFrame): DataFrame = {
+    val sc = tableSchema(dir, v)
+    if (!isMapped(sc)) df
+    else {
+      val have = df.columns.toSet
+      df.select(sc.fields.toSeq.map { f =>
+        val p = physicalName(f)
+        if (have.contains(p)) org.apache.spark.sql.functions.col(p).as(f.name)
+        else org.apache.spark.sql.functions.lit(null)
+          .cast(f.dataType).as(f.name)
+      }: _*)
     }
+  }
 
   private def headIsMapped(dir: String, v: Int): Boolean =
-    tableSchema(dir, v).exists(isMapped)
+    isMapped(tableSchema(dir, v))
 
   /** Mapped-mode WRITE translation: each logical df column writes
     * under its schema physical; a NEW column gets a fresh
@@ -736,13 +710,13 @@ object SnapshotLog {
   def appendVersion(df: DataFrame, dir: String): Int = {
     val s = df.sparkSession
     // first append into a fresh table: the staged move needs the
-    // directory (the sink used to create it implicitly — review #6)
+    // directory (review #6)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     val tmp = dir + "_snapappend_tmp" + rewriteToken()
     val nominal = versions(dir).lastOption.getOrElse(0) + 1
     // mapped stores write PHYSICAL column names (identity otherwise)
     val (toWrite, newPhys) = translateForWrite(df,
-      versions(dir).lastOption.flatMap(tableSchema(dir, _)), nominal)
+      versions(dir).lastOption.map(tableSchema(dir, _)), nominal)
     toWrite.write.mode(SaveMode.Overwrite).parquet(tmp)
     val added = moveRewrite(s, dir, tmp, "append", nominal,
       keepOneIfAllEmpty = true)
@@ -766,7 +740,7 @@ object SnapshotLog {
         commitManifest(dir, v, prev ++ added,
           delta = Some(added.map("+" + _)), stats = stats,
           schema = Some(evolvedForAppend(
-            prevV.flatMap(tableSchema(dir, _)), df.schema, newPhys, dir)))
+            prevV.map(tableSchema(dir, _)), df.schema, newPhys, dir)))
         verifyClaimOrRollback(dir, v, added)
         return v
       } catch {
@@ -839,7 +813,7 @@ object SnapshotLog {
       val tmp = dir + "_snapappend_tmp" + rewriteToken()
       val nominal = versions(dir).lastOption.getOrElse(0) + 1
       val (toWrite, newPhys) = translateForWrite(batch,
-        versions(dir).lastOption.flatMap(tableSchema(dir, _)), nominal)
+        versions(dir).lastOption.map(tableSchema(dir, _)), nominal)
       toWrite.write.mode(SaveMode.Overwrite).parquet(tmp)
       val added = moveRewrite(s, dir, tmp, "append", nominal,
         keepOneIfAllEmpty = true)
@@ -850,7 +824,7 @@ object SnapshotLog {
         delta = Some(added.map("+" + _)),
         stats = collectStats(s, dir, added),
         schema = Some(evolvedForAppend(
-          prevV.flatMap(tableSchema(dir, _)), batch.schema, newPhys, dir)))
+          prevV.map(tableSchema(dir, _)), batch.schema, newPhys, dir)))
       // persist the streamed-batch high-water mark AT COMMIT TIME (not
       // just at vacuum): with it, vacuum never has to walk every
       // manifest for the max tag — O(1) instead of O(versions) log
@@ -911,8 +885,8 @@ object SnapshotLog {
 
   /** Read the table exactly as of version `v`: a plain multi-file
     * parquet scan over the manifest's files. `mergeSchema` is the
-    * SCHEMA-EVOLUTION read: appends may carry new columns (the sink
-    * writes whatever schema each batch has), and the merged read
+    * SCHEMA-EVOLUTION read: appends may carry new columns (each
+    * append writes whatever schema its batch has), and the merged read
     * unions the file schemas with NULLs where an older file predates a
     * column — the Delta/Iceberg column-add semantics over plain
     * parquet. Off by default: schema merging reads every file's
@@ -928,67 +902,67 @@ object SnapshotLog {
         readLines(s, dir, manifest(dir, v), mergeSchema = true))
     else readLines(s, dir, manifest(dir, v), mergeSchema)
 
-  /** The data-file rewrite HALF of a compaction: read the latest
-    * snapshot, rewrite it into ~targetBytes files under distinct
-    * per-attempt names, move them into the table directory, and
-    * return their names WITHOUT committing. Factored out so the
-    * crash-mid-compaction spec can stop exactly here — data files in
-    * place, no manifest — and prove every committed version still
-    * reads identically. The read MERGES file schemas: on a
-    * schema-evolved store the compacted output materializes the
-    * evolved column (NULLs where a file predated it) instead of
-    * nondeterministically dropping it (round-17 advice #1). */
-  private[graft] def writeCompacted(s: SparkSession, dir: String,
-                                    targetBytes: Long,
-                                    clusterBy: Option[String] = None,
-                                    atVersion: Option[Int] = None)
-      : Seq[String] = {
-    val cur = atVersion.getOrElse(latestVersion(dir))
-    val files = dataEntries(manifest(dir, cur))
-    val totalBytes = files.map(f =>
+  /** The data-file rewrite HALF of a compaction: read version `cur`,
+    * lay it out with `layout(frame, nFiles)` for ~targetBytes files,
+    * write it under distinct per-attempt names, move them into the
+    * table directory, and return their names WITHOUT committing.
+    * Factored out so the crash-mid-compaction spec can stop exactly
+    * here — data files in place, no manifest — and prove every
+    * committed version still reads identically. The read MERGES file
+    * schemas: on a schema-evolved store the compacted output
+    * materializes the evolved column (NULLs where a file predated it)
+    * instead of nondeterministically dropping it (round-17 advice #1). */
+  private[graft] def writeCompacted(s: SparkSession, dir: String, cur: Int,
+                                    targetBytes: Long)(
+      layout: (DataFrame, Int) => DataFrame): Seq[String] = {
+    val totalBytes = dataEntries(manifest(dir, cur)).map(f =>
       new java.io.File(dir, f).length()).sum
     val nFiles = math.max(1,
       math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val tmp = dir + s"_snapcompact_tmp" + rewriteToken()
-    val src = readVersion(s, dir, cur, mergeSchema = true)
-    val shaped = clusterBy match {
-      // range-partition THEN sort within (Maintenance.compact's
-      // clustering): each compacted file owns a contiguous key range,
-      // so [[readVersionWhere]]'s footer-stats pruning keeps biting
-      // AFTER the rewrite — an unclustered repartition would smear
-      // every key range across every file and silently turn the
-      // skipping read into a full scan
-      case Some(k) => src
-        .repartitionByRange(nFiles, org.apache.spark.sql.functions.col(k))
-        .sortWithinPartitions(org.apache.spark.sql.functions.col(k))
-      case None => src.repartition(nFiles)
-    }
-    shaped.write.mode(SaveMode.Overwrite).parquet(tmp)
+    val tmp = dir + "_snapcompact_tmp" + rewriteToken()
+    layout(readVersion(s, dir, cur, mergeSchema = true), nFiles)
+      .write.mode(SaveMode.Overwrite).parquet(tmp)
     moveRewrite(s, dir, tmp, "compact", cur + 1, keepOneIfAllEmpty = true)
   }
 
-  /** Compact the latest snapshot into ~targetBytes files as a NEW
-    * version (replaced originals stay on disk so every prior version
-    * keeps reading); `clusterBy` keeps the rewrite range-clustered so
-    * data skipping survives it. Commits a full checkpoint manifest
-    * (its content is the whole live set anyway). Returns the new
-    * version number. */
-  def compactVersion(s: SparkSession, dir: String,
-                     targetBytes: Long = 128L * 1024 * 1024,
-                     clusterBy: Option[String] = None): Int = {
+  /** Rewrite the latest snapshot through `layout` ([[writeCompacted]])
+    * and commit the result as a NEW version: a full checkpoint manifest
+    * (its content is the whole live set anyway), replaced originals
+    * stay on disk so every prior version keeps reading. Commits with
+    * RE-PLAN on a lost claim: an interleaved APPEND always commutes
+    * with a compaction (no predicate scope — the compacted set plus the
+    * appended file equals either serial order); an interleaved rewrite
+    * or MoR delete fails loud for a caller re-plan (its effect is not
+    * in the compacted output). Returns the new version number. */
+  private def compactWith(s: SparkSession, dir: String, targetBytes: Long)(
+      layout: (DataFrame, Int) => DataFrame): Int = {
     val cur = latestVersion(dir)
     val lines = manifest(dir, cur)
-    val moved = writeCompacted(s, dir, targetBytes, clusterBy, Some(cur))
-    // commit with RE-PLAN on a lost claim: an interleaved APPEND
-    // always commutes with a compaction (no predicate scope — the
-    // compacted set plus the appended file equals either serial
-    // order); an interleaved rewrite or MoR delete fails loud for a
-    // caller re-plan (its effect is not in the compacted output).
+    val moved = writeCompacted(s, dir, cur, targetBytes)(layout)
     commitRewriteGeneral(s, dir, cur, lines,
       dataEntries(lines).toSet, moved, appendScope = None,
       stats = collectStats(s, dir, moved), cdc = Seq.empty,
       dropBaseDvs = true, forceFull = true)
   }
+
+  /** Compact the latest snapshot into ~targetBytes files as a NEW
+    * version ([[compactWith]]); `clusterBy` range-partitions THEN sorts
+    * within, so each compacted file owns a contiguous key range and
+    * [[readVersionWhere]]'s stats pruning keeps biting AFTER the
+    * rewrite — an unclustered repartition would smear every key range
+    * across every file and silently turn the skipping read into a full
+    * scan. Returns the new version number. */
+  def compactVersion(s: SparkSession, dir: String,
+                     targetBytes: Long = 128L * 1024 * 1024,
+                     clusterBy: Option[String] = None): Int =
+    compactWith(s, dir, targetBytes) { (src, nFiles) =>
+      clusterBy match {
+        case Some(k) => src
+          .repartitionByRange(nFiles, org.apache.spark.sql.functions.col(k))
+          .sortWithinPartitions(org.apache.spark.sql.functions.col(k))
+        case None => src.repartition(nFiles)
+      }
+    }
 
   /** Z-ORDER key of two LONG columns: each value min-max-normalizes to
     * 16 bits and the bits INTERLEAVE (a15 b15 a14 b14 ...), so sorting
@@ -1022,29 +996,21 @@ object SnapshotLog {
     }.reduce(_ bitwiseOR _)
   }
 
-  /** Compact the latest snapshot Z-ORDERED on two LONG columns: the
-    * rewrite range-partitions + sorts by [[zorderKey]], so data
-    * skipping bites on BOTH columns after the rewrite. Same commit
-    * shape as [[compactVersion]] (full checkpoint manifest, replaced
-    * originals stay on disk for time travel). Returns the new
-    * version. */
+  /** Compact the latest snapshot Z-ORDERED on two LONG columns
+    * ([[compactWith]]): the rewrite range-partitions + sorts by
+    * [[zorderKey]], so data skipping bites on BOTH columns after the
+    * rewrite. Returns the new version. */
   def compactVersionZOrder(s: SparkSession, dir: String,
                            colA: String, colB: String,
-                           targetBytes: Long = 128L * 1024 * 1024): Int = {
-    import org.apache.spark.sql.functions._
-    val cur = latestVersion(dir)
-    val files = dataEntries(manifest(dir, cur))
-    val totalBytes = files.map(f => new java.io.File(dir, f).length()).sum
-    val nFiles = math.max(1,
-      math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val src = readVersion(s, dir, cur, mergeSchema = true)
-    // column bounds: one tiny agg — O(1) driver-side control values.
-    // An empty (or all-null) snapshot has no curve to order by: the
-    // rewrite degrades to a plain repartition so the compaction still
-    // commits (delete-everything then z-order must not fail).
-    val r = src.agg(min(col(colA)), max(col(colA)),
-                    min(col(colB)), max(col(colB))).head
-    val shaped =
+                           targetBytes: Long = 128L * 1024 * 1024): Int =
+    compactWith(s, dir, targetBytes) { (src, nFiles) =>
+      import org.apache.spark.sql.functions._
+      // column bounds: one tiny agg — O(1) driver-side control values.
+      // An empty (or all-null) snapshot has no curve to order by: the
+      // rewrite degrades to a plain repartition so the compaction still
+      // commits (delete-everything then z-order must not fail).
+      val r = src.agg(min(col(colA)), max(col(colA)),
+                      min(col(colB)), max(col(colB))).head
       if (r.isNullAt(0) || r.isNullAt(2)) src.repartition(nFiles)
       else {
         val z = zorderKey(col(colA), r.getLong(0), r.getLong(1),
@@ -1054,23 +1020,7 @@ object SnapshotLog {
           .sortWithinPartitions(col("_graft_z"))
           .drop("_graft_z")
       }
-    val tmp = dir + "_snapzorder_tmp" + rewriteToken()
-    shaped.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val moved = moveRewrite(s, dir, tmp, "zorder", cur + 1,
-      keepOneIfAllEmpty = true)
-    // same re-plan contract as compactVersion: interleaved appends
-    // commute, anything else fails loud
-    val lines = manifest(dir, cur)
-    commitRewriteGeneral(s, dir, cur, lines,
-      dataEntries(lines).toSet, moved, appendScope = None,
-      stats = collectStats(s, dir, moved), cdc = Seq.empty,
-      dropBaseDvs = true, forceFull = true)
-  }
-
-  /** Footer-open counter — spec observability for the stats-in-log
-    * claim: a probe that finds its range in the manifest headers never
-    * opens a footer, and the spec pins the count at zero. */
-  private[graft] val footerProbes = new java.util.concurrent.atomic.AtomicLong
+    }
 
   /** Render a typed-range map as sorted `#tstat:` headers. Layout:
     * `#tstat:<tag>:<b64(file)>:<b64(col)>:<b64(min)>:<b64(max)>` —
@@ -1214,51 +1164,6 @@ object SnapshotLog {
             lo.substring(0, math.min(lo.length, StrStatLen)), up)))
     }
 
-  /** Per-file footer stat of ONE column (any supported type) — the
-    * FALLBACK path for legacy stores whose manifests predate the stat
-    * headers; O(1) metadata per file. */
-  private def footerStat(s: SparkSession, dir: String, file: String,
-                         column: String)
-      : Option[Either[(Long, Long), TypedRange]] = {
-    footerProbes.incrementAndGet()
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(s"$dir/$file"),
-      s.sessionState.newHadoopConf())
-    val r = ParquetFileReader.open(in)
-    try {
-      val blocks = r.getFooter.getBlocks.asScala
-      val raws = blocks.flatMap(b =>
-        b.getColumns.asScala
-          .find(_.getPath.toDotString == column)
-          .flatMap(rawStatOf))
-      // a block without a stat for the column leaves the file's bound
-      // unknowable — no stat (the all-blocks rule collectStats applies)
-      if (raws.size != blocks.size) None
-      else foldRaws(raws.toSeq).flatMap(encodeRaw)
-    } finally r.close()
-  }
-
-  /** The log-first LONG range probe every stats-planned operation
-    * routes through: manifest-header ranges (log text, zero file IO)
-    * first, parquet footer as the legacy fallback. */
-  private def rangeOf(s: SparkSession, dir: String,
-                      known: Map[(String, String), (Long, Long)],
-                      file: String, column: String): Option[(Long, Long)] =
-    known.get((file, column)).orElse(
-      footerStat(s, dir, file, column).collect { case Left(r) => r })
-
-  /** Log-first TYPED probe (timestamp/double/string), footer fallback;
-    * a stat of the wrong tag resolves None (conservative). */
-  private def typedRangeOf(s: SparkSession, dir: String,
-                           known: Map[(String, String), TypedRange],
-                           file: String, column: String,
-                           tag: String): Option[TypedRange] =
-    known.get((file, column)).orElse(
-        footerStat(s, dir, file, column).collect { case Right(r) => r })
-      .filter(_.tag == tag)
-
   /** ALL stat-bearing column [min, max] ranges of freshly WRITTEN
     * files — long AND typed, one footer open per file, paid ONCE at
     * commit time (locally, next to the write), so every later skipping
@@ -1295,14 +1200,14 @@ object SnapshotLog {
   }
 
   /** MANIFEST-LEVEL DATA SKIPPING — the Delta/Iceberg file-pruning
-    * read: plan the snapshot scan from per-file footer [min, max] of
-    * `column` and hand Spark ONLY the files that can intersect
-    * [lo, hi]; files whose stats are unavailable are read
+    * read: plan the snapshot scan from the log's per-file [min, max]
+    * of `column` ([[fileRanges]]) and hand Spark ONLY the files that
+    * can intersect [lo, hi]; files without a stat are read
     * (conservative), and the predicate is still applied to the scanned
     * rows, so pruning is semantically invisible — row-group pruning
     * inside the surviving files then proceeds as usual. At 100 TB this
     * is the difference between the driver planning against O(files)
-    * footer metadata and a scan that opens every file of the snapshot:
+    * log text and a scan that opens every file of the snapshot:
     * a range-clustered table answers a narrow range from the one file
     * group that owns it. Returns (frame, filesRead, filesTotal) so a
     * caller/spec can pin that the pruning actually bit. */
@@ -1312,7 +1217,7 @@ object SnapshotLog {
     val phys = toPhysical(dir, v, column)
     val known = fileRanges(dir, v)
     prunedVersionRead(s, dir, v,
-      f => rangeOf(s, dir, known, f, phys)
+      f => known.get((f, phys))
         .forall { case (mn, mx) => mx >= lo && mn <= hi },
       org.apache.spark.sql.functions.col(phys).between(lo, hi))
   }
@@ -1328,7 +1233,7 @@ object SnapshotLog {
     val phys = toPhysical(dir, v, column)
     val known = fileTypedRanges(dir, v)
     prunedVersionRead(s, dir, v,
-      f => typedRangeOf(s, dir, known, f, phys, "ts")
+      f => known.get((f, phys)).filter(_.tag == "ts")
         .forall(_.canIntersectTs(loMicros, hiMicros)),
       col(phys).between(timestamp_micros(lit(loMicros)),
         timestamp_micros(lit(hiMicros))))
@@ -1344,7 +1249,7 @@ object SnapshotLog {
     val phys = toPhysical(dir, v, column)
     val known = fileTypedRanges(dir, v)
     prunedVersionRead(s, dir, v,
-      f => typedRangeOf(s, dir, known, f, phys, "str")
+      f => known.get((f, phys)).filter(_.tag == "str")
         .forall(_.canIntersectStr(lo, hi)),
       col(phys).between(lit(lo), lit(hi)))
   }
@@ -1358,7 +1263,7 @@ object SnapshotLog {
     val phys = toPhysical(dir, v, column)
     val known = fileTypedRanges(dir, v)
     prunedVersionRead(s, dir, v,
-      f => typedRangeOf(s, dir, known, f, phys, "dbl")
+      f => known.get((f, phys)).filter(_.tag == "dbl")
         .forall(_.canIntersectDbl(lo, hi)),
       col(phys).between(lit(lo), lit(hi)))
   }
@@ -1375,7 +1280,7 @@ object SnapshotLog {
     val phys = toPhysical(dir, v, column)
     val known = fileTypedRanges(dir, v)
     prunedVersionRead(s, dir, v,
-      f => typedRangeOf(s, dir, known, f, phys, "dec")
+      f => known.get((f, phys)).filter(_.tag == "dec")
         .forall(_.canIntersectDec(lo, hi)),
       col(phys).between(lit(lo), lit(hi)))
   }
@@ -1516,7 +1421,7 @@ object SnapshotLog {
   /** MERGE INTO at file granularity — q100's three-clause arbitration
     * PERSISTED through the snapshot log (the write half the batch
     * merge operator computes but never stores): a file is touched iff
-    * its footer [min, max] can contain a SOURCE key (per-key range
+    * its logged [min, max] can contain a SOURCE key (per-key range
     * probe, not the interval hull — inserts far outside the table
     * touch nothing); touched files rewrite through a full-outer
     * arbitration with the source (matched-update / matched-delete /
@@ -1593,7 +1498,7 @@ object SnapshotLog {
     }
 
   /** The shared file-granularity machinery of the merge family: the
-    * per-key footer probe picks the touched files, `arbitrate` (over a
+    * per-key range probe picks the touched files, `arbitrate` (over a
     * slice whose columns are `key`, `bal`, then any extra columns the
     * files carry) produces the rewritten rows, untouched files share
     * verbatim, and the commit is an O(edit) delta manifest. */
@@ -1615,8 +1520,8 @@ object SnapshotLog {
     val src = source.localCheckpoint()
     val known = fileRanges(dir, cur)
     val ranged = dataEntries(lines)
-      .map(f => f -> rangeOf(s, dir, known, f, keyCol))
-    // per-key probe of the O(files) footer ranges: an O(files) control
+      .map(f => f -> known.get((f, keyCol)))
+    // per-key probe of the O(files) logged ranges: an O(files) control
     // read, the same planning metadata every stats-driven op here uses
     val rangesDf = ranged.collect { case (f, Some((mn, mx))) =>
       (f, mn, mx) }.toDF("f", "mn", "mx")
@@ -1804,7 +1709,7 @@ object SnapshotLog {
           appendScope.foreach { case (column, lo, hi) =>
             val known = fileRanges(dir, head)
             newFiles.foreach { f =>
-              val disjoint = rangeOf(s, dir, known, f, column)
+              val disjoint = known.get((f, column))
                 .exists { case (mn, mx) => mx < lo || mn > hi }
               require(disjoint,
                 s"concurrent append at $dir may contain rows matching " +
@@ -1819,7 +1724,7 @@ object SnapshotLog {
   }
 
   /** COPY-ON-WRITE DELETE of a key range — the lakehouse row-delete
-    * over immutable parquet: footer stats split the live file set into
+    * over immutable parquet: the log's file stats split the live set into
     * TOUCHED (range intersects — rewritten without the deleted rows)
     * and UNTOUCHED (shared verbatim into the new manifest, zero IO);
     * the commit is the usual atomic manifest claim, so a crash
@@ -1836,7 +1741,7 @@ object SnapshotLog {
     val lines = manifest(dir, cur)
     val known = fileRanges(dir, cur)
     val (touched, untouched) = dataEntries(lines).partition { f =>
-      rangeOf(s, dir, known, f, column) match {
+      known.get((f, column)) match {
         case Some((mn, mx)) => mx >= lo && mn <= hi
         case None           => true // no stats: conservatively rewrite
       }
@@ -1906,7 +1811,7 @@ object SnapshotLog {
     val lines = manifest(dir, cur)
     val known = fileRanges(dir, cur)
     val touched = dataEntries(lines).filter { f =>
-      rangeOf(s, dir, known, f, column) match {
+      known.get((f, column)) match {
         case Some((mn, mx)) => mx >= lo && mn <= hi
         case None           => true
       }
@@ -1984,7 +1889,7 @@ object SnapshotLog {
     // replaced since; the head's schema may have evolved past v's)
     commitManifest(dir, next, files,
       stats = FileStats(fileRanges(dir, v), fileTypedRanges(dir, v)),
-      schema = tableSchema(dir, v))
+      schema = Some(tableSchema(dir, v)))
     next
   }
 
@@ -2043,7 +1948,7 @@ object SnapshotLog {
       .getOrElse(Seq.empty)
     commitManifest(dir, next, restored,
       stats = FileStats(fileRanges(dir, v), fileTypedRanges(dir, v)),
-      schema = tableSchema(dir, v), cdc = cdcF)
+      schema = Some(tableSchema(dir, v)), cdc = cdcF)
     next
   }
 

@@ -134,6 +134,11 @@ object WeatherIngest {
   def run(spark: SparkSession, sinkPath: String, now: String,
           pastDays: Int = 1, forecastDays: Int = 1,
           locations: Int = 1): IngestResult = {
+    // the run's cached frames, unpersisted in `finally` on every path
+    // (the reference closes its connection in a `finally` too): a failed
+    // run must not leave blocks pinned in a long-lived session
+    var raw: DataFrame = null
+    var toInsert: DataFrame = null
     try {
       val bad = badArgument(pastDays, forecastDays, locations)
       if (bad.nonEmpty) return IngestResult(500, 0, 0, None, bad)
@@ -146,7 +151,7 @@ object WeatherIngest {
       // cache the extract: the count action below is the ONE source scan
       // per run (the reference fetches once, too) — the downstream
       // dedup/append pipeline reads the cached blocks
-      val raw = fetch(spark, now, pastDays, forecastDays, locations).cache()
+      raw = fetch(spark, now, pastDays, forecastDays, locations).cache()
       val nowTs = lit(now).cast("timestamp")
       val cursorTs = cursor.map(lit)
       // one aggregate yields the fetched count and how many rows pass
@@ -158,7 +163,6 @@ object WeatherIngest {
         // empty batch: no row is after the cursor and at or before `now`,
         // so nothing can be inserted whatever the sink holds (concurrent
         // writers included) — skip the anti-join side
-        raw.unpersist()
         return IngestResult(200, fetched, 0, cursor)
       }
       val encoded = WeatherPipeline.nanToNull(
@@ -175,7 +179,7 @@ object WeatherIngest {
         .minusDays(pastDays).toString.replace('T', ' ')
       val sink = spark.read.schema(sinkAll.schema).parquet(sinkPath)
         .filter(col("ts") >= lit(windowLo).cast("timestamp"))
-      val toInsert = WeatherPipeline.upsertNew(
+      toInsert = WeatherPipeline.upsertNew(
         encoded, sink, Seq("location_id", "ts")).cache()
       // one action counts the rows and yields the new cursor: every
       // inserted row is strictly after `cursor`, so their max is the
@@ -187,11 +191,12 @@ object WeatherIngest {
         // is cached (frozen), so a retried append rewrites identical rows
         // after the all-or-nothing job commit aborted
         withRetry()(toInsert.write.mode(SaveMode.Append).parquet(sinkPath))
-      toInsert.unpersist()
-      raw.unpersist()
       IngestResult(200, fetched, inserted, Option(stats.getTimestamp(1)).orElse(cursor))
     } catch {
       case e: Throwable => IngestResult(500, 0, 0, None, Some(e.getMessage))
+    } finally {
+      Option(toInsert).foreach(_.unpersist())
+      Option(raw).foreach(_.unpersist())
     }
   }
 }

@@ -16,7 +16,7 @@ class FormatsSpec extends SparkSpec {
     StructField("n_chars", LongType)))
 
   test("CSV round-trip with explicit schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val dir = tempDir("graft_csv").toString
     docs.write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read.schema(schema).option("header", "true").csv(dir)
     assert(back.orderBy($"doc_id").collect().toSeq ===
@@ -24,7 +24,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("JSON-lines round-trip with explicit schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_json").toString
+    val dir = tempDir("graft_json").toString
     docs.write.mode("overwrite").json(dir)
     val back = spark.read.schema(schema).json(dir)
     assert(back.orderBy($"doc_id").collect().toSeq ===
@@ -32,7 +32,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("ORC round-trip preserves types and pushes filters") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val dir = tempDir("graft_orc").toString
     docs.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir).filter($"n_chars" > 100)
     assert(back.orderBy($"doc_id").collect().toSeq ===
@@ -43,7 +43,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("text source reads raw lines; binaryFile exposes payload bytes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_text").toString
+    val dir = tempDir("graft_text").toString
     docs.select(concat_ws(",", $"doc_id", $"lang").as("value"))
       .write.mode("overwrite").text(dir)
     val lines = spark.read.text(dir)

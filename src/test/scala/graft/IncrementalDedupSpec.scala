@@ -12,8 +12,7 @@ class IncrementalDedupSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshStore(): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_inc_dedup").toString
+    val dir = tempDir("graft_inc_dedup").toString
     dir + "/store"
   }
 
@@ -136,7 +135,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // ingestStream against an identically-seeded fresh store
     val storeS = freshStore()
     IncrementalDedup.buildStore(docsDf(seed: _*), storeS)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_d08_stream")
+    val tmp = tempDir("graft_d08_stream")
     val input = MemoryStream[(Long, String)]
     val q = IncrementalDedup.ingestStream(
       input.toDF().toDF("doc_id", "text"),

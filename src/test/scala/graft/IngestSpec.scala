@@ -18,7 +18,7 @@ class IngestSpec extends SparkSpec {
       .load()
 
   private def emptySink(prefix: String, locs: Int): String = {
-    val sink = java.nio.file.Files.createTempDirectory(prefix).toString
+    val sink = tempDir(prefix).toString
     readGrid(locs).limit(0).write.mode("overwrite").parquet(sink)
     sink
   }
@@ -192,6 +192,20 @@ class IngestSpec extends SparkSpec {
       "2024-01-02 00:00:00")
     assert(r.statusCode === 500)
     assert(r.error.exists(_.contains("does not exist")))
+  }
+
+  test("pipeline: a failed run unpersists its cached extract") {
+    // a sink without the key columns: the run caches its extract, then
+    // fails resolving the anti-join on location_id
+    val sink = tempDir("graft_sink_bad").toString
+    Seq.empty[java.sql.Timestamp].toDF("ts")
+      .write.mode("overwrite").parquet(sink)
+    val pinned = spark.sparkContext.getPersistentRDDs.size
+    val r = WeatherIngest.run(spark, sink, "2024-01-02 00:00:00")
+    assert(r.statusCode === 500)
+    assert(r.error.exists(_.contains("location_id")), r.error)
+    assert(spark.sparkContext.getPersistentRDDs.size === pinned,
+      "a failed run left its cached frames pinned in the session")
   }
 
   test("pipeline: first run inserts history, re-run inserts zero (idempotent)") {

@@ -4586,7 +4586,7 @@ class OperatorSpec extends SparkSpec {
     // staleness: a regenerated embeddings.parquet (same bytes, new
     // mtime -> new source fingerprint) must REBUILD the artifact —
     // the marker flips to the new fingerprint, never serves stale
-    val tmp = java.nio.file.Files.createTempDirectory("graft_beam_stale")
+    val tmp = tempDir("graft_beam_stale")
     val src = java.nio.file.Paths.get(s"$sf/embeddings.parquet")
     val cp = tmp.resolve("embeddings.parquet")
     java.nio.file.Files.copy(src, cp)

@@ -16,21 +16,16 @@ class SessionsSpec extends SparkSpec {
   }
 
   test("ExplainAudit --final --out writes the post-AQE plan per query") {
-    val dir: Path = Files.createTempDirectory("explain-audit")
-    try {
-      ExplainAudit.dump(spark, Seq("q01_pricing_summary"), sf,
-        finalPlan = true, out = Some(dir.toString))
-      val plan = Files.readString(dir.resolve("q01_pricing_summary.txt"))
-      // formatted mode prints the root's flag on its details entry:
-      // "(22) AdaptiveSparkPlan / Output [..] / Arguments: isFinalPlan=true"
-      val root = """\(\d+\) AdaptiveSparkPlan\nOutput [^\n]*\nArguments: isFinalPlan=(\w+)""".r
-      assert(root.findAllMatchIn(plan).map(_.group(1)).toList === List("true"),
-        plan.take(2000))
-      assert(plan.contains("== Final Plan =="))
-    } finally {
-      Files.list(dir).forEach(f => Files.delete(f))
-      Files.delete(dir)
-    }
+    val dir: Path = tempDir("explain-audit")
+    ExplainAudit.dump(spark, Seq("q01_pricing_summary"), sf,
+      finalPlan = true, out = Some(dir.toString))
+    val plan = Files.readString(dir.resolve("q01_pricing_summary.txt"))
+    // formatted mode prints the root's flag on its details entry:
+    // "(22) AdaptiveSparkPlan / Output [..] / Arguments: isFinalPlan=true"
+    val root = """\(\d+\) AdaptiveSparkPlan\nOutput [^\n]*\nArguments: isFinalPlan=(\w+)""".r
+    assert(root.findAllMatchIn(plan).map(_.group(1)).toList === List("true"),
+      plan.take(2000))
+    assert(plan.contains("== Final Plan =="))
     // the shared session is still usable afterwards
     assert(spark.range(3).count() === 3)
   }

@@ -3,7 +3,7 @@ package graft
 import graft.sources.SnapshotLog
 import org.apache.spark.sql.functions._
 
-/** The snapshot/time-travel layer over ParquetBatchSink: version
+/** The snapshot/time-travel layer (SnapshotLog): version
   * isolation, compaction's history preservation, crash-mid-compaction
   * safety, and vacuum's retention contract.
   */
@@ -11,7 +11,7 @@ class SnapshotLogSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir() =
-    java.nio.file.Files.createTempDirectory("graft_snap").toString
+    tempDir("graft_snap").toString
 
   private def rows(dir: String, v: Int): Set[Long] =
     SnapshotLog.readVersion(spark, dir, v)
@@ -58,7 +58,8 @@ class SnapshotLogSpec extends SparkSpec {
     // the crash point: writeCompacted moves the rewritten files into
     // the table dir and stops BEFORE commitManifest — exactly what a
     // died driver leaves behind
-    val orphans = SnapshotLog.writeCompacted(spark, dir, 128L * 1024 * 1024)
+    val orphans = SnapshotLog.writeCompacted(spark, dir,
+      SnapshotLog.latestVersion(dir), 128L * 1024 * 1024)(_.repartition(_))
     assert(orphans.nonEmpty)
     assert(SnapshotLog.latestVersion(dir) === 2,
       "a crashed compaction must not advance the version")
@@ -101,7 +102,7 @@ class SnapshotLogSpec extends SparkSpec {
   }
 
   test("streamed appends are exactly-once: one version per micro-batch, replay no-ops, crash orphans stay invisible") {
-    val root = java.nio.file.Files.createTempDirectory("graft_snapstream")
+    val root = tempDir("graft_snapstream")
     val inDir = root.resolve("in")
     java.nio.file.Files.createDirectories(inDir)
     val dir = root.resolve("table").toString
@@ -133,10 +134,13 @@ class SnapshotLogSpec extends SparkSpec {
     assert(v === 3 && SnapshotLog.versions(dir) === Seq(1, 2, 3),
       "replayed batch appended a duplicate version")
     assert(rows(dir, 3) === (1L to 6L).toSet, "replay duplicated rows")
-    // pre-commit crash (sink files moved in, no manifest): the next
+    // pre-commit crash (data files moved in, no manifest): the next
     // batch's append must neither see nor resurrect the orphans
-    lastChunk.write.format("graft.sources.ParquetBatchSink")
-      .option("path", dir).mode("append").save()
+    lastChunk.coalesce(1).write.parquet(s"$root/orphan")
+    new java.io.File(s"$root/orphan").listFiles()
+      .filter(_.getName.endsWith(".parquet")).foreach(f =>
+        java.nio.file.Files.move(f.toPath,
+          java.nio.file.Paths.get(dir, "orphan-" + f.getName)))
     val v4 = SnapshotLog.appendVersionForBatch(frame(Seq(9L)), dir, 3L)
     assert(rows(dir, v4) === (1L to 6L).toSet + 9L,
       "crash orphans leaked into a committed snapshot")
@@ -684,7 +688,6 @@ class SnapshotLogSpec extends SparkSpec {
     SnapshotLog.appendVersion(frame(Seq(1L, 2L, 3L)).coalesce(1), dir)
     SnapshotLog.appendVersion(frame(Seq(101L, 102L)).coalesce(1), dir)
     SnapshotLog.appendVersion(frame(Seq(201L, 202L)).coalesce(1), dir)
-    val before = SnapshotLog.footerProbes.get()
     val (pruned, kept, total) = SnapshotLog.readVersionWhere(
       spark, dir, 3, "k", 100L, 150L)
     assert(kept === 1 && total === 3)
@@ -696,18 +699,15 @@ class SnapshotLogSpec extends SparkSpec {
       .toDF("key", "amt", "action")
     val (v6, mrw, _) = SnapshotLog.mergeInto(spark, dir, src, "k", "x")
     assert(mrw === 1, s"merge probe touched $mrw files")
-    assert(SnapshotLog.footerProbes.get() === before,
-      "a stats probe opened a parquet footer despite log-embedded ranges")
     assert(rows(dir, v6) === Set(2L, 3L, 101L, 102L, 202L, 9999L))
     // a restore carries the restored version's ranges forward
     val v7 = SnapshotLog.restoreVersion(dir, 3)
     val (_, kept7, total7) = SnapshotLog.readVersionWhere(
       spark, dir, v7, "k", 100L, 150L)
     assert(kept7 === 1 && total7 === 3)
-    assert(SnapshotLog.footerProbes.get() === before,
-      "post-restore probe fell back to footers")
-    // LEGACY stores (no #range headers) keep working: strip the
-    // headers and the SAME pruning decision comes from the footers
+    // a store whose manifests carry no #range headers has no stats:
+    // every file is read (kept = total) and the rows are unchanged
+    val prunedRows = pruned.select($"k").as[Long].collect().toSet
     import scala.jdk.CollectionConverters._
     val ld = java.nio.file.Paths.get(dir, "_graft_log")
     val st = java.nio.file.Files.list(ld)
@@ -719,12 +719,12 @@ class SnapshotLogSpec extends SparkSpec {
           (kept.mkString("\n") + "\n").getBytes("UTF-8"))
       }
     finally st.close()
-    val (_, keptL, totalL) = SnapshotLog.readVersionWhere(
+    val (prunedL, keptL, totalL) = SnapshotLog.readVersionWhere(
       spark, dir, 3, "k", 100L, 150L)
-    assert(keptL === 1 && totalL === 3,
-      "footer fallback diverged from the log-range decision")
-    assert(SnapshotLog.footerProbes.get() > before,
-      "stripped store should have probed footers")
+    assert(keptL === 3 && totalL === 3,
+      "a file without a stat must be read")
+    assert(prunedL.select($"k").as[Long].collect().toSet === prunedRows,
+      "the unpruned read diverged from the pruned one")
   }
 
   test("concurrent appends both land: unique staging + claim retry, no lost rows, no cross-attribution") {
@@ -924,9 +924,9 @@ class SnapshotLogSpec extends SparkSpec {
       Seq((2L, 20.0, "b")).toDF("k", "x", "y").coalesce(1), dir)       // v2
     // the schema rides the LOG (#schema header, O(1) text): v1 pins
     // the producer schema, v2 the evolved one
-    assert(SnapshotLog.tableSchema(dir, 1).get.fieldNames.toSeq ===
+    assert(SnapshotLog.tableSchema(dir, 1).fieldNames.toSeq ===
       Seq("k", "x"))
-    assert(SnapshotLog.tableSchema(dir, 2).get.fieldNames.toSeq ===
+    assert(SnapshotLog.tableSchema(dir, 2).fieldNames.toSeq ===
       Seq("k", "x", "y"))
     // the feed schema is the RANGE UNION, not whichever file sorts
     // first: the evolved column is always present, and a pre-evolution
@@ -1085,7 +1085,6 @@ class SnapshotLogSpec extends SparkSpec {
       val longStr = "a" * 40
       SnapshotLog.appendVersion(tf(Seq(
         (7L, 30000000L, longStr, 30.0))).coalesce(1), dir)
-      val before = SnapshotLog.footerProbes.get()
       val (dt, kt, tt) = SnapshotLog.readVersionWhereTs(
         spark, dir, 4, "t", 10000000L, 12000000L)
       assert(kt === 1 && tt === 4)
@@ -1113,12 +1112,10 @@ class SnapshotLogSpec extends SparkSpec {
         spark, dir, 4, "s", "a" * 33, "a" * 45)
       assert(kl === 1)
       assert(dl.select($"k").as[Long].collect().toSet === Set(7L))
-      assert(SnapshotLog.footerProbes.get() === before,
-        "a typed probe opened a parquet footer despite log-embedded stats")
       assert(SnapshotLog.bumpedUpperBound("a" * 40) === Some("a" * 31 + "b"))
       assert(SnapshotLog.bumpedUpperBound("\uffff" * 40) === None)
-      // LEGACY fallback: strip #tstat: headers -> same decisions off
-      // the footers
+      // no #tstat: headers -> no typed stats: every file is read
+      // (kept = total) and the rows are unchanged
       import scala.jdk.CollectionConverters._
       val ld = java.nio.file.Paths.get(dir, "_graft_log")
       val st = java.nio.file.Files.list(ld)
@@ -1130,20 +1127,20 @@ class SnapshotLogSpec extends SparkSpec {
             (kept.mkString("\n") + "\n").getBytes("UTF-8"))
         }
       finally st.close()
-      val (dtl, ktl, _) = SnapshotLog.readVersionWhereTs(
+      val (dtl, ktl, ttl) = SnapshotLog.readVersionWhereTs(
         spark, dir, 4, "t", 10000000L, 12000000L)
-      val (_, ksl, _) = SnapshotLog.readVersionWhereStr(
+      val (dsl, ksl, _) = SnapshotLog.readVersionWhereStr(
         spark, dir, 4, "s", "m", "q")
-      val (_, kdl, _) = SnapshotLog.readVersionWhereDbl(
+      val (ddl, kdl, _) = SnapshotLog.readVersionWhereDbl(
         spark, dir, 4, "d", 9.5, 11.5)
-      val (_, kml, _) = SnapshotLog.readVersionWhereDec(
+      val (dml, kml, _) = SnapshotLog.readVersionWhereDec(
         spark, dir, 4, "m",
         new java.math.BigDecimal("9.50"), new java.math.BigDecimal("11.50"))
-      assert(ktl === 1 && ksl === 1 && kdl === 1 && kml === 1,
-        "footer fallback diverged from the log-stat decision")
-      assert(dtl.select($"k").as[Long].collect().toSet === Set(3L, 4L))
-      assert(SnapshotLog.footerProbes.get() > before,
-        "stripped store should have probed footers")
+      assert(ttl === 4 && ktl === 4 && ksl === 4 && kdl === 4 && kml === 4,
+        "a file without a stat must be read")
+      Seq(dtl, dsl, ddl, dml).foreach(d =>
+        assert(d.select($"k").as[Long].collect().toSet === Set(3L, 4L),
+          "the unpruned read diverged from the pruned one"))
     } finally prevTs match {
       case Some(v) =>
         spark.conf.set("spark.sql.parquet.outputTimestampType", v)
@@ -1245,13 +1242,10 @@ class SnapshotLogSpec extends SparkSpec {
     assert(SnapshotLog.readVersion(spark, dir, 1).columns.toSeq
       === Seq("k", "x"))
     // stats keep biting through the rename (they key the PHYSICAL)
-    val before = SnapshotLog.footerProbes.get()
     val (dw, kept, total) = SnapshotLog.readVersionWhereDbl(
       spark, dir, 3, "y", 25.0, 35.0)
     assert(kept === 1 && total === 2)
     assert(dw.select($"k").as[Long].collect().toSet === Set(3L))
-    assert(SnapshotLog.footerProbes.get() === before,
-      "renamed-column probe fell back to footers")
     // DML keeps working after the rename, and its CDC rides the feed
     SnapshotLog.deleteWhere(spark, dir, "k", 2L, 2L)                    // v4
     // DROP hides the column; files keep it (v3 still reads it)

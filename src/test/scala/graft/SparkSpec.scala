@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide session, UTC, small
@@ -13,9 +14,34 @@ object SparkSpec {
   val SF = "/root/testdata/sf0.001"
 }
 
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.SF
+
+  private var tempRoot: Option[java.nio.file.Path] = None
+
+  /** A fresh scratch directory, made under one temp root per suite; the
+    * root and everything in it is deleted when the suite finishes. */
+  def tempDir(prefix: String): java.nio.file.Path = synchronized {
+    val root = tempRoot.getOrElse {
+      val r = java.nio.file.Files.createTempDirectory(
+        s"graft_${getClass.getSimpleName}_")
+      tempRoot = Some(r)
+      r
+    }
+    java.nio.file.Files.createTempDirectory(root, prefix)
+  }
+
+  override def afterAll(): Unit =
+    try synchronized {
+      tempRoot.foreach { root =>
+        val paths = java.nio.file.Files.walk(root)
+        try paths.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(p => java.nio.file.Files.deleteIfExists(p))
+        finally paths.close()
+      }
+      tempRoot = None
+    } finally super.afterAll()
 
   /** Spark jobs started, and records read by parquet file scans, while
     * `f` runs. Listener events arrive asynchronously: a marker job is run

@@ -1,142 +1,62 @@
 package graft
 
+import graft.sources.SnapshotLog
 import org.apache.spark.sql.functions._
 
 /** Storage-layout techniques the 100 TB design depends on: date-partitioned
-  * sinks with partition pruning, and bucketed tables whose joins need no
-  * shuffle (the co-located join).
+  * sinks with partition pruning, bucketed tables whose joins need no
+  * shuffle (the co-located join), and clustered snapshot compactions
+  * whose row-group stats stay selective.
   */
 class StorageLayoutSpec extends SparkSpec {
   import spark.implicits._
 
-  test("DSv2 sink: write round-trips through the two-phase commit") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2sink").toString
-    val src = Tables.events(spark, sf)
-      .select($"event_id", $"user_id", $"ts", $"event_type", $"value")
-    src.write.format("graft.sources.ParquetBatchSink")
-      .option("path", dir).mode("append").save()
-    // staging swept, only committed part files remain
-    val files = new java.io.File(dir).listFiles().map(_.getName)
-    assert(files.forall(_.endsWith(".parquet")), files.mkString(","))
-    assert(!files.exists(_.startsWith("_staging")), "staging dir not swept")
-    val back = spark.read.parquet(dir)
-    assert(back.count() === src.count())
-    val a = src.orderBy($"event_id").collect().map(_.toString)
-    val b = back.orderBy($"event_id").collect().map(_.toString)
-    assert(a.sameElements(b), "round-trip changed rows")
-  }
-
-  test("DSv2 sink: successive appends accumulate (no file-name collisions)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2app").toString
-    val src = Tables.nation(spark, sf).select($"n_nationkey", $"n_name")
-    src.write.format("graft.sources.ParquetBatchSink")
-      .option("path", dir).mode("append").save()
-    src.write.format("graft.sources.ParquetBatchSink")
-      .option("path", dir).mode("append").save()
-    // (partition, task) ids repeat across jobs — only per-job-unique file
-    // names keep the second commit from replacing the first job's files
-    assert(spark.read.parquet(dir).count() === 2 * src.count())
-  }
-
-  test("DSv2 sink: job abort leaves the sink untouched") {
-    import graft.sources.{ParquetBatchWrite, ParquetSinkCommit}
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2abort").toString
-    val schema = StructType(Seq(StructField("x", LongType)))
-    val write = new ParquetBatchWrite(schema, dir, "q-abort-test")
-    val factory = write.createBatchWriterFactory(null)
-    val w = factory.createWriter(0, 0L)
-    w.write(InternalRow(1L))
-    val msg = w.commit().asInstanceOf[ParquetSinkCommit]
-    assert(new java.io.File(s"$dir/_staging_q-abort-test/${msg.file}").exists(),
-      "task commit must leave the staged file for the job commit")
-    write.abort(Array(msg)) // driver decides the job failed
-    val left = new java.io.File(dir).listFiles()
-    assert(left == null || left.isEmpty,
-      s"aborted job leaked files: ${left.map(_.getName).mkString(",")}")
-  }
-
-  test("compaction: small files rewritten to target size, rows preserved") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    Tables.events(spark, sf).repartition(40) // simulate micro-batch litter
-      .write.mode("overwrite").parquet(dir)
-    val before = spark.read.parquet(dir).orderBy($"event_id").collect()
-    val stats = operators.Maintenance.compact(spark, dir,
-      targetBytes = 512L * 1024 * 1024)
-    assert(stats.filesBefore === 40)
-    assert(stats.filesAfter === 1, s"expected 1 compacted file: $stats")
-    val after = spark.read.parquet(dir).orderBy($"event_id").collect()
-    assert(after.sameElements(before), "compaction changed the data")
-  }
-
-  test("compaction: refuses to run over a crashed prior swap's backup") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cbak").toString
-    Tables.nation(spark, sf).repartition(4)
-      .write.mode("overwrite").parquet(dir)
-    // simulate a crash mid-swap: a prior run parked an original in bak
-    val bak = new java.io.File(dir + "_compact_bak")
-    bak.mkdirs()
-    val stranded = new java.io.File(bak, "part-orig-00000.parquet")
-    java.nio.file.Files.write(stranded.toPath, Array[Byte](1, 2, 3))
-    val e = intercept[IllegalArgumentException] {
-      operators.Maintenance.compact(spark, dir)
+  /** How many row groups of version `v`'s live files a pushed
+    * `colName = key` filter must read: a row group is skippable iff its
+    * footer [min, max] excludes the key. Returns (containing, total). */
+  private def groupsContaining(dir: String, v: Int, colName: String,
+                               key: Long): (Int, Int) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    var total = 0; var containing = 0
+    SnapshotLog.dataEntries(SnapshotLog.manifest(dir, v)).foreach { f =>
+      val rdr = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(dir, f),
+        new org.apache.hadoop.conf.Configuration(false)))
+      try rdr.getFooter.getBlocks.asScala.foreach { b =>
+        val st = b.getColumns.asScala
+          .find(_.getPath.toDotString == colName).get.getStatistics
+        total += 1
+        val mn = st.genericGetMin.asInstanceOf[java.lang.Long]
+        val mx = st.genericGetMax.asInstanceOf[java.lang.Long]
+        if (mn <= key && key <= mx) containing += 1
+      } finally rdr.close()
     }
-    assert(e.getMessage.contains("stale backup"), e.getMessage)
-    // the stranded original — possibly the only copy of its rows — must
-    // survive an aborted run untouched
-    assert(stranded.exists() && stranded.length() === 3)
-    stranded.delete(); bak.delete()
-    // once the operator clears the backup, compaction proceeds normally
-    val stats = operators.Maintenance.compact(spark, dir)
-    assert(stats.filesBefore === 4 && stats.filesAfter >= 1)
+    (containing, total)
   }
 
   test("sort-clustered rewrite: row-group stats become selective for key filters") {
-    import scala.jdk.CollectionConverters._
-    // how many row groups a pushed user_id=7 filter must read: a row
-    // group is skippable iff its footer [min,max] excludes the key
-    def groupsContaining(dir: String, key: Long): (Int, Int) = {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      val files = new java.io.File(dir).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-      var total = 0; var containing = 0
-      files.foreach { f =>
-        val rdr = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getAbsolutePath),
-          new org.apache.hadoop.conf.Configuration(false)))
-        try rdr.getFooter.getBlocks.asScala.foreach { b =>
-          val st = b.getColumns.asScala
-            .find(_.getPath.toDotString == "user_id").get.getStatistics
-          total += 1
-          val mn = st.genericGetMin.asInstanceOf[java.lang.Long]
-          val mx = st.genericGetMax.asInstanceOf[java.lang.Long]
-          if (mn <= key && key <= mx) containing += 1
-        } finally rdr.close()
-      }
-      (containing, total)
-    }
     val base = Tables.events(spark, sf)
-    val unsorted = java.nio.file.Files.createTempDirectory("graft_uns").toString
-    base.repartition(8).write.mode("overwrite").parquet(unsorted)
-    val clustered = java.nio.file.Files.createTempDirectory("graft_cls").toString
-    base.repartition(8).write.mode("overwrite").parquet(clustered)
-    operators.Maintenance.compact(spark, clustered,
+    val unsorted = tempDir("graft_uns").toString
+    val vu = SnapshotLog.appendVersion(base.repartition(8), unsorted)
+    val clustered = tempDir("graft_cls").toString
+    SnapshotLog.appendVersion(base.repartition(8), clustered)
+    val vc = SnapshotLog.compactVersion(spark, clustered,
       targetBytes = 24L * 1024, clusterBy = Some("user_id"))
-    val (uc, ut) = groupsContaining(unsorted, 7L)
-    val (cc, ct) = groupsContaining(clustered, 7L)
+    val (uc, ut) = groupsContaining(unsorted, vu, "user_id", 7L)
+    val (cc, ct) = groupsContaining(clustered, vc, "user_id", 7L)
     // random layout: every row group spans the whole key range — zero
     // skipping; clustered: the key lives in a small fraction of groups
     assert(uc === ut, s"random layout unexpectedly skippable ($uc/$ut)")
     assert(ct > 1 && cc <= math.max(1, ct / 4),
       s"clustered layout not selective: $cc of $ct row groups contain the key")
     // and the data is intact
-    assert(spark.read.parquet(clustered).count() === base.count())
+    assert(SnapshotLog.readVersion(spark, clustered, vc).count() === base.count())
   }
 
   test("partitioned sink: date filter prunes partitions at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part").toString
     Tables.events(spark, sf)
       .withColumn("event_date", to_date($"ts"))
       .write.mode("overwrite").partitionBy("event_date").parquet(dir)
@@ -153,7 +73,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("dynamic partition pruning: selective dim filter prunes fact partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val dir = tempDir("graft_dpp").toString
     Tables.events(spark, sf)
       .withColumn("event_date", to_date($"ts"))
       .write.mode("overwrite").partitionBy("event_date").parquet(dir)
@@ -200,47 +120,25 @@ class StorageLayoutSpec extends SparkSpec {
 
   test("z-order rewrite: row groups are selective on BOTH keys; " +
        "single-key sort only on its own") {
-    import scala.jdk.CollectionConverters._
-    def groupsContaining(dir: String, colName: String, key: Long): (Int, Int) = {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      val files = new java.io.File(dir).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-      var total = 0; var containing = 0
-      files.foreach { f =>
-        val rdr = ParquetFileReader.open(HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getAbsolutePath),
-          new org.apache.hadoop.conf.Configuration(false)))
-        try rdr.getFooter.getBlocks.asScala.foreach { b =>
-          val st = b.getColumns.asScala
-            .find(_.getPath.toDotString == colName).get.getStatistics
-          total += 1
-          val mn = st.genericGetMin.asInstanceOf[java.lang.Long]
-          val mx = st.genericGetMax.asInstanceOf[java.lang.Long]
-          if (mn <= key && key <= mx) containing += 1
-        } finally rdr.close()
-      }
-      (containing, total)
-    }
     // the full 200x200 grid: a and b independent by construction
     val grid = spark.range(40000).select(
       ($"id" % 200).as("a"), expr("(id div 200) % 200").as("b"),
       $"id".as("payload"))
-    def freshDir(): String = {
-      val d = java.nio.file.Files.createTempDirectory("graft_z").toString
-      grid.repartition(8).write.mode("overwrite").parquet(d)
+    def freshStore(): String = {
+      val d = tempDir("graft_z").toString
+      SnapshotLog.appendVersion(grid.repartition(8), d)
       d
     }
-    val zdir = freshDir()
-    operators.Maintenance.compactZOrder(spark, zdir, "a", "b",
+    val zdir = freshStore()
+    val zv = SnapshotLog.compactVersionZOrder(spark, zdir, "a", "b",
       targetBytes = 24L * 1024)
-    val sdir = freshDir()
-    operators.Maintenance.compact(spark, sdir,
+    val sdir = freshStore()
+    val sv = SnapshotLog.compactVersion(spark, sdir,
       targetBytes = 24L * 1024, clusterBy = Some("a"))
-    val (za, zt) = groupsContaining(zdir, "a", 7L)
-    val (zb, _) = groupsContaining(zdir, "b", 7L)
-    val (sa, st) = groupsContaining(sdir, "a", 7L)
-    val (sb, _) = groupsContaining(sdir, "b", 7L)
+    val (za, zt) = groupsContaining(zdir, zv, "a", 7L)
+    val (zb, _) = groupsContaining(zdir, zv, "b", 7L)
+    val (sa, st) = groupsContaining(sdir, sv, "a", 7L)
+    val (sb, _) = groupsContaining(sdir, sv, "b", 7L)
     assert(zt > 4, s"too few row groups ($zt) for a meaningful check")
     // z-order: a 1-D stripe crosses O(sqrt(files)) 2-D tiles — both
     // columns must skip most groups
@@ -251,7 +149,7 @@ class StorageLayoutSpec extends SparkSpec {
     assert(sb >= st * 3 / 4,
       s"expected single-key layout blind on b, got $sb/$st")
     // and the data survives both rewrites
-    assert(spark.read.parquet(zdir).count() === 40000L)
-    assert(spark.read.parquet(sdir).count() === 40000L)
+    assert(SnapshotLog.readVersion(spark, zdir, zv).count() === 40000L)
+    assert(SnapshotLog.readVersion(spark, sdir, sv).count() === 40000L)
   }
 }

@@ -11,7 +11,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming ingest (watermark + dedup + hourly counts) equals batch") {
     // file streaming source requires a directory; stage the parquet there
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
+    val dir = tempDir("graft_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -31,7 +31,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream-stream interval join (watermarked both sides) equals batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssj")
+    val dir = tempDir("graft_ssj")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -57,7 +57,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream-stream LEFT OUTER interval join: orphan clicks emit NULLs only after the watermark passes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_outer")
+    val dir = tempDir("graft_outer")
     def ts(t: String) = java.sql.Timestamp.valueOf(s"2024-01-01 $t")
     def write(chunk: Int,
               rows: Seq[(Long, java.sql.Timestamp, Long, String, Double,
@@ -143,7 +143,7 @@ class StreamingSpec extends SparkSpec {
   test("RocksDB state store: same results as the default store (scale path)") {
     // at 100 TB the state store must spill off-heap — RocksDB is the
     // provider for that; results must not depend on the store backend
-    val dir = java.nio.file.Files.createTempDirectory("graft_rocks")
+    val dir = tempDir("graft_rocks")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -204,7 +204,7 @@ class StreamingSpec extends SparkSpec {
   test("w09 streaming twin: per-batch plan shrinks monotonically and matches the batch planner") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_w09s").toString
+    val dir = tempDir("graft_w09s").toString
     val slots = weather.WeatherPipeline.backfillSlots(spark)
       .select($"location_id", $"ts").as[(Long, java.sql.Timestamp)].collect()
     val others = slots.filter(_._1 != 1L).toSeq          // locations 0 and 2
@@ -255,8 +255,8 @@ class StreamingSpec extends SparkSpec {
     // offset commits, and a restarted query must re-read the range with no
     // gaps and no duplicates (the FileStreamSink manifest excludes the
     // failed trigger's orphan files)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_wire_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_wire_out").toString
+    val ckpt = tempDir("graft_wire_ckpt").toString
+    val out = tempDir("graft_wire_out").toString
     def startQ() = spark.readStream.format("graft.sources.WeatherGridSource")
       .option("start", "2024-01-01 00:00:00")
       .option("end", "2024-01-02 00:00:00")
@@ -327,7 +327,7 @@ class StreamingSpec extends SparkSpec {
     // the LLM-pipeline gates are map-only + one aggregate, so the SAME
     // function behind t09 runs under readStream — micro-batched corpus
     // ingest produces the batch report bit-for-bit
-    val dir = java.nio.file.Files.createTempDirectory("graft_docs_stream")
+    val dir = tempDir("graft_docs_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       dir.resolve("documents.parquet"))
@@ -354,7 +354,7 @@ class StreamingSpec extends SparkSpec {
     // function runs under readStream — broadcast static model joined to
     // a streaming side, keyed aggregate under complete mode — and the
     // micro-batched scores equal the batch registry entry bit-for-bit
-    val dir = java.nio.file.Files.createTempDirectory("graft_docs_clf")
+    val dir = tempDir("graft_docs_clf")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       dir.resolve("documents.parquet"))
@@ -376,7 +376,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streamed CDC merge: final state equals the batch three-clause merge; replay is idempotent") {
-    val root = java.nio.file.Files.createTempDirectory("graft_merge")
+    val root = tempDir("graft_merge")
     val inDir = root.resolve("in"); java.nio.file.Files.createDirectories(inDir)
     operators.Extras.mergeSeed(
       operators.Extras.mergeTarget(spark, sf), s"$root/store")
@@ -433,7 +433,7 @@ class StreamingSpec extends SparkSpec {
     // collapse would drop the reinsert. With a `seq` column the
     // collapse must be the sequential apply: a delete RESETS the key,
     // later upserts restart the balance from their own sum.
-    val root = java.nio.file.Files.createTempDirectory("graft_merge_seq")
+    val root = tempDir("graft_merge_seq")
     val target = Seq((1L, 10.0), (3L, 10.0)).toDF("key", "bal")
     operators.Extras.mergeSeed(target, s"$root/store")
     val batch = Seq(
@@ -453,7 +453,7 @@ class StreamingSpec extends SparkSpec {
     assert(st === Map(1L -> 7.0, 3L -> 4.0, 4L -> 5.0), s"got $st")
     // the seq-LESS path on the same events is the documented
     // delete-wins contract: every deleted-at-any-point key stays out
-    val root2 = java.nio.file.Files.createTempDirectory("graft_merge_seq2")
+    val root2 = tempDir("graft_merge_seq2")
     operators.Extras.mergeSeed(target, s"$root2/store")
     operators.Extras.mergeApplyBatch(batch.drop("seq"), 0L, s"$root2/store")
     val st2 = operators.Extras.mergeState(spark, s"$root2/store")
@@ -464,7 +464,7 @@ class StreamingSpec extends SparkSpec {
   test("change feed source: streamed tail equals batch read, one version per batch, O(delta) planning, resume") {
     import graft.sources.{ChangeFeed, SnapshotLog}
     import org.apache.spark.sql.streaming.Trigger
-    val root = java.nio.file.Files.createTempDirectory("graft_cdf")
+    val root = tempDir("graft_cdf")
     val dir = root.resolve("table").toString
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     def frame(ks: Seq[Long]) = ks.map(k => (k, k * 10.0)).toDF("k", "x")
@@ -550,7 +550,7 @@ class StreamingSpec extends SparkSpec {
     // next spec through a keyed apply.
     import graft.sources.{ChangeFeed, SnapshotLog}
     import org.apache.spark.sql.streaming.Trigger
-    val root = java.nio.file.Files.createTempDirectory("graft_cdcrep")
+    val root = tempDir("graft_cdcrep")
     val primary = root.resolve("primary").toString
     val replica = root.resolve("replica").toString
     Seq(primary, replica).foreach(d =>
@@ -610,7 +610,7 @@ class StreamingSpec extends SparkSpec {
     // its own version identically: exactly-once end to end.
     import graft.sources.{ChangeFeed, SnapshotLog}
     import org.apache.spark.sql.streaming.Trigger
-    val root = java.nio.file.Files.createTempDirectory("graft_cdcdml")
+    val root = tempDir("graft_cdcdml")
     val primary = root.resolve("primary").toString
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(primary))

@@ -3,7 +3,6 @@ package graft
 import graft.weather.WeatherPipeline
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** The reference's load stage under Structured Streaming: foreachBatch +
   * anti-join upsert into Parquet — overlapping micro-batches (the
@@ -13,8 +12,8 @@ class StreamingUpsertSpec extends SparkSpec {
   import spark.implicits._
 
   test("foreachBatch upsert: overlapping micro-batches, exactly-once per key") {
-    val srcDir = Files.createTempDirectory("graft_upsert_src")
-    val sinkDir = Files.createTempDirectory("graft_upsert_sink").toString
+    val srcDir = tempDir("graft_upsert_src")
+    val sinkDir = tempDir("graft_upsert_sink").toString
 
     val ev = Tables.events(spark, sf)
       .select($"event_id", $"ts", $"user_id", $"value")

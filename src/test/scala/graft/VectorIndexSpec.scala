@@ -11,7 +11,7 @@ class VectorIndexSpec extends SparkSpec {
   import spark.implicits._
 
   test("index lifecycle: build -> add -> re-add inserts zero; store equals the pure query") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vidx").toString
+    val dir = tempDir("graft_vidx").toString
     val emb = Tables.embeddings(spark, sf).select($"vec_id", $"embedding")
     val seed = emb.filter($"vec_id" % 3 =!= 0)
     val batch = emb.filter($"vec_id" % 3 === 0)
@@ -43,7 +43,7 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("delete lifecycle: tombstones hide, deletes are final until compact, GC revives") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vidxd").toString
+    val dir = tempDir("graft_vidxd").toString
     val emb = Tables.embeddings(spark, sf).select($"vec_id", $"embedding")
     datapipe.VectorIndex.buildIndex(emb, dir)
     val total = emb.count()
@@ -83,7 +83,7 @@ class VectorIndexSpec extends SparkSpec {
   }
 
   test("addBatch collapses within-batch duplicate vec_ids to one assign row") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vidxu").toString
+    val dir = tempDir("graft_vidxu").toString
     val emb = Tables.embeddings(spark, sf).select($"vec_id", $"embedding")
     datapipe.VectorIndex.buildIndex(emb.filter($"vec_id" % 3 =!= 0), dir)
     val n0 = spark.read.parquet(s"$dir/assign").count()
