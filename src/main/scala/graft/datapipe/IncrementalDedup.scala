@@ -156,42 +156,6 @@ object IncrementalDedup {
     dec
   }
 
-  /** Streaming twin of [[ingestBatch]] — the PRODUCTION form of
-    * incremental dedup: documents arrive continuously and each
-    * micro-batch runs the same decide+append cycle against the
-    * persisted store. foreachBatch, not mapGroupsWithState: the
-    * fingerprint store is corpus-sized and belongs in the lake (scanned
-    * via the band-key candidate join, pruned by clustering), not in
-    * per-executor state-store memory — state-store CC would cap the
-    * corpus at cluster RAM, exactly backwards at 100 TB. Inside the
-    * trigger the micro-batch is a plain DataFrame, so batch and stream
-    * run LITERALLY the same code path (batch-equivalence pinned in
-    * IncrementalDedupSpec).
-    *
-    * Decisions land in `decisionsPath` partitioned by batch_id with
-    * dynamic partition overwrite: a retried trigger REPLACES its own
-    * partition instead of appending duplicates. Store appends stay
-    * idempotent via the left-anti (a retry inserts zero rows), with the
-    * documented re-run nuance: a doc whose fingerprint was appended
-    * before a crash reports dup_store (it matches its own stored row)
-    * rather than kept on the retry — the STORE is exact either way.
-    */
-  def ingestStream(stream: DataFrame, storePath: String,
-                   decisionsPath: String,
-                   checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, storePath)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(decisionsPath)
-        ()
-      }
-      .start()
-
   // ===== oracle-checked query =====
 
   /** Deterministic two-run split of `documents` the d08 query (and its

@@ -753,33 +753,22 @@ object SnapshotLog {
     -1 // unreachable
   }
 
-  /** EXACTLY-ONCE streamed appends: one committed version per
-    * micro-batch, `foreachBatch` over the staged-append + manifest
-    * layer. The crash matrix the batch-tagged manifests close:
+  /** EXACTLY-ONCE batch-tagged append: commit `batch` as one version
+    * tagged with `batchId`. The crash matrix the batch-tagged manifests
+    * close:
     *  - crash after the staged files move in but BEFORE the manifest
     *    commit → the moved data files are referenced by nothing; the
-    *    replayed trigger appends afresh and commits, the first
-    *    attempt's files stay invisible orphans until [[vacuum]];
-    *  - crash AFTER the manifest commit but before the checkpoint
-    *    commit → the replayed trigger finds its own batchId already
-    *    committed (the id rides the manifest's atomic claim, as a
-    *    `#batch=` body header) and no-ops — never a duplicate append;
-    *  - a fresh checkpoint over an old store restarts batch numbering
-    *    below the committed high-water mark → fail loud (the
-    *    mergeApplyStream stale-generation discipline). */
-  def appendStream(stream: DataFrame, dir: String,
-                   checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendVersionForBatch(batch, dir, batchId); ()
-      }
-      .start()
-
-  /** One streamed-append trigger (factored for the replay spec).
-    * Returns the version serving this batch — freshly committed, or
-    * the already-committed one on a post-commit replay. */
+    *    replayed batch appends afresh and commits, the first attempt's
+    *    files stay invisible orphans until [[vacuum]];
+    *  - crash AFTER the manifest commit → the replayed batch finds its
+    *    own batchId already committed (the id rides the manifest's
+    *    atomic claim, as a `#batch=` body header) and no-ops — never a
+    *    duplicate append;
+    *  - a writer restarting its batch numbering below the committed
+    *    high-water mark → fail loud (the mergeApplyStream
+    *    stale-generation discipline).
+    * Returns the version serving this batch — freshly committed, or the
+    * already-committed one on a post-commit replay. */
   private[graft] def appendVersionForBatch(batch: DataFrame, dir: String,
                                            batchId: Long): Int = {
     val newest = latestBatch(dir)

@@ -42,14 +42,16 @@ import scala.jdk.CollectionConverters._
   * synthetic generator with the reference's exact shape: half-open
   * [start, end) grid at the axis cadence (lambda_function.py:106-111),
   * float measures with NaN holes (the wire format's missing-value
-  * encoding, VariableWithValues.py:58-62). BOTH read paths — the batch
-  * scan and the micro-batch stream — go through the reference's WIRE
-  * FRAMING, not straight to rows: the response body is length-prefixed
-  * columnar frames with the in-stream "Unexpected" error magic
-  * (openmeteo_requests/Client.py:31-43), streamed lazily through
+  * encoding, VariableWithValues.py:58-62). The scan goes through the
+  * reference's WIRE FRAMING, not straight to rows: the response body is
+  * length-prefixed columnar frames with the in-stream "Unexpected" error
+  * magic (openmeteo_requests/Client.py:31-43), streamed lazily through
   * [[WireFraming.decodeChunks]] (memory bounded by one frame). Option
-  * `inject_wire_error` exercises the batch error path end-to-end;
-  * [[WeatherGridSource.streamWireErrors]] is the micro-batch fault hook.
+  * `inject_wire_error` exercises the error path end-to-end.
+  *
+  * The source is batch-only: the reference is a cron-scheduled batch job
+  * (deploy.sh:36-37), and `WeatherIngest.run` is that job — its cursor
+  * is the sink's `max(ts)`, not a stream offset log.
   *
   * Scan-level pushdown, both kinds:
   *  - ts range predicates narrow the generated grid
@@ -81,13 +83,6 @@ object WeatherGridSource {
     * IngestSpec assert one source scan per ingest run.
     */
   private[graft] val readerOpens = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Test hook for the micro-batch error path: each pending unit makes one
-    * stream partition reader inject the in-stream error magic (local-mode
-    * single JVM). The failed trigger never commits its offset, so a
-    * restarted query re-reads the range — the recovery StreamingSpec pins.
-    */
-  private[graft] val streamWireErrors = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Reference request variables in request order (lambda_function.py:27-36)
     * — the default `variables` list, and the reference sink's measure
@@ -155,13 +150,23 @@ object WeatherGridSource {
   private[sources] def metadataOf(options: CaseInsensitiveStringMap): Boolean =
     options.getOrDefault("metadata", "false").toBoolean
 
+  private def axisOf(options: CaseInsensitiveStringMap): String = {
+    val axis = options.getOrDefault("axis", "minutely_15")
+    val accepted = Seq("minutely_15", "hourly", "six_hourly", "daily", "monthly")
+    require(accepted.contains(axis),
+      s"axis must be one of ${accepted.mkString(", ")}, got '$axis'")
+    axis
+  }
+
   private[sources] def monthlyOf(options: CaseInsensitiveStringMap): Boolean =
-    options.getOrDefault("axis", "minutely_15") == "monthly"
+    axisOf(options) == "monthly"
 
   private[sources] def intervalMicrosOf(options: CaseInsensitiveStringMap): Long = {
-    val axisDefault = AXES.getOrElse(
-      options.getOrDefault("axis", "minutely_15"), 900L)
-    options.getOrDefault("interval_s", axisDefault.toString).toLong * 1000000L
+    val axisDefault = AXES.getOrElse(axisOf(options), 900L)
+    val raw = options.getOrDefault("interval_s", axisDefault.toString)
+    val seconds = raw.toLongOption.filter(_ >= 1)
+    require(seconds.nonEmpty, s"interval_s must be >= 1, got $raw")
+    seconds.get * 1000000L
   }
 
   def parseTs(s: String): Long = // micros since epoch, input UTC
@@ -260,11 +265,10 @@ object WeatherGridSource {
 
   private val MetaNames = META_FIELDS.map(_.name).toSet
 
-  /** The shared batch/micro-batch partition reader: server-side lazy
-    * frames → chunked decode → rows. Column pruning reaches the server
-    * (only `schema`'s variables are encoded), and per-task memory is
-    * bounded by one 256-slot frame regardless of the window
-    * ([[WireFraming.decodeChunks]]).
+  /** The partition reader: server-side lazy frames → chunked decode →
+    * rows. Column pruning reaches the server (only `schema`'s variables
+    * are encoded), and per-task memory is bounded by one 256-slot frame
+    * regardless of the window ([[WireFraming.decodeChunks]]).
     */
   private[sources] def wireReader(loc: Long, from: Long, until: Long,
                                   interval: Long, monthly: Boolean,
@@ -337,11 +341,12 @@ class WeatherGridTable(options: CaseInsensitiveStringMap)
     WeatherGridSource.schemaFor(WeatherGridSource.variablesOf(options),
       WeatherGridSource.metadataOf(options))
   override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
+    Set(TableCapability.BATCH_READ).asJava
+  // parsed here, so a bad `axis` or `interval_s` fails `load()` before
+  // any Spark job
+  private val monthly = WeatherGridSource.monthlyOf(options)
+  private val interval = WeatherGridSource.intervalMicrosOf(options)
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder = {
-    val monthly = WeatherGridSource.monthlyOf(options)
-    val interval = WeatherGridSource.intervalMicrosOf(options)
-    val maxSlots = options.getOrDefault("maxSlotsPerTrigger", "96").toLong
     // The real API's slots sit on absolute clock boundaries regardless of
     // the request window — anchor the grid to epoch multiples of interval
     // (first slot = smallest aligned ts >= start); calendar months for the
@@ -356,7 +361,6 @@ class WeatherGridTable(options: CaseInsensitiveStringMap)
       WeatherGridSource.parseTs(options.getOrDefault("end", "2024-01-03 00:00:00")),
       interval,
       options.getOrDefault("locations", "1").toInt,
-      maxSlots,
       WeatherGridSource.variablesOf(options),
       options.getOrDefault("inject_wire_error", "false").toBoolean,
       monthly,
@@ -371,7 +375,6 @@ class WeatherGridTable(options: CaseInsensitiveStringMap)
   */
 class WeatherGridScanBuilder(var start: Long, var end: Long,
                              interval: Long, locations: Int,
-                             maxSlotsPerTrigger: Long = 96L,
                              variables: Seq[String] = WeatherGridSource.MEASURES,
                              injectWireError: Boolean = false,
                              monthly: Boolean = false,
@@ -420,22 +423,17 @@ class WeatherGridScanBuilder(var start: Long, var end: Long,
     readSchema = requiredSchema
 
   override def build(): Scan =
-    new WeatherGridScan(start, end, interval, locations, maxSlotsPerTrigger,
-      readSchema, injectWireError, monthly)
+    new WeatherGridScan(start, end, interval, locations, readSchema,
+      injectWireError, monthly)
 }
 
 class WeatherGridScan(start: Long, end: Long, interval: Long, locations: Int,
-                      maxSlotsPerTrigger: Long = 96L,
                       schema: StructType = WeatherGridSource.SCHEMA,
                       injectWireError: Boolean = false,
                       monthly: Boolean = false)
     extends Scan with Batch {
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new WeatherGridMicroBatchStream(start, end, interval, locations,
-      maxSlotsPerTrigger, schema, monthly)
   override def description(): String =
     s"weather_grid [$start, $end) step=${if (monthly) "month" else interval} " +
       s"locs=$locations cols=${schema.fieldNames.mkString(",")}"

@@ -43,59 +43,9 @@ object Streaming {
       .start()
   }
 
-  /** Stream-stream interval join (click→purchase attribution): both sides
-    * watermarked, join condition time-bounded so each side's buffered
-    * state is evictable — the canonical Structured Streaming two-stream
-    * join shape. Returns the started query (memory sink, AvailableNow
-    * processes the whole input then stops — deterministic for tests).
-    */
-  /** One footer sniff + schema read for both sides (a stream-stream
-    * self-join off the same source frame is the supported shape). */
-  private def attrSide(ev: org.apache.spark.sql.DataFrame,
-                       tpe: String, pfx: String) =
-    ev.filter(col("event_type") === tpe)
-      .select(col("user_id").as(s"${pfx}_user"), col("ts").as(s"${pfx}_ts"),
-              col("value").as(s"${pfx}_value"))
-      .withWatermark(s"${pfx}_ts", "1 hour")
-
-  def attributionStream(s: SparkSession, path: String, sinkName: String) = {
-    val ev = T.eventsStreamAt(s, path)
-    attrSide(ev, "click", "c")
-      .join(attrSide(ev, "purchase", "p"),
-        expr("c_user = p_user AND p_ts > c_ts AND p_ts <= c_ts + INTERVAL 1 HOUR"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(sinkName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** LEFT OUTER stream-stream interval join — the attribution shape a
-    * real pipeline actually ships: a click that never converts inside
-    * its hour must still come out (NULL purchase columns), and may be
-    * emitted ONLY once the watermark proves no in-window purchase can
-    * still arrive — emitting earlier would be wrong (a match could
-    * land), never emitting would leak the click. That state-eviction
-    * timing is exactly what StreamingSpec pins: before the watermark
-    * passes c_ts + 1 hour the orphan is held back; after, it appears
-    * with NULLs, and the full result equals the batch left join
-    * (q103's row-level twin). Default micro-batch trigger so a test
-    * can feed files across triggers and watch the watermark gate. */
-  def attributionOuterStream(s: SparkSession, path: String,
-                             sinkName: String) = {
-    val ev = T.eventsStreamAt(s, path)
-    attrSide(ev, "click", "c")
-      .join(attrSide(ev, "purchase", "p"),
-        expr("c_user = p_user AND p_ts > c_ts AND p_ts <= c_ts + INTERVAL 1 HOUR"),
-        "leftOuter")
-      .writeStream.outputMode("append")
-      .format("memory").queryName(sinkName)
-      .start()
-  }
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Batch statement of [[attributionStream]]'s join (same condition,
-    // aggregated per user) — what the DuckDB oracle can check; the
-    // streaming path is asserted row-identical in StreamingSpec.
+    // Click→purchase attribution: an interval join (purchase within the
+    // hour after the click), aggregated per user.
     "q57_interval_join" -> { (s, d) =>
       import s.implicits._
       val ev = T.events(s, d).withColumn("ts", date_trunc("second", $"ts"))
@@ -111,12 +61,10 @@ object Streaming {
         .orderBy($"user_id")
     },
 
-    // Batch statement of [[attributionOuterStream]]'s LEFT OUTER
-    // interval join, aggregated per user: every click keeps a row —
-    // matched pairs carry the purchase, orphans (no purchase within
-    // the hour) carry NULLs and are counted separately. The row-level
-    // streamed twin (incl. watermark-gated NULL emission) is asserted
-    // in StreamingSpec; this is the shape the DuckDB oracle can check.
+    // q57's interval join as a LEFT OUTER join, aggregated per user:
+    // every click keeps a row — matched pairs carry the purchase,
+    // orphans (no purchase within the hour) carry NULLs and are counted
+    // separately.
     "q103_interval_join_outer" -> { (s, d) =>
       import s.implicits._
       val ev = T.events(s, d).withColumn("ts", date_trunc("second", $"ts"))

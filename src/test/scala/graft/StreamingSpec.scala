@@ -30,110 +30,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("stream-stream interval join (watermarked both sides) equals batch") {
-    val dir = tempDir("graft_ssj")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sf/events.parquet"),
-      dir.resolve("events.parquet"))
-    val q = streaming.Streaming.attributionStream(spark, dir.toString, "attr_sink")
-    try {
-      q.awaitTermination() // AvailableNow: drains the input, then stops
-      val streamed = spark.table("attr_sink")
-        .select($"c_user", $"c_ts", $"p_ts", $"p_value")
-        .as[(Long, java.sql.Timestamp, java.sql.Timestamp, Double)]
-        .collect().sorted
-      val ev = Tables.events(spark, sf)
-      val clicks = ev.filter($"event_type" === "click")
-        .select($"user_id".as("c_user"), $"ts".as("c_ts"))
-      val purchases = ev.filter($"event_type" === "purchase")
-        .select($"user_id".as("p_user"), $"ts".as("p_ts"), $"value".as("p_value"))
-      val batch = clicks.join(purchases,
-          expr("c_user = p_user AND p_ts > c_ts AND p_ts <= c_ts + INTERVAL 1 HOUR"))
-        .select($"c_user", $"c_ts", $"p_ts", $"p_value")
-        .as[(Long, java.sql.Timestamp, java.sql.Timestamp, Double)]
-        .collect().sorted
-      assert(streamed.nonEmpty && (streamed sameElements batch))
-    } finally q.stop()
-  }
-
-  test("stream-stream LEFT OUTER interval join: orphan clicks emit NULLs only after the watermark passes") {
-    val dir = tempDir("graft_outer")
-    def ts(t: String) = java.sql.Timestamp.valueOf(s"2024-01-01 $t")
-    def write(chunk: Int,
-              rows: Seq[(Long, java.sql.Timestamp, Long, String, Double,
-                         String)]): Unit = {
-      val tmp = dir.resolve(s"tmp$chunk")
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.parquet(tmp.toString)
-      val st = java.nio.file.Files.list(tmp)
-      val part =
-        try st.filter(_.toString.endsWith(".parquet")).findFirst.get
-        finally st.close()
-      java.nio.file.Files.move(part, dir.resolve(f"chunk$chunk%03d.parquet"))
-    }
-    // chunk 1: u1 click->purchase (in-window match), u2 click that
-    // never converts. Watermark after this batch = min-side max - 1h
-    // = 09:05, far before u2's window closes (11:05) — the orphan's
-    // NULL row must be HELD BACK: emitting it now would be wrong (a
-    // u2 purchase could still arrive at, say, 10:50).
-    write(1, Seq(
-      (1L, ts("10:00:00"), 1L, "click", 0.0, "{}"),
-      (2L, ts("10:30:00"), 1L, "purchase", 5.0, "{}"),
-      (3L, ts("10:05:00"), 2L, "click", 0.0, "{}")))
-    val q = streaming.Streaming.attributionOuterStream(
-      spark, dir.toString, "outer_sink")
-    try {
-      q.processAllAvailable()
-      val early = spark.table("outer_sink")
-        .select($"c_user", $"p_ts").collect()
-      assert(early.map(_.getLong(0)).toSeq === Seq(1L),
-        s"expected only the matched pair early, got ${early.toSeq}")
-      assert(!early.exists(_.isNullAt(1)),
-        "orphan NULL row emitted before the watermark closed its window")
-      // chunk 2: a far-future non-matching pair on BOTH sides pushes
-      // the watermark to 19:00 — u2's window is now provably closed,
-      // so its click must come out with NULL purchase columns; u9's
-      // own window (ends 21:00) is still open, so u9 stays held.
-      write(2, Seq(
-        (10L, ts("20:00:00"), 9L, "click", 0.0, "{}"),
-        (11L, ts("20:00:00"), 9L, "purchase", 1.0, "{}")))
-      q.processAllAvailable()
-      val streamed = spark.table("outer_sink")
-        .filter($"c_user" =!= 9L)
-        .select($"c_user", $"c_ts", $"p_ts", $"p_value")
-        .collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1),
-          Option(r.getTimestamp(2)), Option(r.get(3))))
-        .sortBy(t => (t._1, t._2.getTime))
-      assert(streamed.exists(r => r._1 == 2L && r._3.isEmpty),
-        "never-matched click u2 did not surface with NULLs")
-      assert(!spark.table("outer_sink").filter($"c_user" === 9L)
-          .collect().exists(_ => true),
-        "u9's still-open window leaked an early NULL row")
-      // full equality with the batch LEFT join over the same events
-      val ev = Seq(
-        (1L, ts("10:00:00"), 1L, "click", 0.0),
-        (2L, ts("10:30:00"), 1L, "purchase", 5.0),
-        (3L, ts("10:05:00"), 2L, "click", 0.0))
-        .toDF("event_id", "ts", "user_id", "event_type", "value")
-      val clicks = ev.filter($"event_type" === "click")
-        .select($"user_id".as("c_user"), $"ts".as("c_ts"))
-      val purchases = ev.filter($"event_type" === "purchase")
-        .select($"user_id".as("p_user"), $"ts".as("p_ts"),
-                $"value".as("p_value"))
-      val batch = clicks.join(purchases,
-          expr("c_user = p_user AND p_ts > c_ts AND p_ts <= c_ts + INTERVAL 1 HOUR"),
-          "left_outer")
-        .select($"c_user", $"c_ts", $"p_ts", $"p_value")
-        .collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1),
-          Option(r.getTimestamp(2)), Option(r.get(3))))
-        .sortBy(t => (t._1, t._2.getTime))
-      assert(streamed.toSeq === batch.toSeq,
-        "streamed outer join diverged from the batch left join")
-    } finally q.stop()
-  }
-
   test("session_window end = last event + gap (streaming construct, batch run)") {
     val out = streaming.Streaming.queries("q42_session_window")(spark, sf)
     val bad = out.filter($"sess_end" < $"sess_start" + expr("INTERVAL 30 MINUTES"))
@@ -198,128 +94,6 @@ class StreamingSpec extends SparkSpec {
         .collect().toSeq.sorted
       assert(ids.count(_._1 == 1L) === 2, s"expected re-emission after eviction: $ids")
       assert(ids.count(_._1 == 2L) === 1)
-    } finally q.stop()
-  }
-
-  test("w09 streaming twin: per-batch plan shrinks monotonically and matches the batch planner") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = tempDir("graft_w09s").toString
-    val slots = weather.WeatherPipeline.backfillSlots(spark)
-      .select($"location_id", $"ts").as[(Long, java.sql.Timestamp)].collect()
-    val others = slots.filter(_._1 != 1L).toSeq          // locations 0 and 2
-    val loc1 = slots.filter(_._1 == 1L).sortBy(_._2.getTime)
-    val (h1, h2full) = loc1.splitAt(loc1.length / 2)
-    val h2 = h2full.dropRight(5).toSeq // leave 5 trailing holes open
-    val input = MemoryStream[(Long, java.sql.Timestamp)]
-    val q = weather.WeatherPipeline.backfillStream(
-      input.toDS().toDF("location_id", "ts"),
-      s"$dir/sink", s"$dir/plan", s"$dir/ckpt")
-    try {
-      input.addData(others: _*); q.processAllAvailable()
-      input.addData(h1.toSeq: _*); q.processAllAvailable()
-      input.addData(h2: _*); q.processAllAvailable()
-    } finally q.stop()
-    val plans = spark.read.parquet(s"$dir/plan")
-    val totals = plans.groupBy($"batch_id")
-      .agg(sum($"n_slots").as("miss")).orderBy($"batch_id")
-      .as[(Long, Long)].collect()
-    // batch 0 filled locations 0/2 entirely -> location 1's whole week
-    // (672 slots) is the plan; batch 1 closes the first half; batch 2
-    // all but 5 — STRICTLY shrinking, never zero here
-    assert(totals.map(_._1).toSeq === Seq(0L, 1L, 2L), s"got $totals")
-    assert(totals.map(_._2).toSeq === Seq(672L, 672L - h1.length, 5L))
-    // batch equivalence: the last snapshot must be EXACTLY what the
-    // batch planner computes over the final sink state
-    val finalSink = spark.read.parquet(s"$dir/sink")
-    val batchPlan = weather.WeatherPipeline.coalesceRanges(
-      weather.WeatherPipeline.backfillSlots(spark)
-        .join(finalSink, Seq("location_id", "ts"), "left_anti"))
-      .collect().toSeq
-    val streamPlan = plans.filter($"batch_id" === 2L)
-      .select($"location_id", $"range_start", $"range_end", $"n_slots")
-      .orderBy($"location_id", $"range_start").collect().toSeq
-    assert(streamPlan === batchPlan, "stream plan diverged from batch planner")
-    assert(streamPlan.size === 1 && streamPlan.head.getLong(3) === 5L)
-    // sink appends are idempotent: replaying a batch's rows inserts zero
-    val before = finalSink.count()
-    weather.WeatherPipeline.upsertNew(
-      h1.toSeq.toDF("location_id", "ts"), finalSink, Seq("location_id", "ts"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(s"$dir/sink")
-    assert(spark.read.parquet(s"$dir/sink").count() === before)
-  }
-
-  test("micro-batch wire error fails the trigger; restart re-reads exactly once") {
-    // the micro-batch path goes through the SAME wire framing as the batch
-    // scan: an in-stream error magic must fail the trigger BEFORE its
-    // offset commits, and a restarted query must re-read the range with no
-    // gaps and no duplicates (the FileStreamSink manifest excludes the
-    // failed trigger's orphan files)
-    val ckpt = tempDir("graft_wire_ckpt").toString
-    val out = tempDir("graft_wire_out").toString
-    def startQ() = spark.readStream.format("graft.sources.WeatherGridSource")
-      .option("start", "2024-01-01 00:00:00")
-      .option("end", "2024-01-02 00:00:00")
-      .option("locations", 1)
-      .option("maxSlotsPerTrigger", 48)
-      .load()
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .start()
-    sources.WeatherGridSource.streamWireErrors.set(1)
-    val q1 = startQ()
-    val e = intercept[Exception] { q1.processAllAvailable() }
-    def chain(t: Throwable): Seq[Throwable] =
-      if (t == null) Seq.empty else t +: chain(t.getCause)
-    assert(chain(e).exists(c => c.getMessage != null &&
-      c.getMessage.contains("Unexpected weather API error")),
-      s"server error message lost: ${e.getMessage}")
-    q1.stop()
-    val q2 = startQ()
-    try {
-      q2.processAllAvailable()
-      val got = spark.read.parquet(out)
-      assert(got.count() === 96, "1 day of 15-min slots, exactly once")
-      assert(got.select($"ts").distinct().count() === 96)
-    } finally q2.stop()
-  }
-
-  test("event-time sessionizer: sessions emit on watermark expiry, state drops") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import streaming.Sessionizer
-    import streaming.Sessionizer.Ev
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val sessions = Sessionizer.sessionizeStream(
-      input.toDS().withWatermark("ts", "10 minutes").as[Ev])
-    val q = sessions.writeStream.format("memory").queryName("sess_stream")
-      .outputMode("append").start()
-    try {
-      // one session for user 1; nothing may emit while the watermark is
-      // still behind its close time
-      input.addData(Ev(1L, ts("2024-01-01 10:00:00"), 1.0),
-                    Ev(1L, ts("2024-01-01 10:10:00"), 2.0))
-      q.processAllAvailable()
-      assert(spark.table("sess_stream").count() === 0,
-        "open session emitted before watermark expiry")
-      // a later event (user 2) pushes the watermark to 12:50, past user
-      // 1's close (10:40) -> user 1's session emits via timeout; user 2's
-      // stays open
-      input.addData(Ev(2L, ts("2024-01-01 13:00:00"), 5.0))
-      q.processAllAvailable()
-      val emitted = spark.table("sess_stream")
-        .as[Sessionizer.Session].collect()
-      assert(emitted.map(_.user_id).toSeq === Seq(1L))
-      assert(emitted.head.start === ts("2024-01-01 10:00:00"))
-      assert(emitted.head.end === ts("2024-01-01 10:40:00")) // last + 30 min gap
-      assert(emitted.head.n === 2 && emitted.head.total === 3.0)
-      // push the watermark past user 2's close as well -> its session
-      // emits too, proving the timed-out key was the only state left
-      input.addData(Ev(3L, ts("2024-01-01 16:00:00"), 7.0))
-      q.processAllAvailable()
-      val all = spark.table("sess_stream").as[Sessionizer.Session].collect()
-      assert(all.map(_.user_id).sorted.toSeq === Seq(1L, 2L))
     } finally q.stop()
   }
 
