@@ -43,10 +43,11 @@ object GraftExtensions {
       es(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression())
   )
 
-  /** Idempotent direct registration into a live session. */
+  /** Idempotent direct registration into a live session: a name the
+    * session already holds is skipped, like the rule and strategy. */
   def register(spark: SparkSession): Unit = {
     builders.foreach { case (name, b) =>
-      FunctionBridge.registerTemp(spark, name, b)
+      FunctionBridge.registerTempIfAbsent(spark, name, b)
     }
     if (!spark.experimental.extraOptimizations
           .contains(graft.plans.RewriteGlobalRunningTotal))

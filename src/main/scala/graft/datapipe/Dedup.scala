@@ -209,9 +209,10 @@ object Dedup {
 
   /** Corpus-adaptive SimHash band width: clamp(floor(log2 n) + 1, 4, 60).
     * 2^bw band values keep the expected block population n/2^bw roughly
-    * constant as the corpus grows — the knob StressBench measured going
-    * quadratic when fixed (8-bit bands saturate at 16x, and the old 15-bit
-    * cap saturated the same way one scale later). floor(log2)+1 is
+    * constant as the corpus grows — a fixed width was measured going
+    * quadratic (8-bit bands saturate at 16x, and the old 15-bit cap
+    * saturated the same way one scale later; ARCHITECTURE's scaling
+    * curves keep the numbers). floor(log2)+1 is
     * engine-exact for integer n: log2 of a power of two is exact in IEEE
     * double on both engines, and any other integer is > 1 ulp away from
     * an integer log, so the floor never straddles a rounding difference.
@@ -1337,8 +1338,8 @@ object Dedup {
     // (|len diff| > 5 already exceeds the threshold — those pairs never
     // reach the DP), then THRESHOLDED Levenshtein over the FULL text as
     // the verify. levenshtein(l, r, k) runs the banded DP — O(k·n) cells
-    // with early exit instead of the full O(n²) table (StressBench
-    // measured the unthresholded form 14x slower at 16x corpus: the
+    // with early exit instead of the full O(n²) table (the
+    // unthresholded form measured 14x slower at 16x corpus: the
     // verify is the quadratic pair hot path, so per-pair constant
     // factors ARE the scale budget). It returns the exact distance when
     // <= k and -1 otherwise, so the filtered output is identical to the

@@ -17,9 +17,8 @@ import org.apache.spark.sql.functions._
   *     equi-join bands(batch) to bands(store). The store is NEVER
   *     all-pairs-compared: only store docs sharing a band key with some
   *     batch doc are touched, so per-run cost scales with
-  *     |batch| x (store candidates per band), not |store|
-  *     (graft.tools.ScaleProbe's `store` section measures the flat
-  *     store-size curve).
+  *     |batch| x (store candidates per band), not |store| (the
+  *     store-size curve measured flat; ARCHITECTURE's scale probes).
   *  2. verify — candidates fetch their hsets by doc_id and pay the exact
   *     Jaccard (codegen'd sorted-merge intersect, >= 0.5 like d02).
   *     Within-batch pairs go through the same verify (a batch can carry

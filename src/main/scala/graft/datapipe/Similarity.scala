@@ -1432,8 +1432,8 @@ object Similarity {
     // seed-cell centroids, sized to the corpus in-plan), every vector is
     // assigned map-only to its nearest centroid, and the within-CELL
     // min-id domination resolves keep/remove. This is the chain a
-    // 100 TB deployment runs (ScaleProbe's semdedup section measures
-    // why k must grow with n); identical vectors always share a cell
+    // 100 TB deployment runs (ARCHITECTURE's scale probes measure why
+    // k must grow with n); identical vectors always share a cell
     // (the argmax is deterministic in the vector), so planted-copy
     // recall survives the learned clustering.
     "d15_semdedup_cells" -> { (s, d) =>
@@ -1444,7 +1444,7 @@ object Similarity {
           .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding", $"label"))
       // The knob, sized the way the paper sizes it: cells ~ sqrt(n/8)
       // bounds within-cell pair work at ~n^1.5 instead of n^2/k_fixed
-      // (fixed k=8 measured 22 s at the 16x StressBench point — the
+      // (fixed k=8 measured 22 s at the 16x scale point — the
       // quadratic-in-cell-size wall this removes). floor + max(8) keeps
       // the small-corpus shape at the historical k=8, and both engines
       // derive the IDENTICAL integer (exact count, IEEE sqrt, exact
@@ -1764,9 +1764,9 @@ object Similarity {
     // fully deterministic). Scale shape: candidates are narrow
     // (src, dst) pairs from the (label, bucket) equi-join; the
     // HYPERPLANE COUNT IS CORPUS-ADAPTIVE (the d15 discipline —
-    // fixed 8-bit blocking measured 27 s at the 64× StressBench
-    // point, 17× per 4× data: cells grow linearly with the corpus
-    // and the within-cell join goes quadratic): nb = max(8,
+    // fixed 8-bit blocking measured 27 s at the 64× scale point,
+    // 17× per 4× data: cells grow linearly with the corpus and the
+    // within-cell join goes quadratic): nb = max(8,
     // ⌈log2(n/32)⌉) hyperplanes hold expected cells at ~32 vectors,
     // derived INTEGER-ONLY as length(bin(⌈n/32⌉ − 1)) — no libm
     // log2, whose last-ulp drift could flip a ceil across engines —
@@ -1937,8 +1937,8 @@ object Similarity {
     // as deterministic as s32's min-id), riding the SAME keyed walk,
     // rounds, and scoring as s32 — the only
     // diff is the entry CTE, so the recall-vs-scored delta against
-    // s32 at equal beam isolates what diversity buys (the comparison
-    // table lives in ScaleOpsSpec + the bench notes). Scale shape
+    // s32 at equal beam isolates what entry diversity alone buys: the
+    // graph, the truth, the beam and the rounds are all s32's. Scale shape
     // identical to s32: frontier ≤ max(entries, beam) rows per query,
     // one truth scan, O(n·K) edges.
     "s34_multi_entry_beam" -> { (s, d) =>

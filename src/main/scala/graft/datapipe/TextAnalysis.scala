@@ -91,14 +91,12 @@ object TextAnalysis {
     * `capRow`'s single `cap` column — boilerplate spans are hot join keys
     * that carry no pair information), equi-join on fp, count shared fps
     * per pair. The shuffle carries only (fp, doc_id) longs — never text.
-    * `capRow` defaults to [[d09CapExpr]] over the corpus count;
-    * ScaleProbe passes fixed caps to measure what adaptivity buys.
+    * `capRow` is [[d09CapExpr]] over the corpus count.
     */
-  private[graft] def winnowPairs(docs: DataFrame,
-                                 capRowOpt: Option[DataFrame] = None): DataFrame = {
+  private[graft] def winnowPairs(docs: DataFrame): DataFrame = {
     import graft.functions.WinnowFingerprints.winnow_fps
-    val capRow = capRowOpt.getOrElse(
-      docs.agg(count(lit(1)).as("n")).select(expr(d09CapExpr("n")).as("cap")))
+    val capRow =
+      docs.agg(count(lit(1)).as("n")).select(expr(d09CapExpr("n")).as("cap"))
     // materialized once: fps feeds BOTH the df aggregate (rare) and the
     // semi-join (kept), and without a barrier the winnow kernel ran
     // twice per execution (the r20 checkpoint sat one step too late, on
@@ -828,9 +826,9 @@ object TextAnalysis {
     // recall collapses (measured: 11/39 plants at k=8 vs 39/39 at k=32).
     // The stop-fp cap is CORPUS-ADAPTIVE (greatest(8, floor(log2 n)+1),
     // see [[d09CapExpr]] / [[winnowPairs]]) — a fixed cap was the same
-    // knob shape d03's band width graduated from; ScaleProbe's winnow
-    // section measures wasted verify pairs/doc near-flat under the
-    // adaptive cap vs growing under fixed at 16x.
+    // knob shape d03's band width graduated from; wasted verify
+    // pairs/doc measured near-flat under the adaptive cap vs growing
+    // under a fixed one at 16x (ARCHITECTURE's scale probes).
     "d09_winnow_neardup" -> { (s, d) =>
       import s.implicits._
       winnowPairs(d09Corpus(s, d))

@@ -83,10 +83,7 @@ object Extras {
     // shape as q100: ONE full-outer shuffle join + per-row CASE ladder
     // (bucket the target on the key and even that exchange deletes);
     // per-row `clause` provenance rides the output so the oracle pins
-    // every clause's arbitration AND the ordering. The persisted twin
-    // (SnapshotLog.mergeIntoConditional — same ladder at file
-    // granularity through the manifest layer) is pinned equal to this
-    // algebra in SnapshotLogSpec.
+    // every clause's arbitration AND the ordering.
     "q110_merge_conditional" -> { (s, d) =>
       import s.implicits._
       mergeArbitrateConditional(mergeTarget(s, d), mergeFeed(s, d))
@@ -186,23 +183,20 @@ object Extras {
     // TAILABLE: graft.sources.ChangeFeedSource is a DSv2 table over
     // the snapshot log whose batch read returns every version's
     // inserted rows tagged `_change_version`, planned from the
-    // manifest diff (O(delta) files per version, never a table scan),
-    // and whose micro-batch stream applies ONE committed version per
-    // trigger (admission control) — the form a 100 TB CDC consumer
-    // actually tails. This query drives the BATCH path end-to-end —
-    // including the source's own parquet row decoding — through the
-    // same per-version aggregate as q104, so the DuckDB hash pins the
-    // source against the relational statement; the streamed path
-    // (AvailableNow drain, one-batch-per-version, O(delta) planning)
-    // is pinned row-identical in StreamingSpec. The rewrite version
-    // (v4, compaction) must feed ZERO rows: dataChange=false.
+    // manifest diff (O(delta) files per version, never a table scan)
+    // — the read a 100 TB CDC consumer repeats from its version
+    // cursor. This query drives that read end-to-end — including the
+    // source's own parquet row decoding — through the same per-version
+    // aggregate as q104, so the DuckDB hash pins the source against
+    // the relational statement. The rewrite version (v4, compaction)
+    // must feed ZERO rows: dataChange=false.
     "q111_change_feed" -> { (s, d) =>
       import s.implicits._
       val dir = timeTravelStore(s, d)
       val feed = graft.sources.ChangeFeed.readBatch(s, dir, fromVersion = 1)
         .select($"_change_version".cast("int").as("version"),
           $"o_orderkey", $"o_totalprice")
-      broadcast(Seq(2, 3, 4).toDF("version"))
+      Seq(2, 3, 4).toDF("version")
         .join(feed, Seq("version"), "left_outer")
         .groupBy($"version")
         .agg(count($"o_orderkey").as("n_inserted"),
@@ -1063,7 +1057,7 @@ object Extras {
     * the two table writes inside every timed run, and a regenerated
     * fixture invalidates the layout automatically. Table names and dir
     * are tagged by sf-dir digest so multiple scale factors coexist in
-    * one catalog (StressBench). */
+    * one catalog. */
   private val bktReady = scala.collection.mutable.Set[String]()
   private[graft] def bucketedTables(s: SparkSession, d: String): (String, String) = {
     import s.implicits._
@@ -1472,7 +1466,7 @@ object Extras {
     * which is exactly the production amortization: the layout is written
     * once at ingest and every downstream query prunes against it. The
     * dir name carries a digest of the source sf dir so different scale
-    * factors in one JVM (StressBench) get disjoint layouts.
+    * factors in one JVM get disjoint layouts.
     *
     * Memoized ACROSS processes (round-14 advice: stop paying the
     * ingest-time write inside every timed bench run): the layout dir
@@ -1817,20 +1811,15 @@ object Extras {
         lit("delete")).otherwise(lit("upsert")).as("action"))
   }
 
-  /** q100's three plain clauses (+ the 'replace' action the sequential
-    * within-batch collapse emits, see [[mergeApplyBatch]]: a
-    * delete-then-reinsert batch must RESTART the balance from the
-    * post-delete amounts) — stated as a CONFIGURATION of the general
-    * [[Merge.mergeClauses]] ladder (round-18 verdict #3: one machinery,
-    * not a hard-coded CASE per merge flavor). `status` is the per-row
-    * provenance the batch oracle pins. */
+  /** q100's three plain clauses stated as a CONFIGURATION of the
+    * general [[Merge.mergeClauses]] ladder (round-18 verdict #3: one
+    * machinery, not a hard-coded CASE per merge flavor). `status` is
+    * the per-row provenance the batch oracle pins. */
   private[graft] def mergeArbitrate(target: DataFrame,
                                     source: DataFrame): DataFrame =
     Merge.mergeClauses(target, source, "key",
       matched = Seq(
         Merge.delete("deleted", col("action") === "delete"),
-        Merge.update("updated", col("action") === "replace",
-          "bal" -> col("amt")),
         Merge.update("updated", lit(true),
           "bal" -> (col("bal") + col("amt")))),
       notMatched = Seq(
@@ -1842,10 +1831,7 @@ object Extras {
     * clause list) as a [[Merge.mergeClauses]] configuration: every
     * 'delete' row drops — matched by clause 1, unmatched by the
     * insert clause's AND-predicate — and first-match-wins puts clause
-    * 2 (reset on negative balance) in front of clause 3 (accumulate).
-    * Restated at file granularity in
-    * `SnapshotLog.mergeIntoConditional` (SnapshotLogSpec pins the two
-    * agree). */
+    * 2 (reset on negative balance) in front of clause 3 (accumulate). */
   private[graft] def mergeArbitrateConditional(target: DataFrame,
                                                source: DataFrame): DataFrame =
     Merge.mergeClauses(target, source, "key",
@@ -1858,105 +1844,6 @@ object Extras {
         Merge.insert("inserted", col("action") =!= "delete",
           "bal" -> col("amt"))),
       provenance = Some("clause"))
-
-  /** q100's streamed twin — the CDC APPLY loop (the canonical
-    * foreachBatch-merge deployment: a change feed lands in
-    * micro-batches and each trigger merges it into the persisted
-    * current table with the same three-clause arbitration). State is
-    * a versioned store: `state/batch=N` written by
-    * deterministic overwrite, seeded at `batch=-1` by [[mergeSeed]],
-    * replay of a crashed trigger rewrites its own version from N−1 +
-    * the same delta, versions ABOVE batchId are a stale generation
-    * and fail loud. Within-batch duplicates collapse BEFORE the merge
-    * (delete-wins, amounts decimal-summed) — the addBatch lesson. */
-  def mergeApplyStream(stream: DataFrame, storePath: String,
-                       checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeApplyBatch(batch, batchId, storePath)
-      }
-      .start()
-  }
-
-  /** Seed the store with the initial target state (version −1 — below
-    * every real batch, so trigger 0 merges onto it). */
-  def mergeSeed(target: DataFrame, storePath: String): Unit =
-    target.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storePath/state/batch=-1")
-
-  /** Within-batch collapse contract (round-16 advice #3): WITHOUT an
-    * event-sequence column there is no order to honor, so the collapse
-    * is delete-wins (`min(action)`: 'delete' < 'upsert') with amounts
-    * decimal-summed — right for feeds carrying at most one event per
-    * key per trigger (q100's). WITH a `seq` column the collapse is the
-    * standard CDC sequential apply: a delete RESETS the key, so the
-    * batch's net effect per key is the sum of upsert amounts strictly
-    * AFTER the last delete — emitted as 'replace' when a delete
-    * preceded them (balance restarts from that sum instead of
-    * accumulating onto the pre-delete state), as 'delete' when nothing
-    * followed the last delete, and as a plain summed 'upsert' when no
-    * delete occurred. A delete-then-reinsert micro-batch therefore
-    * keeps the reinsert.
-    *
-    * Versioning: the seed is required, stale generations fail loud,
-    * the predecessor is the newest version STRICTLY below batchId (a
-    * replayed trigger deterministically rewrites its own version —
-    * never merges onto itself), and the write is an idempotent
-    * overwrite of `state/batch=N`. */
-  private[graft] def mergeApplyBatch(batch: DataFrame, batchId: Long,
-                                     storePath: String): Unit = {
-    val s = batch.sparkSession
-    val delta = if (batch.columns.contains("seq")) {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("key"))
-      // last_del hashes by key, as does the groupBy — one exchange,
-      // reused by AQE for the second aggregate
-      batch.withColumn("last_del",
-          max(when(col("action") === "delete", col("seq"))).over(w))
-        .groupBy(col("key")).agg(
-          sum(when(col("action") === "upsert" &&
-                (col("last_del").isNull || col("seq") > col("last_del")),
-              col("amt").cast("decimal(18,4)")))
-            .cast("double").as("amt"),
-          max(col("last_del")).as("last_del"))
-        .select(col("key"), col("amt"),
-          when(col("amt").isNull, lit("delete"))
-            .when(col("last_del").isNotNull, lit("replace"))
-            .otherwise(lit("upsert")).as("action"))
-    } else batch.groupBy(col("key")).agg(
-      sum(col("amt").cast("decimal(18,4)")).cast("double").as("amt"),
-      min(col("action")).as("action")) // 'delete' < 'upsert': delete wins
-    import org.apache.hadoop.fs.Path
-    val stateDir = new Path(s"$storePath/state")
-    val fs = stateDir.getFileSystem(s.sessionState.newHadoopConf())
-    val vs =
-      if (!fs.exists(stateDir)) Seq.empty[Long]
-      else fs.listStatus(stateDir).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong)
-    require(vs.contains(-1L),
-      s"merge store at $storePath has no seed — call mergeSeed first")
-    require(!vs.exists(_ > batchId),
-      s"merge store at $storePath already holds batch > $batchId " +
-      "— stale generation; clear the store or keep the original checkpoint")
-    val p = vs.filter(_ < batchId).max // at least the −1 seed
-    mergeArbitrate(s.read.parquet(s"$storePath/state/batch=$p"), delta)
-      .select(col("key"), col("bal"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storePath/state/batch=$batchId")
-  }
-
-  /** The merged table at its latest version. */
-  def mergeState(s: SparkSession, storePath: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val stateDir = new Path(s"$storePath/state")
-    val fs = stateDir.getFileSystem(s.sessionState.newHadoopConf())
-    val last = fs.listStatus(stateDir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong).max
-    s.read.parquet(s"$storePath/state/batch=$last")
-      .select(col("key"), col("bal")).orderBy(col("key"))
-  }
 
   def oracleSql: Map[String, String] = Map(
 

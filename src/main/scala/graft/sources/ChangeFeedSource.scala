@@ -4,7 +4,6 @@ import java.util
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -30,16 +29,13 @@ import scala.jdk.CollectionConverters._
   *    through the FULL DML surface instead of silently diverging
   *    (round-18 verdict #1);
   *  - a pure byte-moving rewrite (compaction / z-order) emits NOTHING
-  *    (Delta's dataChange=false), which q104 pins;
-  *  - a RESTORE through `restoreVersion(s, dir, v)` emits its rollback
-  *    as file-diff deletes + inserts (the 2-arg metadata-only restore
-  *    stays silent — prefer the CDC overload on a tailed store).
+  *    (Delta's dataChange=false), which q104 pins.
   *
-  * Surfaces (one Scan, both read paths): BATCH = all changes in
-  * versions (fromVersion, latest] (q111/q113 hash-check it end-to-end,
-  * incl. this source's own parquet row decoding); MICRO-BATCH = one
-  * committed version per trigger (admission control), AvailableNow
-  * drains exactly to the head captured at start.
+  * One surface, the BATCH read: all changes in versions
+  * (fromVersion, latest] (q111/q113 hash-check it end-to-end, incl.
+  * this source's own parquet row decoding). A consumer tails the store
+  * the way the ingest runs — a cron-run batch read from a version
+  * cursor it keeps itself (StreamingSpec's replicas).
   *
   * The feed schema resolves from the manifests' `#schema=` headers
   * UNIONED across the tailed range — O(range) log text, zero footer
@@ -65,7 +61,7 @@ class ChangeFeedSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val dir = options.get("path")
     val (schema, to) = ChangeFeed.feedSchemaAt(dir,
-      ChangeFeed.resolveFrom(dir, options))
+      ChangeFeed.resolveFrom(options))
     resolvedTo = Some((dir, to))
     schema
   }
@@ -107,35 +103,10 @@ object ChangeFeed {
       .option("pruneLo", lo).option("pruneHi", hi).load()
       .filter(org.apache.spark.sql.functions.col(column).between(lo, hi))
 
-  /** Streaming read: tails the store one committed version per
-    * micro-batch, starting after `fromVersion`. */
-  def readStream(s: SparkSession, dir: String, fromVersion: Int): DataFrame =
-    s.readStream.format("graft.sources.ChangeFeedSource")
-      .option("path", dir).option("fromVersion", fromVersion).load()
-
-  /** Batch read of all changes committed strictly AFTER the wall-clock
-    * instant (Delta's `startingTimestamp`): resolves against the
-    * manifests' commit mtimes — the versionAsOf clock — so "what
-    * changed since last night's sync" needs no version bookkeeping. */
-  def readBatchSince(s: SparkSession, dir: String, tsMillis: Long): DataFrame =
-    s.read.format("graft.sources.ChangeFeedSource")
-      .option("path", dir).option("fromTimestamp", tsMillis).load()
-
-  /** The exclusive starting version: an explicit `fromVersion` wins;
-    * else `fromTimestamp` (epoch millis) resolves to the largest
-    * version committed at or before it — versions committed strictly
-    * after the instant feed (an instant before the first commit feeds
-    * everything); else 0. */
-  private[graft] def resolveFrom(dir: String,
-                                 options: CaseInsensitiveStringMap): Int =
-    Option(options.get("fromVersion")).map(_.toInt).getOrElse {
-      Option(options.get("fromTimestamp")).map { t =>
-        val ts = t.toLong
-        SnapshotLog.versions(dir)
-          .filter(v => SnapshotLog.commitTimeMillis(dir, v) <= ts)
-          .maxOption.getOrElse(0)
-      }.getOrElse(0)
-    }
+  /** The exclusive starting version: the `fromVersion` option, else 0
+    * (the whole history). */
+  private[graft] def resolveFrom(options: CaseInsensitiveStringMap): Int =
+    Option(options.get("fromVersion")).map(_.toInt).getOrElse(0)
 
   /** The session Hadoop conf on the driver (the DSv2 entry points run
     * there) — NOT a bare `new Configuration()`, so non-default
@@ -202,7 +173,7 @@ object ChangeFeed {
       : (StructType, Int) = {
     require(dir != null, "change feed requires a 'path' option")
     val to = SnapshotLog.latestVersion(dir)
-    // an empty tailed range (stream started at head) still needs a
+    // an empty tailed range (a read from the head) still needs a
     // schema: the head version's
     val range = (fromVersion + 1) to to
     val schemas = (if (range.isEmpty) Seq(to) else range)
@@ -266,10 +237,10 @@ class ChangeFeedTable(schema0: StructType,
   override def name(): String = s"change_feed($dir)"
   override def schema(): StructType = schema0
   override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
+    Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new ChangeFeedScanBuilder(dir,
-      ChangeFeed.resolveFrom(dir, options), schema0, capturedTo, prune)
+      ChangeFeed.resolveFrom(options), schema0, capturedTo, prune)
 }
 
 /** Column pruning reaches the parquet readers (the projection is
@@ -323,75 +294,11 @@ class ChangeFeedScan(dir: String, fromVersion: Int, schema: StructType,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ChangeFeedReaderFactory(schema, physMap, conf)
-
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new ChangeFeedMicroBatchStream(dir, fromVersion, schema, physMap, conf)
 }
 
 case class ChangeFeedPartition(path: String, version: Int,
                                isChange: Boolean, commitMs: Long)
     extends InputPartition
-
-/** One committed version per micro-batch: admission control caps each
-  * trigger's end offset at start+1, so the stream applies versions in
-  * commit order — the consumer sees version boundaries as batch
-  * boundaries (the foreachBatch-apply contract). AvailableNow captures
-  * the head version at start and drains exactly to it. */
-class ChangeFeedMicroBatchStream(dir: String, fromVersion: Int,
-                                 schema: StructType,
-                                 physMap: Map[String, String],
-                                 conf: SerializableConfiguration)
-    extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow {
-
-  private case class VersionOffset(v: Int) extends Offset {
-    override def json(): String = v.toString
-  }
-
-  @volatile private var availableTarget: Option[Int] = None
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableTarget = Some(math.max(fromVersion,
-      SnapshotLog.versions(dir).lastOption.getOrElse(fromVersion)))
-
-  override def initialOffset(): Offset = VersionOffset(fromVersion)
-  override def deserializeOffset(json: String): Offset =
-    VersionOffset(json.toInt)
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val from = start.asInstanceOf[VersionOffset].v
-    val cap = availableTarget.getOrElse(
-      SnapshotLog.versions(dir).lastOption.getOrElse(fromVersion))
-    VersionOffset(if (from < cap) from + 1 else from)
-  }
-
-  override def reportLatestOffset(): Offset =
-    VersionOffset(availableTarget.getOrElse(
-      SnapshotLog.versions(dir).lastOption.getOrElse(fromVersion)))
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "admission-controlled source: latestOffset(start, limit) is used")
-
-  override def planInputPartitions(s: Offset, e: Offset): Array[InputPartition] = {
-    val from = s.asInstanceOf[VersionOffset].v
-    val to = e.asInstanceOf[VersionOffset].v
-    ((from + 1) to to).flatMap { v =>
-      val ts = SnapshotLog.commitTimeMillis(dir, v)
-      ChangeFeed.feedEntries(dir, v).map { case (f, isChange) =>
-        ChangeFeedPartition(s"$dir/$f", v, isChange, ts): InputPartition
-      }
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ChangeFeedReaderFactory(schema, physMap, conf)
-
-  override def commit(offset: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
 
 /** Reads ONE contributed file through parquet-hadoop's Group API with
   * the requested columns projected into the read schema (column

@@ -274,8 +274,8 @@ object SnapshotLog {
   }
 
   /** A version's commit time = its manifest's mtime (stamped by the
-    * atomic claim; [[versionAsOf]]'s clock) — what the change feed
-    * stamps on `_change_timestamp`. */
+    * atomic claim) — what the change feed stamps on
+    * `_change_timestamp`. */
   private[graft] def commitTimeMillis(dir: String, v: Int): Long =
     java.nio.file.Files.getLastModifiedTime(manifestPath(dir, v)).toMillis
 
@@ -765,8 +765,7 @@ object SnapshotLog {
     *    atomic claim, as a `#batch=` body header) and no-ops — never a
     *    duplicate append;
     *  - a writer restarting its batch numbering below the committed
-    *    high-water mark → fail loud (the mergeApplyStream
-    *    stale-generation discipline).
+    *    high-water mark → fail loud (a stale generation).
     * Returns the version serving this batch — freshly committed, or the
     * already-committed one on a post-commit replay. */
   private[graft] def appendVersionForBatch(batch: DataFrame, dir: String,
@@ -782,7 +781,7 @@ object SnapshotLog {
     // branch is exactly batchId == the committed high-water mark; any
     // batchId BELOW it (committed or not) means a fresh checkpoint is
     // running over an old store — fail loud, never fork the history
-    // (the mergeApplyStream generation discipline). A vacuumed tagged
+    // (a stale generation). A vacuumed tagged
     // manifest leaves no version to return; the latest version already
     // CONTAINS the replayed batch's rows, so it serves.
     if (batchId == maxB)
@@ -849,28 +848,6 @@ object SnapshotLog {
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
     }
-
-  /** TIMESTAMP AS OF resolution: the largest version whose manifest
-    * was committed at or before `tsMillis` (commit time = the manifest
-    * file's mtime, stamped by the atomic claim itself — no separate
-    * clock to drift). Fails loud for a timestamp before the first
-    * commit, like Delta's. */
-  def versionAsOf(dir: String, tsMillis: Long): Int = {
-    val vs = versions(dir).filter { v =>
-      java.nio.file.Files.getLastModifiedTime(manifestPath(dir, v))
-        .toMillis <= tsMillis
-    }
-    require(vs.nonEmpty,
-      s"no version at $dir committed at or before $tsMillis " +
-        s"(earliest: ${versions(dir).headOption.getOrElse(-1)})")
-    vs.max
-  }
-
-  /** Read the table as of a wall-clock instant — [[versionAsOf]] +
-    * [[readVersion]]. */
-  def readVersionAsOf(s: SparkSession, dir: String, tsMillis: Long,
-                      mergeSchema: Boolean = false): DataFrame =
-    readVersion(s, dir, versionAsOf(dir, tsMillis), mergeSchema)
 
   /** Read the table exactly as of version `v`: a plain multi-file
     * parquet scan over the manifest's files. `mergeSchema` is the
@@ -1425,66 +1402,23 @@ object SnapshotLog {
     import org.apache.spark.sql.functions._
     import graft.operators.Merge
     // the arbitration (operators.Extras.mergeArbitrate's algebra,
-    // restated over the touched slice — ALL FOUR actions, incl. the
-    // 'replace' the CDC sequential-apply collapse emits, so persisting
-    // that feed through mergeInto stays correct): unmatched target
-    // rows pass, 'replace' restarts the balance, matched upserts
-    // accumulate, deletes drop, unmatched source upserts insert
-    mergeIntoClauses(s, dir, source, keyCol, balCol,
-      matched = Seq(
-        Merge.delete("delete", col("action") === "delete"),
-        Merge.update("replace", col("action") === "replace",
-          "bal" -> col("amt")),
-        Merge.update("update", lit(true),
-          "bal" -> (col("bal") + col("amt")))),
-      notMatched = Seq(
-        Merge.insert("insert", col("action") =!= "delete",
-          "bal" -> col("amt"))))
-  }
-
-  /** [[mergeInto]] with CONDITIONAL matched clauses — the
-    * `WHEN MATCHED AND <predicate> THEN ...` surface of a real MERGE
-    * INTO, with first-match-wins clause ordering (q110's batch
-    * algebra, persisted):
-    *   1. WHEN MATCHED AND action = 'delete'  THEN DELETE
-    *   2. WHEN MATCHED AND bal < 0            THEN UPDATE SET bal = amt
-    *   3. WHEN MATCHED                        THEN UPDATE SET bal = bal + amt
-    *   4. WHEN NOT MATCHED AND action <> 'delete' THEN INSERT (amt)
-    * Clause 2 SHADOWS clause 3 for delinquent balances — the ordering
-    * semantics a single-CASE arbitration can't fake. Same file
-    * granularity and column preservation as [[mergeInto]]. */
-  def mergeIntoConditional(s: SparkSession, dir: String, source: DataFrame,
-                           keyCol: String, balCol: String): (Int, Int, Int) = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.Merge
-    mergeIntoClauses(s, dir, source, keyCol, balCol,
-      matched = Seq(
-        Merge.delete("delete", col("action") === "delete"),
-        Merge.update("reset", col("bal") < 0, "bal" -> col("amt")),
-        Merge.update("update", lit(true),
-          "bal" -> (col("bal") + col("amt")))),
-      notMatched = Seq(
-        Merge.insert("insert", col("action") =!= "delete",
-          "bal" -> col("amt"))))
-  }
-
-  /** The GENERAL persisted MERGE: caller-supplied first-match-wins
-    * clause ladders (conditions + SET/INSERT maps over the canonical
-    * `key`/`bal` + source-column shape — see
-    * [[graft.operators.Merge.mergeClauses]]) executed at FILE
-    * granularity through the snapshot log: the per-key range probe
-    * picks the touched files, untouched files share verbatim, the
-    * commit is an O(edit) delta with row-level CDC. [[mergeInto]] and
-    * [[mergeIntoConditional]] are two configurations of this. */
-  def mergeIntoClauses(s: SparkSession, dir: String, source: DataFrame,
-                       keyCol: String, balCol: String,
-                       matched: Seq[graft.operators.Merge.MergeClause],
-                       notMatched: Seq[graft.operators.Merge.MergeClause])
-      : (Int, Int, Int) =
+    // restated over the touched slice, plus a 'replace' action that
+    // restarts the balance from the source amount instead of
+    // accumulating onto it): unmatched target rows pass, matched
+    // upserts accumulate, deletes drop, unmatched source upserts insert
     mergeIntoArbitrated(s, dir, source, keyCol, balCol) { (tgt, src) =>
-      graft.operators.Merge.mergeClauses(tgt, src, "key",
-        matched, notMatched)
+      Merge.mergeClauses(tgt, src, "key",
+        matched = Seq(
+          Merge.delete("delete", col("action") === "delete"),
+          Merge.update("replace", col("action") === "replace",
+            "bal" -> col("amt")),
+          Merge.update("update", lit(true),
+            "bal" -> (col("bal") + col("amt")))),
+        notMatched = Seq(
+          Merge.insert("insert", col("action") =!= "delete",
+            "bal" -> col("amt"))))
     }
+  }
 
   /** The shared file-granularity machinery of the merge family: the
     * per-key range probe picks the touched files, `arbitrate` (over a
@@ -1863,84 +1797,6 @@ object SnapshotLog {
     }
   }
 
-  /** Roll the table back to version `v` — committed as a NEW version
-    * whose manifest is a copy of `v`'s (the Delta RESTORE shape):
-    * history stays linear and intact, nothing is deleted, and the
-    * files are shared, so the rollback is O(manifest) metadata
-    * (committed as a full checkpoint: a restore's content has no
-    * relation to its predecessor's, so a delta would be degenerate).
-    * The restored version must still be on disk (not vacuumed). */
-  def restoreVersion(dir: String, v: Int): Int = {
-    val files = manifest(dir, v) // fails loud if vacuumed
-    val next = latestVersion(dir) + 1
-    // ranges AND schema travel with the restore from the RESTORED
-    // version's resolution (the head's map may have dropped files
-    // replaced since; the head's schema may have evolved past v's)
-    commitManifest(dir, next, files,
-      stats = FileStats(fileRanges(dir, v), fileTypedRanges(dir, v)),
-      schema = Some(tableSchema(dir, v)))
-    next
-  }
-
-  /** [[restoreVersion]] WITH row-level CDC — a restore CHANGES the
-    * logical table (unlike a compaction), so a tailed store should
-    * prefer this overload: the change record derives from the
-    * manifest FILE DIFF (files are immutable, so a head-only file's
-    * visible rows are exactly the restore's deletes and a
-    * restored-only file's its inserts) — O(differing files) IO, never
-    * a table diff. Guard: a file SHARED by both manifests must sit
-    * under the same applicable deletion vectors on both sides;
-    * diverging dv contexts would need a per-row content diff, so this
-    * fails loud with the escape hatch (compact first — compaction
-    * materializes vectors away). */
-  def restoreVersion(s: SparkSession, dir: String, v: Int): Int = {
-    import org.apache.spark.sql.functions.lit
-    val head = latestVersion(dir)
-    val restored = manifest(dir, v)
-    val headLines = manifest(dir, head)
-    // the dv context of a plain file = the dv entries AFTER it in its
-    // manifest (a vector masks only files committed before it)
-    def dvContext(lines: Seq[String]): Map[String, Set[String]] = {
-      var pending = Vector.empty[String]
-      val out = scala.collection.mutable.Map[String, Set[String]]()
-      lines.reverse.foreach {
-        case l if l.startsWith("dv:") => pending :+= l
-        case f                        => out(f) = pending.toSet
-      }
-      out.toMap
-    }
-    val hCtx = dvContext(headLines)
-    val rCtx = dvContext(restored)
-    val shared = hCtx.keySet & rCtx.keySet
-    val diverged = shared.filter(f => hCtx(f) != rCtx(f))
-    require(diverged.isEmpty,
-      s"restore CDC at $dir: files ${diverged.take(3).mkString(",")} sit " +
-        "under different deletion vectors at the head and the restored " +
-        "version — a file diff can't state their row changes; compact " +
-        "the head first (vectors materialize away), then restore")
-    val next = head + 1
-    def visible(lines: Seq[String], keep: Set[String]): Option[DataFrame] =
-      if (keep.isEmpty) None
-      else Some(readLines(s, dir,
-        lines.filter(l => l.startsWith("dv:") || keep.contains(l)),
-        mergeSchema = true))
-    val dels = visible(headLines, hCtx.keySet -- rCtx.keySet)
-      .map(_.withColumn("_change_type", lit("delete")))
-    val ins = visible(restored, rCtx.keySet -- hCtx.keySet)
-      .map(_.withColumn("_change_type", lit("insert")))
-    val changes = (dels, ins) match {
-      case (Some(d), Some(i)) =>
-        Some(d.unionByName(i, allowMissingColumns = true))
-      case (d, i) => d.orElse(i)
-    }
-    val cdcF = changes.map(writeChangeFiles(s, dir, next, _))
-      .getOrElse(Seq.empty)
-    commitManifest(dir, next, restored,
-      stats = FileStats(fileRanges(dir, v), fileTypedRanges(dir, v)),
-      schema = Some(tableSchema(dir, v)), cdc = cdcF)
-    next
-  }
-
   /** Drop history below `retainFrom`: delete manifests of older
     * versions and every data file no RETAINED manifest references —
     * incl. orphans from a crashed compaction (data files moved in, no
@@ -1948,7 +1804,7 @@ object SnapshotLog {
     * [[manifest]]. If `retainFrom` is a delta manifest, it is first
     * MATERIALIZED to a full checkpoint (its chain is about to be
     * deleted) with its ORIGINAL commit mtime preserved (the
-    * [[versionAsOf]] clock — review #3); every retained delta chains
+    * `_change_timestamp` clock — review #3); every retained delta chains
     * down through it, so all retained versions keep resolving.
     *
     * `graceMillis` protects IN-FLIGHT writers (review #2, Delta's
@@ -2000,18 +1856,18 @@ object SnapshotLog {
         boundary.schemaJson.map(j => s"#schema=$j").toSeq ++
         rangeHeaders ++ tstatHeaders
       val target = manifestPath(dir, retainFrom)
-      // the manifest's mtime IS its commit time (versionAsOf's clock):
-      // the materialized checkpoint must keep it, or the retention
-      // boundary becomes unreachable by timestamp (review #3). The
-      // stamp goes on the TMP file so it TRAVELS WITH the atomic move —
-      // a crash between move and a post-move stamp would leave the
-      // boundary with a fresh mtime, silently shifting TIMESTAMP AS OF
-      // resolution for that version (round-18 advice #2)
+      // the manifest's mtime IS its commit time (the feed's
+      // `_change_timestamp` clock): the materialized checkpoint must
+      // keep it, or the retention boundary's changes would read as
+      // committed now (review #3). The stamp goes on the TMP file so it
+      // TRAVELS WITH the atomic move — a crash between move and a
+      // post-move stamp would leave the boundary with a fresh mtime,
+      // silently shifting that version's commit time (round-18 advice #2)
       val commitTime = java.nio.file.Files.getLastModifiedTime(target)
       val tmp = logDir(dir).resolve(
         f"v$retainFrom%05d.${rewriteToken()}.tmp")
       // the parsed-manifest cache validates by (mtime, size) and this
-      // rewrite deliberately PRESERVES mtime (the versionAsOf clock):
+      // rewrite deliberately PRESERVES mtime (the commit-time clock):
       // if the materialized FULL form happened to hit the delta's
       // exact byte length, a warm process would keep serving the
       // stale delta parse and resolve through base manifests this

@@ -12,9 +12,15 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 object FunctionBridge {
   type Builder = Seq[Expression] => Expression
 
-  def registerTemp(spark: SparkSession, name: String, b: Builder): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => b(exprs), "scala_udf")
+  /** Registers `name` unless the session's registry already holds it
+    * (an earlier call, or the injected extension), so a repeated call
+    * replaces nothing. */
+  def registerTempIfAbsent(spark: SparkSession, name: String,
+                           b: Builder): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, exprs => b(exprs), "scala_udf")
+  }
 
   def injectable(name: String, b: Builder)
       : (FunctionIdentifier, ExpressionInfo, FunctionRegistry.FunctionBuilder) =

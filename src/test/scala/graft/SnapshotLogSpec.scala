@@ -81,26 +81,6 @@ class SnapshotLogSpec extends SparkSpec {
     assert(e.getMessage.contains("vacuumed or never committed"))
   }
 
-  test("restore commits an old snapshot as a new version; history stays linear and shared") {
-    val dir = freshDir()
-    (1 to 3).foreach(i => SnapshotLog.appendVersion(
-      frame(Seq(i.toLong)), dir))
-    SnapshotLog.compactVersion(spark, dir) // v4
-    val v5 = SnapshotLog.restoreVersion(dir, 1)
-    assert(v5 === 5)
-    // the restored head reads exactly like v1; nothing was deleted
-    assert(rows(dir, 5) === Set(1L))
-    assert(rows(dir, 4) === Set(1L, 2L, 3L))
-    // restore is metadata-only: v5 shares v1's files verbatim
-    assert(SnapshotLog.manifest(dir, 5) === SnapshotLog.manifest(dir, 1))
-    // work continues on top of the rollback
-    val v6 = SnapshotLog.appendVersion(frame(Seq(7L)), dir)
-    assert(rows(dir, v6) === Set(1L, 7L))
-    // vacuum retaining the restore keeps the shared v1 files alive
-    SnapshotLog.vacuum(dir, retainFrom = 5, graceMillis = 0)
-    assert(rows(dir, 5) === Set(1L) && rows(dir, 6) === Set(1L, 7L))
-  }
-
   test("streamed appends are exactly-once: one version per micro-batch, replay no-ops, crash orphans stay invisible") {
     val root = tempDir("graft_snapstream")
     val dir = root.resolve("table").toString
@@ -290,8 +270,8 @@ class SnapshotLogSpec extends SparkSpec {
     val (v5, rw5, kp5) = SnapshotLog.mergeInto(spark, dir, far, "k", "x")
     assert(rw5 === 0 && kp5 === v4files &&
       rows(dir, v5).contains(55555L), s"insert-only merge rw=$rw5 kp=$kp5")
-    // the 'replace' action (the CDC sequential-apply collapse's output)
-    // RESTARTS the balance instead of accumulating onto it
+    // the 'replace' action RESTARTS the balance instead of
+    // accumulating onto it
     val rep = Seq((101L, 7.0, "replace")).toDF("key", "amt", "action")
     val (v6, _, _) = SnapshotLog.mergeInto(spark, dir, rep, "k", "x")
     val after = SnapshotLog.readVersion(spark, dir, v6)
@@ -329,7 +309,7 @@ class SnapshotLogSpec extends SparkSpec {
       s"NULL-key row must survive a range delete, got $left")
   }
 
-  test("model property: random append/compact/restore/delete sequences match an in-memory model at EVERY version; a feed-built replica matches too") {
+  test("model property: random append/compact/delete sequences match an in-memory model at EVERY version; a feed-built replica matches too") {
     // seeded-Gen sampling (the PropertySpec discipline — Spark jobs are
     // too slow for large example counts): each sequence drives the real
     // store and a Vector[Set[Long]] model through the same ops; the
@@ -340,14 +320,12 @@ class SnapshotLogSpec extends SparkSpec {
     sealed trait Op
     case class Append(ks: Seq[Long]) extends Op
     case class Compact(zorder: Boolean) extends Op
-    case class Restore(frac: Double) extends Op
     case class Delete(loFrac: Double, hiFrac: Double, mor: Boolean)
       extends Op
     def opGen(i: Int): Gen[Op] = Gen.frequency(
       5 -> Gen.choose(1, 4).map(n =>
         Append((1 to n).map(j => i * 100L + j))), // globally unique keys
       2 -> Gen.oneOf(true, false).map(Compact.apply), // linear OR z-order
-      1 -> Gen.choose(0.0, 1.0).map(Restore.apply),
       3 -> Gen.zip(Gen.choose(0.0, 1.0), Gen.choose(0.0, 1.0),
         Gen.oneOf(true, false)).map {
         case (a, b, mor) => Delete(math.min(a, b), math.max(a, b), mor) })
@@ -370,24 +348,6 @@ class SnapshotLogSpec extends SparkSpec {
             else SnapshotLog.compactVersion(spark, dir, targetBytes = 1L,
               clusterBy = Some("k"))
             model :+= model.last
-          case Restore(frac) =>
-            val v = 1 + (frac * (model.size - 1)).toInt.min(model.size - 1)
-            // the CDC overload, so the feed-replay invariant below
-            // stays total; a dv-divergence refusal takes its own
-            // documented escape hatch (compact — a model no-op — then
-            // restore)
-            try {
-              SnapshotLog.restoreVersion(spark, dir, v)
-              model :+= model(v - 1)
-            } catch {
-              case e: IllegalArgumentException
-                  if e.getMessage.contains("compact the head first") =>
-                SnapshotLog.compactVersion(spark, dir, targetBytes = 1L,
-                  clusterBy = Some("k"))
-                model :+= model.last
-                SnapshotLog.restoreVersion(spark, dir, v)
-                model :+= model(v - 1)
-            }
           case Delete(lf, hf, mor) =>
             val keys = model.last.toSeq.sorted
             if (keys.isEmpty) {
@@ -413,9 +373,9 @@ class SnapshotLogSpec extends SparkSpec {
       }
       // CDC TOTALITY under the same random history: a replica built
       // ONLY from the change feed (appends feed inserts, both delete
-      // flavors feed preimages, CDC restores feed their file diff,
-      // compactions feed nothing) must match the model at EVERY
-      // version — the replication loop's correctness, property-tested
+      // flavors feed preimages, compactions feed nothing) must match
+      // the model at EVERY version — the replication loop's
+      // correctness, property-tested
       val byVersion = graft.sources.ChangeFeed
         .readBatch(spark, dir, fromVersion = 0)
         .select($"_change_version".cast("int"), $"_change_type", $"k")
@@ -583,41 +543,6 @@ class SnapshotLogSpec extends SparkSpec {
     assert(after(4L) === ((40.0, Some("n4"))))
   }
 
-  test("conditional merge clauses: ordered WHEN MATCHED AND predicates, persisted at file granularity") {
-    val dir = freshDir()
-    // two range-clustered files; key 2 carries a NEGATIVE balance (the
-    // delinquent case clause 2 resets)
-    SnapshotLog.appendVersion(
-      Seq((1L, 10.0), (2L, -5.0), (3L, 30.0)).toDF("k", "x").coalesce(1), dir)
-    SnapshotLog.appendVersion(
-      Seq((101L, 1000.0), (102L, 2000.0)).toDF("k", "x").coalesce(1), dir)
-    val src = Seq(
-      (1L, 7.0, "upsert"),    // clause 3: accumulate -> 17
-      (2L, 50.0, "upsert"),   // clause 2 SHADOWS clause 3: reset -> 50
-      (3L, 0.0, "delete"),    // clause 1: delete
-      (9L, 99.0, "upsert"),   // clause 4: insert
-      (8L, 1.0, "delete")     // unmatched delete: dropped by clause 4's AND
-    ).toDF("key", "amt", "action")
-    val (v, rewritten, kept) =
-      SnapshotLog.mergeIntoConditional(spark, dir, src, "k", "x")
-    assert(rewritten === 1 && kept === 1,
-      s"conditional merge granularity: rewrote $rewritten, kept $kept")
-    val got = SnapshotLog.readVersion(spark, dir, v)
-      .select($"k", $"x").as[(Long, Double)].collect().toMap
-    assert(got === Map(1L -> 17.0, 2L -> 50.0, 9L -> 99.0,
-      101L -> 1000.0, 102L -> 2000.0), s"clause arbitration: $got")
-    // pre-merge version still reads everything (history is the undo)
-    assert(rows(dir, 2) === Set(1L, 2L, 3L, 101L, 102L))
-    // the persisted ladder and q110's BATCH algebra are the same
-    // function: applying mergeArbitrateConditional to the same target
-    // state and feed reproduces the committed version row-for-row
-    val batch = operators.Extras.mergeArbitrateConditional(
-      SnapshotLog.readVersion(spark, dir, 2)
-        .select($"k".as("key"), $"x".as("bal")), src)
-      .select($"key", $"bal").as[(Long, Double)].collect().toMap
-    assert(batch === got, "persisted twin diverged from the batch algebra")
-  }
-
   test("z-order compaction: data skipping bites on BOTH columns; linear clustering only on one") {
     import spark.implicits._
     // a 32x32 uniform grid of independent (a, b) keys — the workload
@@ -685,11 +610,6 @@ class SnapshotLogSpec extends SparkSpec {
     val (v6, mrw, _) = SnapshotLog.mergeInto(spark, dir, src, "k", "x")
     assert(mrw === 1, s"merge probe touched $mrw files")
     assert(rows(dir, v6) === Set(2L, 3L, 101L, 102L, 202L, 9999L))
-    // a restore carries the restored version's ranges forward
-    val v7 = SnapshotLog.restoreVersion(dir, 3)
-    val (_, kept7, total7) = SnapshotLog.readVersionWhere(
-      spark, dir, v7, "k", 100L, 150L)
-    assert(kept7 === 1 && total7 === 3)
     // a store whose manifests carry no #range headers has no stats:
     // every file is read (kept = total) and the rows are unchanged
     val prunedRows = pruned.select($"k").as[Long].collect().toSet
@@ -786,7 +706,8 @@ class SnapshotLogSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(staged),
       "vacuum left a stale attempt behind a committed version")
     // review #3: materializing a delta retention boundary must keep
-    // the manifest's ORIGINAL mtime — it IS versionAsOf's clock
+    // the manifest's ORIGINAL mtime — it IS the commit time the feed
+    // stamps on `_change_timestamp`
     val dir2 = freshDir()
     (1 to 15).foreach(i =>
       SnapshotLog.appendVersion(frame(Seq(i.toLong)).coalesce(1), dir2))
@@ -797,32 +718,9 @@ class SnapshotLogSpec extends SparkSpec {
         java.nio.file.attribute.FileTime.fromMillis(v * 1000L))
     }
     SnapshotLog.vacuum(dir2, retainFrom = 14, graceMillis = 0) // delta boundary
-    assert(SnapshotLog.versionAsOf(dir2, 14500L) === 14,
+    assert(SnapshotLog.commitTimeMillis(dir2, 14) === 14000L,
       "materialized boundary lost its commit time")
-    assert(SnapshotLog.versionAsOf(dir2, 15000L) === 15)
-  }
-
-  test("TIMESTAMP AS OF resolves by commit time; pre-history timestamps fail loud") {
-    val dir = freshDir()
-    (1 to 3).foreach(i =>
-      SnapshotLog.appendVersion(frame(Seq(i.toLong)).coalesce(1), dir))
-    // pin commit times explicitly (the resolver reads manifest mtimes,
-    // stamped by the atomic claim — the test just makes them exact)
-    val ld = java.nio.file.Paths.get(dir, "_graft_log")
-    (1 to 3).foreach { v =>
-      java.nio.file.Files.setLastModifiedTime(
-        ld.resolve(f"v$v%05d.manifest"),
-        java.nio.file.attribute.FileTime.fromMillis(v * 1000L))
-    }
-    assert(SnapshotLog.versionAsOf(dir, 1000L) === 1)
-    assert(SnapshotLog.versionAsOf(dir, 2999L) === 2)
-    assert(SnapshotLog.versionAsOf(dir, 999999L) === 3)
-    assert(SnapshotLog.readVersionAsOf(spark, dir, 2999L)
-      .select($"k").as[Long].collect().toSet === Set(1L, 2L))
-    val e = intercept[IllegalArgumentException] {
-      SnapshotLog.versionAsOf(dir, 500L)
-    }
-    assert(e.getMessage.contains("no version"))
+    assert(SnapshotLog.commitTimeMillis(dir2, 15) === 15000L)
   }
 
   test("q102's store replays: per-version sets equal the cumulative orders slices") {
@@ -867,8 +765,7 @@ class SnapshotLogSpec extends SparkSpec {
       (5L, "delete", 101L, 1010.0),
       (5L, "insert", 9L, 90.0)), s"feed: $feed")
     // _change_timestamp rides every row = its version's commit mtime
-    // (the versionAsOf clock), and fromTimestamp resolves the feed's
-    // start against the same clock — pin both on synthetic mtimes
+    // — pinned on synthetic mtimes
     val ld = java.nio.file.Paths.get(dir, "_graft_log")
     (1 to 5).foreach(v => java.nio.file.Files.setLastModifiedTime(
       ld.resolve(f"v$v%05d.manifest"),
@@ -878,10 +775,6 @@ class SnapshotLogSpec extends SparkSpec {
       .distinct().as[(Long, Long)].collect().toMap
     assert((1L to 5L).forall(v => stamped(v) === v * 1000L),
       s"commit stamps: $stamped")
-    val since = ChangeFeed.readBatchSince(spark, dir, 3 * 1000000L)
-      .select($"_change_version").distinct().as[Long].collect().toSet
-    assert(since === Set(4L, 5L),
-      "fromTimestamp must feed strictly-after versions only")
     // a byte-moving rewrite still feeds NOTHING (dataChange = false)
     SnapshotLog.compactVersion(spark, dir)                               // v6
     assert(ChangeFeed.readBatch(spark, dir, fromVersion = 5).isEmpty)
@@ -955,43 +848,6 @@ class SnapshotLogSpec extends SparkSpec {
     assert(SnapshotLog.appendVersionForBatch(
       frame(Seq(999L)).coalesce(1), dir, 99L) === nv)
     assert(SnapshotLog.versions(dir).max === nv)
-  }
-
-  test("restore with CDC: the rollback feeds as file-diff deletes + inserts; dv divergence fails loud with the compact escape hatch") {
-    import graft.sources.ChangeFeed
-    val dir = freshDir()
-    SnapshotLog.appendVersion(frame(Seq(1L, 2L)).coalesce(1), dir)   // v1: fileA {1,2}
-    SnapshotLog.appendVersion(frame(Seq(3L)).coalesce(1), dir)       // v2: +fileB {3}
-    SnapshotLog.deleteWhere(spark, dir, "k", 2L, 2L)                 // v3: fileA -> fileA' {1}
-    val v4 = SnapshotLog.restoreVersion(spark, dir, 1)
-    assert(v4 === 4 && rows(dir, 4) === Set(1L, 2L))
-    // file-granularity diff (files are immutable): head-only files'
-    // visible rows delete, restored-only files' insert — a row living
-    // in a rewritten file (k=1) legitimately appears on both sides,
-    // and the keyed apply (remove deletes, add inserts) converges
-    val feed = ChangeFeed.readBatch(spark, dir, fromVersion = 3)
-      .select($"_change_type", $"k").as[(String, Long)].collect().toSet
-    assert(feed === Set(("delete", 1L), ("delete", 3L),
-      ("insert", 1L), ("insert", 2L)), s"restore feed: $feed")
-    // the metadata-only 2-arg restore stays silent (documented)
-    SnapshotLog.restoreVersion(dir, 4)                               // v5
-    assert(ChangeFeed.readBatch(spark, dir, fromVersion = 4).isEmpty)
-    // dv divergence: a shared file under different vector contexts
-    // cannot be stated by a file diff — fail loud, compact, retry
-    val dir2 = freshDir()
-    SnapshotLog.appendVersion(frame(Seq(1L, 2L, 3L)).coalesce(1), dir2) // v1
-    SnapshotLog.deleteWhereMoR(spark, dir2, "k", 2L, 2L)                // v2: dv
-    val e = intercept[IllegalArgumentException] {
-      SnapshotLog.restoreVersion(spark, dir2, 1)
-    }
-    assert(e.getMessage.contains("compact the head first"))
-    SnapshotLog.compactVersion(spark, dir2)                             // v3: dv gone
-    val r = SnapshotLog.restoreVersion(spark, dir2, 1)                  // v4
-    assert(rows(dir2, r) === Set(1L, 2L, 3L))
-    val feed2 = ChangeFeed.readBatch(spark, dir2, fromVersion = 3)
-      .select($"_change_type", $"k").as[(String, Long)].collect().toSet
-    assert(feed2 === Set(("delete", 1L), ("delete", 3L),
-      ("insert", 1L), ("insert", 2L), ("insert", 3L)))
   }
 
   test("rewrite re-plan: a delete racing a disjoint append retries and lands; conflicting histories fail loud") {

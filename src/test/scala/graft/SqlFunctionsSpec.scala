@@ -22,6 +22,16 @@ class SqlFunctionsSpec extends SparkSpec {
       "SELECT bottom_k(graft_phash(text), 4) AS sk FROM sql_docs")
       .first().getSeq[Long](0)
     assert(sk.size === 4 && sk == sk.sorted)
+    // registration is idempotent: a second call replaces no builder
+    import org.apache.spark.sql.graft.RegistryProbe
+    val names = GraftExtensions.builders.map(_._1)
+    val first = names.map(RegistryProbe.builder(spark, _))
+    assert(first.forall(_.isDefined))
+    GraftExtensions.register(spark)
+    names.zip(first).foreach { case (n, b) =>
+      assert(RegistryProbe.builder(spark, n).get eq b.get,
+        s"a second register replaced $n")
+    }
   }
 
   test("graft_phash equals the hex-conv formulation it replaces") {

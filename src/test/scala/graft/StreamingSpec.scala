@@ -9,6 +9,21 @@ import org.apache.spark.sql.functions._
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The cron-form CDC consumer: for each primary version after
+    * `cursor`, one batch read of the feed filtered to that version,
+    * applied in commit order with batch id v-1. Returns the new cursor
+    * (the head it shipped), which the caller keeps as its checkpoint. */
+  private def replicateFrom(primary: String, cursor: Int)
+      (apply: (org.apache.spark.sql.DataFrame, Long) => Unit): Int = {
+    import graft.sources.{ChangeFeed, SnapshotLog}
+    val head = SnapshotLog.latestVersion(primary)
+    ((cursor + 1) to head).foreach { v =>
+      apply(ChangeFeed.readBatch(spark, primary, fromVersion = v - 1)
+        .filter($"_change_version" === v), v - 1L)
+    }
+    head
+  }
+
   test("streaming ingest (watermark + dedup + hourly counts) equals batch") {
     // file streaming source requires a directory; stage the parquet there
     val dir = tempDir("graft_stream")
@@ -149,95 +164,8 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streamed CDC merge: final state equals the batch three-clause merge; replay is idempotent") {
-    val root = tempDir("graft_merge")
-    val inDir = root.resolve("in"); java.nio.file.Files.createDirectories(inDir)
-    operators.Extras.mergeSeed(
-      operators.Extras.mergeTarget(spark, sf), s"$root/store")
-    // q100's exact change feed, arrival-split into 3 micro-batches by
-    // key % 3 — every clause (update/delete/insert) lands in several
-    // different triggers
-    val feed = operators.Extras.mergeFeed(spark, sf)
-    (0 until 3).foreach { i =>
-      val tmp = root.resolve(s"tmp$i")
-      feed.filter($"key" % 3 === i).coalesce(1).write.parquet(tmp.toString)
-      val part = {
-        val st = java.nio.file.Files.list(tmp)
-        try st.filter(_.toString.endsWith(".parquet")).findFirst.get
-        finally st.close()
-      }
-      val dst = inDir.resolve(f"chunk$i%03d.parquet")
-      java.nio.file.Files.move(part, dst)
-      dst.toFile.setLastModified(60000L * (i + 1))
-    }
-    val stream = spark.readStream.schema(feed.schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir.toString)
-    val q = operators.Extras.mergeApplyStream(
-      stream, s"$root/store", s"$root/ckpt")
-    try q.processAllAvailable() finally q.stop()
-    // the split must not matter: streamed final state == batch q100
-    val streamed = operators.Extras.mergeState(spark, s"$root/store")
-      .as[(Long, Double)].collect().toSeq
-    val batch = operators.Extras.queries("q100_merge_into")(spark, sf)
-      .select($"key", $"bal").as[(Long, Double)].collect().toSeq
-    assert(streamed === batch && streamed.nonEmpty)
-    // at-least-once replay: re-running the LAST trigger's batchId with
-    // the same delta must rewrite version 2 to the same state
-    val lastChunk = spark.read.parquet(inDir.resolve("chunk002.parquet").toString)
-    operators.Extras.mergeApplyBatch(lastChunk, 2L, s"$root/store")
-    val replayed = operators.Extras.mergeState(spark, s"$root/store")
-      .as[(Long, Double)].collect().toSeq
-    assert(replayed === streamed, "replayed trigger changed the state")
-    // a version ABOVE the replayed batchId is a stale generation
-    val e = intercept[IllegalArgumentException] {
-      operators.Extras.mergeApplyBatch(lastChunk, 1L, s"$root/store")
-    }
-    assert(e.getMessage.contains("stale generation"))
-    // deletes processed in an EARLY trigger stay deleted at the end
-    val deletedKeys = feed.filter($"action" === "delete" && $"key" % 3 === 0)
-      .select($"key").as[Long].collect()
-    assert(deletedKeys.nonEmpty, "no early-trigger delete — clause untested")
-    deletedKeys.foreach(k =>
-      assert(!streamed.exists(_._1 == k), s"deleted key $k resurfaced"))
-  }
-
-  test("CDC merge with event sequence: sequential apply — a delete-then-reinsert batch keeps the reinsert") {
-    // the round-16 advice case: a real CDC feed can land delete and
-    // reinsert for one key in ONE micro-batch; the seq-less delete-wins
-    // collapse would drop the reinsert. With a `seq` column the
-    // collapse must be the sequential apply: a delete RESETS the key,
-    // later upserts restart the balance from their own sum.
-    val root = tempDir("graft_merge_seq")
-    val target = Seq((1L, 10.0), (3L, 10.0)).toDF("key", "bal")
-    operators.Extras.mergeSeed(target, s"$root/store")
-    val batch = Seq(
-      // key 1 (exists, bal 10): upsert +5, delete, reinsert 7 -> 7
-      (1L, 5.0, "upsert", 1L), (1L, 0.0, "delete", 2L),
-      (1L, 7.0, "upsert", 3L),
-      // key 2 (new): upsert then delete -> absent
-      (2L, 5.0, "upsert", 1L), (2L, 0.0, "delete", 2L),
-      // key 3 (exists, bal 10): delete then reinsert 4 -> 4, NOT 14
-      (3L, 0.0, "delete", 1L), (3L, 4.0, "upsert", 2L),
-      // key 4 (new): two upserts accumulate -> 5
-      (4L, 2.0, "upsert", 1L), (4L, 3.0, "upsert", 2L)
-    ).toDF("key", "amt", "action", "seq")
-    operators.Extras.mergeApplyBatch(batch, 0L, s"$root/store")
-    val st = operators.Extras.mergeState(spark, s"$root/store")
-      .as[(Long, Double)].collect().toMap
-    assert(st === Map(1L -> 7.0, 3L -> 4.0, 4L -> 5.0), s"got $st")
-    // the seq-LESS path on the same events is the documented
-    // delete-wins contract: every deleted-at-any-point key stays out
-    val root2 = tempDir("graft_merge_seq2")
-    operators.Extras.mergeSeed(target, s"$root2/store")
-    operators.Extras.mergeApplyBatch(batch.drop("seq"), 0L, s"$root2/store")
-    val st2 = operators.Extras.mergeState(spark, s"$root2/store")
-      .as[(Long, Double)].collect().toMap
-    assert(st2 === Map(4L -> 5.0), s"got $st2")
-  }
-
-  test("change feed source: streamed tail equals batch read, one version per batch, O(delta) planning, resume") {
+  test("change feed source: batch read tags versions, O(delta) planning, column pruning, resume from a version cursor") {
     import graft.sources.{ChangeFeed, SnapshotLog}
-    import org.apache.spark.sql.streaming.Trigger
     val root = tempDir("graft_cdf")
     val dir = root.resolve("table").toString
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
@@ -263,47 +191,17 @@ class StreamingSpec extends SparkSpec {
       .groupBy($"_change_version").count()
       .as[(Long, Long)].collect().toMap
     assert(pruned === Map(1L -> 2L, 2L -> 1L, 4L -> 2L))
-    // streamed tail: AvailableNow drains to the head, ONE VERSION PER
-    // BATCH (admission control), then stops. foreachBatch sink — the
-    // deployment shape AND the only local sink that supports
-    // checkpoint recovery for the resume leg below.
-    val ckpt = s"$root/ckpt"
-    def drain(): Seq[(Long, Set[(Long, Long, Double)])] = {
-      val buf = new java.util.concurrent.ConcurrentLinkedQueue[
-        (Long, (Long, Long, Double))]()
-      val q = ChangeFeed.readStream(spark, dir, fromVersion = 0)
-        .writeStream.option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          b.select(col("_change_version"), col("k"), col("x")).collect()
-            .foreach(r => buf.add(
-              (id, (r.getLong(0), r.getLong(1), r.getDouble(2)))))
-          ()
-        }.start()
-      try q.awaitTermination() finally q.stop()
-      import scala.jdk.CollectionConverters._
-      buf.asScala.toSeq.groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (id, rs) => id -> rs.map(_._2).toSet }
-    }
-    val batches = drain()
-    assert(batches.flatMap(_._2).toSet === batch,
-      "streamed feed diverged from the batch read")
-    // one committed VERSION per micro-batch, in commit order
-    assert(batches.map(_._2.map(_._1)).forall(_.size == 1),
-      s"a micro-batch mixed versions: $batches")
-    assert(batches.map(_._2.head._1) === Seq(1L, 2L, 4L),
-      s"version-per-batch order: $batches")
-    // RESUME: a new commit after the drain; the same checkpoint picks
-    // up ONLY the new version (the offset log is the cursor)
+    // RESUME: a new commit after the first read; reading from the
+    // consumer's cursor (the head it last saw, v4) picks up ONLY the
+    // new version
     SnapshotLog.appendVersion(frame(Seq(9L)).coalesce(1), dir)       // v5
-    val batches2 = drain()
-    assert(batches2.flatMap(_._2).toSet === Set((5L, 9L, 90.0)),
-      s"resume re-emitted already-consumed versions: $batches2")
-    // and the streamed feed concatenated over versions equals the
-    // q104-style batch statement on the same store: per-version
-    // aggregates agree (the registry q111 pin, restated locally)
-    val perVersion = batches.flatMap(_._2) ++ batches2.flatMap(_._2)
-    val agg = perVersion.groupBy(_._1).view
+    val batch2 = canon(ChangeFeed.readBatch(spark, dir, fromVersion = 4))
+    assert(batch2 === Set((5L, 9L, 90.0)),
+      s"resume re-emitted already-consumed versions: $batch2")
+    // and the feed concatenated over both reads equals the q104-style
+    // batch statement on the same store: per-version aggregates agree
+    // (the registry q111 pin, restated locally)
+    val agg = (batch ++ batch2).toSeq.groupBy(_._1).view
       .mapValues(rs => (rs.size, rs.map(_._3).sum)).toMap
     assert(agg === Map(1L -> ((2, 30.0)), 2L -> ((1, 30.0)),
       4L -> ((2, 90.0)), 5L -> ((1, 90.0))))
@@ -311,19 +209,17 @@ class StreamingSpec extends SparkSpec {
 
   test("end-to-end CDC: the change feed replicates one store into another exactly-once") {
     // the full 100 TB replication loop, assembled from the pieces each
-    // spec pins alone: ChangeFeed tails the PRIMARY's snapshot log
-    // (one committed version per micro-batch, O(delta) files read) and
-    // foreachBatch applies each batch into a REPLICA store through the
-    // exactly-once streamed-append path (the batchId rides the
-    // replica's manifest claim, so a replayed trigger no-ops) — a
-    // second table stays row-identical to the primary without ever
+    // spec pins alone: a cron-run consumer reads the PRIMARY's change
+    // feed one committed version at a time from its version cursor
+    // (O(delta) files read) and applies each version into a REPLICA
+    // store through the exactly-once batch-append path (the batch id
+    // rides the replica's manifest claim, so a replayed batch no-ops)
+    // — a second table stays row-identical to the primary without ever
     // scanning it. SCOPE here: an APPEND-ONLY primary (+ compactions,
-    // which move bytes not rows and feed nothing) applied through the
-    // exactly-once streamed-append path; the DML surface (deletes,
-    // merges — explicit change files since r19) is replicated by the
-    // next spec through a keyed apply.
+    // which move bytes not rows and feed nothing); the DML surface
+    // (deletes, merges — explicit change files since r19) is
+    // replicated by the next spec through a keyed apply.
     import graft.sources.{ChangeFeed, SnapshotLog}
-    import org.apache.spark.sql.streaming.Trigger
     val root = tempDir("graft_cdcrep")
     val primary = root.resolve("primary").toString
     val replica = root.resolve("replica").toString
@@ -333,38 +229,33 @@ class StreamingSpec extends SparkSpec {
     SnapshotLog.appendVersion(frame(Seq(1L, 2L)).coalesce(1), primary)
     SnapshotLog.appendVersion(frame(Seq(3L, 4L)).coalesce(1), primary)
     SnapshotLog.compactVersion(spark, primary) // rewrite: no feed rows
-    def replicate(): Unit = {
-      val q = ChangeFeed.readStream(spark, primary, fromVersion = 0)
-        .writeStream.option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          val rows = b.drop("_change_version", "_change_type", "_change_timestamp")
-          if (!rows.isEmpty)
-            SnapshotLog.appendVersionForBatch(rows.coalesce(1), replica, id)
-          ()
-        }.start()
-      try q.awaitTermination() finally q.stop()
-    }
+    var cursor = 0
+    def replicate(): Unit =
+      cursor = replicateFrom(primary, cursor) { (b, id) =>
+        val rows = b.drop("_change_version", "_change_type", "_change_timestamp")
+        if (!rows.isEmpty)
+          SnapshotLog.appendVersionForBatch(rows.coalesce(1), replica, id)
+      }
     replicate()
     def keys(dir: String): Set[Long] =
       SnapshotLog.readVersion(spark, dir, SnapshotLog.latestVersion(dir))
         .select($"k").as[Long].collect().toSet
     assert(keys(replica) === Set(1L, 2L, 3L, 4L))
     val replicaVersions = SnapshotLog.versions(replica).size
-    // primary advances; the same checkpoint ships ONLY the delta
+    // primary advances; the same cursor ships ONLY the delta
     SnapshotLog.appendVersion(frame(Seq(9L)).coalesce(1), primary)
     replicate()
     assert(keys(replica) === Set(1L, 2L, 3L, 4L, 9L))
     assert(SnapshotLog.versions(replica).size === replicaVersions + 1,
       "catch-up run must append exactly the one new version")
-    // trigger replay (crash between the replica's manifest commit and
-    // the checkpoint commit): the same batchId no-ops on the replica
+    // batch replay (crash between the replica's manifest commit and
+    // the cursor update): the same batch id no-ops on the replica
     val last = ChangeFeed.readBatch(spark, primary, fromVersion = 0)
       .filter($"_change_version" === SnapshotLog.latestVersion(primary))
       .drop("_change_version", "_change_type", "_change_timestamp")
     val before = keys(replica)
-    // micro-batch ids are 0-based over the primary's change versions,
-    // so the batch that shipped primary vN carried id N-1
+    // batch ids are 0-based over the primary's versions, so the
+    // batch that shipped primary vN carried id N-1
     SnapshotLog.appendVersionForBatch(last.coalesce(1), replica,
       SnapshotLog.latestVersion(primary).toLong - 1)
     assert(keys(replica) === before &&
@@ -375,15 +266,14 @@ class StreamingSpec extends SparkSpec {
   test("end-to-end CDC over DML: deletes and merges replicate through the feed; replica equals primary at head") {
     // the round-18 gap closed: a COW delete, a MoR delete, and a MERGE
     // each write explicit row-level change files at commit time, the
-    // feed emits them one version per micro-batch, and a keyed apply
+    // consumer reads them one version per batch, and a keyed apply
     // (remove delete/update_preimage keys, add insert/update_postimage
     // rows) keeps a replica row-identical to the primary through the
     // FULL DML surface — the replication a byte-level rewrite feed
-    // cannot do. Replica state is batch-keyed deterministic overwrite
-    // (the mergeApplyBatch discipline), so a replayed trigger rewrites
-    // its own version identically: exactly-once end to end.
+    // cannot do. Replica state is batch-keyed deterministic overwrite,
+    // so a replayed batch rewrites its own version identically:
+    // exactly-once end to end.
     import graft.sources.{ChangeFeed, SnapshotLog}
-    import org.apache.spark.sql.streaming.Trigger
     val root = tempDir("graft_cdcdml")
     val primary = root.resolve("primary").toString
     java.nio.file.Files.createDirectories(
@@ -397,7 +287,7 @@ class StreamingSpec extends SparkSpec {
       Seq((3L, 7.0, "upsert"), (4L, 0.0, "delete"), (9L, 90.0, "upsert"))
         .toDF("key", "amt", "action"), "k", "x")                           // v5
     val stateDir = root.resolve("state").toString
-    // seed (batch = -1, below every real trigger): the empty table
+    // seed (batch = -1, below every real batch): the empty table
     frame(Seq.empty).write.parquet(s"$stateDir/batch=-1")
     def applyCdc(b: org.apache.spark.sql.DataFrame, id: Long): Unit = {
       val vs = new java.io.File(stateDir).listFiles.toSeq
@@ -415,15 +305,8 @@ class StreamingSpec extends SparkSpec {
       prev.join(dels, Seq("k"), "left_anti").unionByName(adds)
         .write.mode("overwrite").parquet(s"$stateDir/batch=$id")
     }
-    def replicate(): Unit = {
-      val q = ChangeFeed.readStream(spark, primary, fromVersion = 0)
-        .writeStream.option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          applyCdc(b, id); ()
-        }.start()
-      try q.awaitTermination() finally q.stop()
-    }
+    var cursor = 0
+    def replicate(): Unit = cursor = replicateFrom(primary, cursor)(applyCdc)
     replicate()
     def state(): Set[(Long, Double)] = {
       val last = new java.io.File(stateDir).listFiles.toSeq
@@ -439,24 +322,17 @@ class StreamingSpec extends SparkSpec {
     assert(state() === Set((1L, 10.0), (3L, 37.0), (6L, 60.0), (9L, 90.0)))
     assert(state() === primaryHead(),
       "replica diverged from the primary through DML")
-    // replayed trigger (crash before checkpoint commit): deterministic
+    // replayed batch (crash before the cursor update): deterministic
     // overwrite of its own state version — byte-identical state
     val lastBatch = ChangeFeed.readBatch(spark, primary, fromVersion = 4)
     applyCdc(lastBatch, 4L)
     assert(state() === primaryHead(), "replayed DML batch diverged")
     // the primary keeps moving: append + another delete; same
-    // checkpoint ships only the delta
+    // cursor ships only the delta
     SnapshotLog.appendVersion(frame(Seq(20L, 21L)).coalesce(1), primary) // v6
     SnapshotLog.deleteWhere(spark, primary, "k", 21L, 21L)               // v7
     replicate()
     assert(state() === primaryHead(),
       "catch-up through append + delete diverged")
-    // and a ROLLBACK: the CDC restore states its file-diff deletes +
-    // inserts, so the same keyed apply converges the replica onto the
-    // restored snapshot — the feed is total over row-changing ops
-    SnapshotLog.restoreVersion(spark, primary, 5)                        // v8
-    replicate()
-    assert(state() === primaryHead(),
-      "restore did not replicate through the feed")
   }
 }
